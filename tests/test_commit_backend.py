@@ -84,11 +84,11 @@ def _run_protocol(spark, target):
 
     U.merge_into_partitioned(
         target, spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(20)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     U.merge_into_partitioned(
         target, spark.createDataFrame(_mk_rows([(5, 999, 7), (21, 21, 1)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     U.filter_partitioned(spark, target, F.col("key") < 21)
     swept = U.sweep_orphans(target)
@@ -239,7 +239,7 @@ def test_cas_backend_closes_the_reread_swap_window(spark, tmp_path, monkeypatch)
     U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(20)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
 
     def compete(current):
@@ -257,7 +257,6 @@ def test_cas_backend_closes_the_reread_swap_window(spark, tmp_path, monkeypatch)
             target,
             spark.createDataFrame(_mk_rows([(5, 999, 7)]), SCHEMA),
             keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-            commit="manifest",
         )
     # competitor's commit survived; the loser changed NOTHING: the
     # dropped bucket's keys are gone and key 5 (if its bucket survived)
@@ -273,7 +272,7 @@ def test_cas_backend_closes_the_reread_swap_window(spark, tmp_path, monkeypatch)
     out = U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(5, 999, 7)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     rows = {r.key: int((r.ts - BASE).total_seconds() // 60)
             for r in out.collect()}
@@ -389,16 +388,16 @@ def test_merge_vs_merge_disjoint_sequential_both_survive_under_cas(
     U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(20)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     gen_after_create = be.generation(target)
     U.merge_into_partitioned(
         target, spark.createDataFrame(_mk_rows([(4, 444, 9)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     U.merge_into_partitioned(
         target, spark.createDataFrame(_mk_rows([(5, 555, 9)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     rows = {r.key: int((r.ts - BASE).total_seconds() // 60)
             for r in U.read_partitioned(spark, target).collect()}
@@ -459,21 +458,20 @@ def test_merge_vs_merge_race_true_cas_rejection(spark, tmp_path, monkeypatch):
     U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(20)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     be.armed = True
     with pytest.raises(CommitConflictError, match="conditional put failed"):
         U.merge_into_partitioned(
             target, spark.createDataFrame(_mk_rows([(5, 999, 7)]), SCHEMA),
             keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-            commit="manifest",
         )
     # the competitor's manifest is the stored one; the loser's staged
     # dirs are sweepable orphans; the rerun lands cleanly
     assert be.read_manifest(target)[spare] >= 1
     out = U.merge_into_partitioned(
         target, spark.createDataFrame(_mk_rows([(5, 999, 7)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     rows = {r.key: int((r.ts - BASE).total_seconds() // 60)
             for r in out.collect()}
@@ -498,14 +496,13 @@ def test_merge_vs_compaction_race_true_cas_rejection(
     U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(20)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     be.armed = True
     with pytest.raises(CommitConflictError, match="conditional put failed"):
         U.merge_into_partitioned(
             target, spark.createDataFrame(_mk_rows([(5, 999, 7)]), SCHEMA),
             keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-            commit="manifest",
         )
     rows = {r.key: int((r.ts - BASE).total_seconds() // 60)
             for r in U.read_partitioned(spark, target).collect()}
@@ -514,7 +511,7 @@ def test_merge_vs_compaction_race_true_cas_rejection(
         assert rows[5] == 5  # the loser's 999 never landed
     out = U.merge_into_partitioned(
         target, spark.createDataFrame(_mk_rows([(5, 999, 7)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     rows = {r.key: int((r.ts - BASE).total_seconds() // 60)
             for r in out.collect()}
@@ -566,7 +563,7 @@ def test_merge_with_retry_converges_after_cas_conflicts(
     U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(20)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     be = _ConflictNTimesCAS(2, target)
     monkeypatch.setattr(U, "_COMMIT_BACKEND", be)
@@ -575,7 +572,7 @@ def test_merge_with_retry_converges_after_cas_conflicts(
     be.armed = True
     out = U.merge_with_retry(
         target, spark.createDataFrame(_mk_rows([(5, 999, 7)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     rows = {r.key: int((r.ts - BASE).total_seconds() // 60)
             for r in out.collect()}
@@ -591,7 +588,7 @@ def test_merge_with_retry_bounded_then_raises(spark, tmp_path, monkeypatch):
     U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(20)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     be = _ConflictNTimesCAS(99, target)
     monkeypatch.setattr(U, "_COMMIT_BACKEND", be)
@@ -601,7 +598,7 @@ def test_merge_with_retry_bounded_then_raises(spark, tmp_path, monkeypatch):
         U.merge_with_retry(
             target, spark.createDataFrame(_mk_rows([(5, 999, 7)]), SCHEMA),
             keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-            commit="manifest", retries=2,
+            retries=2,
         )
     assert be.conflicts_injected == 3  # initial attempt + 2 retries
 
@@ -614,7 +611,7 @@ def test_merge_with_retry_covers_detector_conflicts(spark, tmp_path):
     U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(20)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     # the competitor must write to the SAME bucket the loser touches,
     # else the touched-bucket detector (correctly) lets both commits land
@@ -637,13 +634,12 @@ def test_merge_with_retry_covers_detector_conflicts(spark, tmp_path):
                 target,
                 spark.createDataFrame(_mk_rows([(rival, 555, 6)]), SCHEMA),
                 keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-                commit="manifest",
             )
 
     out = U.merge_with_retry(
         target, spark.createDataFrame(_mk_rows([(6, 666, 7)]), SCHEMA),
         keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-        commit="manifest", _before_commit=competing_commit,
+        _before_commit=competing_commit,
     )
     rows = {r.key: int((r.ts - BASE).total_seconds() // 60)
             for r in out.collect()}
@@ -651,80 +647,27 @@ def test_merge_with_retry_covers_detector_conflicts(spark, tmp_path):
     assert rows[6] == 666 and rows[rival] == 555  # both writers survive
 
 
-def test_symlink_empty_batch_into_fresh_table_returns_typed_empty(spark, tmp_path):
-    """The SYMLINK twin of the manifest mode's ADVICE r14 guard (review
-    r17): an empty first batch leaves only the dot-file meta, so the
-    final read must return a typed empty relation instead of failing
-    parquet schema inference — and a later real batch must still
-    create the table cleanly."""
-    target = str(tmp_path / "tbl")
-    out = U.merge_into_partitioned(
-        target, spark.createDataFrame([], SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-    )
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == [
-        "key", "ts", "value", "seq"
-    ]
-    real = U.merge_into_partitioned(
-        target, spark.createDataFrame(_mk_rows([(1, 1, 1)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-    )
-    assert real.count() == 1
-
-
-def test_symlink_compaction_conflict_is_typed(spark, tmp_path):
-    """The symlink-mode compaction detector must raise the round-17
-    ConcurrentWriteError (review r17: the manifest detectors were
-    converted, this one was initially missed) so a retry loop written
-    against the typed contract covers the default commit mode too."""
-    from pyspark.sql import functions as F
+def test_meta_json_shape_is_mode_tagged_and_legacy_compatible(spark, tmp_path):
+    """A fresh table's ``.merge_meta.json`` keeps its on-disk shape:
+    bucket count, keys, order, the p_bucket-free row schema the
+    typed-empty paths rebuild from, and the ``"commit": "manifest"``
+    tag that tells a manifest-protocol table from a legacy one."""
+    import json
+    import os
 
     target = str(tmp_path / "tbl")
     U.merge_into_partitioned(
         target,
-        spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(8)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
+        spark.createDataFrame(_mk_rows([(1, 1, 1)]), SCHEMA),
+        keys=["key"], order_by=["ts", "seq"], num_buckets=2,
     )
-
-    def competing_merge():
-        U.merge_into_partitioned(
-            target, spark.createDataFrame(_mk_rows([(1, 99, 9)]), SCHEMA),
-            keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-        )
-
-    with pytest.raises(U.ConcurrentWriteError, match="concurrent merge"):
-        U.filter_partitioned(
-            spark, target, F.col("key") >= 0, _before_commit=competing_merge
-        )
-
-
-def test_meta_json_shape_is_mode_tagged_and_legacy_compatible(spark, tmp_path):
-    """_write_meta_once (the round-17 extraction of the copy-pasted
-    first-batch meta writes) must keep the pre-refactor on-disk shape:
-    symlink tables carry NO "commit" key (the legacy round-13 dialect),
-    manifest tables carry "commit": "manifest", and both store the
-    p_bucket-free row schema the typed-empty paths rebuild from."""
-    import json
-    import os
-
-    for mode, commit_kw in (("sym", {}), ("man", {"commit": "manifest"})):
-        target = str(tmp_path / f"tbl_{mode}")
-        U.merge_into_partitioned(
-            target,
-            spark.createDataFrame(_mk_rows([(1, 1, 1)]), SCHEMA),
-            keys=["key"], order_by=["ts", "seq"], num_buckets=2, **commit_kw,
-        )
-        with open(os.path.join(target, ".merge_meta.json")) as f:
-            meta = json.load(f)
-        assert meta["num_buckets"] == 2 and meta["keys"] == ["key"]
-        assert meta["order_by"] == ["ts", "seq"]
-        field_names = [fld["name"] for fld in meta["schema"]["fields"]]
-        assert field_names == ["key", "ts", "value", "seq"]  # no p_bucket
-        if mode == "man":
-            assert meta.get("commit") == "manifest"
-        else:
-            assert "commit" not in meta
+    with open(os.path.join(target, ".merge_meta.json")) as f:
+        meta = json.load(f)
+    assert meta["num_buckets"] == 2 and meta["keys"] == ["key"]
+    assert meta["order_by"] == ["ts", "seq"]
+    field_names = [fld["name"] for fld in meta["schema"]["fields"]]
+    assert field_names == ["key", "ts", "value", "seq"]  # no p_bucket
+    assert meta["commit"] == "manifest"
 
 
 # ---------------------------------------------------------------------------
@@ -796,7 +739,7 @@ def test_write_meta_once_fsyncs_and_cleans_tmp(tmp_path, monkeypatch):
     synced = []
     real_fsync = os.fsync
     monkeypatch.setattr(os, "fsync", lambda fd: (synced.append(fd), real_fsync(fd)))
-    U._write_meta_once(local, 4, ["key"], ["ts"], {"fields": []}, commit="manifest")
+    U._write_meta_once(local, 4, ["key"], ["ts"], {"fields": []})
     assert len(synced) >= 2  # file contents + parent directory
     with open(os.path.join(local, ".merge_meta.json")) as f:
         assert json.load(f)["commit"] == "manifest"
@@ -805,7 +748,7 @@ def test_write_meta_once_fsyncs_and_cleans_tmp(tmp_path, monkeypatch):
     # a failed dump must not leak its temp file
     monkeypatch.setattr(json, "dump", lambda *a, **k: (_ for _ in ()).throw(OSError("disk full")))
     with pytest.raises(OSError, match="disk full"):
-        U._write_meta_once(local, 4, ["key"], ["ts"], {"fields": []}, commit=None)
+        U._write_meta_once(local, 4, ["key"], ["ts"], {"fields": []})
     assert not [p for p in os.listdir(local) if p.endswith(".tmp")]
 
 
@@ -951,7 +894,7 @@ def test_merge_with_retry_converges_through_object_store_backend(
     U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(20)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
 
     def rival():
@@ -959,13 +902,12 @@ def test_merge_with_retry_converges_through_object_store_backend(
             target,
             spark.createDataFrame(_mk_rows([(7, 777, 6)]), SCHEMA),
             keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-            commit="manifest",
         )
 
     be._rival = rival
     out = U.merge_with_retry(
         target, spark.createDataFrame(_mk_rows([(6, 666, 7)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     rows = {r.key: int((r.ts - BASE).total_seconds() // 60)
             for r in out.collect()}
@@ -1124,7 +1066,7 @@ def test_filter_with_retry_converges_after_detector_conflict(spark, tmp_path):
     U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(20)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
     )
     attempts = []
 
@@ -1137,7 +1079,6 @@ def test_filter_with_retry_converges_after_detector_conflict(spark, tmp_path):
                 target,
                 spark.createDataFrame(_mk_rows([(3, 333, 5), (25, 25, 5)]), SCHEMA),
                 keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-                commit="manifest",
             )
 
     out = U.filter_with_retry(
@@ -1159,7 +1100,7 @@ def test_filter_with_retry_bounded_then_raises(spark, tmp_path):
     U.merge_into_partitioned(
         target,
         spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(8)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=2, commit="manifest",
+        keys=["key"], order_by=["ts", "seq"], num_buckets=2,
     )
     calls = []
 
@@ -1169,7 +1110,6 @@ def test_filter_with_retry_bounded_then_raises(spark, tmp_path):
             target,
             spark.createDataFrame(_mk_rows([(1, 100 + len(calls), 5)]), SCHEMA),
             keys=["key"], order_by=["ts", "seq"], num_buckets=2,
-            commit="manifest",
         )
 
     with pytest.raises(U.ConcurrentWriteError):

@@ -48,3 +48,13 @@ def test_star_graph_matches_python_mirror(spark):
 def test_dangling_free_directed_graph_matches_mirror(spark):
     edges = [(1, 2), (2, 3), (3, 1), (1, 3), (3, 2), (2, 1)]
     assert _run(spark, edges, 4) == _mirror(edges, 4)
+
+
+def test_null_src_edge_changes_nothing(spark):
+    # a NULL-src edge carries no rank to any v, including a v that is
+    # not otherwise a node; the first iteration's constant-rank shortcut
+    # must not count it either
+    edges = [(1, 2), (2, 3), (3, 1), (1, 3)]
+    want = _run(spark, edges, 2)
+    for v in (1, 2, 3, 99):
+        assert _run(spark, edges + [(None, v)], 2) == want, v

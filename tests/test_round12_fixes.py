@@ -3,7 +3,7 @@
 Covers:
 - merge_into_partitioned — the batch-proportional pure-Parquet MERGE:
   parity with merge_batch (the spec) across batch splits and bucket
-  counts, byte-identical untouched partitions, bucket-count pinning.
+  counts, byte-identical untouched buckets, bucket-count pinning.
 - merge_newer_condition's null-aware order keys: merge_into_sql /
   merge_sql_plan now agree with merge_batch when a stored row carries a
   NULL order-by component (ADVICE r11: a real-timestamp source must
@@ -81,37 +81,43 @@ def test_merge_partitioned_batch_split_parity(
     assert _collect(stored) == _collect(state_mem)
 
 
-def _partition_digests(table_dir: str) -> dict[str, str]:
-    """content digest per p_bucket partition (resolved through the
-    symlink), plus the resolved symlink target path."""
+def _bucket_digests(table_dir: str) -> dict[int, tuple[str, str]]:
+    """bucket -> (committed version dir name, digest of its data files),
+    resolved through the table's manifest."""
+    import json
+
+    with open(os.path.join(table_dir, ".manifest.json")) as f:
+        manifest = {int(b): v for b, v in json.load(f).items()}
     out = {}
-    for name in sorted(os.listdir(table_dir)):
-        if not name.startswith("p_bucket="):
-            continue
-        part = os.path.join(table_dir, name)
+    for b, v in manifest.items():
+        vdir = os.path.join(table_dir, ".v", f"b{b}_v{v}")
         h = hashlib.sha256()
-        h.update(os.path.realpath(part).encode())
-        for f in sorted(os.listdir(part)):
+        for f in sorted(os.listdir(vdir)):
             if f.startswith(("_", ".")):
                 continue
-            with open(os.path.join(part, f), "rb") as fh:
+            with open(os.path.join(vdir, f), "rb") as fh:
                 h.update(f.encode())
                 h.update(fh.read())
-        out[name] = h.hexdigest()
+        out[b] = (os.path.basename(vdir), h.hexdigest())
     return out
 
 
 def test_merge_partitioned_untouched_partitions_byte_identical(spark, tmp_path):
     """A merge whose batch hashes into a strict subset of buckets must
-    leave every other partition's files (and its symlinked version dir)
-    untouched — the batch-proportional claim, pinned at the byte level."""
+    leave every other bucket's manifest entry and version dir untouched
+    (same dir, same bytes) — the batch-proportional claim, pinned at the
+    byte level."""
+    from transit_efficiency_analysis_spark.operators.upsert import (
+        read_partitioned,
+    )
+
     target = str(tmp_path / "tbl")
     seed = _mk_rows([(k, 10, 1) for k in range(40)])  # spreads over buckets
     merge_into_partitioned(
         target, spark.createDataFrame(seed, SCHEMA),
         keys=["key"], order_by=["ts", "seq"], num_buckets=8,
     )
-    before = _partition_digests(target)
+    before = _bucket_digests(target)
     assert len(before) >= 4, "seed should populate several buckets"
 
     # one single-key batch -> exactly one touched bucket
@@ -120,14 +126,17 @@ def test_merge_partitioned_untouched_partitions_byte_identical(spark, tmp_path):
         target, spark.createDataFrame(batch, SCHEMA),
         keys=["key"], order_by=["ts", "seq"], num_buckets=8,
     )
-    after = _partition_digests(target)
+    after = _bucket_digests(target)
     assert set(after) == set(before)
-    changed = [p for p in before if before[p] != after[p]]
+    changed = [b for b in before if before[b] != after[b]]
     assert len(changed) == 1, (
-        f"exactly one partition should change, got {changed}"
+        f"exactly one bucket should change, got {changed}"
     )
+    # the touched bucket got a new version dir, not an edited one
+    (b,) = changed
+    assert after[b][0] != before[b][0]
     # and the table still answers correctly
-    got = {r.key: r.value for r in spark.read.parquet(target).collect()}
+    got = {r.key: r.value for r in read_partitioned(spark, target).collect()}
     assert got[3] == 9.0 and got[5] == 1.0
 
 
@@ -161,37 +170,56 @@ def test_merge_partitioned_null_key_component(spark, tmp_path):
     assert len(null_rows) == 1 and null_rows[0].value == 2.0
 
 
-def test_merge_partitioned_scan_prunes_untouched_partitions(spark, tmp_path):
-    """The stored-side read must partition-prune to the touched buckets:
-    the pruned scan's input files all live under touched p_bucket dirs."""
+def test_merge_partitioned_scan_prunes_untouched_partitions(
+    spark, tmp_path, monkeypatch
+):
+    """A trickle merge reads the stored side from the touched buckets'
+    version dirs only: every path the merge resolves through the
+    manifest belongs to a touched bucket, and the stored slice it reads
+    holds exactly that bucket's rows."""
+    from transit_efficiency_analysis_spark.operators import upsert as U
+
     target = str(tmp_path / "tbl")
     seed = _mk_rows([(k, 10, 1) for k in range(40)])
     merge_into_partitioned(
         target, spark.createDataFrame(seed, SCHEMA),
         keys=["key"], order_by=["ts", "seq"], num_buckets=8,
     )
-    from pyspark.sql import functions as F
-
-    from transit_efficiency_analysis_spark.operators.upsert import _bucket_expr
-
-    touched = [
+    (touched,) = [
         r[0]
         for r in spark.range(1)
-        .select(_bucket_expr(["id"], 8).alias("b"))
+        .select(U._bucket_expr(["id"], 8).alias("b"))
         .collect()
     ]  # bucket of key=0
-    pruned = spark.read.parquet(target).where(F.col("p_bucket").isin(touched))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    # the bucket predicate must land in PartitionFilters (pruned at file
-    # listing), not PushedFilters/post-scan Filter
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and "p_bucket" in pf[0], plan
-    # and the executed scan reads exactly the touched bucket's rows
-    assert pruned.count() == sum(
-        1
-        for r in spark.read.parquet(target).collect()
-        if r.p_bucket == touched[0]
+
+    resolved: list[str] = []
+    real = U._manifest_dirs
+
+    def recording(local, manifest, buckets=None):
+        dirs = real(local, manifest, buckets)
+        resolved.extend(dirs)
+        return dirs
+
+    monkeypatch.setattr(U, "_manifest_dirs", recording)
+    batch = [(0, BASE + timedelta(minutes=99), 9.0, 1000)]
+    out = merge_into_partitioned(
+        target, spark.createDataFrame(batch, SCHEMA),
+        keys=["key"], order_by=["ts", "seq"], num_buckets=8,
+        return_touched_only=True,
     )
+    assert resolved, "the merge never resolved its stored slice"
+    names = {os.path.basename(d) for d in resolved}
+    assert all(n.startswith(f"b{touched}_v") for n in names), names
+    # key 0 already existed, so the touched bucket's row count is
+    # unchanged by the merge
+    expect = sum(
+        1
+        for r in spark.createDataFrame(seed, SCHEMA)
+        .select(U._bucket_expr(["key"], 8).alias("b"))
+        .collect()
+        if r.b == touched
+    )
+    assert out.count() == expect
 
 
 # ------------------------------------------------- null-aware newer
@@ -295,8 +323,8 @@ def test_semantic_dedup_hier_keeps_zero_norm_vectors(spark):
 
 def test_filter_partitioned_expires_and_preserves_layout(spark, tmp_path):
     """filter_partitioned: rows failing the predicate are physically
-    gone, the bucket layout + meta survive, an entirely-expired bucket's
-    partition disappears, and merges continue working afterwards."""
+    gone, the bucket layout + meta survive, an entirely-expired bucket
+    loses its manifest entry, and merges continue working afterwards."""
     import json
 
     from pyspark.sql import functions as F
@@ -304,6 +332,7 @@ def test_filter_partitioned_expires_and_preserves_layout(spark, tmp_path):
     from transit_efficiency_analysis_spark.operators.upsert import (
         filter_partitioned,
         merge_into_partitioned,
+        read_partitioned,
     )
 
     target = str(tmp_path / "tbl")
@@ -316,15 +345,19 @@ def test_filter_partitioned_expires_and_preserves_layout(spark, tmp_path):
     out = filter_partitioned(spark, target, F.col("ts") >= F.lit(cutoff))
     assert sorted(r.key for r in out.collect()) == list(range(20, 30))
     # physical: a fresh read agrees (expired rows not merely filtered)
-    again = spark.read.parquet(target)
+    again = read_partitioned(spark, target)
     assert again.count() == 10
-    # layout: meta intact, only non-empty buckets remain
+    # layout: meta intact, only non-empty buckets remain in the manifest
+    # and every committed version dir is named by it
     meta = json.load(open(os.path.join(target, ".merge_meta.json")))
     assert meta["num_buckets"] == 8
-    links = [n for n in os.listdir(target) if n.startswith("p_bucket=")]
-    assert 0 < len(links) <= 8
+    manifest = json.load(open(os.path.join(target, ".manifest.json")))
+    assert 0 < len(manifest) <= 8
+    assert sorted(os.listdir(os.path.join(target, ".v"))) == sorted(
+        f"b{b}_v{v}" for b, v in manifest.items()
+    )
     # merges still work after compaction (incl. a key whose bucket was
-    # emptied: its partition is recreated)
+    # emptied: its bucket is recreated)
     late = _mk_rows([(0, 99, 7), (25, 99, 8)])
     merged = merge_into_partitioned(
         target, spark.createDataFrame(late, SCHEMA),

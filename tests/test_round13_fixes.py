@@ -118,7 +118,7 @@ def _data_files(d):
 
 def test_merge_wide_route_clusters_write_and_converges(spark, tmp_path):
     """A batch touching >= wide_threshold of the buckets takes the
-    bucket-clustered write: each partition dir ends up with exactly ONE
+    bucket-clustered write: each bucket's version dir holds exactly ONE
     data file (the direct route leaves one per shuffle task holding
     rows of that bucket), and the merged state still equals
     keep-newest-per-key over everything merged — routing must never
@@ -139,13 +139,13 @@ def test_merge_wide_route_clusters_write_and_converges(spark, tmp_path):
     out = merge_into_partitioned(
         target, wdf, keys=["key"], order_by=["ts", "seq"], num_buckets=8
     )
-    for name in os.listdir(target):
-        if name.startswith("p_bucket="):
-            files = _data_files(os.path.join(target, name))
-            assert len(files) == 1, (
-                f"wide route should write one file per bucket, {name} has "
-                f"{len(files)}"
-            )
+    vroot = os.path.join(target, ".v")
+    for name in os.listdir(vroot):
+        files = _data_files(os.path.join(vroot, name))
+        assert len(files) == 1, (
+            f"wide route should write one file per bucket, {name} has "
+            f"{len(files)}"
+        )
     expect = {
         (r.key, r.ts, r.value, r.seq)
         for r in upsert_keep_newest(
@@ -194,6 +194,7 @@ def test_merge_return_touched_only(spark, tmp_path):
     from transit_efficiency_analysis_spark.operators.upsert import (
         _bucket_expr,
         merge_into_partitioned,
+        read_partitioned,
     )
 
     target = str(tmp_path / "tbl")
@@ -211,7 +212,7 @@ def test_merge_return_touched_only(spark, tmp_path):
     touched = {
         r.b for r in bdf.select(_bucket_expr(["key"], 8).alias("b")).collect()
     }
-    full = spark.read.parquet(target)
+    full = read_partitioned(spark, target)
     expect = {
         (r.key, r.ts, r.value, r.seq)
         for r in full.withColumn("b", _bucket_expr(["key"], 8))
@@ -225,11 +226,10 @@ def test_merge_return_touched_only(spark, tmp_path):
 
 
 def test_merge_meta_recovery_and_atomic_first(spark, tmp_path):
-    """The layout meta is committed before any partition swap, via temp
-    file + os.replace: after the crash window it guards against
-    (meta-only dir, no partitions — previously partitions-without-meta,
-    which bricked the table), the next merge recovers by treating the
-    table as absent and recreating it."""
+    """The layout meta is committed before the first manifest swap, via
+    temp file + os.replace: after the crash window it leaves (meta-only
+    dir, no manifest), the next merge treats the table as empty and
+    recreates it."""
     import json
 
     from transit_efficiency_analysis_spark.operators.upsert import (
@@ -238,9 +238,10 @@ def test_merge_meta_recovery_and_atomic_first(spark, tmp_path):
 
     target = tmp_path / "tbl"
     target.mkdir()
-    # simulate the post-fix crash window: meta landed, no data yet
+    # simulate the crash window: meta landed, no manifest yet
     (target / ".merge_meta.json").write_text(
-        json.dumps({"num_buckets": 99, "keys": ["key"], "order_by": ["ts"]})
+        json.dumps({"num_buckets": 99, "keys": ["key"], "order_by": ["ts"],
+                    "commit": "manifest"})
     )
     out = merge_into_partitioned(
         str(target), spark.createDataFrame(_mk_rows([(0, 1, 1)]), SCHEMA),
@@ -263,6 +264,7 @@ def test_filter_partitioned_fails_fast_on_concurrent_merge(spark, tmp_path):
     from transit_efficiency_analysis_spark.operators.upsert import (
         filter_partitioned,
         merge_into_partitioned,
+        read_partitioned,
     )
 
     target = str(tmp_path / "tbl")
@@ -285,7 +287,7 @@ def test_filter_partitioned_fails_fast_on_concurrent_merge(spark, tmp_path):
             _before_commit=concurrent_merge,
         )
     # the merge survived; the compaction changed nothing
-    state = {r.key: r.ts for r in spark.read.parquet(target).collect()}
+    state = {r.key: r.ts for r in read_partitioned(spark, target).collect()}
     assert state[5] == BASE + timedelta(minutes=999)
     assert len(state) == 30  # nothing expired — compaction aborted whole
     # rerun without interleaving: succeeds and applies the filter

@@ -1,13 +1,12 @@
-"""Round-14 regression tests (VERDICT r13 asks + ADVICE items).
+"""Regression tests: the partitioned MERGE's manifest commit protocol
+(write-once version dirs, touched-only returns, interleaving detection,
+typed-empty reads, orphan sweep) and ``_l2sq_decimal``'s ragged-slice
+guard.
 
-- ADVICE #2: ``filter_partitioned``'s emptied-bucket drop path must not
-  physically DELETE a version a concurrent merge committed inside the
-  residual re-check→drop window — per-bucket re-check + snapshot-bounded
-  deletion (worst case an orphaned-but-intact version, never destroyed
-  data).
-- ADVICE #4: ``_l2sq_decimal`` fails loudly on ragged slice lengths
-  instead of letting ``zip_with`` NULL-pad through the fold (the join
-  form sums over the (s,pos) intersection — a silent divergence class).
+``_l2sq_decimal`` fails loudly on ragged slice lengths instead of
+letting ``zip_with`` NULL-pad through the fold (the join form sums over
+the (s,pos) intersection — a silent divergence class). ``semantic_dedup``
+logs a steer toward ``semantic_dedup_hier`` past its quadratic knee.
 """
 
 from __future__ import annotations
@@ -25,111 +24,6 @@ def _mk_rows(raw):
         (k, BASE + timedelta(minutes=ts), float(v), seq)
         for seq, (k, ts, v) in enumerate(raw)
     ]
-
-
-def _bucket_of(spark, key: int, num_buckets: int) -> int:
-    from pyspark.sql import functions as F
-
-    return (
-        spark.range(1)
-        .select(
-            F.pmod(F.xxhash64(F.lit(key).cast("long")), F.lit(num_buckets))
-            .cast("int")
-            .alias("b")
-        )
-        .collect()[0].b
-    )
-
-
-def test_emptied_bucket_drop_survives_concurrent_merge(spark, tmp_path):
-    """ADVICE r13 #2: a merge committing between compaction's version
-    re-check and an emptied bucket's drop must keep its committed
-    version — the pre-fix rmtree deleted ALL of the bucket's versions,
-    destroying the merge's data (strictly worse than the documented
-    lost-update residual). With the fix the drop is skipped for that
-    bucket, the merge's rows survive, and a rerun applies the filter
-    cleanly."""
-    from pyspark.sql import functions as F
-
-    from transit_efficiency_analysis_spark.operators.upsert import (
-        filter_partitioned,
-        merge_into_partitioned,
-    )
-
-    num_buckets = 4
-    target = str(tmp_path / "tbl")
-    seed = _mk_rows([(k, k, 1) for k in range(30)])
-    merge_into_partitioned(
-        target, spark.createDataFrame(seed, SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=num_buckets,
-    )
-
-    new_key = 1000
-    hot = _bucket_of(spark, new_key, num_buckets)
-    injected = []
-
-    def inject(bucket: int):
-        if bucket == hot and not injected:
-            injected.append(bucket)
-            merge_into_partitioned(
-                target,
-                spark.createDataFrame(_mk_rows([(new_key, 5000, 7)]), SCHEMA),
-                keys=["key"], order_by=["ts", "seq"],
-                num_buckets=num_buckets,
-            )
-
-    # every seeded row expires (ts < cutoff) → every bucket drops; the
-    # injected merge lands in bucket `hot` during its drop
-    cutoff = BASE + timedelta(minutes=100)
-    filter_partitioned(
-        spark, target, F.col("ts") >= F.lit(cutoff), _before_drop=inject,
-    )
-    assert injected == [hot], "seam never fired for the merge's bucket"
-
-    # the merge's freshly committed version survived the compaction
-    state = {r.key: r.ts for r in spark.read.parquet(target).collect()}
-    assert state[new_key] == BASE + timedelta(minutes=5000)
-    # only bucket `hot` kept rows (its drop was skipped wholesale, so
-    # its not-yet-expired-filtered old keys ride along until a rerun)
-    assert all(
-        k == new_key or _bucket_of(spark, k, num_buckets) == hot
-        for k in state
-    )
-
-    # rerun without interleaving: the filter applies, merge row kept
-    out = filter_partitioned(spark, target, F.col("ts") >= F.lit(cutoff))
-    assert sorted(r.key for r in out.collect()) == [new_key]
-
-
-def test_emptied_bucket_drop_still_cleans_up(spark, tmp_path):
-    """The concurrency guard must not break normal cleanup: with no
-    interleaving writer, an emptied bucket's link AND all its version
-    dirs are removed."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from transit_efficiency_analysis_spark.operators.upsert import (
-        filter_partitioned,
-        merge_into_partitioned,
-    )
-
-    target = str(tmp_path / "tbl")
-    merge_into_partitioned(
-        target, spark.createDataFrame(_mk_rows([(k, k, 1) for k in range(30)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-    )
-    out = filter_partitioned(spark, target, F.lit(False))
-    assert out.count() == 0
-    assert not any(n.startswith("p_bucket=") for n in os.listdir(target))
-    vroot = os.path.join(target, ".v")
-    assert not os.listdir(vroot), "dropped buckets left version dirs behind"
-    # the table stays mergeable after the full drop
-    merge_into_partitioned(
-        target, spark.createDataFrame(_mk_rows([(7, 7, 2)]), SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-    )
-    assert spark.read.parquet(target).count() == 1
 
 
 def test_l2sq_decimal_ragged_raises(spark):
@@ -162,18 +56,17 @@ def test_l2sq_decimal_ragged_raises(spark):
     assert nulls[0].d is None
 
 
-# ----------------- manifest commit mode (round 14, VERDICT r13 ask #3)
+# ------------------------------------------ manifest commit protocol
 
 
-def _merge(spark, target, raw, commit="symlink", **kw):
+def _merge(spark, target, raw, **kw):
     from transit_efficiency_analysis_spark.operators.upsert import (
         merge_into_partitioned,
     )
 
     return merge_into_partitioned(
         target, spark.createDataFrame(raw, SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-        commit=commit, **kw,
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4, **kw,
     )
 
 
@@ -181,76 +74,11 @@ def _rows(df):
     return sorted((r.key, r.ts, r.value) for r in df.collect())
 
 
-@pytest.mark.parametrize("commit", ["symlink", "manifest"])
-def test_merge_commit_modes_converge_identically(spark, tmp_path, commit):
-    """Both commit protocols run the same MERGE algebra over the same
-    bucket layout: any batch split converges to keep-newest-per-key,
-    wide batches included, and the two modes' final states are
-    byte-identical (the cross-mode assertion runs once, from the
-    manifest case, against a symlink twin built from the same
-    batches)."""
-    from transit_efficiency_analysis_spark.operators.upsert import (
-        read_partitioned,
-        upsert_keep_newest,
-    )
-
-    batches = [
-        _mk_rows([(k, k, 1) for k in range(20)]),    # wide seed
-        _mk_rows([(5, 999, 7), (21, 21, 2)]),        # trickle + new key
-        # older redelivery for key 5 (must NOT clobber ts=999) + update
-        _mk_rows([(5, 100, 9), (3, 3000, 4)]),
-    ]
-
-    target = str(tmp_path / f"tbl_{commit}")
-    for b in batches:
-        out = _merge(spark, target, b, commit=commit)
-    # the returned relation equals the sequential keep-newest fold
-    all_obs = spark.createDataFrame(
-        [r for b in batches for r in b], SCHEMA
-    )
-    expect = _rows(upsert_keep_newest(all_obs, ["key"], ["ts", "seq"]))
-    assert _rows(out) == expect
-    assert _rows(read_partitioned(spark, target)) == expect
-
-    if commit == "manifest":
-        twin = str(tmp_path / "tbl_twin_symlink")
-        for b in batches:
-            _merge(spark, twin, b, commit="symlink")
-        assert _rows(read_partitioned(spark, twin)) == _rows(
-            read_partitioned(spark, target)
-        )
-
-
-@pytest.mark.parametrize("commit", ["symlink", "manifest"])
-def test_filter_partitioned_modes_expire_identically(spark, tmp_path, commit):
-    """Compaction semantics are mode-independent: expiry applies, the
-    layout survives, merges continue seamlessly afterwards."""
-    from pyspark.sql import functions as F
-
-    from transit_efficiency_analysis_spark.operators.upsert import (
-        filter_partitioned,
-        read_partitioned,
-    )
-
-    target = str(tmp_path / "tbl")
-    _merge(spark, target, _mk_rows([(k, k, 1) for k in range(30)]),
-           commit=commit)
-    cutoff = BASE + timedelta(minutes=20)
-    out = filter_partitioned(spark, target, F.col("ts") >= F.lit(cutoff))
-    assert sorted(r.key for r in out.collect()) == list(range(20, 30))
-    # merges continue on the compacted table (layout + meta preserved)
-    _merge(spark, target, _mk_rows([(2, 5000, 8)]), commit=commit)
-    state = {r.key: r.ts for r in read_partitioned(spark, target).collect()}
-    assert state[2] == BASE + timedelta(minutes=5000)
-    assert sorted(state) == [2] + list(range(20, 30))
-
-
 def test_manifest_interleaving_fails_fast_and_never_destroys(spark, tmp_path):
     """The manifest re-check detects a concurrent merge and aborts with
     the table untouched; the merge's committed version (manifest entry
     AND version dir) survives — including for buckets the compaction
-    would have EMPTIED, the destructive-race class the symlink path
-    needed ADVICE r13's per-bucket guard for."""
+    would have EMPTIED."""
     from pyspark.sql import functions as F
 
     from transit_efficiency_analysis_spark.operators.upsert import (
@@ -259,11 +87,10 @@ def test_manifest_interleaving_fails_fast_and_never_destroys(spark, tmp_path):
     )
 
     target = str(tmp_path / "tbl")
-    _merge(spark, target, _mk_rows([(k, k, 1) for k in range(30)]),
-           commit="manifest")
+    _merge(spark, target, _mk_rows([(k, k, 1) for k in range(30)]))
 
     def concurrent_merge():
-        _merge(spark, target, _mk_rows([(5, 999, 7)]), commit="manifest")
+        _merge(spark, target, _mk_rows([(5, 999, 7)]))
 
     # the condition empties EVERY bucket; the interleaved merge commits
     # between staging write and the manifest re-check
@@ -278,7 +105,7 @@ def test_manifest_interleaving_fails_fast_and_never_destroys(spark, tmp_path):
     out = filter_partitioned(spark, target, F.lit(False))
     assert out.count() == 0
     assert read_partitioned(spark, target).count() == 0
-    _merge(spark, target, _mk_rows([(7, 7, 2)]), commit="manifest")
+    _merge(spark, target, _mk_rows([(7, 7, 2)]))
     assert read_partitioned(spark, target).count() == 1
 
 
@@ -291,10 +118,8 @@ def test_manifest_touched_only_return(spark, tmp_path):
     from pyspark.sql import functions as F
 
     target = str(tmp_path / "tbl")
-    _merge(spark, target, _mk_rows([(k, k, 1) for k in range(30)]),
-           commit="manifest")
-    out = _merge(spark, target, _mk_rows([(5, 999, 7)]),
-                 commit="manifest", return_touched_only=True)
+    _merge(spark, target, _mk_rows([(k, k, 1) for k in range(30)]))
+    out = _merge(spark, target, _mk_rows([(5, 999, 7)]), return_touched_only=True)
     got = {r.key for r in out.collect()}
     # key 5's bucket, post-merge: every stored key hashing there + 5
     b5 = spark.range(30).select(
@@ -311,26 +136,6 @@ def test_manifest_touched_only_return(spark, tmp_path):
     }
 
 
-def test_manifest_mode_never_silently_converts(spark, tmp_path):
-    """commit= is creation-time only: manifest-vs-existing-symlink
-    raises; the default parameter against a manifest table keeps the
-    manifest protocol (the meta wins)."""
-    import os
-
-    target = str(tmp_path / "tbl")
-    _merge(spark, target, _mk_rows([(1, 1, 1)]), commit="symlink")
-    with pytest.raises(ValueError, match="symlink commit"):
-        _merge(spark, target, _mk_rows([(2, 2, 2)]), commit="manifest")
-
-    target2 = str(tmp_path / "tbl2")
-    _merge(spark, target2, _mk_rows([(1, 1, 1)]), commit="manifest")
-    _merge(spark, target2, _mk_rows([(2, 2, 2)]))  # default param
-    assert os.path.exists(os.path.join(target2, ".manifest.json"))
-    assert not any(
-        n.startswith("p_bucket=") for n in os.listdir(target2)
-    ), "a default-parameter merge converted a manifest table to symlink"
-
-
 def test_manifest_version_dirs_are_write_once(spark, tmp_path):
     """Object-store shape: committed version dirs are never mutated —
     a second merge touching the same bucket writes a NEW version dir
@@ -340,10 +145,10 @@ def test_manifest_version_dirs_are_write_once(spark, tmp_path):
     import os
 
     target = str(tmp_path / "tbl")
-    _merge(spark, target, _mk_rows([(1, 1, 1)]), commit="manifest")
+    _merge(spark, target, _mk_rows([(1, 1, 1)]))
     with open(os.path.join(target, ".manifest.json")) as f:
         m1 = json.load(f)
-    _merge(spark, target, _mk_rows([(1, 999, 2)]), commit="manifest")
+    _merge(spark, target, _mk_rows([(1, 999, 2)]))
     with open(os.path.join(target, ".manifest.json")) as f:
         m2 = json.load(f)
     (b,) = m1.keys()
@@ -389,10 +194,10 @@ def test_semantic_dedup_warns_past_quadratic_knee(spark, caplog):
 
 
 def test_read_partitioned_emptied_tables_and_orphan_sweep(spark, tmp_path):
-    """read_partitioned returns a typed empty relation for emptied
-    tables under BOTH modes; sweep_orphans deletes exactly the version
-    dirs the manifest doesn't name (quiesced-writer maintenance) and
-    refuses symlink tables."""
+    """read_partitioned returns a typed empty relation for an emptied
+    table; sweep_orphans deletes exactly the version dirs the manifest
+    doesn't name (quiesced-writer maintenance) and refuses a path with
+    no manifest."""
     import os
 
     from pyspark.sql import functions as F
@@ -403,16 +208,15 @@ def test_read_partitioned_emptied_tables_and_orphan_sweep(spark, tmp_path):
         sweep_orphans,
     )
 
-    for commit in ("symlink", "manifest"):
-        target = str(tmp_path / f"tbl_{commit}")
-        _merge(spark, target, _mk_rows([(1, 1, 1)]), commit=commit)
-        filter_partitioned(spark, target, F.lit(False))
-        out = read_partitioned(spark, target)
-        assert out.count() == 0
-        assert out.columns == ["key", "ts", "value", "seq"]
+    target = str(tmp_path / "tbl_emptied")
+    _merge(spark, target, _mk_rows([(1, 1, 1)]))
+    filter_partitioned(spark, target, F.lit(False))
+    out = read_partitioned(spark, target)
+    assert out.count() == 0
+    assert out.columns == ["key", "ts", "value", "seq"]
 
     target = str(tmp_path / "tbl_sweep")
-    _merge(spark, target, _mk_rows([(1, 1, 1)]), commit="manifest")
+    _merge(spark, target, _mk_rows([(1, 1, 1)]))
     # plant a crash orphan: a renamed-but-never-committed version dir
     vroot = os.path.join(target, ".v")
     (live,) = os.listdir(vroot)
@@ -424,10 +228,8 @@ def test_read_partitioned_emptied_tables_and_orphan_sweep(spark, tmp_path):
     assert sorted(os.listdir(vroot)) == [live]
     assert _rows(read_partitioned(spark, target)) == before
 
-    sym = str(tmp_path / "tbl_sym")
-    _merge(spark, sym, _mk_rows([(1, 1, 1)]), commit="symlink")
     with pytest.raises(ValueError, match="not manifest-protocol"):
-        sweep_orphans(sym)
+        sweep_orphans(str(tmp_path / "no_table"))
 
 
 # ------- property: manifest-protocol convergence over random splits
@@ -451,9 +253,8 @@ _rows_strategy = st.lists(
 def test_manifest_merge_batch_split_parity_property(
     spark, tmp_path_factory, raw, split
 ):
-    """The manifest protocol's twin of r12's split-parity property: ANY
-    two-way batch split through the manifest-committed runtime equals
-    merge_batch folded in memory (merge_batch IS the spec)."""
+    """ANY two-way batch split through the manifest-committed runtime
+    equals merge_batch folded in memory (merge_batch IS the spec)."""
     from transit_efficiency_analysis_spark.operators.upsert import (
         merge_batch,
         merge_into_partitioned,
@@ -469,7 +270,7 @@ def test_manifest_merge_batch_split_parity_property(
         inc = spark.createDataFrame(b, SCHEMA)
         stored = merge_into_partitioned(
             target, inc, keys=["key"], order_by=["ts", "seq"],
-            num_buckets=4, commit="manifest",
+            num_buckets=4,
         )
         state_mem = merge_batch(
             state_mem, inc, keys=["key"], order_by=["ts", "seq"]
@@ -492,8 +293,7 @@ def test_manifest_read_pushes_filters_to_scan(spark, tmp_path):
     )
 
     target = str(tmp_path / "tbl")
-    _merge(spark, target, _mk_rows([(k, k, k % 3) for k in range(50)]),
-           commit="manifest")
+    _merge(spark, target, _mk_rows([(k, k, k % 3) for k in range(50)]))
     df = read_partitioned(spark, target).where(F.col("key") == 7).select(
         "key", "value"
     )

@@ -13,7 +13,7 @@
   on a manifest RE-READ taken immediately before the swap — a
   concurrent disjoint-bucket merge's entries survive — and fail fast
   when a touched bucket advanced (lost-update / compaction-resurrection
-  class), mirroring ``_filter_partitioned_manifest``'s detector.
+  class), mirroring ``filter_partitioned``'s detector.
 - ADVICE r14 #2 (low): an empty batch merged into a fresh manifest
   table returns the typed empty relation, not an AnalysisException from
   a zero-path ``spark.read.parquet()``.
@@ -49,8 +49,7 @@ def _merge(spark, target, raw, **kw):
 
     return merge_into_partitioned(
         target, spark.createDataFrame(raw, SCHEMA),
-        keys=["key"], order_by=["ts", "seq"], num_buckets=4,
-        commit="manifest", **kw,
+        keys=["key"], order_by=["ts", "seq"], num_buckets=4, **kw,
     )
 
 

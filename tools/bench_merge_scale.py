@@ -1,5 +1,5 @@
 """Batch-proportionality check for the partitioned pure-Parquet MERGE
-(docs/SCALE.md, VERDICT r11 ask #2).
+(docs/SCALE.md).
 
 Builds the stored table at Nx scale (lineitem replicated with disjoint
 per-copy key spaces — table AND key cardinality grow Nx) with the
@@ -9,12 +9,14 @@ that picks 4096 buckets at 100 TB). Then merges one FIXED-size trickle
 batch (the line items of 2 orders, newer shipdates) and times it:
 
 - ``merge_into_partitioned``: should stay ~FLAT across table scale —
-  the batch touches a handful of constant-sized bucket partitions, so
-  scan + rewrite cost is bounded by the batch's touched slice, not the
-  table (the only per-table-scale residue is the driver's partition-dir
-  listing, O(num_buckets) — a catalog's job on a real deployment).
-- ``merge_into_sql`` (the r11 full-rewrite runtime, same semantics):
-  the contrast row — O(table) per batch, wall grows ~Nx.
+  the batch touches a handful of constant-sized buckets, so scan +
+  rewrite cost is bounded by the batch's touched slice, not the table.
+  The whole-table return resolves every bucket's version dir through
+  the manifest; ``return_touched_only`` resolves only the touched ones.
+- ``merge_into_sql`` (the full-rewrite runtime, same semantics): the
+  contrast row — O(table) per batch, wall grows ~Nx.
+- a WIDE batch touching every bucket: the other envelope end, timed
+  twice (the second run reads the clustered one-file-per-bucket layout).
 
 The seed build (first merge, whole table) is also timed: that is the
 pay-once layout cost, analogous to the bucketed-flagship layout write.
@@ -25,7 +27,9 @@ Usage:
 Prints one JSON line:
     {"metric": "merge_scale", "batch_rows": B,
      "points": {N: {"table_rows": _, "num_buckets": _, "seed_s": _,
-                    "merge_part_s": _, "touched": _, "merge_full_s": _}}}
+                    "merge_part_s": _, "touched": _, "merge_full_s": _,
+                    "wide_batch_s": _, "wide_steady_s": _,
+                    "wide_touched": _, "merge_part_touched_s": _}}}
 """
 
 from __future__ import annotations
@@ -134,72 +138,26 @@ def main() -> int:
                 .distinct()
                 .count()
             )
-            # round-13 A/B, same session/state: the DIRECT write first
-            # (wide_threshold=1.1 disables the clustered route — the
-            # pre-r13 behavior), then the auto-routed clustered write
-            # (the second merge of the same wide batch is a fixed point:
-            # identical touched set and data volume)
-            t0 = time.perf_counter()
-            merge_into_partitioned(part_target, wide, keys, order_by,
-                                   num_buckets=buckets, wide_threshold=1.1)
-            wide_direct_s = time.perf_counter() - t0
+            # wide route: the first merge reads the trickle-written
+            # layout; the second reads the one-file-per-bucket layout the
+            # clustered write leaves — the steady state of a deployment
+            # that takes wide batches
             t0 = time.perf_counter()
             merge_into_partitioned(part_target, wide, keys, order_by,
                                    num_buckets=buckets)
             wide_s = time.perf_counter() - t0
-            # steady-state clustered point: the run above READ the
-            # direct run's fragmented output (tasks x buckets small
-            # files); this one reads the clustered one-file-per-bucket
-            # layout — the state a clustered-only deployment lives in
             t0 = time.perf_counter()
             merge_into_partitioned(part_target, wide, keys, order_by,
                                    num_buckets=buckets)
             wide_steady_s = time.perf_counter() - t0
 
-            # read-side overhead (VERDICT r12 ask #6): the same trickle
-            # merge returning only the touched slice (pruned path read)
-            # vs the default whole-table discovery read-back
+            # read-side overhead: the same trickle merge returning only
+            # the touched slice vs the whole-table read-back above
             t0 = time.perf_counter()
             merge_into_partitioned(part_target, batch, keys, order_by,
                                    num_buckets=buckets,
                                    return_touched_only=True)
             part_touched_s = time.perf_counter() - t0
-
-            # round-14 manifest-commit A/B (VERDICT r13 ask #3): the
-            # same seed + trickle + touched-only sequence through the
-            # manifest protocol (one atomic manifest swap per merge,
-            # write-once version dirs, zero-listing manifest-resolved
-            # reads) — the object-store-shaped commit. The contrast of
-            # interest is merge_part_s vs mani_merge_s: the manifest
-            # read path replaces the O(touched) dir stats + symlink
-            # resolution with one JSON read.
-            mani_target = os.path.join(work, f"mani_{n}")
-            t0 = time.perf_counter()
-            merge_into_partitioned(mani_target, table, keys, order_by,
-                                   num_buckets=buckets, commit="manifest")
-            mani_seed_s = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            merge_into_partitioned(mani_target, batch, keys, order_by,
-                                   num_buckets=buckets)
-            mani_merge_s = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            merge_into_partitioned(mani_target, batch, keys, order_by,
-                                   num_buckets=buckets,
-                                   return_touched_only=True)
-            mani_touched_s = time.perf_counter() - t0
-            # manifest wide point (round 14): the same wide batch as the
-            # symlink rows, twice — the second run is the steady state
-            # (one-file-per-bucket layout), comparable to wide_steady_s;
-            # the commit here is ONE manifest replace instead of
-            # `buckets` symlink flips.
-            t0 = time.perf_counter()
-            merge_into_partitioned(mani_target, wide, keys, order_by,
-                                   num_buckets=buckets)
-            mani_wide_s = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            merge_into_partitioned(mani_target, wide, keys, order_by,
-                                   num_buckets=buckets)
-            mani_wide_steady_s = time.perf_counter() - t0
 
             table.unpersist()
             points[n] = {
@@ -210,27 +168,17 @@ def main() -> int:
                 "touched": touched,
                 "merge_full_s": round(full_s, 2),
                 "wide_batch_s": round(wide_s, 2),
-                "wide_direct_s": round(wide_direct_s, 2),
                 "wide_steady_s": round(wide_steady_s, 2),
                 "wide_touched": wide_touched,
                 "merge_part_touched_s": round(part_touched_s, 2),
-                "manifest_seed_s": round(mani_seed_s, 2),
-                "manifest_merge_s": round(mani_merge_s, 2),
-                "manifest_touched_s": round(mani_touched_s, 2),
-                "manifest_wide_s": round(mani_wide_s, 2),
-                "manifest_wide_steady_s": round(mani_wide_steady_s, 2),
             }
             print(
                 f"# N={n}: table {table_rows} rows, {buckets} buckets, "
                 f"seed {seed_s:.1f}s, partitioned merge {part_s:.2f}s "
                 f"({touched} touched; touched-only return "
                 f"{part_touched_s:.2f}s), full-rewrite merge {full_s:.2f}s, "
-                f"wide batch direct {wide_direct_s:.2f}s / clustered "
-                f"{wide_s:.2f}s / steady {wide_steady_s:.2f}s "
-                f"({wide_touched}/{buckets} touched), manifest seed "
-                f"{mani_seed_s:.1f}s / merge {mani_merge_s:.2f}s / "
-                f"touched-only {mani_touched_s:.2f}s / wide "
-                f"{mani_wide_s:.2f}s / wide steady {mani_wide_steady_s:.2f}s",
+                f"wide batch {wide_s:.2f}s / steady {wide_steady_s:.2f}s "
+                f"({wide_touched}/{buckets} touched)",
                 file=sys.stderr,
             )
     finally:

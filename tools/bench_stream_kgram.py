@@ -4,7 +4,7 @@ Replays the documents table as B event-ordered batches through the
 q_stream_dup_screen maintenance shape (screen batch against the standing
 k-gram table, then append the batch's k-grams) and records, per batch,
 the standing table's row count and the screen/maintain wall time — for
-three maintenance policies:
+four maintenance policies:
 
 - ``append``      — the demo's shape: append the batch's DISTINCT
                     k-grams unconditionally. Re-seen k-grams accumulate
@@ -17,19 +17,20 @@ three maintenance policies:
                     and expire k-grams older than ``ttl`` batches
                     (``operators.spans.kgram_table_ttl``). Bounded by
                     the distinct k-grams of the last ttl+1 batches.
-- ``ttl_partitioned`` — the r12 production shape: batch-proportional
+- ``ttl_manifest`` — the production shape: batch-proportional
                     partitioned MERGE of (kgram, last_seen) per batch
-                    (``merge_into_partitioned``), strict ttl semantics
-                    applied at SCREEN time through the last_seen
-                    predicate, physical expiry deferred to an
-                    occasional partition-preserving compaction
+                    (``merge_into_partitioned``, manifest commit),
+                    strict ttl semantics applied at SCREEN time through
+                    the last_seen predicate, physical expiry deferred
+                    to an occasional layout-preserving compaction
                     (``filter_partitioned``, every ttl+1 batches here).
-                    Span counts must equal the per-batch-expired ttl
-                    policy's; physical rows plateau at each compaction.
+                    Physical rows plateau at each compaction.
 
 Screening results are policy-INVARIANT for append vs merge_unique (the
 membership join deduplicates the set anyway — asserted per batch); ttl
-intentionally narrows the horizon and is excluded from that assertion.
+intentionally narrows the horizon and is excluded from that assertion,
+but ttl_manifest must screen exactly like ttl (asserted per batch):
+deferring physical expiry never widens the dedup horizon.
 
 Usage:
     python tools/bench_stream_kgram.py [sf_dir] [n_batches] [ttl] [policy ...]
@@ -61,7 +62,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     ttl = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    policies = sys.argv[4:] or ["append", "merge_unique", "ttl", "ttl_partitioned"]
+    policies = sys.argv[4:] or ["append", "merge_unique", "ttl", "ttl_manifest"]
 
     from transit_efficiency_analysis_spark.operators.spans import (
         kgram_occurrences,
@@ -89,32 +90,23 @@ def main() -> int:
             rows, screen_s, maintain_s, span_counts = [], [], [], []
 
             def standing() -> DataFrame:
-                if os.path.isdir(tbl) and os.path.exists(
-                    os.path.join(tbl, ".manifest.json")
-                ):
-                    # manifest-protocol table (round 14): committed
-                    # version dirs resolve through the manifest, zero
-                    # directory listing
+                if os.path.exists(os.path.join(tbl, ".merge_meta.json")):
                     from transit_efficiency_analysis_spark.operators.upsert import (
                         read_partitioned,
                     )
 
                     return read_partitioned(spark, tbl)
                 if os.path.isdir(tbl) and any(
-                    p.startswith(("part-", "_", "p_bucket="))
-                    for p in os.listdir(tbl)
+                    p.startswith(("part-", "_")) for p in os.listdir(tbl)
                 ) or os.path.islink(tbl):
-                    df = spark.read.parquet(tbl)
-                    return df.drop("p_bucket") if "p_bucket" in df.columns else df
+                    return spark.read.parquet(tbl)
                 return spark.createDataFrame([], "kgram long")
 
             for b in range(n_batches):
                 bdf = batch(b)
                 t0 = time.time()
                 view = standing()
-                if policy in ("ttl_partitioned", "ttl_manifest") and (
-                    "last_seen" in view.columns
-                ):
+                if policy == "ttl_manifest" and "last_seen" in view.columns:
                     # physical expiry is deferred (compaction cadence), so
                     # the SCREEN applies the freshness predicate — exactly
                     # the rows the per-batch-expired ttl table contains at
@@ -153,16 +145,14 @@ def main() -> int:
                     )
 
                     overwrite_table(kgram_table_ttl(merged, b, ttl), tbl)
-                elif policy in ("ttl_partitioned", "ttl_manifest"):
-                    # the production shape (round 12): batch-proportional
-                    # partitioned MERGE of (kgram, last_seen) per batch;
-                    # physical expiry only every ttl+1 batches via the
-                    # partition-preserving compaction. The SCREEN above
-                    # already applied strict ttl semantics through the
-                    # standing() view, so deferred physical expiry never
-                    # widens the dedup horizon. ttl_manifest (round 14)
-                    # is the same loop through the manifest commit
-                    # protocol — spans must be bit-identical.
+                elif policy == "ttl_manifest":
+                    # batch-proportional partitioned MERGE of
+                    # (kgram, last_seen) per batch; physical expiry only
+                    # every ttl+1 batches via the layout-preserving
+                    # compaction. The SCREEN above already applied strict
+                    # ttl semantics through the standing() view, so
+                    # deferred physical expiry never widens the dedup
+                    # horizon.
                     from transit_efficiency_analysis_spark.operators.upsert import (
                         filter_partitioned,
                         merge_into_partitioned,
@@ -174,17 +164,11 @@ def main() -> int:
                         .distinct()
                         .withColumn("last_seen", F.lit(b).cast("long"))
                     )
-                    # maintenance-loop mode (round 13): the loop never
-                    # consumes the merge's return, so skip the
-                    # whole-table discovery read-back (O(num_buckets)
-                    # listing per batch) — the touched slice is enough
+                    # maintenance-loop mode: the loop never consumes the
+                    # merge's return, so only the touched slice is read
                     merge_into_partitioned(
                         tbl, inc, keys=["kgram"], order_by=["last_seen"],
                         num_buckets=32, return_touched_only=True,
-                        commit=(
-                            "manifest" if policy == "ttl_manifest"
-                            else "symlink"
-                        ),
                     )
                     if b > 0 and b % (ttl + 1) == 0:
                         filter_partitioned(
@@ -209,18 +193,11 @@ def main() -> int:
             if results["append"]["spans"] != results["merge_unique"]["spans"]:
                 print("# SPAN MISMATCH append vs merge_unique", file=sys.stderr)
                 return 1
-        # commit-protocol invariance: the manifest loop must screen
-        # bit-identically to the symlink loop (same semantics, different
-        # commit mechanics)
-        if "ttl_partitioned" in results and "ttl_manifest" in results:
-            if (
-                results["ttl_partitioned"]["spans"]
-                != results["ttl_manifest"]["spans"]
-            ):
-                print(
-                    "# SPAN MISMATCH ttl_partitioned vs ttl_manifest",
-                    file=sys.stderr,
-                )
+        # deferred-expiry invariance: the manifest loop must screen
+        # exactly like the per-batch-expired ttl loop
+        if "ttl" in results and "ttl_manifest" in results:
+            if results["ttl"]["spans"] != results["ttl_manifest"]["spans"]:
+                print("# SPAN MISMATCH ttl vs ttl_manifest", file=sys.stderr)
                 return 1
         print(
             json.dumps(

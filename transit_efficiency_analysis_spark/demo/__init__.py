@@ -97,88 +97,78 @@ _DEMO_MODULES = [
 # results were just recorded" (grace: newest artifact == window and
 # 50/50 green) from "rotation skipped" (artifacts newer than the
 # window's target round) — the ADVICE r11 medium item.
-_WINDOW_ROUND = 18
+_WINDOW_ROUND = 20
 
-# Round-18 window (docs/ROUND17.md §10 precomputed the arithmetic;
-# VERDICT r17 confirmed it against the artifacts: 47 forced r13-era
-# rows + 3 free slots). The 3 free slots:
-# - 1 NEW registry entry (VERDICT r17 ask #2): q_upsert_merge_retry —
-#   the round-17 CAS backend + merge_with_retry commit-retry story
-#   under the driver's hash check (check_window R1 forces any new
-#   demo into the window the round it lands).
-# - 2 pre-committed since ROUND17.md §1/§10: q_sim_lsh_topk_derived
-#   and q_sim_lsh_recall, the two r16-fresh LSH demos whose executed
-#   Python changed in round 17's auto flip (plans pinned
-#   expression-identical at gate scale; locally 6/6 green then) —
-#   the driver row is confirmation, not discovery.
+# The window's 2 front slots hold demos whose executed code changed
+# since their last green CORRECTNESS row:
+# - q_upsert_merge_parquet: merge_into_partitioned now commits through
+#   the manifest protocol only, so the demo's write path changed.
+# - q_sql_recursive_chain: executes the lag(2^k) prefix-doubling walk
+#   in place of the recursive CTE.
 #
-# Dark-ship exemption (standing policy, ADVICE r13): an engine-side
-# branch shipped behind a non-default parameter whose default takes the
-# pre-change code path VERBATIM does NOT take a window slot the round
-# it lands; it takes one the round its DEFAULT flips (the oracle is
-# mirrored then too). Each exemption must be (a) named in ROUNDn.md,
-# (b) re-verified locally via tools/verify_local.py the round it lands,
-# and (c) scheduled for a real slot at its flip. No exemptions are
-# outstanding entering round 18.
+# Dark-ship exemption: an engine-side branch shipped behind a
+# non-default parameter whose default keeps the previous code path
+# does not take a window slot the round it lands; it takes one the
+# round its default flips. Each exemption is re-verified locally with
+# tools/verify_local.py when it lands. None are outstanding.
 _WINDOW_FRONT = [
-    "q_upsert_merge_retry",
-    "q_sim_lsh_topk_derived",
-    "q_sim_lsh_recall",
+    "q_upsert_merge_parquet",
+    "q_sql_recursive_chain",
 ]
 
 # Prior-green re-verification filler, least-recently-verified first:
-# the 47 r13-era rows (latest green driver row CORRECTNESS_r13 —
-# exactly one rotation cycle old at round 18; check_window R3 lists
-# exactly this set, and docs/ROUND17.md §10 precomputed it — VERDICT
-# r17 re-derived the same 47 from the artifacts).
+# the 48 entries whose latest green row is in CORRECTNESS_r14, one
+# full rotation cycle old at round 20 (exactly the set check_window R3
+# lists before this rotation).
 _WINDOW_FILLER: list[str] = [
-    "q_agg_cube",
-    "q_agg_dashboard_weather",
-    "q_agg_listagg",
-    "q_agg_pivot",
-    "q_agg_rollup",
-    "q_agg_stats",
-    "q_approx_sketch_union",
-    "q_approx_top_k",
-    "q_arrow_udf_scalar",
-    "q_dedup_clusters",
-    "q_dedup_exact",
-    "q_dedup_ngram_jaccard",
-    "q_distinct_agg",
-    "q_jdbc_roundtrip",
-    "q_join_asof",
-    "q_join_lateral_topk",
-    "q_map_in_arrow",
-    "q_multimodal_features",
-    "q_null_surface",
-    "q_observe_metrics",
-    "q_retrieval_rerank",
-    "q_semi_variant",
-    "q_semi_xml_parse",
-    "q_sim_bruteforce_topk",
-    "q_sink_compaction",
-    "q_sink_xml_roundtrip",
-    "q_sql_parameterized",
-    "q_sql_pipe_q1",
-    "q_sql_recursive_bfs",
-    "q_sql_table_udf",
-    "q_sql_udf",
-    "q_sql_unpivot",
-    "q_src_binary_files",
-    "q_src_python_datasource",
-    "q_stream_dedup_append",
-    "q_stream_sessionize_append",
-    "q_text_fingerprint",
-    "q_text_langid",
-    "q_text_lm_score",
-    "q_text_quality",
-    "q_text_tokens",
-    "q_ts_epoch",
-    "q_ts_sub_min",
-    "q_upsert_merge_parquet",
-    "q_upsert_replay",
-    "q_window_pctrank",
-    "q_window_session_native",
+    "q_agg_bitwise",
+    "q_agg_grouping_id",
+    "q_agg_histogram",
+    "q_apply_in_pandas",
+    "q_array_setops",
+    "q_dedup_editdistance",
+    "q_dedup_embedding",
+    "q_dedup_embedding_lsh",
+    "q_dedup_incremental",
+    "q_dedup_minhash_incremental",
+    "q_dedup_simhash",
+    "q_dedup_simhash_incremental",
+    "q_expr_try_arith",
+    "q_ingest_gtfs_rt",
+    "q_ingest_gtfs_static",
+    "q_join_range_interval",
+    "q_join_skew_salted",
+    "q_json_parse",
+    "q_multimodal_bmp",
+    "q_multimodal_frames",
+    "q_multimodal_meta",
+    "q_multimodal_wav",
+    "q_null_clean",
+    "q_pandas_udf_scalar",
+    "q_range_normalize",
+    "q_sample_hash",
+    "q_sample_stratified",
+    "q_semi_map_ops",
+    "q_sink_truncate",
+    "q_sql_collation",
+    "q_subquery_correlated_avg",
+    "q_subquery_exists",
+    "q_subquery_scalar",
+    "q_text_chunk",
+    "q_text_contamination",
+    "q_text_redact",
+    "q_text_regex_extract",
+    "q_text_repetition",
+    "q_tpch_q10",
+    "q_tpch_q12",
+    "q_tpch_q3",
+    "q_tpch_q5",
+    "q_ts_calendar",
+    "q_upsert_merge",
+    "q_window_cume_nth",
+    "q_window_range",
+    "q_window_session",
+    "q_window_tumbling",
 ]
 
 _WINDOW = _WINDOW_FRONT + _WINDOW_FILLER

@@ -1,37 +1,29 @@
-"""Recursive-CTE demos (``WITH RECURSIVE`` — iterative plans, Spark 4.1).
+"""Recursive-CTE demos: the ``WITH RECURSIVE`` SQL is the contract, not
+the executed plan.
 
-Recursion is the one relational control-flow shape the rest of the
-registry expresses imperatively (the pagerank/connected-components loops
-in ``operators/graph.py`` / ``operators/dedup.py`` drive their fixpoints
-from Python). Spark 4.1 executes ``WITH RECURSIVE`` natively — the
-anchor seeds an iteration, each step joins the previous step's delta
-against a (static, reusable) work table, and the engine unions the
-per-level results. Two contracts, each oracle-checked against DuckDB's
-own recursive evaluator running the IDENTICAL query:
+Each demo declares a ``WITH RECURSIVE`` query (``_CHAIN_SQL``,
+``_BFS_SQL``). That SQL is the oracle contract: DuckDB's recursive
+evaluator runs it as the demo's oracle, and Spark runs it in exactly one
+place, the equivalence test
+``tests/test_round19_opt.py::test_recursive_chain_doubled_walk_matches_unionloop``
+(chain walk, row for row on the same session). The Spark demos execute
+non-recursive plans that produce the same rows:
 
-- ``q_sql_recursive_chain`` — linked-list traversal: walk each
-  customer's order chain (successor edges derived with ``lead()``)
-  accumulating position and cumulative spend. This is the workload
-  windows cannot express when the successor edge is an arbitrary
-  pointer rather than a sort order; deriving the edges WITH a window
-  and then walking them recursively proves both halves agree.
-- ``q_sql_recursive_bfs`` — bounded BFS over a cyclic graph (the
-  event-type transition digraph): Spark recursion supports UNION ALL
-  only (UNION-distinct is rejected by the analyzer:
-  UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE), so cycles are cut with an
-  explicit hop cap and min-hop aggregation — the standard UNION ALL
-  reachability idiom. The oracle runs the same capped recursion, so
-  the comparison is exact regardless of graph diameter.
+- ``q_sql_recursive_chain`` — walk each customer's order chain
+  (successor edges from ``lead()`` over order date), carrying 1-based
+  position and exact DECIMAL(18,2) cumulative spend. Spark executes a
+  prefix-doubling walk: ceil(log2(max chain length)) rounds of
+  ``lag(col, 2^k) OVER (PARTITION BY cust ORDER BY rn)``, one exchange
+  and one job, in place of one UnionLoop join per chain level.
+- ``q_sql_recursive_bfs`` — bounded BFS over the cyclic event-type
+  transition digraph. Spark recursion allows UNION ALL only, so the
+  declared SQL cuts cycles with a literal hop cap of 4 and min-hop
+  aggregation. Spark executes those 5 levels unrolled into one composed
+  plan (level k+1 = level k ⋈ edges, UNION ALLed, min-hop aggregated).
 
-Scale: each recursion level is one distributed join of the previous
-level's frontier against the (small, broadcastable) edge/successor
-table; depth — not data size — bounds the iteration count. The chain
-walk's depth is max orders per customer (~25 at sf0.01, ~double per
-10x; ``spark.sql.cteRecursionLevelLimit`` is raised to 1000 in-demo,
-and at true 100 TB scale a chain walk this deep would be re-expressed
-per-partition or via the window form the oracle proves equivalent).
-Spark guards runaway recursion with cteRecursionLevelLimit /
-cteRecursionRowLimit rather than silently spilling unbounded state.
+Scale: the chain walk's cost is one shuffle + sort plus log2(depth)
+stacked windows over the same partitioning; the BFS frontier is bounded
+by the event-type vocabulary.
 """
 
 from __future__ import annotations

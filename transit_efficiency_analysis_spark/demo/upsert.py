@@ -188,26 +188,24 @@ def q_upsert_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_upsert_merge_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure-Parquet transactional MERGE runtime, end-to-end — since
-    round 12 the BATCH-PROPORTIONAL partitioned form (VERDICT r11 ask
-    #2): two batches (events split by event_id parity, so batch 2
-    carries both newer AND older observations than batch 1 per key)
-    merge into a process-local hash-bucket-partitioned parquet table
-    through ``merge_into_partitioned`` — which EXECUTES
-    ``merge_match_condition``/``merge_newer_condition`` (the exact
-    strings the Delta backend feeds ``DeltaTable.merge``) against a
-    partition-pruned stored slice and commits each touched ``p_bucket``
-    partition with an atomic symlink swap, leaving untouched partitions'
-    files byte-identical (tests/test_round12_fixes.py). Because
+    """The pure-Parquet transactional MERGE runtime, end-to-end, in its
+    batch-proportional bucketed form: two batches (events split by
+    event_id parity, so batch 2 carries both newer AND older
+    observations than batch 1 per key) merge into a process-local
+    hash-bucketed parquet table through ``merge_into_partitioned`` —
+    which EXECUTES ``merge_match_condition``/``merge_newer_condition``
+    (the exact strings the Delta backend feeds ``DeltaTable.merge``)
+    against the touched buckets' stored slice and commits every touched
+    bucket in one atomic manifest swap, leaving untouched buckets'
+    version dirs as they were (tests/test_round12_fixes.py). Because
     (ts, event_id) is a total order, strictly-newer-wins MERGE over any
     batch split must converge to keep-newest-per-key over ALL events —
-    the oracle, unchanged from the r11 ``merge_into_sql`` form. A broken
+    the oracle, the same as ``merge_into_sql``'s. A broken
     newer-condition (older batch-2 rows clobbering stored state), a
     broken match condition (inserts duplicating matched keys), or a
-    bucket-routing bug (a key's observations split across partitions)
-    all diverge from it. Re-invocations re-merge onto the committed
-    state — a fixed point, so the demo is idempotent within a process
-    (VERDICT r10 gap #3 / r9 #6)."""
+    bucket-routing bug (a key's observations split across buckets) all
+    diverge from it. Re-invocations re-merge onto the committed state —
+    a fixed point, so the demo is idempotent within a process."""
     import tempfile
 
     from transit_efficiency_analysis_spark.demo._tmpcache import _RESULT_CACHE
@@ -341,16 +339,13 @@ def q_upsert_merge_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         U.merge_into_partitioned(
             target, batch[0], keys, order_by, num_buckets=16,
-            commit="manifest",
         )
         gen_before = be.generation(target)
         be.arm(lambda: U.merge_into_partitioned(
             target, batch[2], keys, order_by, num_buckets=16,
-            commit="manifest",
         ))
         out = U.merge_with_retry(
             target, batch[1], keys, order_by, num_buckets=16,
-            commit="manifest",
         )
         # the race genuinely ran: rival commit + loser's retried commit
         # both advanced the generation; the loser's REJECTED put did not

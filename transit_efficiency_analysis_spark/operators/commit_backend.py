@@ -1,7 +1,7 @@
 """Pluggable storage backend for the manifest commit protocol.
 
-The partitioned MERGE runtime's manifest mode (``operators/upsert.py``,
-round 14) is object-store-*shaped* by construction — version dirs are
+The partitioned MERGE runtime's manifest commit protocol
+(``operators/upsert.py``) is object-store-*shaped* by construction — version dirs are
 write-once, the single mutable object is ``.manifest.json`` — but its
 primitives were inlined as POSIX calls (``os.replace``, ``os.rename``,
 ``os.listdir``), so the protocol could only ever execute against a
@@ -19,7 +19,7 @@ method. The one semantic upgrade an object store offers over POSIX is
 on :meth:`swap_manifest`: a conditional put (S3 ``If-Match`` /
 PutObject-with-ETag-precondition, GCS ``ifGenerationMatch``) turns the
 protocol's re-read→swap *detector* (a microsecond lost-update window,
-documented in upsert.py's mode comment) into true compare-and-swap
+documented in upsert.py's protocol comment) into true compare-and-swap
 serialization — the piece docs/SCALE.md's "what a metadata format buys"
 analysis names as the remaining gap. The interface therefore passes the
 reader's snapshot through ``expected`` so a CAS-capable backend can
@@ -61,9 +61,9 @@ class ManifestCommitBackend:
     """
 
     def manifest_exists(self, root: str) -> bool:
-        """True iff the table at ``root`` has a manifest object — the
-        marker distinguishing a manifest-protocol table from a symlink
-        one. S3: ``HeadObject`` on the manifest key."""
+        """True iff the table at ``root`` has a committed manifest
+        object (false for a path no commit has reached yet). S3:
+        ``HeadObject`` on the manifest key."""
         raise NotImplementedError
 
     def read_manifest(self, root: str) -> dict[int, int]:

@@ -80,7 +80,13 @@ def pagerank_ppm(
     sums are bounded by n_nodes * PPM and the damping product by
     ~n_nodes * PPM * damping_ppm (overflow at ~10^13 nodes).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    # A NULL-src edge carries no rank: dropped here, it would otherwise
+    # add PPM div outdeg to its dst on the first iteration and put a
+    # NULL node into `nodes`. Only src is filtered — a NULL dst still
+    # counts toward its src's outdeg, as it always has.
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
+        F.col("src").isNotNull()
+    )
     nodes = (
         e.select(F.col("src").alias("node_id"))
         .unionByName(e.select(F.col("dst").alias("node_id")))

@@ -361,7 +361,7 @@ def kgram_table_ttl(standing: DataFrame, current_batch: int, ttl: int) -> DataFr
     filter applied at READ time and physical expiry deferred to
     ``operators.upsert.filter_partitioned`` compactions — measured
     semantics-identical in tools/bench_stream_kgram.py's
-    ``ttl_partitioned`` policy; Delta MERGE where available). Dropping
+    ``ttl_manifest`` policy; Delta MERGE where available). Dropping
     a k-gram narrows dedup semantics to "duplicated against the last
     ``ttl`` batches" — a retention POLICY for horizon-bounded ingest
     (news feeds, logs), not an optimization of the exact rule. Run the

@@ -29,9 +29,9 @@ class ConcurrentWriteError(RuntimeError):
     """A concurrent writer won the commit race: the manifest advanced
     (touched-bucket detector) between this operation's read snapshot
     and its commit. The table is untouched; the loser's staged version
-    dirs remain as sweepable orphans. RuntimeError subclass so
-    pre-round-17 callers catching RuntimeError keep working; new
-    callers use :func:`merge_with_retry` for Delta-style
+    dirs remain as sweepable orphans. A RuntimeError subclass, so
+    callers catching RuntimeError keep working; :func:`merge_with_retry`
+    and :func:`filter_with_retry` catch it for Delta-style
     recompute-and-retry."""
 
 
@@ -445,11 +445,38 @@ def _merge_into_delta(
 
 
 # ------------------------------------------------------------------
-# Batch-proportional pure-Parquet MERGE (round 12, VERDICT r11 gap #2)
+# Batch-proportional pure-Parquet MERGE over a hash-bucketed table
+#
+# On-disk layout of a table at ``target``:
+#
+#   .merge_meta.json  num_buckets, keys, order_by, the stored-row schema
+#                     and "commit": "manifest"; written once, first
+#   .manifest.json    bucket -> committed version; the ONE mutable
+#                     object, replaced atomically per commit
+#   .v/b<B>_v<V>/     write-once parquet version dirs (dot-prefixed, so
+#                     invisible to Spark's file listing)
+#
+# Readers list nothing: they resolve the manifest and read the named
+# version dirs. A merge or compaction writes its output to a staging
+# dir, publishes each rewritten bucket as a NEW version dir (a rename;
+# on an object store, a prefix written once and never mutated) and then
+# commits every rewritten bucket in one manifest swap (locally
+# os.replace; on S3/GCS a conditional put). A reader sees batch N in
+# every bucket or batch N-1 in every bucket.
+#
+# Concurrent writers are detected, not locked out. Merge and compaction
+# re-read the manifest immediately before their swap and base the
+# commit on that current state, so a concurrent writer's commit to
+# disjoint buckets survives. When a bucket they rewrote advanced or
+# vanished meanwhile they raise ConcurrentWriteError; the loser's
+# version dirs stay as unreferenced orphans (invisible to readers,
+# reclaimed by sweep_orphans) and committed data is never destroyed.
+# The remaining lost-update window is the re-read -> swap gap; a
+# CAS-capable commit backend (operators/commit_backend.py) closes it
+# with a conditional put.
 
 _BUCKET_COL = "p_bucket"
 _META_NAME = ".merge_meta.json"
-_MANIFEST_NAME = ".manifest.json"
 
 
 def _bucket_expr(keys: list[str], num_buckets: int) -> Column:
@@ -469,38 +496,30 @@ def _write_meta_once(
     keys: list[str],
     order_by: list[str],
     schema_json: dict,
-    commit: str | None,
 ) -> None:
     """Atomically write a fresh table's ``.merge_meta.json`` (tmp +
-    ``os.replace``). One implementation for both commit modes (review
-    r17: the block was copy-pasted between the manifest and symlink
-    bodies with only the ``commit`` key differing). The stored-row
-    schema (no p_bucket) lets the empty-table paths return a typed
-    empty relation instead of failing schema inference on a
-    partitionless parquet dir (round-13 review). Meta is written FIRST:
-    a crash before any data commit leaves meta-only, which both modes'
-    existence probes treat as "first batch" — the next merge recreates
-    the table cleanly.
+    ``os.replace``). The stored-row schema (no p_bucket) lets the
+    empty-table paths return a typed empty relation. Meta is written
+    FIRST: a crash before the first manifest swap leaves meta-only,
+    which reads as an empty table, and the next merge recreates it.
 
-    Durability mirrors ``PosixManifestBackend.swap_manifest`` (ADVICE
-    r17): fsync the file contents BEFORE the rename (ext4/xfs may
-    otherwise persist the rename with empty contents after power loss —
-    a torn meta next to committed partitions makes every subsequent
-    merge/filter/read fail on ``json.load`` with no recovery path) and
-    the parent directory AFTER it; a failed write cleans its temp file
-    instead of leaking it."""
+    Durability mirrors ``PosixManifestBackend.swap_manifest``: the file
+    contents are fsynced BEFORE the rename (ext4/xfs may otherwise
+    persist the rename with empty contents after power loss, and a torn
+    meta makes every later merge/filter/read fail on ``json.load``) and
+    the parent directory AFTER it; a failed write removes its temp
+    file."""
     import json
     import os
     import uuid
 
-    meta: dict = {
+    meta = {
         "num_buckets": num_buckets,
         "keys": keys,
         "order_by": order_by,
         "schema": schema_json,
+        "commit": "manifest",
     }
-    if commit is not None:
-        meta["commit"] = commit
     tmp_meta = os.path.join(local, f".merge_meta_{uuid.uuid4().hex[:12]}.tmp")
     try:
         with open(tmp_meta, "w") as f:
@@ -524,117 +543,43 @@ def _write_meta_once(
         pass
 
 
-def _all_bucket_versions(vroot: str) -> dict[int, list[tuple[int, str]]]:
-    """ONE listdir of ``.v`` parsed into {bucket: [(version, path)] asc}
-    — the O(entries) form of per-bucket directory scans (review r17:
-    compaction's ``_latest_versions`` ran num_buckets listdir+regex
-    passes per snapshot, O(buckets × entries) driver work at the
-    docstring's 4096-bucket sizing). Deliberately NOT routed through
-    the commit backend: the symlink protocol is POSIX-only by
-    construction (see the round-16 design note on ``_COMMIT_BACKEND``),
-    so it keeps self-contained primitives."""
+def _read_meta(local: str, target: str) -> dict | None:
+    """The table's meta, or None when no merge has created one. A meta
+    without ``"commit": "manifest"`` belongs to a table written by the
+    retired symlink commit protocol (``p_bucket=N`` links into ``.v/``);
+    it is rejected rather than read as empty or overwritten."""
+    import json
     import os
-    import re
 
-    out: dict[int, list[tuple[int, str]]] = {}
-    if os.path.isdir(vroot):
-        pat = re.compile(r"^b(\d+)_v(\d+)$")
-        for name in os.listdir(vroot):
-            m = pat.match(name)
-            if m:
-                out.setdefault(int(m.group(1)), []).append(
-                    (int(m.group(2)), os.path.join(vroot, name))
-                )
-    for versions in out.values():
-        versions.sort()
-    return out
-
-
-def _bucket_versions(vroot: str, bucket: int) -> list[tuple[int, str]]:
-    """Single-bucket view of :func:`_all_bucket_versions` — used where a
-    FRESH re-read of one bucket is the point (the drop-path race check)."""
-    import os
-    import re
-
-    out = []
-    if os.path.isdir(vroot):
-        pat = re.compile(rf"^b{bucket}_v(\d+)$")
-        for name in os.listdir(vroot):
-            m = pat.match(name)
-            if m:
-                out.append((int(m.group(1)), os.path.join(vroot, name)))
-    return sorted(out)
+    try:
+        with open(os.path.join(local, _META_NAME)) as f:
+            meta = json.load(f)
+    except FileNotFoundError:
+        return None
+    if meta.get("commit") != "manifest":
+        raise ValueError(
+            f"table at {target} was written by the retired symlink commit "
+            "protocol (no manifest); only manifest-protocol tables are "
+            "supported — rebuild it by merging its rows into a new path"
+        )
+    return meta
 
 
-def _swap_bucket(local: str, staging_part: str, bucket: int) -> None:
-    """Commit one bucket partition: move the freshly-written partition
-    dir to a versioned home under ``<table>/.v/`` and atomically repoint
-    the ``p_bucket=N`` symlink (os.replace of a symlink is atomic on
-    POSIX — same mechanism as sinks.overwrite_table, per partition).
-    Superseded versions are removed after the flip."""
-    import os
-    import shutil
+def _require_local(target: str, fn: str) -> str:
+    from transit_efficiency_analysis_spark.sinks import _local_path
 
-    vroot = os.path.join(local, ".v")
-    os.makedirs(vroot, exist_ok=True)
-    old = _bucket_versions(vroot, bucket)
-    version = old[-1][0] + 1 if old else 1
-    vdir = os.path.join(vroot, f"b{bucket}_v{version}")
-    os.rename(staging_part, vdir)
-    link = os.path.join(local, f"{_BUCKET_COL}={bucket}")
-    tmp = os.path.join(local, f".lnk_b{bucket}")
-    if os.path.lexists(tmp):
-        os.remove(tmp)
-    os.symlink(os.path.abspath(vdir), tmp)
-    os.replace(tmp, link)
-    for _, stale in old:
-        shutil.rmtree(stale, ignore_errors=True)
-
-
-# -------------------- manifest commit mode (round 14, VERDICT r13 ask #3)
-#
-# The symlink mode's per-partition atomic flip is POSIX-only; the
-# round-13 steady-state analysis showed the residual per-merge cost
-# class is exactly the O(buckets) bookkeeping a metadata-commit format
-# removes. This mode is that format in miniature, object-store-shaped
-# by design: version dirs under `.v/` are WRITE-ONCE (rename from
-# staging — on a real object store, a prefix the writer uploads to and
-# never mutates), and the ONE mutable object is `.manifest.json`
-# mapping bucket -> committed version, replaced atomically per commit
-# (locally os.replace; on S3/GCS a put-if-match/generation-conditional
-# put). Readers list NOTHING: they resolve the manifest and read the
-# named version dirs — no directory listing, no symlink support needed.
-#
-# READER isolation is strictly better than symlink mode: the whole
-# merge (all touched buckets) commits in one manifest swap, so a reader
-# sees batch N in every bucket or batch N-1 in every bucket —
-# snapshot-ish across partitions, where symlink mode was per-partition
-# only. The multi-WRITER story is a detector, not a lock (as in
-# symlink mode, but the mechanics differ because the manifest is one
-# whole-table object where symlinks flipped per bucket): both merge
-# and compaction re-read the manifest immediately before their swap,
-# base the commit on that CURRENT state (so a concurrent writer's
-# commit to DISJOINT buckets survives), and fail fast when a bucket
-# they rewrote advanced or vanished meanwhile — the failed writer's
-# version dirs stay as unreferenced orphans, its data never destroyed.
-# The lost-update window is the residual re-read -> swap gap
-# (microseconds), not the merge duration. True serialization (a
-# conditional-put manifest swap) stays the Delta/Iceberg backend's —
-# or the object store's put-if-match — job.
-#
-# Mode selection: `commit="manifest"` on the FIRST merge creates the
-# table in manifest mode (recorded in the meta; later calls follow the
-# meta regardless of the parameter — a table's commit protocol never
-# silently converts). The default "symlink" keeps the pre-round-14
-# code path verbatim.
+    local = _local_path(target)
+    if local is None:
+        raise ValueError(
+            f"{fn} needs a local/posix path; use backend='delta' or "
+            "merge_into_sql for object stores"
+        )
+    return local
 
 
 #: Test/deployment seam: set to a ManifestCommitBackend instance to
-#: route every manifest-protocol storage primitive through it; None
-#: means the POSIX default. The symlink protocol does NOT go through
-#: the backend (it is POSIX-only by construction — atomic symlink
-#: flips have no object-store analogue; the manifest protocol IS the
-#: object-store-shaped alternative).
+#: route every manifest storage primitive through it; None means the
+#: POSIX default.
 _COMMIT_BACKEND = None
 
 
@@ -656,8 +601,8 @@ def _read_snapshot(local: str) -> tuple[object | None, dict[int, int]]:
     """``(token, manifest)`` — the commit path's read form: the token
     (ETag/generation, backend-dependent, None on POSIX) pins the exact
     read the commit is based on, for :func:`_write_manifest`'s
-    identity-compare conditional put (ADVICE r17: value-compare CAS is
-    ABA-prone; token-compare is what S3 ``If-Match`` actually does)."""
+    identity-compare conditional put (value-compare CAS is ABA-prone;
+    token-compare is what S3 ``If-Match`` does)."""
     return _backend().read_snapshot(local)
 
 
@@ -687,86 +632,48 @@ def _manifest_dirs(
     ]
 
 
-def _is_manifest_table(local: str) -> bool:
-    return _backend().manifest_exists(local)
+def _empty_table(spark, meta: dict) -> DataFrame:
+    from pyspark.sql.types import StructType
+
+    return spark.createDataFrame([], StructType.fromJson(meta["schema"]))
 
 
 def read_partitioned(spark, target: str) -> DataFrame:
-    """Read a :func:`merge_into_partitioned` table under either commit
-    mode. Symlink tables are plain partitioned-parquet reads (the
-    ``p_bucket=N`` links resolve transparently); manifest tables
-    resolve the committed version dirs through the manifest — zero
-    directory listing, the object-store read path. A legitimately
-    emptied table (a compaction dropped every partition) returns a
-    typed empty relation from the meta's stored schema under either
-    mode."""
-    import json
-    import os
-
-    from transit_efficiency_analysis_spark.sinks import _local_path
-
-    local = _local_path(target)
-    if local is not None and _is_manifest_table(local):
-        manifest = _read_manifest(local)
-        if not manifest:
-            from pyspark.sql.types import StructType
-
-            with open(os.path.join(local, _META_NAME)) as f:
-                meta = json.load(f)
-            return spark.createDataFrame(
-                [], StructType.fromJson(meta["schema"])
-            )
-        return spark.read.parquet(*_manifest_dirs(local, manifest))
-    if local is not None and not any(
-        name.startswith(f"{_BUCKET_COL}=")
-        for name in (os.listdir(local) if os.path.isdir(local) else [])
-    ):
-        # emptied symlink table: a bare parquet read would fail schema
-        # inference on the partitionless dir — use the meta's schema
-        # (post-r13 metas store it; older emptied tables get the same
-        # actionable error filter_partitioned raises)
-        meta_path = os.path.join(local, _META_NAME)
-        if os.path.exists(meta_path):
-            from pyspark.sql.types import StructType
-
-            with open(meta_path) as f:
-                meta = json.load(f)
-            if "schema" not in meta:
-                raise ValueError(
-                    f"read_partitioned: table at {target} has no "
-                    "partitions and its meta predates the stored-schema "
-                    "key — run a merge first"
-                )
-            return spark.createDataFrame(
-                [], StructType.fromJson(meta["schema"])
-            )
-    return spark.read.parquet(target).drop(_BUCKET_COL)
+    """Read a :func:`merge_into_partitioned` table: the committed
+    version dirs resolved through the manifest — zero directory
+    listing, the object-store read path. A table with no committed
+    rows (an empty first batch, or a compaction that dropped every
+    bucket) returns a typed empty relation from the meta's stored
+    schema."""
+    local = _require_local(target, "read_partitioned")
+    meta = _read_meta(local, target)
+    if meta is None:
+        raise FileNotFoundError(
+            f"read_partitioned: no merge_into_partitioned table at {target}"
+        )
+    manifest = _read_manifest(local)
+    if not manifest:
+        return _empty_table(spark, meta)
+    return spark.read.parquet(*_manifest_dirs(local, manifest))
 
 
 def sweep_orphans(target: str) -> list[str]:
-    """Delete version dirs a manifest-protocol table's current manifest
-    does not name, returning the deleted paths. ONLY safe with writers
-    quiesced: a merge mid-commit has renamed its version dir but not
-    yet swapped the manifest, and this sweep would delete it — that is
-    exactly why neither merges nor compactions auto-sweep (see the
-    cleanup comment in :func:`_merge_into_partitioned_manifest`).
-    Run it from the maintenance window that owns compaction. Symlink
-    tables need no sweep (their supersede paths delete eagerly) and
-    raise here to catch mode confusion. A deletion failure (EACCES,
-    EIO) raises rather than reporting the path as deleted — the
+    """Delete version dirs the table's current manifest does not name,
+    returning the deleted paths. ONLY safe with writers quiesced: a
+    merge mid-commit has published its version dir but not yet swapped
+    the manifest, and this sweep would delete it — which is why neither
+    merges nor compactions sweep on their own. Run it from the
+    maintenance window that owns compaction. A deletion failure
+    (EACCES, EIO) raises rather than reporting the path as deleted — the
     returned list names only dirs that are actually gone."""
-    from transit_efficiency_analysis_spark.sinks import _local_path
-
-    local = _local_path(target)
-    if local is None:
-        raise ValueError("sweep_orphans needs a local/posix path")
-    if not _is_manifest_table(local):
-        raise ValueError(
-            f"table at {target} is not manifest-protocol; symlink "
-            "tables delete superseded versions eagerly and have no "
-            "orphans to sweep"
-        )
+    local = _require_local(target, "sweep_orphans")
+    _read_meta(local, target)
     be = _backend()
+    if not be.manifest_exists(local):
+        raise ValueError(
+            f"table at {target} is not manifest-protocol: it has no "
+            "committed manifest to sweep against"
+        )
     manifest = _read_manifest(local)
     live = {f"b{b}_v{v}" for b, v in manifest.items()}
     deleted = []
@@ -777,54 +684,109 @@ def sweep_orphans(target: str) -> list[str]:
     return deleted
 
 
-def _merge_into_partitioned_manifest(
-    spark,
+def merge_into_partitioned(
     target: str,
-    local: str,
     incoming: DataFrame,
     keys: list[str],
     order_by: list[str],
-    num_buckets: int,
-    wide_threshold: float,
-    return_touched_only: bool,
+    num_buckets: int = 32,
+    wide_threshold: float = 0.5,
+    return_touched_only: bool = False,
     _before_commit=None,
 ) -> DataFrame:
-    """Manifest-mode body of :func:`merge_into_partitioned` (same
-    last-writer-wins MERGE algebra and wide/trickle routing; see the
-    mode comment above for the commit-protocol contrast).
-    ``_before_commit`` is a test seam invoked after this merge's version
-    dirs are staged into ``.v/`` but before the manifest re-read — the
-    widest point of the (detected) concurrent-writer window."""
-    import json
+    """Batch-proportional pure-Parquet MERGE: ``merge_into_sql``
+    semantics (last-writer-wins, strictly-newer guard, null-safe match
+    keys — the executed :func:`merge_match_condition` /
+    :func:`merge_newer_condition` algebra via :func:`merge_sql_plan`)
+    over a hash-bucketed table, rewriting ONLY the buckets the batch
+    touches. ``merge_into_sql`` rewrites O(table) per batch; this
+    layout makes merge wall ∝ batch.
+
+    Layout and commit protocol: see the comment block above
+    :func:`_bucket_expr`. A key's bucket is ``pmod(xxhash64(keys),
+    num_buckets)`` — a deterministic function of the merge key, so every
+    observation of a key lands in the same bucket forever.
+
+    Per merge: the batch collapses per key (one shuffle), the touched
+    bucket ids are collected (bounded by ``num_buckets`` — a driver-side
+    list of ints, never rows), the stored side is read from the touched
+    buckets' committed version dirs only (O(touched) paths, resolved
+    through the manifest), the full-outer MERGE join runs against that
+    slice, and only touched buckets get new version dirs. Untouched
+    buckets keep their manifest entry and their version dir; their files
+    are never opened or written. All touched buckets become visible in
+    one atomic manifest swap.
+
+    At 100 TB: table/num_buckets bounds a bucket, so a merge costs one
+    batch shuffle + scan/rewrite of ``touched/num_buckets`` of the
+    table. Size ``num_buckets`` so a bucket fits an executor comfortably
+    (e.g. 4096 buckets ≈ 25 GB each); a trickle of small batches touches
+    few buckets and pays proportionally (measured flat to 64x table
+    scale in docs/SCALE.md). A WIDE batch — touched fraction >=
+    ``wide_threshold`` of the buckets — degenerates to a full-table
+    rewrite; the naive partitioned write would then pay a
+    dynamic-partition sort and a tasks × buckets small-file fan-out. The
+    wide route keeps the layout (so later trickle merges continue
+    seamlessly) but clusters the staging write by bucket first: one
+    extra exchange of the merged slice, after which each bucket is
+    written by exactly one task (hash collisions may hand one task 2-3
+    buckets and another none, but no bucket splits across tasks) — one
+    file per bucket. Trickle batches keep the direct write: their merged
+    slice is small and the extra exchange would serialize it through
+    ``touched`` tasks for no benefit.
+
+    ``return_touched_only=True`` returns only the touched buckets'
+    post-merge rows instead of the whole table — the maintenance-loop
+    mode: a per-batch caller only consumes the slice it just merged.
+
+    A fresh table takes its bucket count from the first merge; later
+    merges must pass the same ``num_buckets`` (a key's bucket would
+    otherwise move and merges would duplicate keys). Use
+    :func:`read_partitioned` to read the table. ``_before_commit`` is a
+    test seam invoked after this merge's version dirs are published but
+    before the manifest re-read — the widest point of the (detected)
+    concurrent-writer window.
+    """
     import os
     import shutil
     import uuid
 
     from pyspark import StorageLevel
 
-    meta_path = os.path.join(local, _META_NAME)
+    if num_buckets < 1:
+        raise ValueError("merge_into_partitioned: num_buckets must be >= 1")
+    if _BUCKET_COL in incoming.columns:
+        raise ValueError(
+            f"merge_into_partitioned: incoming data carries a "
+            f"{_BUCKET_COL!r} column, which is this layout's reserved "
+            f"bucket column — rename it (the staging write partitions by "
+            f"it and would silently shadow the data)"
+        )
+    local = _require_local(target, "merge_into_partitioned")
+    spark = incoming.sparkSession
+    meta = _read_meta(local, target)
     manifest = _read_manifest(local)
+    # "exists" = the manifest names at least one committed bucket. A
+    # meta-only dir (crash before the first swap, or an empty first
+    # batch) or a fully compacted table holds no rows, so its meta is
+    # rewritten below and its bucket count may change.
     exists = bool(manifest)
-    if _target_exists(spark, target) and os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta["num_buckets"] != num_buckets:
-            raise ValueError(
-                f"table at {target} was bucketed with "
-                f"num_buckets={meta['num_buckets']}, got {num_buckets} — "
-                "a key's bucket would move and merges would silently "
-                "duplicate keys"
-            )
-        if meta.get("commit", "symlink") != "manifest":
-            raise ValueError(
-                f"table at {target} was created with the symlink commit "
-                "protocol; refusing to commit it via manifest (a table's "
-                "commit mode never silently converts)"
-            )
+    if exists and meta["num_buckets"] != num_buckets:
+        raise ValueError(
+            f"table at {target} was bucketed with "
+            f"num_buckets={meta['num_buckets']}, got {num_buckets} — "
+            "a key's bucket would move and merges would silently "
+            "duplicate keys"
+        )
 
     bucket = _bucket_expr(keys, num_buckets)
     collapsed = upsert_keep_newest(incoming, keys, order_by)
     out_cols = collapsed.columns
+    # Persisted (DISK_ONLY, released in the finally) because it is
+    # consumed twice — the touched-bucket collect and the MERGE join —
+    # and a non-trivial incoming plan would otherwise run twice.
+    # Persisted only AFTER the validation above, so a rejected call
+    # cannot leak a registered relation.
     collapsed = collapsed.persist(StorageLevel.DISK_ONLY)
     try:
         touched = sorted(
@@ -833,12 +795,10 @@ def _merge_into_partitioned_manifest(
             .distinct()
             .collect()
         )
-        # stored side: the touched buckets' committed version dirs,
-        # resolved via the manifest — zero listing, O(touched) paths.
         # Version dirs carry no p_bucket= path component, so no
-        # partition column materializes and nothing needs dropping.
+        # partition column materializes on the stored side.
         touched_dirs = _manifest_dirs(local, manifest, set(touched))
-        if exists and touched_dirs:
+        if touched_dirs:
             stored = spark.read.parquet(*touched_dirs)
             merged = merge_sql_plan(stored, collapsed, keys, order_by)
         else:
@@ -846,21 +806,16 @@ def _merge_into_partitioned_manifest(
 
         staged = merged.withColumn(_BUCKET_COL, bucket)
         if touched and len(touched) >= wide_threshold * num_buckets:
-            # same wide route as symlink mode: one bucket per task
+            # wide route: one bucket per task, one file per bucket
             staged = staged.repartition(len(touched), F.col(_BUCKET_COL))
         staging = os.path.join(local, f".staging_{uuid.uuid4().hex[:12]}")
         staged.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(
             staging
         )
-
-        # meta-first atomic commit, as in symlink mode; "exists" here is
-        # "manifest has entries", so a crash after this write but before
-        # the manifest swap leaves meta-only and the next merge simply
-        # recreates the table.
         if not exists:
             _write_meta_once(
                 local, num_buckets, keys, order_by,
-                collapsed.schema.jsonValue(), commit="manifest",
+                collapsed.schema.jsonValue(),
             )
 
         be = _backend()
@@ -869,6 +824,8 @@ def _merge_into_partitioned_manifest(
             for b in touched:
                 part = os.path.join(staging, f"{_BUCKET_COL}={b}")
                 if not os.path.isdir(part):
+                    # the batch's own rows survive the MERGE, so a
+                    # touched bucket always yields >= 1 row
                     raise RuntimeError(
                         f"merge produced no output for touched bucket {b}"
                     )
@@ -879,21 +836,14 @@ def _merge_into_partitioned_manifest(
                 )
                 be.publish_version(local, part, b, version)
                 ours[b] = version
-            # Re-read the manifest immediately before the swap and base
-            # the commit on the CURRENT state (ADVICE r14): untouched
-            # buckets keep the current entries — a concurrent
-            # disjoint-bucket merge's or compaction's commit committed
-            # during this merge SURVIVES instead of being overwritten
-            # from our stale snapshot — and touched buckets take this
-            # merge's versions. Fail fast if any touched bucket advanced
-            # (or was dropped by a compaction) since our read snapshot:
-            # our merged rows were computed against the stale version
-            # dirs, so committing them would drop the other merge's
-            # writes or resurrect rows a compaction just filtered
-            # (whose version dirs its cleanup already deleted). Mirrors
-            # _filter_partitioned_manifest's detector; the lost-update
-            # window shrinks from the full merge duration to this
-            # re-read -> swap gap.
+            # Re-read the manifest immediately before the swap: untouched
+            # buckets keep the CURRENT entries (a concurrent commit to
+            # disjoint buckets survives) and touched buckets take this
+            # merge's versions. A touched bucket that advanced (or was
+            # dropped by a compaction) since our read means our merged
+            # rows were computed against stale data: committing them
+            # would drop the other writer's rows or resurrect rows a
+            # compaction filtered, so fail fast instead.
             if _before_commit is not None:
                 _before_commit()
             snap_token, current = _read_snapshot(local)
@@ -910,26 +860,19 @@ def _merge_into_partitioned_manifest(
                 )
             new_manifest = dict(current)
             new_manifest.update(ours)
-            # THE commit: every touched bucket becomes visible in one
-            # atomic swap (cross-bucket, unlike the symlink flips);
-            # `expected`+`token` let a CAS backend serialize on the
-            # exact `current` read (identity, not value — ADVICE r17)
+            # THE commit; `expected` + `token` let a CAS backend
+            # serialize on the exact `current` read
             _write_manifest(
                 local, new_manifest, expected=current, token=snap_token
             )
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        # post-commit cleanup, bounded by OUR read snapshot: only
+        # Post-commit cleanup, bounded by OUR read snapshot: only
         # versions <= what this merge read (and therefore superseded)
         # are deleted — a concurrent writer's newer dir is never
-        # touched. A crash between rename and manifest swap leaves an
-        # UNREFERENCED version dir; it is deliberately NOT swept here
-        # or by compaction (sweeping would require proving no racing
-        # writer is about to commit it — the lock this protocol
-        # declines to be). Orphans are invisible to readers (manifest-
-        # resolved reads only) and cost only storage; a maintenance
-        # sweep may delete any .v dir the current manifest doesn't
-        # name, after quiescing writers.
+        # touched. Orphans from a crash between publish and swap are
+        # left for sweep_orphans: deleting them here would need proof
+        # that no racing writer is about to commit them.
         for b in touched:
             for v, stale in be.list_versions(local, b):
                 if v <= manifest.get(b, 0):
@@ -937,366 +880,14 @@ def _merge_into_partitioned_manifest(
     finally:
         collapsed.unpersist()
 
-    if return_touched_only:
-        dirs = _manifest_dirs(local, new_manifest, set(touched))
-        if not dirs:
-            return spark.createDataFrame([], collapsed.schema).select(*out_cols)
-        return spark.read.parquet(*dirs).select(*out_cols)
-    # empty-batch merge into a fresh/emptied table: zero manifest entries
-    # means zero paths — return the typed empty relation instead of
-    # letting spark.read.parquet() raise on an empty path list (ADVICE
-    # r14; same shape read_partitioned produces for emptied tables)
-    if not new_manifest:
+    dirs = _manifest_dirs(
+        local, new_manifest, set(touched) if return_touched_only else None
+    )
+    if not dirs:
+        # an empty batch into a table with no committed rows: zero
+        # paths, so return the typed empty relation
         return spark.createDataFrame([], collapsed.schema).select(*out_cols)
-    return spark.read.parquet(*_manifest_dirs(local, new_manifest)).select(
-        *out_cols
-    )
-
-
-def _filter_partitioned_manifest(
-    spark, target: str, local: str, condition: Column, meta: dict,
-    _before_commit=None,
-) -> DataFrame:
-    """Manifest-mode body of :func:`filter_partitioned`. The emptied-
-    bucket race class the symlink path needed per-bucket re-checks for
-    (ADVICE r13) is gone structurally: drops are just absent manifest
-    entries in ONE atomic swap, and cleanup deletes only versions this
-    compaction's read snapshot superseded — never a concurrently
-    committed one."""
-    import os
-    import shutil
-    import uuid
-
-    from pyspark.sql.types import StructType
-
-    manifest = _read_manifest(local)
-    if not manifest:
-        return spark.createDataFrame([], StructType.fromJson(meta["schema"]))
-
-    # the stored files carry no p_bucket column (partition-stripped at
-    # write); recompute it from the keys — the deterministic-bucket
-    # layout invariant — for the clustered staging write
-    bucket = _bucket_expr(meta["keys"], meta["num_buckets"])
-    kept = (
-        spark.read.parquet(*_manifest_dirs(local, manifest))
-        .where(condition)
-        .withColumn(_BUCKET_COL, bucket)
-    )
-    staging = os.path.join(local, f".staging_{uuid.uuid4().hex[:12]}")
-    (
-        kept.repartition(max(len(manifest), 1), F.col(_BUCKET_COL))
-        .write.partitionBy(_BUCKET_COL)
-        .mode("overwrite")
-        .parquet(staging)
-    )
-    be = _backend()
-    try:
-        if _before_commit is not None:
-            _before_commit()
-        snap_token, current = _read_snapshot(local)
-        if current != manifest:
-            raise ConcurrentWriteError(
-                "filter_partitioned: concurrent merge detected — the "
-                "manifest advanced during compaction; the table is "
-                "untouched, rerun the compaction"
-            )
-        new_manifest: dict[int, int] = {}
-        for b in sorted(manifest):
-            part = os.path.join(staging, f"{_BUCKET_COL}={b}")
-            if os.path.isdir(part):
-                listed = be.list_versions(local, b)
-                version = (
-                    max(listed[-1][0] if listed else 0, manifest[b]) + 1
-                )
-                be.publish_version(local, part, b, version)
-                new_manifest[b] = version
-            # else: every row filtered away — the bucket simply has no
-            # entry in the new manifest; its old versions go in cleanup
-        _write_manifest(
-            local, new_manifest, expected=current, token=snap_token
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    for b in manifest:
-        for v, stale in be.list_versions(local, b):
-            if v <= manifest[b] and v != new_manifest.get(b):
-                be.delete_version_path(stale, strict=False)
-    if not new_manifest:
-        return spark.createDataFrame(
-            [], kept.drop(_BUCKET_COL).schema
-        )
-    return spark.read.parquet(*_manifest_dirs(local, new_manifest))
-
-
-def merge_into_partitioned(
-    target: str,
-    incoming: DataFrame,
-    keys: list[str],
-    order_by: list[str],
-    num_buckets: int = 32,
-    wide_threshold: float = 0.5,
-    return_touched_only: bool = False,
-    commit: str = "symlink",
-    _before_commit=None,
-) -> DataFrame:
-    """Batch-proportional pure-Parquet MERGE: ``merge_into_sql``
-    semantics (last-writer-wins, strictly-newer guard, null-safe match
-    keys — the executed :func:`merge_match_condition` /
-    :func:`merge_newer_condition` algebra via :func:`merge_sql_plan`)
-    over a hash-bucket-partitioned table, rewriting ONLY the partitions
-    the batch touches (VERDICT r11 gap #2: ``merge_into_sql`` rewrites
-    O(table) per batch; this layout makes merge wall ∝ batch).
-
-    Layout: ``target/p_bucket=N`` partition dirs, ``N =
-    pmod(xxhash64(keys), num_buckets)`` — a deterministic function of
-    the merge key, so every observation of a key lands in the same
-    partition forever. Each partition entry is a symlink into versioned
-    dirs under ``target/.v/`` (dot-prefixed: invisible to Spark's file
-    listing), committed with the same atomic-symlink flip as
-    ``sinks.overwrite_table``, per partition.
-
-    Per merge: the batch collapses per key (one shuffle), the touched
-    bucket ids are collected (bounded by ``num_buckets`` — a driver-side
-    list of ints, never rows), the stored side is read WITH a partition-
-    pruned scan (``p_bucket IN touched`` prunes untouched dirs at
-    listing time), the full-outer MERGE join runs against that pruned
-    slice only, and only touched partitions are rewritten+swapped.
-    Untouched partitions' files are never opened or written — they stay
-    byte-identical across the merge (tests pin this).
-
-    Isolation is per-partition atomic (readers of one bucket see old xor
-    new; a cross-bucket read concurrent with a commit may see batch N in
-    one bucket and N-1 in another) — the Hive dynamic-partition-
-    overwrite level. Snapshot isolation across partitions is the
-    Delta/Iceberg backend's job. Local filesystems only (the symlink
-    swap needs POSIX rename); object stores should use the Delta backend
-    or accept ``merge_into_sql``'s staged full rewrite.
-
-    At 100 TB: table/num_buckets bounds a partition, so a merge costs
-    one batch shuffle + scan/rewrite of ``touched/num_buckets`` of the
-    table. Size ``num_buckets`` so a partition fits an executor
-    comfortably (e.g. 4096 buckets ≈ 25 GB each); a trickle of small
-    batches touches few buckets and pays proportionally (measured flat
-    to 64x table scale in docs/SCALE.md). The other envelope end is
-    handled IN the runtime since round 13 (VERDICT r12 ask #3): a WIDE
-    batch — touched fraction >= ``wide_threshold`` of the buckets —
-    degenerates to a full-table rewrite, and the naive partitioned
-    write then pays a dynamic-partition sort + a tasks × buckets
-    small-file fan-out on top (measured ~6.5-7.5x the plain rewrite at
-    16x/64x on the round-13 idle battery; ~8.5x on round 12's —
-    docs/SCALE.md). The wide route keeps the LAYOUT (so subsequent
-    trickle merges continue seamlessly — routing to
-    :func:`merge_into_sql` would silently convert the table to the
-    unpartitioned versioned-dir layout out from under them) but
-    CLUSTERS the staging write by bucket first: one extra exchange of
-    the merged slice, after which each BUCKET is written by exactly one
-    task (hash collisions may hand one task 2-3 buckets and another
-    none, but no bucket ever splits across tasks) — no per-task sort
-    over all buckets, one file per bucket (``touched`` files) instead
-    of ``tasks × touched``. Measured steady-state
-    (one-file-per-bucket layout): ~1.9x/1.6x the plain rewrite at
-    16x/64x; the residual is intrinsic per-partition bookkeeping
-    (O(buckets) path listing, one write task per bucket, per-bucket
-    swaps) that a metadata-commit format (Delta/Iceberg) removes
-    (docs/SCALE.md "Round-13"). Trickle batches keep the direct write:
-    their merged slice is small and the extra exchange would serialize
-    it through ``touched`` tasks for no benefit.
-
-    ``return_touched_only=True`` returns only the touched partitions'
-    post-merge rows (partition-pruned path read, O(touched) listing)
-    instead of a scan over the whole table — the maintenance-loop mode
-    (VERDICT r12 ask #6): a per-batch caller only ever consumes the
-    slice it just merged, and the full-table return's O(num_buckets)
-    file listing at plan-construction time is the one per-table cost
-    left in the trickle path (measured in docs/SCALE.md "Round-13").
-
-    ``commit`` picks the table's commit protocol at CREATION (round 14,
-    VERDICT r13 ask #3); thereafter the meta's recorded mode wins and
-    the parameter is ignored — a table's protocol never silently
-    converts (passing ``commit="manifest"`` against an existing symlink
-    table raises). ``"symlink"`` (default) is the per-partition
-    atomic-flip protocol above; ``"manifest"`` commits the WHOLE merge
-    through one atomic replace of a bucket→version manifest file —
-    write-once version dirs, no symlinks, no directory listing on the
-    read path, cross-bucket atomicity — the object-store-shaped
-    protocol (see the manifest-mode comment block above
-    :func:`_read_manifest`). Use :func:`read_partitioned` to read a
-    table under either mode.
-    """
-    import json
-    import os
-    import shutil
-    import uuid
-
-    from transit_efficiency_analysis_spark.sinks import _local_path
-
-    if num_buckets < 1:
-        raise ValueError("merge_into_partitioned: num_buckets must be >= 1")
-    if _BUCKET_COL in incoming.columns:
-        raise ValueError(
-            f"merge_into_partitioned: incoming data carries a "
-            f"{_BUCKET_COL!r} column, which is this layout's reserved "
-            f"partition column — rename it (the write would silently "
-            f"shadow it and reads would resolve the partition value "
-            f"instead of the data)"
-        )
-    local = _local_path(target)
-    if local is None:
-        raise ValueError(
-            "merge_into_partitioned needs a local/posix path (atomic "
-            "symlink swap); use backend='delta' or merge_into_sql for "
-            "object stores"
-        )
-    if commit not in ("symlink", "manifest"):
-        raise ValueError(
-            f"commit must be 'symlink' or 'manifest', got {commit!r}"
-        )
-    if commit == "manifest" or _is_manifest_table(local):
-        # manifest-protocol tables dispatch wholesale (the meta's mode
-        # wins for existing tables); the default path below is the
-        # pre-round-14 symlink protocol, verbatim
-        return _merge_into_partitioned_manifest(
-            incoming.sparkSession, target, local, incoming, keys,
-            order_by, num_buckets, wide_threshold, return_touched_only,
-            _before_commit=_before_commit,
-        )
-    from pyspark import StorageLevel
-
-    spark = incoming.sparkSession
-    bucket = _bucket_expr(keys, num_buckets)
-    collapsed = upsert_keep_newest(incoming, keys, order_by)
-    out_cols = collapsed.columns
-
-    meta_path = os.path.join(local, _META_NAME)
-    # "exists" = has at least one COMMITTED partition, not a bare path
-    # probe: the meta-first commit order (below) means a crash can leave
-    # a meta-only dir, which must read as "first batch" so the next
-    # merge recreates the table (and its meta) from scratch.
-    exists = _target_exists(spark, target) and any(
-        name.startswith(f"{_BUCKET_COL}=") for name in os.listdir(local)
-    )
-    if exists:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta["num_buckets"] != num_buckets:
-            raise ValueError(
-                f"table at {target} was bucketed with "
-                f"num_buckets={meta['num_buckets']}, got {num_buckets} — "
-                "a key's bucket would move and merges would silently "
-                "duplicate keys"
-            )
-
-    # Persist the collapsed relation (DISK_ONLY, released in the
-    # finally): it is consumed twice — the touched-bucket
-    # distinct/collect and the MERGE join — and a non-trivial incoming
-    # plan (e.g. a distinct over an exploded stream batch) would
-    # otherwise be recomputed per consumer (ADVICE r12). The touched
-    # set over the collapsed relation equals the set over the raw
-    # batch (buckets are a function of the keys the collapse
-    # preserves). Persisted only AFTER the meta validation above so a
-    # rejected call (bucket-count drift, corrupt meta) cannot leak a
-    # registered relation per attempt — the same accumulation class
-    # the consume= lifecycle closes in minhash_lsh_pairs_incremental.
-    collapsed = collapsed.persist(StorageLevel.DISK_ONLY)
-    try:
-        # Touched buckets: distinct key hashes, ints bounded by
-        # num_buckets — never data rows.
-        touched = sorted(
-            r[0]
-            for r in collapsed.select(bucket.alias(_BUCKET_COL))
-            .distinct()
-            .collect()
-        )
-
-        # Read ONLY the touched partition dirs by path (basePath keeps
-        # the p_bucket partition-column semantics): file listing is
-        # O(touched), not O(num_buckets) — the full-table discovery
-        # read was the one per-table-scale cost left in the merge
-        # (measured as the 64x/512-bucket bump in docs/SCALE.md). A
-        # touched bucket with no dir yet (first observation of keys
-        # hashing there) simply isn't read.
-        touched_dirs = [
-            os.path.join(local, f"{_BUCKET_COL}={b}")
-            for b in touched
-            if os.path.isdir(os.path.join(local, f"{_BUCKET_COL}={b}"))
-        ]
-        if exists and touched_dirs:
-            stored = (
-                spark.read.option("basePath", local)
-                .parquet(*touched_dirs)
-                .drop(_BUCKET_COL)
-            )
-            merged = merge_sql_plan(stored, collapsed, keys, order_by)
-        else:
-            merged = collapsed
-
-        staged = merged.withColumn(_BUCKET_COL, bucket)
-        if touched and len(touched) >= wide_threshold * num_buckets:
-            # WIDE route (see docstring): cluster by bucket so each
-            # bucket is written by exactly one task (one file per
-            # bucket; repartition hash-partitions bucket ids, so a task
-            # may own 2-3 buckets while another owns none) — kills the
-            # dynamic-partition sort and the tasks × buckets small-file
-            # fan-out that made wide batches ~8.5x the plain rewrite.
-            staged = staged.repartition(len(touched), F.col(_BUCKET_COL))
-        staging = os.path.join(local, f".staging_{uuid.uuid4().hex[:12]}")
-        staged.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(
-            staging
-        )
-
-        # Commit the layout meta BEFORE the first partition swap, via
-        # temp file + atomic os.replace (ADVICE r12): the parameters
-        # are known up front, and a crash between a swap and a
-        # trailing meta write used to leave p_bucket= partitions with
-        # no meta — after which every merge/filter call raised
-        # FileNotFoundError with no recovery path. Crash after THIS
-        # write but before any swap leaves meta-only, which
-        # _target_exists treats as absent (no data files) — the next
-        # merge simply recreates it.
-        if not exists:
-            _write_meta_once(
-                local, num_buckets, keys, order_by,
-                collapsed.schema.jsonValue(), commit=None,
-            )
-
-        try:
-            for b in touched:
-                part = os.path.join(staging, f"{_BUCKET_COL}={b}")
-                if not os.path.isdir(part):
-                    # a touched bucket always yields >=1 merged row
-                    # (the batch's own rows survive the MERGE by
-                    # construction)
-                    raise RuntimeError(
-                        f"merge produced no output for touched bucket {b}"
-                    )
-                _swap_bucket(local, part, b)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-    finally:
-        collapsed.unpersist()
-    if return_touched_only:
-        committed = [
-            os.path.join(local, f"{_BUCKET_COL}={b}")
-            for b in touched
-            if os.path.isdir(os.path.join(local, f"{_BUCKET_COL}={b}"))
-        ]
-        if not committed:
-            return spark.createDataFrame([], collapsed.schema).select(*out_cols)
-        return (
-            spark.read.option("basePath", local)
-            .parquet(*committed)
-            .drop(_BUCKET_COL)
-            .select(*out_cols)
-        )
-    if not any(
-        name.startswith(f"{_BUCKET_COL}=") for name in os.listdir(local)
-    ):
-        # empty-batch merge into a fresh (or compaction-emptied) SYMLINK
-        # table: no partition dirs exist, so a parquet read can't infer
-        # a schema — return the typed empty relation, mirroring the
-        # manifest twin's ADVICE r14 guard (review r17)
-        return spark.createDataFrame([], collapsed.schema).select(*out_cols)
-    return spark.read.parquet(local).drop(_BUCKET_COL).select(*out_cols)
+    return spark.read.parquet(*dirs).select(*out_cols)
 
 
 def merge_with_retry(
@@ -1307,9 +898,8 @@ def merge_with_retry(
     retries: int = 3,
     **kwargs,
 ) -> DataFrame:
-    """Delta-style optimistic concurrency over :func:`merge_into_partitioned`
-    (round 17, completing VERDICT r16 #2's commit story): when a
-    concurrent writer wins the commit race — the protocol's
+    """Optimistic concurrency over :func:`merge_into_partitioned`: when
+    a concurrent writer wins the commit race — the protocol's
     touched-bucket detector (:class:`ConcurrentWriteError`) or a CAS
     backend's conditional put
     (:class:`~..commit_backend.CommitConflictError`) — rerun the merge
@@ -1318,8 +908,8 @@ def merge_with_retry(
     (storage only, invisible to readers, reclaimed by
     :func:`sweep_orphans`), and the retry RECOMPUTES the MERGE against
     the advanced table state, so the loser's rows are applied on top of
-    the winner's instead of over a stale snapshot — exactly the
-    Delta/Iceberg commit-retry loop, expressed over this runtime.
+    the winner's instead of over a stale snapshot — the Delta/Iceberg
+    commit-retry loop, expressed over this runtime.
 
     Bounded: after ``retries`` conflicts the last error propagates — a
     table hot enough to lose every retry needs writer coordination (or
@@ -1351,18 +941,17 @@ def filter_with_retry(
     retries: int = 3,
     **kwargs,
 ) -> DataFrame:
-    """:func:`merge_with_retry`'s compaction twin (round 18, completing
-    the commit story's writer surface): when a concurrent merge wins
-    the race against a :func:`filter_partitioned` compaction — the
-    protocol detector (``ConcurrentWriteError``) or a CAS backend's
-    conditional put (``CommitConflictError``) — rerun the compaction
-    from a fresh snapshot. Semantically safe by construction: a
+    """:func:`merge_with_retry`'s compaction twin: when a concurrent
+    merge wins the race against a :func:`filter_partitioned` compaction
+    — the protocol detector (``ConcurrentWriteError``) or a CAS
+    backend's conditional put (``CommitConflictError``) — rerun the
+    compaction from a fresh snapshot. Safe by construction: a
     compaction is just a filter, so re-applying ``condition`` to the
     ADVANCED table state (the winner's rows included) is exactly the
     intended result; the failed attempt's staged version dirs are
     sweepable orphans, same as a lost merge. Bounded like the merge
     form: after ``retries`` conflicts the last error propagates —
-    compaction racing merges persistently should move to a maintenance
+    compaction racing merges persistently belongs in a maintenance
     window, not a longer loop."""
     from transit_efficiency_analysis_spark.operators.commit_backend import (
         CommitConflictError,
@@ -1383,19 +972,17 @@ def filter_partitioned(
     target: str,
     condition: Column,
     _before_commit=None,
-    _before_drop=None,
 ) -> DataFrame:
-    """Partition-preserving compaction for :func:`merge_into_partitioned`
+    """Layout-preserving compaction for :func:`merge_into_partitioned`
     tables: keep only rows satisfying ``condition``, rewriting every
-    partition in ONE Spark job (filtered write partitioned by
-    ``p_bucket`` → per-partition atomic swap). O(table) by definition —
-    run it as OCCASIONAL compaction (retention expiry, tombstone
-    removal), never per batch; per-batch state changes belong to
-    :func:`merge_into_partitioned`, which stays O(batch). Partitions
-    whose every row is filtered away are removed entirely (their
-    symlink and versions deleted); a later merge touching that bucket
-    recreates it. The bucket layout and ``.merge_meta.json`` are
-    preserved, so merges continue seamlessly after a compaction.
+    bucket in ONE Spark job and committing them in one manifest swap.
+    O(table) by definition — run it as OCCASIONAL compaction (retention
+    expiry, tombstone removal), never per batch; per-batch state changes
+    belong to :func:`merge_into_partitioned`, which stays O(batch). A
+    bucket whose every row is filtered away loses its manifest entry; a
+    later merge touching that bucket recreates it. The bucket layout and
+    ``.merge_meta.json`` are preserved, so merges continue seamlessly
+    after a compaction.
 
     The retention shape this enables at 100 TB: a streaming ingest
     MERGEs ``(key, last_seen)`` per batch (batch-proportional), the
@@ -1403,150 +990,79 @@ def filter_partitioned(
     times), and this compaction physically drops expired rows on a
     slow cadence — docs/SCALE.md "Streaming k-gram standing-table".
 
-    Concurrency (round 13, VERDICT r12 ask #4): compaction reads EVERY
-    partition and swaps them from that one read, so a merge landing
-    between its read and its swap would be silently overwritten (the
-    classic lost update — the per-partition symlink versioning makes
-    each individual swap atomic, it does NOT serialize whole-table
-    writers). This function therefore snapshots each bucket's version
-    number before reading and re-checks ALL of them after the staging
-    write, immediately before the first swap: any bucket whose version
-    advanced means a concurrent merge committed against data this
-    compaction no longer represents, and it raises ``RuntimeError``
-    with the table untouched (rerun the compaction; merges never need
-    to rerun — compaction is semantically just a filter, VERDICT r12).
-    The check-then-swap window that remains is the microseconds between
-    the re-check loop and the symlink flips, not the whole job — a
-    detector, not a lock; deployments that interleave writers on a
-    faster cadence than that belong on the Delta/Iceberg backend's
-    real transaction log. ``_before_commit`` is a test seam invoked
-    between the staging write and the version re-check (the
-    interleaving test injects a merge there).
-
-    Manifest-protocol tables (``commit="manifest"`` at creation)
-    dispatch to :func:`_filter_partitioned_manifest`: same semantics,
-    one atomic manifest swap instead of per-bucket flips — emptied
-    buckets are just absent entries, which removes the emptied-bucket
-    destructive-race class structurally.
+    Concurrency: the compaction rewrites every bucket from one read, so
+    a merge committing between that read and the swap would be silently
+    overwritten. The manifest is therefore re-read immediately before
+    the swap; if it changed at all, the compaction raises
+    :class:`ConcurrentWriteError` with the table untouched (rerun it, or
+    use :func:`filter_with_retry`; merges never need to rerun).
+    Cleanup deletes only versions this compaction's read superseded,
+    never a concurrently committed one. ``_before_commit`` is a test
+    seam invoked between the staging write and the manifest re-read.
     """
-    import json
     import os
     import shutil
     import uuid
 
-    from transit_efficiency_analysis_spark.sinks import _local_path
-
-    local = _local_path(target)
-    if local is None:
-        raise ValueError("filter_partitioned needs a local/posix path")
-    meta_path = os.path.join(local, _META_NAME)
-    # the json.load doubles as the "is this a partitioned table" probe:
-    # missing meta raises FileNotFoundError here, before any work
-    with open(meta_path) as f:
-        meta = json.load(f)
-
-    if meta.get("commit", "symlink") == "manifest":
-        return _filter_partitioned_manifest(
-            spark, target, local, condition, meta, _before_commit
+    local = _require_local(target, "filter_partitioned")
+    meta = _read_meta(local, target)
+    if meta is None:
+        raise FileNotFoundError(
+            f"filter_partitioned: no merge_into_partitioned table at {target}"
         )
+    manifest = _read_manifest(local)
+    if not manifest:
+        return _empty_table(spark, meta)
 
-    vroot = os.path.join(local, ".v")
-    existing_buckets = [
-        int(name.split("=", 1)[1])
-        for name in os.listdir(local)
-        if name.startswith(f"{_BUCKET_COL}=")
-    ]
-    if not existing_buckets:
-        # legitimately-emptied table (a prior compaction dropped every
-        # partition; the meta stays so merges continue) or the
-        # meta-first crash window: filtering nothing is a no-op —
-        # return a typed empty relation from the meta's stored schema
-        # rather than letting a partitionless parquet read fail schema
-        # inference. Pre-r13 tables lack the schema key: fail with a
-        # actionable message instead of the inference error.
-        from pyspark.sql.types import StructType
-
-        if "schema" not in meta:
-            raise ValueError(
-                f"filter_partitioned: table at {target} has no "
-                "partitions and its meta predates the stored-schema "
-                "key — nothing to compact; run a merge first"
-            )
-        return spark.createDataFrame(
-            [], StructType.fromJson(meta["schema"])
-        )
-
-    def _latest_versions() -> dict[int, int]:
-        allv = _all_bucket_versions(vroot)  # one listdir, all buckets
-        return {
-            b: (allv.get(b) or [(0, "")])[-1][0] for b in existing_buckets
-        }
-
-    versions_at_read = _latest_versions()
-    kept = spark.read.parquet(local).where(condition)
+    # the stored files carry no p_bucket column; recompute it from the
+    # keys (the deterministic-bucket invariant) for the clustered write
+    bucket = _bucket_expr(meta["keys"], meta["num_buckets"])
+    kept = (
+        spark.read.parquet(*_manifest_dirs(local, manifest))
+        .where(condition)
+        .withColumn(_BUCKET_COL, bucket)
+    )
     staging = os.path.join(local, f".staging_{uuid.uuid4().hex[:12]}")
-    # compaction rewrites every partition — by definition the wide
-    # regime, so it gets the same bucket-clustered write as
-    # merge_into_partitioned's wide route (one task per bucket / one
-    # file per bucket, no dynamic-partition sort / tasks x buckets
-    # file fan-out)
+    # every bucket is rewritten — the wide regime — so the write is
+    # clustered by bucket like merge_into_partitioned's wide route
     (
-        kept.repartition(max(len(existing_buckets), 1), F.col(_BUCKET_COL))
+        kept.repartition(len(manifest), F.col(_BUCKET_COL))
         .write.partitionBy(_BUCKET_COL)
         .mode("overwrite")
         .parquet(staging)
     )
+    be = _backend()
     try:
         if _before_commit is not None:
             _before_commit()
-        moved = {
-            b: v
-            for b, v in _latest_versions().items()
-            if v != versions_at_read[b]
-        }
-        if moved:
+        snap_token, current = _read_snapshot(local)
+        if current != manifest:
             raise ConcurrentWriteError(
-                "filter_partitioned: concurrent merge detected — bucket "
-                f"version(s) advanced during compaction ({sorted(moved)}); "
-                "the table is untouched, rerun the compaction"
+                "filter_partitioned: concurrent merge detected — the "
+                "manifest advanced during compaction; the table is "
+                "untouched, rerun the compaction"
             )
-        for b in existing_buckets:
+        new_manifest: dict[int, int] = {}
+        for b in sorted(manifest):
             part = os.path.join(staging, f"{_BUCKET_COL}={b}")
-            link = os.path.join(local, f"{_BUCKET_COL}={b}")
             if os.path.isdir(part):
-                _swap_bucket(local, part, b)
-            else:
-                # every row of this bucket was filtered away: drop the
-                # partition (readers atomically stop seeing the link).
-                # This path DESTROYS version dirs, which is strictly
-                # worse than the swap path's lost-update residual — a
-                # merge committing after the global re-check would have
-                # its freshly committed version physically deleted
-                # (ADVICE r13). So: re-check THIS bucket immediately
-                # before acting (advanced ⇒ skip the drop entirely; the
-                # merge's data wins and a rerun re-applies the filter),
-                # and even then delete only versions <= the read-time
-                # snapshot, so a commit landing in the remaining
-                # microseconds keeps its version dir (worst case: an
-                # orphaned-but-intact version, never destroyed data).
-                if _before_drop is not None:
-                    _before_drop(b)
-                latest = _bucket_versions(vroot, b)
-                if latest and latest[-1][0] > versions_at_read[b]:
-                    continue
-                if os.path.lexists(link):
-                    os.remove(link)
-                for v, stale in _bucket_versions(vroot, b):
-                    if v <= versions_at_read[b]:
-                        shutil.rmtree(stale, ignore_errors=True)
+                listed = be.list_versions(local, b)
+                version = (
+                    max(listed[-1][0] if listed else 0, manifest[b]) + 1
+                )
+                be.publish_version(local, part, b, version)
+                new_manifest[b] = version
+            # else: every row filtered away — the bucket has no entry
+            # in the new manifest; its old versions go in cleanup
+        _write_manifest(
+            local, new_manifest, expected=current, token=snap_token
+        )
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    if not any(
-        name.startswith(f"{_BUCKET_COL}=") for name in os.listdir(local)
-    ):
-        # the predicate emptied EVERY partition: no files remain, so a
-        # parquet read can't infer a schema — return the (empty) result
-        # with the pre-compaction schema; the meta file keeps the table
-        # mergeable (property-tested: keys re-arriving re-insert cleanly)
-        return spark.createDataFrame([], kept.drop(_BUCKET_COL).schema)
-    return spark.read.parquet(local).drop(_BUCKET_COL)
+    for b in manifest:
+        for v, stale in be.list_versions(local, b):
+            if v <= manifest[b] and v != new_manifest.get(b):
+                be.delete_version_path(stale, strict=False)
+    if not new_manifest:
+        return _empty_table(spark, meta)
+    return spark.read.parquet(*_manifest_dirs(local, new_manifest))
