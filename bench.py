@@ -25,12 +25,15 @@ run first WAITS, bounded by $SPARK_GRAFT_LOAD_WAIT seconds (default
 240; 0 disables), polling until loadavg_1m drops under the gate —
 loadavg decays with a ~1-minute time constant, so the driver's own
 just-finished work (the usual contaminant) clears well inside the
-bound. If the timed battery still STARTED contaminated, one bounded
-re-wait + ONE retry of the timed passes runs afterwards; when the
-retry starts clean it becomes the figure of record and the loaded
-attempt is kept alongside (never hidden) as "first_attempt". A box
-that stays busy past both waits records the single loaded run exactly
-as before — measure-and-say-so, never block forever.
+bound. If the timed battery still STARTED contaminated, or it comes
+back spread-flagged (see "spread_flagged" below), one bounded re-wait +
+ONE retry of the timed passes runs afterwards; when the retry starts
+clean it becomes the figure of record and the first attempt is kept
+alongside (never hidden) as "first_attempt", with the "reasons" that
+triggered the retry ("load", "spread") and its wide-spread queries.
+The stdout line then carries "retried_after_load" and/or
+"retried_after_spread". A box that stays busy past both waits records
+the single first run — measure-and-say-so, never block forever.
 
 Post-run flag (round 17, ADVICE r16 #4): the pre-battery gate can't
 see a load spike that STARTS mid-battery, and loadavg sampled after
@@ -321,6 +324,74 @@ def _stage_times_ms(spark, prefix: str) -> dict[str, int]:
         return {}
 
 
+def _median(xs: list[float]) -> float:
+    s = sorted(xs)
+    mid = len(s) // 2
+    return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
+
+
+def _spread_wide(samples: dict[str, list[float]]) -> list[str]:
+    """Headline queries whose max-min spread exceeds max(0.3 s, 50% of
+    their median). Two or more at once is the box's degraded-phase
+    signature (``spread_flagged``), not the queries'."""
+    wide = []
+    for n in HEADLINE:
+        xs = samples.get(n)
+        if xs:
+            med, spread = round(_median(xs), 3), round(max(xs) - min(xs), 3)
+            if spread > max(0.3, 0.5 * max(med, 0.001)):
+                wide.append(n)
+    return wide
+
+
+def _battery_of_record(timed_passes, machine_context, env_before: dict,
+                       load_gate: float, load_wait: float):
+    """Run the timed battery, and re-run it ONCE when the first attempt
+    started load-contaminated or came back spread-flagged (docstring
+    "Load retry"): after one bounded wait, if the box is idle the retry
+    becomes the figure of record and the first attempt is kept alongside
+    as ``first_attempt``, never hidden. ``load_wait <= 0`` disables the
+    retry. Returns ``(samples, tpch_samples, ext_cores, first_attempt,
+    env_before)``; ``first_attempt`` is None when nothing was retried."""
+    samples, tpch_samples, ext_cores = timed_passes()
+    load_1m = env_before.get("loadavg_1m")
+    wide = _spread_wide(samples)
+    reasons = (["load"] if load_1m is not None and load_1m > load_gate else []) + (
+        ["spread"] if len(wide) >= 2 else []
+    )
+    if not reasons or load_wait <= 0:
+        return samples, tpch_samples, ext_cores, None, env_before
+    _wait_for_idle(load_gate, load_wait)
+    env_retry = machine_context()
+    if env_retry.get("loadavg_1m") is None or env_retry["loadavg_1m"] > load_gate:
+        print(
+            f"# retry ({'+'.join(reasons)}): box still busy after the bounded "
+            "wait — keeping the single first run (measure-and-say-so)",
+            file=sys.stderr,
+        )
+        return samples, tpch_samples, ext_cores, None, env_before
+    first_attempt = {
+        "reasons": reasons,
+        "total": round(
+            sum(round(_median(xs), 3) for n, xs in samples.items() if n in HEADLINE), 3
+        ),
+        "tpch_total": round(sum(_median(xs) for xs in tpch_samples.values()), 3),
+        "spread_wide_queries": wide,
+        "loadavg_1m": load_1m,
+        # env_before is about to be replaced by the retry's
+        "env_before": env_before,
+        "external_cpu_cores": round(ext_cores, 2) if ext_cores is not None else None,
+    }
+    print(
+        f"# retry ({'+'.join(reasons)}): box idle (loadavg_1m "
+        f"{env_retry['loadavg_1m']}) — re-running the timed battery; the "
+        f"first attempt is kept as first_attempt {first_attempt}",
+        file=sys.stderr,
+    )
+    samples, tpch_samples, ext_cores = timed_passes(tag="retry-")
+    return samples, tpch_samples, ext_cores, first_attempt, env_retry
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -499,61 +570,13 @@ def main() -> None:
         )
         return samples, tpch_samples, ext_cores
 
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-
-    samples, tpch_samples, ext_cores = _timed_passes()
-    first_attempt = None
-    retried = False
-    if load_contaminated and load_wait > 0:
-        # one bounded re-wait + ONE retry (docstring "Load retry"): when
-        # the box goes idle the clean run becomes the figure of record;
-        # the loaded attempt is recorded alongside, never hidden
-        _wait_for_idle(load_gate, load_wait)
-        env_retry = _machine_context(spark)
-        if (
-            env_retry.get("loadavg_1m") is not None
-            and env_retry["loadavg_1m"] <= load_gate
-        ):
-            first_headline = {
-                n: round(median(xs), 3)
-                for n, xs in samples.items()
-                if n in HEADLINE
-            }
-            first_attempt = {
-                "total": round(sum(first_headline.values()), 3),
-                "tpch_total": round(
-                    sum(median(xs) for xs in tpch_samples.values()), 3
-                ),
-                "loadavg_1m": load_1m,
-                # keep the loaded attempt's environment in the artifact
-                # (env_before is about to be replaced by the clean
-                # retry's) — never hide the loaded run
-                "env_before": env_before,
-                "external_cpu_cores": (
-                    round(ext_cores, 2) if ext_cores is not None else None
-                ),
-            }
-            print(
-                f"# load retry: box idle (loadavg_1m "
-                f"{env_retry['loadavg_1m']}) — re-running the timed "
-                f"battery; loaded attempt kept as first_attempt "
-                f"{first_attempt}",
-                file=sys.stderr,
-            )
-            retried = True
-            env_before = env_retry
-            load_1m = env_retry["loadavg_1m"]
-            load_contaminated = False
-            samples, tpch_samples, ext_cores = _timed_passes(tag="retry-")
-        else:
-            print(
-                "# load retry: box still busy after the bounded wait — "
-                "keeping the single loaded run (measure-and-say-so)",
-                file=sys.stderr,
-            )
+    samples, tpch_samples, ext_cores, first_attempt, env_before = _battery_of_record(
+        _timed_passes, lambda: _machine_context(spark), env_before, load_gate, load_wait
+    )
+    retried = first_attempt is not None
+    if retried:
+        load_1m = env_before["loadavg_1m"]
+        load_contaminated = False
 
     load_contaminated_post = ext_cores is not None and ext_cores > load_gate
     if load_contaminated_post:
@@ -565,7 +588,7 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    all_t = {n: round(median(xs), 3) for n, xs in samples.items()}
+    all_t = {n: round(_median(xs), 3) for n, xs in samples.items()}
     all_s = {n: round(max(xs) - min(xs), 3) for n, xs in samples.items()}
     timings = {n: all_t[n] for n in HEADLINE if n in all_t}
     spread = {n: all_s[n] for n in HEADLINE if n in all_s}
@@ -573,7 +596,7 @@ def main() -> None:
     extras_spread = {n: all_s[n] for n in EXTRAS if n in all_s}
     total = round(sum(timings.values()), 3)
 
-    tpch_timings = {n: round(median(xs), 3) for n, xs in tpch_samples.items()}
+    tpch_timings = {n: round(_median(xs), 3) for n, xs in tpch_samples.items()}
     tpch_spread = {n: round(max(xs) - min(xs), 3) for n, xs in tpch_samples.items()}
 
     # round-19 additions (docstring "Round-19 additions") --------------
@@ -598,15 +621,11 @@ def main() -> None:
                 if (g := f"{prefix}{final_tag}{r}:{name}") in gms
             ]
             if per_run:
-                stage_all[name] = round(median(per_run) / 1000.0, 3)
+                stage_all[name] = round(_median(per_run) / 1000.0, 3)
     stage_sec = {n: stage_all[n] for n in HEADLINE if n in stage_all}
     # degraded-phase self-detection: several headline queries with wide
     # spreads at once is the box oscillating, not the queries
-    spread_wide = [
-        n
-        for n in timings
-        if spread.get(n, 0.0) > max(0.3, 0.5 * max(timings[n], 0.001))
-    ]
+    spread_wide = _spread_wide(samples)
     spread_flagged = len(spread_wide) >= 2
     if spread_flagged:
         print(
@@ -682,7 +701,10 @@ def main() -> None:
                 },
                 "spread_flagged": spread_flagged,
                 **(
-                    {"retried_after_load": True, "first_attempt": first_attempt}
+                    {
+                        **{f"retried_after_{r}": True for r in first_attempt["reasons"]},
+                        "first_attempt": first_attempt,
+                    }
                     if retried
                     else {}
                 ),

@@ -100,3 +100,72 @@ def test_cpu_snapshot_counts_own_spin():
     own_delta = after[1] - before[1]
     assert own_delta >= 0.15, f"own CPU delta {own_delta} missed the spin"
     assert box_delta >= own_delta - 0.05, "box counter must cover own work"
+
+
+def _battery(bench, wide: bool):
+    """Headline samples; ``wide`` gives two queries a degraded-phase spread."""
+    samples = {n: [1.0, 1.0, 1.1] for n in bench.HEADLINE}
+    if wide:
+        samples[bench.HEADLINE[0]] = [1.0, 1.0, 3.0]
+        samples[bench.HEADLINE[1]] = [1.0, 2.0, 2.5]
+    return samples, {"q_tpch_q1": [0.5, 0.5, 0.5]}, 0.0
+
+
+def _retry_harness(monkeypatch, bench, wide_each_call: list[bool], loadavg: float = 1.0):
+    calls = []
+
+    def timed_passes(tag=""):
+        calls.append(tag)
+        return _battery(bench, wide_each_call[len(calls) - 1])
+
+    monkeypatch.setattr(bench, "_wait_for_idle", lambda gate, budget: 0.0)
+    ctx = lambda: {"loadavg_1m": loadavg}  # noqa: E731
+    return calls, timed_passes, ctx
+
+
+def test_spread_flagged_battery_is_retried_once_and_both_attempts_recorded(monkeypatch):
+    bench = _bench()
+    calls, passes, ctx = _retry_harness(monkeypatch, bench, [True, False])
+    env = {"loadavg_1m": 1.0}
+    samples, tpch, _, first, env_after = bench._battery_of_record(passes, ctx, env, 4.0, 240.0)
+    assert calls == ["", "retry-"]
+    assert first["reasons"] == ["spread"]
+    assert first["spread_wide_queries"] == bench.HEADLINE[:2]
+    assert first["total"] == round(1.0 * (len(bench.HEADLINE) - 2) + 1.0 + 2.0, 3)
+    assert first["env_before"] is env
+    assert bench._spread_wide(samples) == []  # the retry is the figure of record
+    assert env_after == {"loadavg_1m": 1.0} and env_after is not env
+
+
+def test_spread_retry_happens_at_most_once(monkeypatch):
+    bench = _bench()
+    calls, passes, ctx = _retry_harness(monkeypatch, bench, [True, True, True])
+    samples, *_, first, _ = bench._battery_of_record(passes, ctx, {"loadavg_1m": 1.0}, 4.0, 240.0)
+    assert calls == ["", "retry-"]
+    assert first is not None and len(bench._spread_wide(samples)) == 2
+
+
+def test_clean_battery_or_disabled_wait_is_not_retried(monkeypatch):
+    bench = _bench()
+    calls, passes, ctx = _retry_harness(monkeypatch, bench, [False])
+    assert bench._battery_of_record(passes, ctx, {"loadavg_1m": 1.0}, 4.0, 240.0)[3] is None
+    assert calls == [""]
+    calls, passes, ctx = _retry_harness(monkeypatch, bench, [True])
+    assert bench._battery_of_record(passes, ctx, {"loadavg_1m": 1.0}, 4.0, 0.0)[3] is None
+    assert calls == [""]
+
+
+def test_spread_retry_waits_for_an_idle_box(monkeypatch):
+    bench = _bench()
+    calls, passes, ctx = _retry_harness(monkeypatch, bench, [True], loadavg=9.0)
+    assert bench._battery_of_record(passes, ctx, {"loadavg_1m": 1.0}, 4.0, 240.0)[3] is None
+    assert calls == [""]
+
+
+def test_load_contaminated_battery_is_still_retried(monkeypatch):
+    bench = _bench()
+    calls, passes, ctx = _retry_harness(monkeypatch, bench, [False, False])
+    *_, first, env_after = bench._battery_of_record(passes, ctx, {"loadavg_1m": 6.0}, 4.0, 240.0)
+    assert calls == ["", "retry-"]
+    assert first["reasons"] == ["load"] and first["loadavg_1m"] == 6.0
+    assert env_after["loadavg_1m"] == 1.0

@@ -15,6 +15,14 @@ guarantee, with a different mechanism per filesystem class:
   replaces (the merge-rebuild shape): the plan scans the old version
   while the writer fills the new directory — no staging double-write.
 
+- **Partition carry-over** (``partition_by``, local paths only): the new
+  version dir is written partitioned by that column, and before the flip
+  every ``<column>=<value>`` dir of the live version that the write did
+  not produce is hard-linked into it, file by file (``os.link``: no bytes
+  copied). A caller that writes only the partitions it touched therefore
+  commits a whole table in the same single flip, and untouched partitions
+  keep their files (same inodes, same bytes) across versions.
+
 - **Object-store URIs** (``s3://``, ``hdfs://``, ...): directories and
   renames aren't atomic there, so the rebuild stages to a sibling path
   and commits with the Spark writer (FileOutputCommitter semantics; on a
@@ -53,15 +61,39 @@ def _versions(path: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
-def overwrite_table(df: DataFrame, target: str) -> DataFrame:
+def _carry_partitions(live: str, vdir: str, column: str) -> None:
+    """Hard-link every ``column=`` dir of ``live`` that ``vdir`` lacks."""
+    prefix = f"{column}="
+    for name in os.listdir(live):
+        src = os.path.join(live, name)
+        dst = os.path.join(vdir, name)
+        if not name.startswith(prefix) or os.path.exists(dst):
+            continue
+        os.mkdir(dst)
+        for f in os.listdir(src):
+            os.link(os.path.join(src, f), os.path.join(dst, f))
+
+
+def overwrite_table(
+    df: DataFrame, target: str, partition_by: str | None = None
+) -> DataFrame:
     """Replace the table at ``target`` with ``df``, atomically for readers.
 
     Returns a fresh DataFrame over the committed table. ``df`` may read
     from ``target`` itself (merge-rebuild); on local paths the old version
     stays live until the new one is complete.
+
+    With ``partition_by``, ``df`` replaces only the partitions it holds:
+    the live table's other partitions are carried into the new version by
+    hard link (module docstring). Local paths only.
     """
     spark = df.sparkSession
     local = _local_path(target)
+    if local is None and partition_by is not None:
+        raise ValueError(
+            "overwrite_table(partition_by=...) needs a local/posix path; "
+            "use a table format's partition overwrite for object stores"
+        )
     if local is None:
         # object store: stage, then writer-commit overwrite of the live
         # prefix (cloud committers make the final job commit atomic; use
@@ -74,7 +106,17 @@ def overwrite_table(df: DataFrame, target: str) -> DataFrame:
     existing = _versions(local)
     version = existing[-1][0] + 1 if existing else 1
     vdir = f"{local}._v{version}"
-    df.write.mode("overwrite").parquet(vdir)
+    if partition_by is None:
+        df.write.mode("overwrite").parquet(vdir)
+    else:
+        df.write.mode("overwrite").partitionBy(partition_by).parquet(vdir)
+        if os.path.isdir(local):
+            _carry_partitions(local, vdir, partition_by)
+        if not any(n.startswith(f"{partition_by}=") for n in os.listdir(vdir)):
+            # no rows and nothing carried: a partitioned write of no rows
+            # leaves no data file, so write a schema-only one to keep the
+            # table readable
+            df.limit(0).write.mode("overwrite").parquet(vdir)
 
     if os.path.isdir(local) and not os.path.islink(local):
         # one-time migration of a plain directory table: move it aside so

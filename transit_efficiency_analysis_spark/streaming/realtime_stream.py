@@ -7,13 +7,14 @@ runtime (``realtime_extractor.py:39-57,122-143``) with Structured Streaming:
   the shape a ``.pb``-per-minute poller lands); checkpointing replaces the
   lock file (exactly-once per file), the trigger interval replaces cron,
   and ``Trigger.AvailableNow`` gives catch-up-then-stop semantics.
-- sink: ``foreachBatch`` applying the same conditional-replay
-  ``merge_batch`` kernel as the batch pipeline (unchanged polls keep the
+- sink: ``foreachBatch`` applying the batch pipeline's date-scoped
+  ``merge_touched_dates`` (the conditional-replay ``merge_batch`` kernel
+  over the touched ``start_date`` partitions: unchanged polls keep the
   stored row; audit columns maintained) onto a parquet state table — so
   stream and batch are *the same operator*, proven equal by the parity
   test (tests/test_streaming.py).
 
-At scale the state table is Delta/Iceberg and ``merge_batch`` becomes
+At scale the state table is Delta/Iceberg and the merge becomes
 ``MERGE INTO`` over date-pruned partitions; watermarking bounds the dedup
 state if the window kernel is moved into the stream itself
 (``dropDuplicatesWithinWatermark``).
@@ -21,13 +22,11 @@ state if the window kernel is moved into the stream itself
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from transit_efficiency_analysis_spark import schemas
 from transit_efficiency_analysis_spark.operators.upsert import merge_batch
-from transit_efficiency_analysis_spark.sinks import overwrite_table
+from transit_efficiency_analysis_spark.pipeline import merge_touched_dates
 from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
     apply_epoch0_default,
     decode_feed,
@@ -55,28 +54,17 @@ def run_stream_available_now(
     """Process all pending feed files (one or more polls each) and stop.
 
     ``foreachBatch`` merges each micro-batch into the parquet state table
-    with keep-newest-per-key semantics; writes are atomic overwrites of the
-    small state table (at scale: MERGE INTO a Delta table instead).
+    with keep-newest-per-key semantics through the batch pipeline's
+    ``merge_touched_dates``: the state table is partitioned by
+    ``start_date``, each micro-batch rewrites only the dates it holds, and
+    each commit is one atomic flip (at scale: MERGE INTO a Delta table).
     """
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        batch = transform_feed(batch_df)
-        if os.path.exists(state_path):
-            existing = batch_df.sparkSession.read.parquet(state_path)
-            merged = merge_batch(
-                existing, batch, REALTIME_KEYS, REALTIME_ORDER,
-                tracked=REALTIME_TRACKED, ts_col="poll_ts",
-            )
-        else:
-            merged = merge_batch(
-                batch.limit(0), batch, REALTIME_KEYS, REALTIME_ORDER,
-                tracked=REALTIME_TRACKED, ts_col="poll_ts",
-            )
-        # The merge reads the table it replaces: overwrite_table commits
-        # atomically for readers (local: versioned dir + symlink flip;
-        # object store: stage + writer commit; at scale this whole body
-        # is a Delta MERGE instead).
-        overwrite_table(merged, state_path)
+        merge_touched_dates(
+            transform_feed(batch_df), state_path, REALTIME_KEYS, REALTIME_ORDER,
+            tracked=REALTIME_TRACKED, ts_col="poll_ts",
+        )
 
     raw = (
         spark.readStream.schema(schemas.REALTIME_FEED_RAW)
