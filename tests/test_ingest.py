@@ -218,7 +218,7 @@ def test_wire_parse_feed_message():
 
 
 def test_decode_protobuf_payloads_end_to_end(spark):
-    """Raw .pb bytes → mapInPandas wire decode → decode_feed explode: the
+    """Raw .pb bytes → driver-side wire decode → decode_feed explode: the
     fully ungated realtime ingest path (reference realtime_extractor.py:
     97-118 parse_pb_data equivalent)."""
     from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
@@ -241,6 +241,71 @@ def test_decode_protobuf_payloads_end_to_end(spark):
     df2 = spark.createDataFrame([(bytearray(payload),)], "payload binary")
     rows = decode_protobuf_payloads(df2).select("poll_ts").collect()
     assert rows[0]["poll_ts"] == datetime.utcfromtimestamp(int(POLL.timestamp()))
+
+    # two payloads in one DataFrame: each row keeps its own poll_ts (from
+    # the column, else from its own header), and a payload holding only a
+    # vehicle entity decodes to a feed row with no entities
+    later = datetime(2026, 1, 1, 12, 5)
+    second = _feed_bytes(int(later.timestamp()), [("T9", "20260102", [(7, "700", 5, 6)])])
+    vehicle_only = _feed_bytes(int(later.timestamp()), [])
+    two = spark.createDataFrame(
+        [(POLL, bytearray(payload)), (later, bytearray(second))],
+        "poll_ts timestamp, payload binary",
+    )
+    for frame in (two, two.drop("poll_ts")):
+        got = sorted(
+            (r["trip_id"], r["stop_sequence"], r["poll_ts"])
+            for r in decode_feed(decode_protobuf_payloads(frame)).collect()
+        )
+        assert got == [("T1", 1, POLL), ("T1", 2, POLL), ("T9", 7, later)]
+    lone = spark.createDataFrame([(bytearray(vehicle_only),)], "payload binary")
+    decoded = decode_protobuf_payloads(lone).collect()
+    assert len(decoded) == 1 and decoded[0]["entity"] == []
+    assert decode_feed(decode_protobuf_payloads(lone)).count() == 0
+
+
+def test_decode_empty_payloads_is_typed_and_commits_nothing(spark, tmp_path):
+    """No payloads → an empty feed of REALTIME_FEED_RAW's types; a poll of
+    it leaves trip_updates' rows as they were, on a one-date table (merged
+    in full) and on a two-date table (the nothing-touched return)."""
+    from transit_efficiency_analysis_spark.pipeline import Store, ingest_realtime
+    from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
+        decode_protobuf_payloads,
+    )
+
+    empty = decode_protobuf_payloads(spark.createDataFrame([], "payload binary"))
+    assert empty.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        (f.name, f.dataType.simpleString()) for f in schemas.REALTIME_FEED_RAW
+    ]
+    second_date = [("T9", "20260102", [(7, "700", 1767355200, None)])]
+    cases = [("one_date", PB_TRIPS, 2), ("two_dates", PB_TRIPS + second_date, 3)]
+    for name, trips, rows in cases:
+        store = Store(str(tmp_path / name))
+        raw = spark.createDataFrame(
+            [(POLL, bytearray(_feed_bytes(int(POLL.timestamp()), trips)))],
+            "poll_ts timestamp, payload binary",
+        )
+        before = sorted(ingest_realtime(spark, decode_protobuf_payloads(raw), store).collect())
+        after = sorted(ingest_realtime(spark, empty, store).collect())
+        assert after == before and len(before) == rows
+
+
+def test_decoded_feed_is_a_local_relation(spark):
+    """The decoder hands Spark the parsed rows, not a Python UDF over the
+    payloads: the analyzed plan is one LocalRelation, so the decode runs no
+    pandas/Arrow Python worker."""
+    from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
+        decode_protobuf_payloads,
+    )
+
+    payload = _feed_bytes(int(POLL.timestamp()), PB_TRIPS)
+    for raw in (
+        spark.createDataFrame([(POLL, bytearray(payload))], "poll_ts timestamp, payload binary"),
+        spark.createDataFrame([], "payload binary"),
+    ):
+        plan = decode_protobuf_payloads(raw)._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
 
 
 def test_bmp_wav_decoders_roundtrip():
@@ -273,101 +338,3 @@ def test_bmp_wav_decoders_roundtrip():
     patched = wav[:12] + junk + wav[12:]
     patched = patched[:4] + struct.pack("<I", len(patched) - 8) + patched[8:]
     assert decode_wav_header(patched) == (1, 8000, 16, 10)
-
-
-def test_protobuf_auto_dispatch_and_jvm_gate(spark):
-    """decode_protobuf_payloads_auto: on this container the JVM
-    spark-protobuf connector is absent, so the probe must say so, the
-    auto path must fall back to the wire decoder with identical output,
-    and the JVM path must fail with the documented deployment error (on
-    a real cluster with the jar + a protoc descriptor set, the same call
-    dispatches JVM-side)."""
-    import pytest
-
-    from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
-        decode_protobuf_payloads,
-        decode_protobuf_payloads_auto,
-        decode_protobuf_payloads_jvm,
-        jvm_protobuf_available,
-    )
-
-    payload = _feed_bytes(int(POLL.timestamp()), PB_TRIPS)
-    df = spark.createDataFrame(
-        [(POLL, bytearray(payload))], "poll_ts timestamp, payload binary"
-    )
-    wire = decode_feed(decode_protobuf_payloads(df)).collect()
-    if jvm_protobuf_available(spark):  # pragma: no cover - real clusters
-        # jar present: the JVM branch must decode the bundled descriptor
-        # identically to the wire decoder, and auto must dispatch to it
-        jvm = decode_feed(decode_protobuf_payloads_jvm(df)).collect()
-        auto = decode_feed(decode_protobuf_payloads_auto(df)).collect()
-        assert sorted(jvm) == sorted(wire) == sorted(auto) and len(wire) == 2
-        pytest.skip("spark-protobuf present: wire-fallback gate not testable")
-    assert not jvm_protobuf_available(spark)
-    auto = decode_feed(decode_protobuf_payloads_auto(df)).collect()
-    assert sorted(auto) == sorted(wire) and len(auto) == 2
-    with pytest.raises(RuntimeError, match="spark-protobuf connector"):
-        decode_protobuf_payloads_jvm(df)
-
-
-def test_bundled_descriptor_set_is_current_and_wellformed():
-    """The checked-in gtfs_rt.desc must equal build_descriptor_set()
-    byte-for-byte (regeneration drift guard) and re-parse as a
-    FileDescriptorSet carrying the transit_realtime message subset with
-    the public gtfs-realtime.proto field numbers — verified with the
-    repo's own wire reader, no protobuf runtime."""
-    from transit_efficiency_analysis_spark.sources.gtfs_rt_descriptor import (
-        _MESSAGES,
-        DESCRIPTOR_PATH,
-        build_descriptor_set,
-    )
-    from transit_efficiency_analysis_spark.sources.gtfs_rt_wire import iter_fields
-
-    with open(DESCRIPTOR_PATH, "rb") as f:
-        data = f.read()
-    assert data == build_descriptor_set()
-
-    def _s(span):
-        return data[span[0] : span[1]].decode()
-
-    files = []
-    for f1, w1, v1 in iter_fields(data, 0, len(data)):
-        assert (f1, w1) == (1, 2)  # FileDescriptorSet.file
-        package, messages = None, {}
-        for f2, w2, v2 in iter_fields(data, *v1):
-            if f2 == 2:
-                package = _s(v2)
-            elif f2 == 4:  # DescriptorProto
-                mname, fields = None, {}
-                for f3, w3, v3 in iter_fields(data, *v2):
-                    if f3 == 1:
-                        mname = _s(v3)
-                    elif f3 == 2:  # FieldDescriptorProto
-                        fname = fnum = None
-                        for f4, w4, v4 in iter_fields(data, *v3):
-                            if f4 == 1:
-                                fname = _s(v4)
-                            elif f4 == 3:
-                                fnum = v4
-                        fields[fname] = fnum
-                messages[mname] = fields
-        files.append((package, messages))
-    assert len(files) == 1
-    package, messages = files[0]
-    assert package == "transit_realtime"
-    # every message/field the pipeline reads, public field numbers
-    want = {
-        m: {name: num for name, num, *_ in specs}
-        for m, specs in _MESSAGES.items()
-    }
-    assert messages == want
-    assert messages["FeedMessage"] == {"header": 1, "entity": 2}
-    assert messages["StopTimeUpdate"] == {
-        "stop_sequence": 1,
-        "arrival": 2,
-        "departure": 3,
-        "stop_id": 4,
-    }
-    assert messages["TripDescriptor"]["start_date"] == 3
-    assert messages["StopTimeEvent"]["time"] == 2
-    assert messages["FeedHeader"]["timestamp"] == 3

@@ -68,6 +68,22 @@ def test_default_path_flips_symlink_and_drops_superseded_versions(spark, tmp_pat
     assert not any(n.startswith("id=") for n in os.listdir(table))  # unpartitioned
 
 
+def test_committed_table_is_read_with_the_writers_schema(spark, tmp_path):
+    """The returned DataFrame is read with the written schema (no footer
+    inference), which equals an inferred read of the table: same column
+    order with the partition column last, same types and nullability."""
+    frames = [
+        _dated(spark, [(D1, 1, "a"), (D2, 2, "b")]),
+        spark.range(3).withColumn("start_date", F.lit(D1)),  # non-nullable columns
+    ]
+    for i, df in enumerate(frames):
+        for part in (None, "start_date"):
+            table = str(tmp_path / f"t{i}_{part}")
+            got = sinks.overwrite_table(df, table, partition_by=part)
+            assert got.schema == spark.read.parquet(table).schema
+            assert _rows(got) == _rows(df)
+
+
 def test_partition_by_rejects_object_store_targets(spark):
     with pytest.raises(ValueError, match="local/posix path"):
         sinks.overwrite_table(spark.range(1), "s3a://bucket/t", partition_by="id")

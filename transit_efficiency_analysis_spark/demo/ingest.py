@@ -147,7 +147,7 @@ def q_ingest_gtfs_static(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # GTFS-RT protobuf decode (reference realtime_extractor.py:97-118): a
 # deterministic .pb fixture feed is wire-ENCODED from a trip spec, then
-# decoded back through the real ingest path (mapInPandas wire decode →
+# decoded back through the real ingest path (driver-side wire decode →
 # explode). The DuckDB oracle is a VALUES literal generated from the SAME
 # spec — so the gate verifies encode∘decode = identity plus the unix→
 # timestamp, NULL-presence, explode, and vehicle-entity-skip semantics.
@@ -200,7 +200,7 @@ def _rt_oracle_sql() -> str:
 @demo("q_ingest_gtfs_rt", sql=_rt_oracle_sql())
 def q_ingest_gtfs_rt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """the realtime-ingest decode path on staged .pb payloads: binary wire
-    rows → mapInPandas batch decode (bundled pure-Python GTFS-RT parser) →
+    rows → driver-side decode (bundled pure-Python GTFS-RT parser) →
     explode to one row per (trip, stop_time_update), absent arrival/
     departure → NULL, non-trip entities skipped."""
     from datetime import datetime, timezone

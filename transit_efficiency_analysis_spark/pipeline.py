@@ -86,7 +86,7 @@ def ingest_schedule(
         gtfs_data, keys=list(schemas.PRIMARY_KEY), order_by=["route_id", "arrival_time"]
     )
     deduped.write.mode("overwrite").partitionBy("start_date").parquet(store.gtfs_data)
-    return spark.read.parquet(store.gtfs_data)
+    return spark.read.schema(deduped.schema).parquet(store.gtfs_data)
 
 
 def ingest_realtime(
@@ -200,7 +200,7 @@ def consolidate(spark: SparkSession, store: Store) -> DataFrame:
     )
     diffs = compute_delays(tu, gd, sort=False)
     diffs.write.mode("overwrite").partitionBy("start_date").parquet(store.diffs)
-    return spark.read.parquet(store.diffs)
+    return spark.read.schema(diffs.schema).parquet(store.diffs)
 
 
 def consolidate_incremental(
@@ -229,5 +229,5 @@ def consolidate_incremental(
     diffs.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("start_date").parquet(store.diffs)
-    return spark.read.parquet(store.diffs)
+    return spark.read.schema(diffs.schema).parquet(store.diffs)
 

@@ -79,7 +79,9 @@ def overwrite_table(
 ) -> DataFrame:
     """Replace the table at ``target`` with ``df``, atomically for readers.
 
-    Returns a fresh DataFrame over the committed table. ``df`` may read
+    Returns a fresh DataFrame over the committed table, read with
+    ``df``'s schema (no footer-inference job; a partition column comes
+    last, as an inferred read puts it). ``df`` may read
     from ``target`` itself (merge-rebuild); on local paths the old version
     stays live until the new one is complete.
 
@@ -101,7 +103,7 @@ def overwrite_table(
         staging = target + ".staging"
         df.write.mode("overwrite").parquet(staging)
         spark.read.parquet(staging).write.mode("overwrite").parquet(target)
-        return spark.read.parquet(target)
+        return spark.read.schema(df.schema).parquet(target)
 
     existing = _versions(local)
     version = existing[-1][0] + 1 if existing else 1
@@ -134,4 +136,4 @@ def overwrite_table(
 
     for _, old in existing:  # superseded versions (open scans keep FDs)
         shutil.rmtree(old, ignore_errors=True)
-    return spark.read.parquet(local)
+    return spark.read.schema(df.schema).parquet(local)
