@@ -36,7 +36,7 @@ from transit_efficiency_analysis_spark.operators.similarity import (
 
 def test_resolve_assign_rules():
     # explicit modes pass through
-    for mode in ("fold", "arrow", "window"):
+    for mode in ("fold", "arrow"):
         assert _resolve_assign(mode, 10**12, 500) == mode
         assert _resolve_assign(mode, None, 8) == mode
     # no stat → fold, regardless of K
@@ -241,8 +241,11 @@ def test_ivf_pq_arrow_plan_keeps_the_fold_encode(spark, sf_dir):
 def test_invalid_assign_rejected():
     import pyspark.sql  # noqa: F401  (spark session not needed — validation is eager)
 
-    with pytest.raises(ValueError, match="auto"):
-        ivf_topk(None, n_centroids=4, assign="blas")
+    for bad in ("blas", "window"):
+        with pytest.raises(ValueError, match="auto"):
+            ivf_topk(None, n_centroids=4, assign=bad)
+        with pytest.raises(ValueError, match="auto"):
+            ivf_pq_topk(None, assign=bad)
 
 
 def test_parquet_rows_matches_count(spark, sf_dir, tmp_path):

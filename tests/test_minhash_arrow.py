@@ -1,23 +1,14 @@
-"""The dark mapInArrow MinHash-signature twin (round 16, VERDICT r15
-ask #4: apply the r15 vectorization rule — vectorize
-corpus-vs-broadcast-constants stages — to the slowest headline query,
-q_dedup_minhash_lsh, and ONLY flip the default if it wins the battery).
+"""The executed MinHash-LSH plan is JVM-only.
 
-Pins: (1) signature-stage bit-equality set-vs-arrow, (2) full-pipeline
-pair equality, (3) the executed default plans NO Python node (the twin
-is dark), (4) the twin's contract errors."""
+The signature stage derives band minima from the exploded-shingle
+relation in one JVM aggregation pass. A mapInArrow signature twin was
+measured slower at every scale and deleted (docs/SCALE.md "MinHash
+signature arrow twin"); this pin keeps the executed default and the
+driver-checked q_dedup_minhash_lsh demo free of Python plan nodes."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from transit_efficiency_analysis_spark.operators.dedup import (
-    _arrow_minhash_sig,
-    minhash_lsh_pairs,
-    shingle_sets,
-    shingles_exploded,
-)
+from transit_efficiency_analysis_spark.operators.dedup import minhash_lsh_pairs
 
 
 def _docs(spark, sf_dir):
@@ -26,62 +17,9 @@ def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
 
-def test_signature_stage_bit_equal(spark, sf_dir):
-    """The twin's (doc_id, band, mh) rows must equal the set-based
-    explode→md5→groupBy-minima stage's exactly — same Kirsch-
-    Mitzenmacher families from the same md5 bytes, long-for-long."""
-    d = _docs(spark, sf_dir)
-    bands = 6
-    exp = shingles_exploded(d, "doc_id", "text", 3)
-    hx = F.md5(F.col("s"))
-    hashed = exp.select(
-        "doc_id",
-        F.conv(F.substring(hx, 1, 8), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(hx, 9, 8), 16, 10).cast("long").alias("h2"),
-    )
-    set_rows = (
-        hashed.groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.col("h1") + F.lit(b) * F.col("h2")) % F.lit(2**32)).alias(
-                    f"mh_{b}"
-                )
-                for b in range(bands)
-            ]
-        )
-        .collect()
-    )
-    set_sig = {
-        (r["doc_id"], b, r[f"mh_{b}"]) for r in set_rows for b in range(bands)
-    }
-    arrow_sig = {
-        (r.doc_id, r.band, r.mh)
-        for r in _arrow_minhash_sig(
-            shingle_sets(d, "doc_id", "text", 3), bands
-        ).collect()
-    }
-    assert arrow_sig == set_sig
-    assert arrow_sig, "no signatures produced"
-
-
-def test_full_pipeline_pairs_equal(spark, sf_dir):
-    """minhash_lsh_pairs(signature='arrow') must return the exact pair
-    set and Jaccard values of the executed default."""
-    d = _docs(spark, sf_dir)
-    got = {}
-    for mode in ("set", "arrow"):
-        rows = minhash_lsh_pairs(
-            d, "doc_id", "text", k=3, bands=6, threshold=0.5, signature=mode
-        ).collect()
-        got[mode] = sorted((r.doc_a, r.doc_b, r.jaccard_sim) for r in rows)
-    assert got["arrow"] == got["set"]
-
-
 def test_default_plans_no_python_node(spark, sf_dir):
-    """The twin is DARK: the executed default (and therefore the
-    driver-checked q_dedup_minhash_lsh demo) must plan zero Python
-    nodes — flipping the default is a deliberate, battery-backed act
-    (the r15 measure-before-flipping rule)."""
+    """minhash_lsh_pairs and the q_dedup_minhash_lsh demo must plan zero
+    Python nodes."""
     from transit_efficiency_analysis_spark.demo import load_registry
 
     d = _docs(spark, sf_dir)
@@ -100,32 +38,3 @@ def test_default_plans_no_python_node(spark, sf_dir):
         .toString()
     )
     assert "MapInArrow" not in demo_plan and "Python" not in demo_plan
-
-
-def test_twin_contract_errors(spark):
-    d = spark.createDataFrame(
-        [(1, ["a b c", "b c d"]), (2, [])],
-        "doc_id long, shingles array<string>",
-    )
-    with pytest.raises(Exception, match="empty shingle array"):
-        _arrow_minhash_sig(d, 4).collect()
-    with pytest.raises(ValueError, match="rows_per_band=1"):
-        _arrow_minhash_sig(d.where(F.size("shingles") > 0), 4, rows_per_band=2)
-
-
-def test_twin_string_doc_ids(spark, sf_dir):
-    """doc_id's type is derived from the input schema — string keys
-    must survive the Arrow pass-through."""
-    d = _docs(spark, sf_dir).select(
-        F.concat(F.lit("d-"), F.col("doc_id").cast("string")).alias("doc_id"),
-        "text",
-    )
-    rows = _arrow_minhash_sig(shingle_sets(d, "doc_id", "text", 3), 4).collect()
-    assert rows and all(r.doc_id.startswith("d-") for r in rows)
-
-
-def test_invalid_signature_mode_rejected(spark, sf_dir):
-    with pytest.raises(ValueError, match="signature must be"):
-        minhash_lsh_pairs(
-            _docs(spark, sf_dir), "doc_id", "text", signature="bogus"
-        )

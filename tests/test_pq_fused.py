@@ -33,9 +33,14 @@ def _both(df, **kw):
 
 
 def test_fused_equals_fold_ragged_groups(spark):
-    """dims=10, m=4 → sub_d=2 and FIVE groups with a trailing width-2
-    slice — the driver-built codebook must reproduce F.slice's
-    truncate-at-end grouping exactly."""
+    """dims % m != 0 — the driver-built codebook must reproduce F.slice's
+    truncate-at-end grouping exactly. dims=10, m=4: sub_d=2 and FIVE
+    groups with a trailing width-2 slice. Then, on a seeded tie-free
+    corpus: (6, 4) sub_d=1 and six groups of 1, more than m; (6, 2) two
+    exact groups; (7, 3) groups of 2, 2, 2 plus a PARTIAL trailing group
+    of 1; (7, 2) groups of 3, 3, 1."""
+    import random
+
     rows = [
         (i, [float((i * 7 + j * 3) % 11) / 4.0 for j in range(10)])
         for i in range(1, 25)
@@ -45,6 +50,17 @@ def test_fused_equals_fold_ragged_groups(spark):
     )
     assert got["arrow"] == got["fold"]
     assert got["arrow"], "ragged-group corpus returned no rows"
+
+    rng = random.Random(13)
+    for dims, m, ks in ((6, 4, 8), (6, 2, 8), (7, 3, 8), (7, 2, 4)):
+        rows = [
+            (i, [rng.uniform(-3.0, 3.0) for _ in range(dims)]) for i in range(40)
+        ]
+        got = _both(
+            _corpus(spark, rows), n_centroids=4, m=m, ks=ks, n_probe=2, k=2
+        )
+        assert got["arrow"] == got["fold"], f"dims={dims}, m={m}, ks={ks}"
+        assert got["arrow"]
 
 
 def test_fused_equals_fold_ks_exceeds_corpus(spark):

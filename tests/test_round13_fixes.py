@@ -355,52 +355,6 @@ def test_incremental_minhash_persists_released_per_batch(spark):
     spark.catalog.clearCache()
 
 
-# ----------------------------------------- Delta-runtime MERGE (stretch)
-
-
-def test_merge_into_delta_matches_sql_twin(spark, tmp_path):
-    """Stretch (VERDICT r12 ask #8): the one function the sandbox cannot
-    execute (_merge_into_delta needs delta-spark) gains coverage the day
-    the dependency appears — the same two-batch convergence oracle the
-    SQL twin passes: strictly-newer-wins MERGE over any batch split
-    equals keep-newest-per-key over all observations. Skips (never
-    fails) while delta-spark or its jars are absent."""
-    pytest.importorskip("delta.tables")
-    from transit_efficiency_analysis_spark.operators.upsert import (
-        merge_into,
-        merge_into_sql,
-        upsert_keep_newest,
-    )
-
-    rows = _mk_rows(
-        [(k % 5, ts, k) for k, ts in enumerate([10, 40, 20, 50, 30, 60, 5])]
-    )
-    df = spark.createDataFrame(rows, SCHEMA)
-    b1 = df.where(df.seq % 2 == 0)
-    b2 = df.where(df.seq % 2 == 1)
-
-    delta_target = str(tmp_path / "delta_tbl")
-    try:
-        merge_into(delta_target, b1, ["key"], ["ts", "seq"], backend="delta")
-        got = merge_into(
-            delta_target, b2, ["key"], ["ts", "seq"], backend="delta"
-        )
-    except Exception as exc:  # pragma: no cover - jar-less environments
-        if "delta" in str(exc).lower() or "ClassNotFound" in str(exc):
-            pytest.skip(f"delta-spark importable but runtime absent: {exc}")
-        raise
-
-    sql_target = str(tmp_path / "sql_tbl")
-    merge_into_sql(sql_target, b1, ["key"], ["ts", "seq"])
-    want = merge_into_sql(sql_target, b2, ["key"], ["ts", "seq"])
-    expect = {
-        (r.key, r.ts, r.value, r.seq)
-        for r in upsert_keep_newest(df, ["key"], ["ts", "seq"]).collect()
-    }
-    assert {(r.key, r.ts, r.value, r.seq) for r in got.collect()} == expect
-    assert {(r.key, r.ts, r.value, r.seq) for r in want.collect()} == expect
-
-
 # -------------------------------------------- fold-assign property test
 
 from hypothesis import given, settings, strategies as st
@@ -520,30 +474,7 @@ def test_merge_routes_commit_identical_state(
         assert state_c == state_d
 
 
-# ------------------------------ ivf_topk fold assignment (shipped dark)
-
-
-def test_ivf_topk_fold_equals_window(spark, sf_dir):
-    """assign='fold' must reproduce assign='window' exactly on corpora
-    without zero-norm centroids — same neighbors, same ranks, same
-    cosines — at lloyd_rounds 0 and 1 (the raw-dot scoring preserves
-    cosine's FULL per-query cell ordering, not just the argmax)."""
-    from transit_efficiency_analysis_spark.operators.similarity import (
-        ivf_topk,
-    )
-    from transit_efficiency_analysis_spark.sources.registry import load_table
-
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    for lr in (0, 1):
-        w = sorted(map(tuple, ivf_topk(
-            e, n_centroids=8, n_probe=2, k=3, lloyd_rounds=lr,
-            assign="window",
-        ).collect()))
-        f = sorted(map(tuple, ivf_topk(
-            e, n_centroids=8, n_probe=2, k=3, lloyd_rounds=lr,
-            assign="fold",
-        ).collect()))
-        assert f == w
+# ------------------------------------------ ivf_topk fold assignment
 
 
 def test_ivf_topk_fold_assignment_is_map_only(spark, sf_dir):
@@ -587,13 +518,9 @@ def test_ivf_topk_fold_assignment_is_map_only(spark, sf_dir):
 
 
 def test_ivf_topk_fold_zero_norm_centroid_divergence(spark):
-    """The documented divergence: the fold never probes a zero-norm
-    centroid (NULL score filtered), while the window form ranks NULL
-    sims last and probes them when n_probe exceeds the non-NULL cell
-    count. With exactly one useful centroid and n_probe=2, the window
-    form pads with the zero-norm cell and the fold probes one cell —
-    top-k over the same single useful cell, so RESULTS still agree;
-    the assignment relation itself differs (asserted directly)."""
+    """The fold never probes a zero-norm centroid (its NULL score is
+    filtered): with exactly one useful centroid and n_probe=2 the
+    assignment relation holds that one cell only."""
     from pyspark.sql import functions as F
 
     from transit_efficiency_analysis_spark.functions.vectors import (
@@ -622,27 +549,10 @@ def test_ivf_topk_fold_zero_norm_centroid_divergence(spark):
     assert got == {(1, 1)}  # the zero-norm cell 0 is never probed
 
 
-def test_ivf_pq_topk_fold_equals_window(spark, sf_dir):
-    """ivf_pq_topk's coarse assignment behind assign='fold' (the
-    centroid-vector join-back variant) must reproduce the window form
-    exactly — ranks come from DECIMAL-exact ADC sums, so any
-    assignment drift would show as a hard mismatch."""
-    from transit_efficiency_analysis_spark.operators.similarity import (
-        ivf_pq_topk,
-    )
-    from transit_efficiency_analysis_spark.sources.registry import load_table
-
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    w = sorted(map(tuple, ivf_pq_topk(e, assign="window").collect()))
-    f = sorted(map(tuple, ivf_pq_topk(e, assign="fold").collect()))
-    assert f == w
-
-
 def test_ivf_pq_topk_fold_plan_no_vecid_windows(spark, sf_dir):
     """Fold-mode ivf_pq_topk must carry NO per-vec_id window anywhere —
-    neither the coarse-assignment rank nor the encode argmin (the
-    window form has both, plus the n x dims x ks codebook-join
-    fan-out). The only window left is the final candidate top-k,
+    neither a coarse-assignment rank nor an encode argmin. The only
+    window left is the final candidate top-k,
     partitioned by query_id over cell-bounded candidates."""
     from transit_efficiency_analysis_spark.operators.similarity import (
         ivf_pq_topk,
@@ -721,50 +631,3 @@ def test_rejected_merge_leaks_no_persisted_relation(spark, tmp_path):
             )
     leaked = persistent_ids() - base_ids
     assert not leaked, f"rejected merges leaked persists: {leaked}"
-
-
-def test_ivf_pq_topk_fold_equals_window_nondefault_and_ragged(spark):
-    """Fold/window PQ parity beyond the defaults: other (m, ks)
-    shapes, and RAGGED dims (dims not divisible by m — sub_d =
-    floor(dims/m) leaves extra and/or truncated trailing subspaces;
-    the fold's slice-based grouping must reproduce the join form's
-    floor(pos/sub_d) exactly).
-
-    The corpus is deliberately TIE-FREE (seeded uniform floats): on a
-    corpus with duplicate/cyclic vectors the coarse assignment can
-    legitimately differ between routes — mathematically-tied scores
-    round differently under cosine vs pre-normalized raw dot, the
-    documented non-contract (the first draft of this test used a
-    modular-arithmetic corpus that seeded two IDENTICAL centroids and
-    caught exactly that divergence; the round-15 flip mirrors oracles
-    to the fold arithmetic for this reason)."""
-    import random
-
-    from transit_efficiency_analysis_spark.operators.similarity import (
-        ivf_pq_topk,
-    )
-
-    rng = random.Random(13)
-
-    def corpus(dims):
-        rows = [
-            (i, [rng.uniform(-3.0, 3.0) for _ in range(dims)])
-            for i in range(40)
-        ]
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-
-    # (dims=6, m=4): sub_d=1 -> 6 groups of 1 (extra trailing groups);
-    # (dims=6, m=2): 2 exact groups; (dims=7, m=3): sub_d=2 -> groups
-    # of 2,2,2 and a PARTIAL trailing group of 1 (slice truncation)
-    for dims, m, ks in ((6, 4, 8), (6, 2, 8), (7, 3, 8), (7, 2, 4)):
-        df = corpus(dims)
-        w = sorted(map(tuple, ivf_pq_topk(
-            df, n_centroids=4, m=m, ks=ks, n_probe=2, k=2, assign="window",
-        ).collect()))
-        f = sorted(map(tuple, ivf_pq_topk(
-            df, n_centroids=4, m=m, ks=ks, n_probe=2, k=2, assign="fold",
-        ).collect()))
-        assert f == w, f"fold/window diverged at dims={dims}, m={m}, ks={ks}"
-        assert len(w) > 0

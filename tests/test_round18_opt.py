@@ -1,6 +1,6 @@
 """Round-18 optimization pins.
 
-1. ``delays_fused`` (both physical forms) is row-for-row identical to the
+1. ``delays_fused`` is row-for-row identical to the
    two-view ``compute_delays`` pipeline — the flagship's executed plan
    changed in round 18 and this is the in-repo equivalence witness (the
    DuckDB oracle is the cross-engine one).
@@ -33,20 +33,7 @@ def test_delays_fused_matches_two_view_pipeline(spark, sf_dir):
         compute_delays(trip_updates_view(o, li), gtfs_data_view(o, li), sort=False)
     )
     assert len(ref) > 0
-    for form in ("join", "group"):
-        got = _rows(delays_fused(o, li, sort=False, form=form))
-        assert got == ref, f"form={form} diverged from compute_delays"
-
-
-def test_delays_fused_rejects_unknown_form(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    try:
-        delays_fused(o, li, form="nope")
-    except ValueError as e:
-        assert "form" in str(e)
-    else:
-        raise AssertionError("unknown form must raise")
+    assert _rows(delays_fused(o, li, sort=False)) == ref
 
 
 def test_memoized_trees_are_stable_across_invocations(spark, sf_dir):

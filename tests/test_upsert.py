@@ -245,7 +245,7 @@ def test_updated_at_set_when_previous_value_null(spark):
 
 
 def test_merge_into_rewrite_backend_parity(spark, tmp_path):
-    """merge_into(backend='rewrite') through real storage == merge_batch
+    """merge_into through real storage == merge_batch
     folded in memory (merge_batch IS the specification), batch-split
     invariant, first batch bootstraps the table."""
     from transit_efficiency_analysis_spark.operators.upsert import merge_into
@@ -257,9 +257,7 @@ def test_merge_into_rewrite_backend_parity(spark, tmp_path):
     state_mem = spark.createDataFrame([], SCHEMA)
     for b in batches:
         inc = spark.createDataFrame(b, SCHEMA)
-        stored = merge_into(
-            target, inc, keys=["key"], order_by=["ts", "seq"], backend="rewrite"
-        )
+        stored = merge_into(target, inc, keys=["key"], order_by=["ts", "seq"])
         state_mem = merge_batch(state_mem, inc, keys=["key"], order_by=["ts", "seq"])
 
     got = sorted(tuple(r) for r in stored.collect())
@@ -287,8 +285,7 @@ def test_merge_into_rewrite_corrupt_target_raises(spark, tmp_path):
     (target / "part-00000.parquet").write_bytes(b"this is not a parquet file")
     inc = spark.createDataFrame(_mk_rows([(0, 10, 1)]), SCHEMA)
     with pytest.raises(Exception):
-        merge_into(str(target), inc, keys=["key"], order_by=["ts", "seq"],
-                   backend="rewrite")
+        merge_into(str(target), inc, keys=["key"], order_by=["ts", "seq"])
     # the corrupt table was NOT overwritten
     assert (target / "part-00000.parquet").read_bytes().startswith(b"this is")
 
@@ -307,7 +304,7 @@ def test_merge_into_rewrite_tracked_replay(spark, tmp_path):
         inc = spark.createDataFrame(b, SCHEMA)
         stored = merge_into(
             target, inc, keys=["key"], order_by=["ts", "seq"],
-            tracked=["value"], ts_col="ts", backend="rewrite",
+            tracked=["value"], ts_col="ts",
         )
     want_df = replay_conflict_update(
         spark.createDataFrame(rows, SCHEMA).withColumn(
@@ -319,25 +316,6 @@ def test_merge_into_rewrite_tracked_replay(spark, tmp_path):
     got = sorted(stored.collect(), key=key)
     want = sorted(want_df.collect(), key=key)
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-
-def test_merge_into_delta_backend_parity(spark, tmp_path):
-    """Delta MERGE backend vs the window-dedup specification — runs only
-    where delta-spark is deployed (skipped in this container)."""
-    import pytest
-
-    pytest.importorskip("delta")
-    from transit_efficiency_analysis_spark.operators.upsert import merge_into
-
-    rows = _mk_rows([(k % 3, (k * 29) % 400, k % 5) for k in range(20)])
-    target = str(tmp_path / "delta_tbl")
-    for b in (rows[:8], rows[8:]):
-        inc = spark.createDataFrame(b, SCHEMA)
-        stored = merge_into(
-            target, inc, keys=["key"], order_by=["ts", "seq"], backend="delta"
-        )
-    got = {r[0]: (r[1], r[2], r[3]) for r in stored.collect()}
-    assert got == _expected_latest(rows)
 
 
 def test_merge_into_sql_executes_merge_conditions(spark, tmp_path):

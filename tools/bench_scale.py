@@ -152,56 +152,6 @@ def main() -> int:
         print(f"# {name}: 1x {t1:.1f}s ({r1} pairs) -> {copies}x {tn:.1f}s "
               f"({rn} pairs), ratio {tn/t1:.1f}", file=sys.stderr)
 
-    if want("minhash_sig"):
-        # Round-16 A/B for the dark mapInArrow signature twin (VERDICT
-        # r15 #4): SIGNATURE STAGE ONLY, isolated from the shared
-        # candidate-join/verify tail — set = the executed JVM
-        # explode->md5->groupBy-minima form, arrow = the bit-equal
-        # map-only numpy twin (Python md5 loop per distinct shingle).
-        # agg(sum(mh), count) forces the minima computation on both arms
-        # (a bare count could prune the set form's agg expressions).
-        from transit_efficiency_analysis_spark.operators.dedup import (
-            _arrow_minhash_sig,
-            shingle_sets,
-            shingles_exploded,
-        )
-
-        def _sig_set(d: DataFrame) -> DataFrame:
-            exp = shingles_exploded(d, "doc_id", "text", 3)
-            hx = F.md5(F.col("s"))
-            hashed = exp.select(
-                "doc_id",
-                F.conv(F.substring(hx, 1, 8), 16, 10).cast("long").alias("h1"),
-                F.conv(F.substring(hx, 9, 8), 16, 10).cast("long").alias("h2"),
-            )
-            mins = hashed.groupBy("doc_id").agg(*[
-                F.min((F.col("h1") + F.lit(b) * F.col("h2")) % F.lit(2**32))
-                .alias(f"mh_{b}") for b in range(6)
-            ])
-            stacked = "stack(6, {}) as (band, mh)".format(
-                ", ".join(f"{b}, mh_{b}" for b in range(6)))
-            return mins.select("doc_id", F.expr(stacked))
-
-        def _sig_arrow(d: DataFrame) -> DataFrame:
-            return _arrow_minhash_sig(shingle_sets(d, "doc_id", "text", 3), 6)
-
-        for mode, fn in (("set", _sig_set), ("arrow", _sig_arrow)):
-            t0 = time.time()
-            a1 = fn(docs_1).agg(F.sum("mh"), F.count("*")).collect()[0]
-            t1 = time.time() - t0
-            t0 = time.time()
-            an = fn(docs_n).agg(F.sum("mh"), F.count("*")).collect()[0]
-            tn = time.time() - t0
-            results[f"minhash_sig_{mode}"] = {
-                "t1": round(t1, 2), "tN": round(tn, 2),
-                "ratio": round(tn / t1, 2),
-                "rows1": a1[1], "rowsN": an[1],
-                "sum1": a1[0], "sumN": an[0],
-            }
-            print(f"# minhash_sig_{mode}: 1x {t1:.1f}s ({a1[1]} sigs) -> "
-                  f"{copies}x {tn:.1f}s ({an[1]} sigs), ratio {tn/t1:.1f}",
-                  file=sys.stderr)
-
     if want("sim_lsh_topk"):
         # Fixed planes=8 — the demo/oracle mode. Bucket occupancy grows
         # linearly with the corpus at constant 2^8 buckets, so candidate
@@ -901,19 +851,14 @@ def main() -> int:
             return 1
 
     if want("ivf_assign"):
-        # Round-15 executed-default A/B: ivf_topk / ivf_pq_topk with the
-        # fold assignment (the default since the r15 flip) vs the
-        # window form (kept for exactly this audit), at Nx rows and the
-        # r13 A/B's K=500 coarse cells. Each (op, mode) cell runs in its
-        # OWN SUBPROCESS: the window form materializes an n x K
-        # vector-carrying relation (its persist alone is ~8 GB at
-        # 16x/K=500) and can OOM the 8g bench heap — a hard JVM death
-        # that takes the py4j gateway with it, unrecoverable in-process
-        # (measured: post-OOM getOrCreate hands back a zombie, then
-        # ConnectionRefused). The subprocess cell records the failure as
-        # a result row; the battery and its session are untouched. The
-        # cell's Nx synthesis mirrors _union_copies + perturb_vec (keep
-        # in sync).
+        # ivf_topk / ivf_pq_topk assignment A/B: auto vs the forced
+        # arrow and fold forms, at Nx rows and K=500 coarse cells. Each
+        # (op, mode) cell runs in its OWN SUBPROCESS, so an arm that
+        # OOMs the bench heap (a hard JVM death that takes the py4j
+        # gateway with it, unrecoverable in-process) is recorded as a
+        # result row and the battery and its session are untouched.
+        # The cell's Nx synthesis mirrors _union_copies + perturb_vec
+        # (keep in sync).
         import subprocess
 
         cell_src = """
@@ -962,9 +907,9 @@ print("CELL " + json.dumps(row))
                     capture_output=True, text=True, timeout=1200,
                 )
             except subprocess.TimeoutExpired:
-                # a GC-thrashing window arm that never dies hard must
-                # not take the whole battery's results with it — the
-                # timeout is a result row like the OOM (review r15)
+                # a GC-thrashing arm that never dies hard must not take
+                # the whole battery's results with it — the timeout is a
+                # result row like the OOM
                 return {"t": None, "rows": None, "error": "timeout=1200s"}
             for line in proc.stdout.splitlines():
                 if line.startswith("CELL "):
@@ -981,13 +926,9 @@ print("CELL " + json.dumps(row))
                 return f"{cell['t']}s{tag} ({cell['rows']} rows)"
             return f"FAILED[{cell.get('error')}]"
 
-        # SPARK_GRAFT_IVF_MODES=auto,arrow,fold trims arms (e.g. the
-        # window arm at 64x burns its full subprocess timeout on a
-        # known OOM — skip it when the battery's question is the
-        # auto-resolution story, not the window post-mortem)
+        # SPARK_GRAFT_IVF_MODES=auto,fold trims arms
         _sel = os.environ.get("SPARK_GRAFT_IVF_MODES")
-        _arms = tuple(_sel.split(",")) if _sel else (
-            "auto", "arrow", "fold", "window")
+        _arms = tuple(_sel.split(",")) if _sel else ("auto", "arrow", "fold")
         modes = {
             "ivf_topk": _arms,
             "ivf_pq_topk": _arms,

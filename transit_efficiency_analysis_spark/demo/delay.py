@@ -88,4 +88,4 @@ def q_rebuild_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     to raw numerics, and the SMJ sorts longs instead of strings."""
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    return delays_fused(orders, lineitem, sort=True, form="join")
+    return delays_fused(orders, lineitem, sort=True)

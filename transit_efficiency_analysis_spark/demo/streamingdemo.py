@@ -426,19 +426,18 @@ def q_stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming UPSERT SINK — ``foreachBatch`` + ``merge_into``: the
     production pattern for maintaining a keyed table off a stream when
     the sink has no native MERGE. Each micro-batch is applied onto the
-    stored table through ``operators.upsert.merge_into`` (the
-    existence-probed rewrite backend committing via the atomic
-    versioned-dir overwrite), keyed by (user_id, event_type) keeping
-    the newest row by (ts, event_id). Because keep-newest over a TOTAL
+    stored table through ``operators.upsert.merge_into`` (existence
+    probe, ``merge_batch``, then the atomic versioned-dir overwrite),
+    keyed by (user_id, event_type) keeping the newest row by (ts,
+    event_id). Because keep-newest over a TOTAL
     order is an associative fold, the final stored state is
     batch-split-invariant — equal to the one-shot window dedup over the
     whole feed, which is exactly the oracle — so the driver hash proves
     the stream-of-merges converges to the batch answer through real
     storage and 4+ genuine micro-batches (no ticks needed: foreachBatch
-    commits every batch; nothing is held back on a watermark). On a
-    transactional lake the same function routes to Delta MERGE
-    (backend='delta'); the per-batch cost becomes touched-files, not
-    O(table)."""
+    commits every batch; nothing is held back on a watermark). Each
+    batch rewrites the whole table: O(table) per batch
+    (``merge_into_partitioned`` rewrites only the touched buckets)."""
     import tempfile
 
     batch = load_table(spark, sf_dir, "events")
@@ -455,7 +454,6 @@ def q_stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             bdf,
             keys=["user_id", "event_type"],
             order_by=["ts", "event_id"],
-            backend="rewrite",
         )
 
     try:

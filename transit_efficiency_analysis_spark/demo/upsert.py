@@ -194,9 +194,9 @@ def q_upsert_merge_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     observations than batch 1 per key) merge into a process-local
     hash-bucketed parquet table through ``merge_into_partitioned`` —
     which EXECUTES ``merge_match_condition``/``merge_newer_condition``
-    (the exact strings the Delta backend feeds ``DeltaTable.merge``)
-    against the touched buckets' stored slice and commits every touched
-    bucket in one atomic manifest swap, leaving untouched buckets'
+    (the MERGE INTO condition strings) against the touched buckets'
+    stored slice and commits every touched bucket in one atomic manifest
+    swap, leaving untouched buckets'
     version dirs as they were (tests/test_round12_fixes.py). Because
     (ts, event_id) is a total order, strictly-newer-wins MERGE over any
     batch split must converge to keep-newest-per-key over ALL events —

@@ -25,11 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from transit_efficiency_analysis_spark.functions.exprcache import column_memo
-from transit_efficiency_analysis_spark.functions.text import (
-    minhash_band,
-    word_shingles,
-    words,
-)
+from transit_efficiency_analysis_spark.functions.text import minhash_band, words
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, key: Column) -> DataFrame:
@@ -43,14 +39,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str, key: Column) -> DataFrame:
             F.min(id_col).alias("canonical_doc_id"),
             F.max(id_col).alias("max_doc_id"),
         )
-    )
-
-
-def shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(id, distinct word-k-gram set) for documents with >= k tokens."""
-    sh = F.array_distinct(word_shingles(words(text_col), k))
-    return df.select(F.col(id_col).alias("doc_id"), sh.alias("shingles")).where(
-        F.size("shingles") > 0
     )
 
 
@@ -90,98 +78,6 @@ def minhash_signatures(shingled: DataFrame, bands: int) -> DataFrame:
     return shingled.select("doc_id", F.explode(band_cols).alias("bm")).select(
         "doc_id", F.col("bm.band").alias("band"), F.col("bm.mh").alias("mh")
     )
-
-
-def _arrow_minhash_sig(
-    shingled: DataFrame, bands: int, rows_per_band: int = 1
-) -> DataFrame:
-    """Dark mapInArrow twin of :func:`minhash_lsh_pairs`'s signature
-    stage (round 16, VERDICT r15 ask #4 — the r15 vectorization rule
-    applied to the slowest headline query): consumes the MAP-ONLY
-    shingle-array relation (``shingle_sets``) and emits the identical
-    ``(doc_id, band, mh)`` signature rows the set-based
-    explode→md5→groupBy-minima pipeline produces, with zero shuffle —
-    md5 per distinct shingle in Python (hashlib — bit-equal to Spark's
-    ``md5`` on the same UTF-8 bytes), Kirsch-Mitzenmacher families
-    ``(h1 + j*h2) mod 2^32`` as one numpy broadcast, per-doc band
-    minima via ``np.minimum.reduceat`` over the Arrow list offsets.
-
-    BIT-EQUAL by construction: h1/h2 are the first/second 4 digest
-    bytes big-endian (= ``conv(substring(hex,1,8),16,10)`` /
-    ``...9,8...``), family arithmetic is exact integer math (h1 +
-    j·h2 < 2^39 ≪ 2^64, both engines' ``%`` on non-negatives agree),
-    and ``min`` over identical multisets is order-free. Parity is
-    pinned set-vs-arrow at full collect (tests/test_minhash_arrow.py).
-
-    Only ``rows_per_band=1`` (the executed default — band key IS the
-    long minimum) is implemented; r>1's key is an md5 over concatenated
-    minima, a second Python hash loop the twin has no reason to pay
-    before the r=1 form earns a flip. NULL/empty shingle arrays raise
-    (``shingle_sets`` filters them; the set form never sees them
-    either)."""
-    if rows_per_band != 1:
-        raise ValueError(
-            "_arrow_minhash_sig implements rows_per_band=1 only — use "
-            "signature='set' for r>1"
-        )
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("doc_id", shingled.schema["doc_id"].dataType),
-            StructField("band", IntegerType()),
-            StructField("mh", LongType()),
-        ]
-    )
-    n_bands = bands
-
-    def run(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            sh = batch.column(1)
-            # element NULLs via flatten() (slice-aware), not .values
-            # (the UNSLICED child — counts NULLs outside a sliced
-            # batch's window and false-positives on clean rows,
-            # ADVICE r16 #1)
-            if sh.null_count or sh.flatten().null_count:
-                raise ValueError(
-                    "arrow minhash: NULL shingle arrays/elements are "
-                    "not supported — signature='set' NULL-propagates"
-                )
-            lengths = np.diff(sh.offsets.to_numpy())
-            if (lengths == 0).any():
-                raise ValueError(
-                    "arrow minhash: empty shingle array (shingle_sets "
-                    "filters these before the signature stage)"
-                )
-            flat = sh.flatten().to_pylist()
-            h = np.empty((len(flat), 2), np.uint64)
-            for i, t in enumerate(flat):
-                d = hashlib.md5(t.encode("utf-8")).digest()
-                h[i, 0] = int.from_bytes(d[:4], "big")
-                h[i, 1] = int.from_bytes(d[4:8], "big")
-            j = np.arange(n_bands, dtype=np.uint64)
-            fams = (h[:, 0:1] + j[None, :] * h[:, 1:2]) % np.uint64(2**32)
-            starts = np.concatenate(([0], np.cumsum(lengths)[:-1]))
-            mins = np.minimum.reduceat(fams, starts, axis=0)  # (n, bands)
-            take = pa.array(np.repeat(np.arange(n), n_bands))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).take(take),
-                    pa.array(np.tile(np.arange(n_bands, dtype=np.int32), n)),
-                    pa.array(mins.reshape(-1).astype(np.int64)),
-                ],
-                names=["doc_id", "band", "mh"],
-            )
-
-    return shingled.select("doc_id", "shingles").mapInArrow(run, out_schema)
 
 
 @column_memo
@@ -243,23 +139,11 @@ def minhash_lsh_pairs(
     reuse: bool = True,
     max_bucket_size: int | None = None,
     rows_per_band: int = 1,
-    signature: str = "set",
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs: shingle → per-band minhash →
     band-bucket join → exact Jaccard verification >= ``threshold``.
 
     Returns (doc_a, doc_b, jaccard_sim) with doc_a < doc_b.
-
-    ``signature`` picks the physical form of the signature stage only
-    (candidate join and Jaccard verify are identical): ``"set"`` (the
-    executed default — verbatim pre-round-16 path) derives band minima
-    from the exploded-shingle relation in one JVM aggregation pass;
-    ``"arrow"`` is the dark bit-equal mapInArrow twin
-    (:func:`_arrow_minhash_sig`) computing the same minima map-only
-    from the shingle ARRAYS — no signature-stage shuffle, at the price
-    of a Python md5 loop per distinct shingle (r=1 only). Default
-    stays "set" until the twin wins the scale battery (the r15
-    measure-before-flipping rule).
 
     ``rows_per_band`` (r) is the s-curve knob: each band's bucket key is
     the md5 of r concatenated per-family minima, so two docs collide in a
@@ -325,10 +209,6 @@ def minhash_lsh_pairs(
     uncapped one (recall trades for a hard bound on join fan-out). None
     disables the cap (exact LSH semantics — the oracle-checked mode).
     """
-    if signature not in ("set", "arrow"):
-        raise ValueError(
-            f"signature must be 'set' or 'arrow', got {signature!r}"
-        )
     exp = shingles_exploded(df, id_col, text_col, k)
     hash_cols, band_aggs, key_cols = _minhash_expr_trees(bands, rows_per_band)
     # ONE aggregation pass over the exploded shingles computes every
@@ -366,14 +246,7 @@ def minhash_lsh_pairs(
     stack_expr = "stack({n}, {args}) as (band, mh)".format(
         n=bands, args=", ".join(f"{b}, key_{b}" for b in range(bands))
     )
-    if signature == "arrow":
-        # the twin replaces ONLY the signature derivation; the per-doc
-        # relation is still the verify stage's shingle-array source below
-        sig = _arrow_minhash_sig(
-            shingle_sets(df, id_col, text_col, k), bands, rows_per_band
-        )
-    else:
-        sig = band_keys.select("doc_id", F.expr(stack_expr))
+    sig = band_keys.select("doc_id", F.expr(stack_expr))
     if max_bucket_size is not None:
         from transit_efficiency_analysis_spark.operators.buckets import cap_buckets
 

@@ -11,14 +11,31 @@ it is scale-neutral — it never tunes for local mode, it only refuses to
 serialize on degenerate inputs. Measured wins are recorded per call
 site (docs/OPTIMIZATION_r18.md).
 
-This generalizes the round-15 guard that lived private in
-``operators/similarity.py`` (q_sim_ivf_topk 8.1 s → ~2 s there); the
-similarity module now re-exports it.
+The similarity operators call it directly (measured on q_sim_ivf_topk:
+8.1 s → ~2 s at sf0.1 on local[32]).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+
+def _has_exchange(df: DataFrame) -> bool:
+    """True iff a node of ``df``'s pre-adaptive physical plan is an
+    ``Exchange``. Each node is tested with ``Class.isInstance``, so a
+    column name or literal that merely contains the word cannot match."""
+    jvm = df.sparkSession._jvm
+    exchange = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.exchange.Exchange"
+    )
+    stack = [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        if exchange.isInstance(node):
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
 
 
 def _scan_partitions(df: DataFrame) -> int | None:
@@ -37,8 +54,7 @@ def _scan_partitions(df: DataFrame) -> int | None:
     ``sparkPlan`` here is the pre-adaptive physical plan, computed
     driver-side with no job submission.
     """
-    plan = df._jdf.queryExecution().sparkPlan().toString()
-    if "Exchange" in plan:
+    if _has_exchange(df):
         return None
     return df.rdd.getNumPartitions()
 

@@ -23,6 +23,10 @@ from pyspark.sql import functions as F
 
 from transit_efficiency_analysis_spark.functions.exprcache import column_memo
 from transit_efficiency_analysis_spark.functions.vectors import as_double, dot, norm
+from transit_efficiency_analysis_spark.operators.parallel import (
+    ensure_min_parallelism,
+    spread_for_compute,
+)
 
 
 @column_memo
@@ -105,8 +109,8 @@ def brute_force_topk(
     """
     # single-small-file corpus inputs otherwise run the whole broadcast
     # join + per-pair cosine on one core (round 18; no-op at scale —
-    # see _ensure_min_parallelism)
-    corpus = _ensure_min_parallelism(corpus)
+    # see operators.parallel)
+    corpus = ensure_min_parallelism(corpus)
     # norms are projected on each side BEFORE the join → one norm fold per
     # row instead of one per pair (cosine(a,b) = dot/(|a||b|) exactly)
     q = queries.select(
@@ -273,7 +277,7 @@ def lsh_bucket_assignments(
     # same single-small-file parallelism guard as lsh_topk (round 18):
     # assignment is map-only, so the scan's partitioning IS its
     # parallelism; the guard only fires in the small-input regime
-    df = _ensure_min_parallelism(df)
+    df = ensure_min_parallelism(df)
     if bucket_assign == "arrow":
         return _arrow_lsh_base(
             df, id_col, vec_col, planes, dims, emit_vectors=False,
@@ -492,7 +496,7 @@ def lsh_topk(
     # projection AND the per-pair cosine ranking (round 18 — measured
     # 2.7 s → sub-second at sf0.1/local[32]; the guard is a no-op on
     # any input with splits ≥ cores, see its docstring)
-    df = _ensure_min_parallelism(df)
+    df = ensure_min_parallelism(df)
     # the base projection's PHYSICAL form (round 17 flip of the round-16
     # dark twin): "arrow" computes bucket ids with _arrow_lsh_base's
     # exact int64 matmul instead of `planes` interpreted long folds;
@@ -589,7 +593,7 @@ def multiprobe_lsh_topk(
         df, planes, target_bucket_size, n_rows, bucket_assign
     )
     # same single-small-file parallelism guard as lsh_topk (round 18)
-    df = _ensure_min_parallelism(df)
+    df = ensure_min_parallelism(df)
     # 2^flip is exact in double for flip < 2^53's range (planes <= 30)
     probe = F.col("bucket").bitwiseXOR(F.pow(F.lit(2.0), F.col("flip")).cast("long"))
     # bucket_assign="arrow" (round 16; auto-resolvable since round 17):
@@ -744,7 +748,7 @@ def ivf_centroids(
         # small-input parallelism guard as the final assignment (review
         # r15: the sf0.1 single-split regression hit the Lloyd rounds
         # too; no-op on split-rich inputs)
-        base = _ensure_min_parallelism(base)
+        base = ensure_min_parallelism(base)
     for _ in range(lloyd_rounds):
         cents = _lloyd_round(base, cents, assign=assign)
         if assign == "arrow":
@@ -825,31 +829,6 @@ def _cents_array(cents: DataFrame) -> DataFrame:
     :func:`_fold_topk_cells` cannot drift apart (round-13 review)."""
     cvu, ca = _cents_array_cols()
     return cents.select("cell", cvu).agg(ca)
-
-
-def _ensure_min_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin ``df`` up to the session's default parallelism when
-    its plan inherits fewer partitions than half of it. The map-only
-    fold paths keep the SCAN's partitioning verbatim — the point, at
-    scale: a 100 TB table has thousands of splits — but a single-
-    small-file input would otherwise drag the downstream candidate
-    scoring (the n × cell_size × n_probe dot compute, whose cost AQE
-    cannot see in the tiny pre-join byte sizes) onto one or two cores:
-    the candidate join's build side broadcasts at that scale, so the
-    probe side's inherited partitioning IS the stage's parallelism.
-    Measured (round 15, sf0.1 = one ~1 MB parquet split on local[32]):
-    q_sim_ivf_topk 8.1 s → the guard restores the window form's ~2 s
-    while keeping the fold plan. The guard fires ONLY in the
-    small-input regime, where the one exchange it introduces moves a
-    relation that is tiny by construction; on any real deployment
-    (splits ≥ cores) it is a no-op and the fold stays exchange-free.
-    Round 18: shared with the text-span operators — this is now a thin
-    alias of ``operators.parallel.ensure_min_parallelism``."""
-    from transit_efficiency_analysis_spark.operators.parallel import (
-        ensure_min_parallelism,
-    )
-
-    return ensure_min_parallelism(df)
 
 
 def _fold_assign(base: DataFrame, cents: DataFrame) -> DataFrame:
@@ -961,27 +940,20 @@ def _fold_topk_exprs(n_probe: int) -> tuple[Column, Column]:
 
 def _fold_topk_cells(base: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
     """(vec_id, v, vn, cell, crank): each vector's top-``n_probe``
-    nearest cells, MAP-ONLY — the drop-in replacement for the
-    broadcast-join + per-vec_id rank-window relation that
-    :func:`ivf_topk`'s ``ranked.where(crank <= n_probe)`` consumers
-    read (``assign="fold"``; shipped dark in round 13, the EXECUTED
-    DEFAULT since the round-15 flip with its oracle mirrors and
-    re-verification slots — docs/ROUND13.md, docs/ROUND15.md).
+    nearest cells, MAP-ONLY — the relation :func:`ivf_topk`'s
+    ``ranked.where(crank <= n_probe)`` consumers read (``assign="fold"``,
+    the default below the auto knee).
 
     Per row: one ``transform`` over the K pre-normalized centroid
     structs (the same raw-dot scoring as :func:`_argmax_cell` — the
     FULL ordering equals cosine's, not just the argmax, because 1/|v|
     is a constant positive per-row scale), one K log K ``array_sort``
-    with the exact rank-window comparator (score DESC, cell ASC), one
-    ``slice`` — vs the window form's n × K row exchange. NULL scores
-    (zero-norm centroids) are filtered BEFORE the sort, so a zero-norm
-    centroid is never probed — the one semantic divergence from the
-    window form, which ranks NULL sims last and therefore probes them
-    once ``n_probe`` exceeds the non-NULL cell count (tested +
-    documented in tests/test_round13_fixes.py). If EVERY score is NULL
-    (all centroids zero-norm, or a zero-norm query against them) the
-    fallback probes the ``n_probe`` smallest cell ids — exactly what
-    the all-NULL rank produced.
+    with the rank comparator (score DESC, cell ASC), one ``slice`` — no
+    n × K row exchange. NULL scores (zero-norm centroids) are filtered
+    BEFORE the sort, so a zero-norm centroid is never probed (tested in
+    tests/test_round13_fixes.py). If EVERY score is NULL (all centroids
+    zero-norm, or a zero-norm query against them) the fallback probes
+    the ``n_probe`` smallest cell ids.
     """
     arr = _cents_array(cents)
     scored, fallback = _fold_topk_exprs(n_probe)
@@ -1563,7 +1535,7 @@ def _ivf_pq_arrow_fused(
                 names=["vec_id", "cell", "crank", "codes", "td9s"],
             )
 
-    base = _ensure_min_parallelism(
+    base = ensure_min_parallelism(
         df.select(F.col(id_col).alias("vec_id"), _vd(vec_col).alias("v"))
     )
     fused_df = base.mapInArrow(fused, schema)
@@ -1778,36 +1750,26 @@ def ivf_topk(
     ``n_centroids`` cells (nearest centroid by cosine), then answer each
     query exactly within its ``n_probe`` nearest cells.
 
-    ``assign`` picks the cell-assignment plan: ``"auto"`` (default
-    since the round-15 auto-resolution) resolves to ``"fold"`` or
-    ``"arrow"`` on the measured nK crossover — arrow only when
-    ``n_rows × n_centroids`` (the assignment's dot count; ``n_rows``
-    from the caller's catalog stat or the ``target_cell_size`` sizing
-    count, never an extra action) reaches :data:`_AUTO_ARROW_MIN_NK`,
-    else the fold. Both branches are bit-equal on finite inputs, so
-    auto can never change results. ``"fold"`` computes the
-    top-``n_probe`` cells per
-    row with :func:`_fold_topk_cells` — MAP-ONLY, zero per-vec_id rank
-    windows, no n × K data-proportional assignment exchange (at 10⁹
-    rows × 30k cells the window form exchanges petabytes of
-    vector-carrying rows; the fold exchanges nothing). ``"window"``
-    (the pre-r15 default, kept for A/B and plan audits) fans n × K
-    rows through a broadcast join and collapses with a per-vec_id rank
-    window. The two routes agree on every tested corpus (equality
-    pinned at lloyd_rounds 0 and 1), but that is mathematical-order
-    equality under different ROUNDING (cosine ``dot/(vn*cn)`` vs raw
-    ``dot(v, cv/cn)``), not a bit-level contract — a ~1-ulp near-tie
-    could rank cells differently between routes, which is exactly why
-    the demo oracles MIRROR the fold arithmetic (the flat-SemDeDup
-    discipline) instead of relying on equivalence. A zero-norm
-    centroid is never probed by the fold, vs ranked-last by the window
-    (see the helper's docstring). ``"arrow"`` is the fold's
-    Arrow/BLAS twin for the large-K compute regime — one vectorized
-    numpy loop per batch instead of K interpreted folds per row; same
-    map-only shape, fold-identical scores on finite inputs (the
-    IEEE-sequence contract in :func:`_arrow_topk_cells`), which is
-    what lets the ``auto`` default resolve to it past the measured
-    crossover WITHOUT new oracle mirrors.
+    ``assign`` picks the cell-assignment plan: ``"auto"`` (default)
+    resolves to ``"fold"`` or ``"arrow"`` on the measured nK crossover —
+    arrow only when ``n_rows × n_centroids`` (the assignment's dot count;
+    ``n_rows`` from the caller's catalog stat or the ``target_cell_size``
+    sizing count, never an extra action) reaches
+    :data:`_AUTO_ARROW_MIN_NK`, else the fold. Both branches are
+    bit-equal on finite inputs, so auto can never change results.
+    ``"fold"`` computes the top-``n_probe`` cells per row with
+    :func:`_fold_topk_cells` — MAP-ONLY, zero per-vec_id rank windows, no
+    n × K data-proportional assignment exchange. The demo oracles MIRROR
+    the fold arithmetic (raw ``dot(v, cv/cn)``, not cosine
+    ``dot/(vn*cn)``), so a ~1-ulp near-tie ranks cells the same way in
+    both engines; a zero-norm centroid is never probed (see the helper's
+    docstring). ``"arrow"`` is the fold's Arrow/BLAS twin for the
+    large-K compute regime — one vectorized numpy loop per batch instead
+    of K interpreted folds per row; same map-only shape, fold-identical
+    scores on finite inputs (the IEEE-sequence contract in
+    :func:`_arrow_topk_cells`), which is what lets the ``auto`` default
+    resolve to it past the measured crossover WITHOUT new oracle
+    mirrors.
 
     The other classic ANN shape next to sign-LSH (``lsh_topk``): centroids
     broadcast to every partition (map-only assignment), the only shuffle
@@ -1834,50 +1796,26 @@ def ivf_topk(
         n_centroids = max(1, math.ceil(n_rows / max(target_cell_size, 1)))
     if n_centroids is None:
         raise ValueError("pass n_centroids or target_cell_size")
-    if assign not in ("window", "fold", "arrow", "auto"):
-        raise ValueError(
-            f"assign must be 'window', 'fold', 'arrow' or 'auto', got {assign!r}"
-        )
+    if assign not in ("fold", "arrow", "auto"):
+        raise ValueError(f"assign must be 'fold', 'arrow' or 'auto', got {assign!r}")
     assign = _resolve_assign(assign, n_rows, n_centroids)
+    # the Lloyd-round assignment follows the same choice
     cents = ivf_centroids(
-        df, id_col, vec_col, n_centroids, lloyd_rounds=lloyd_rounds,
-        # the Lloyd-round assignment follows the arrow choice; "window"
-        # keeps the (post-r13) fold Lloyd form unchanged
-        assign="arrow" if assign == "arrow" else "fold",
+        df, id_col, vec_col, n_centroids, lloyd_rounds=lloyd_rounds, assign=assign
     )
-    base = df.select(
-        F.col(id_col).alias("vec_id"),
-        _vd(vec_col).alias("v"),
-        _vn(vec_col).alias("vn"),
+    base = ensure_min_parallelism(
+        df.select(
+            F.col(id_col).alias("vec_id"),
+            _vd(vec_col).alias("v"),
+            _vn(vec_col).alias("vn"),
+        )
     )
-    if assign == "arrow":
-        # auto's large-nK resolution (or forced): the Arrow/BLAS twin
-        ranked = _arrow_topk_cells(_ensure_min_parallelism(base), cents, n_probe)
-    elif assign == "fold":
-        ranked = _fold_topk_cells(_ensure_min_parallelism(base), cents, n_probe)
-    else:
-        # try_divide: a zero-norm vector (or centroid) yields NULL sims —
-        # NULLS LAST under the desc rank, so it assigns to the tie-break
-        # cell instead of throwing under ANSI mode (ADVICE r11)
-        cell_sim = F.try_divide(
-            dot(F.col("v"), F.col("cv")), F.col("vn") * F.col("cn")
-        )
-        ranked = (
-            base.join(F.broadcast(cents))
-            .select("vec_id", "v", "vn", "cell", cell_sim.alias("csim"))
-            .withColumn(
-                "crank",
-                F.row_number().over(
-                    Window.partitionBy("vec_id").orderBy(
-                        F.col("csim").desc(), F.col("cell")
-                    )
-                ),
-            )
-        )
+    topk_cells = _arrow_topk_cells if assign == "arrow" else _fold_topk_cells
+    ranked = topk_cells(base, cents, n_probe)
     if checkpoint:
         # consumed twice (data cells + probe cells): persist (DISK_ONLY,
         # lazy, canonicalized-plan-shared across invocations) so the
-        # scan → broadcast-join → window pipeline runs once, not twice
+        # scan → assignment pipeline runs once, not twice
         # (checkpoint=False keeps the full lineage visible for plan audits)
         ranked = ranked.persist(StorageLevel.DISK_ONLY)
     data = ranked.where(F.col("crank") == 1).select(
@@ -1936,7 +1874,7 @@ def embedding_near_dup_pairs(
     # one-task scan stage of a single-row-group input (round 18, guide
     # §2.5; no-op whenever splits ≥ cores). Measured at sf0.1/local[32]
     # on q_dedup_embedding: 3.0 → 0.6 s, identical pair set.
-    base = _ensure_min_parallelism(
+    base = ensure_min_parallelism(
         df.select(
             F.col(id_col).alias("vec_id"),
             _vd(vec_col).alias("v"),
@@ -1999,43 +1937,29 @@ def ivf_pq_topk(
 
     Returns (query_id, neighbor_id, approx_l2sq, rank).
 
-    ``assign``: ``"auto"`` (default since the round-15 auto-resolution)
-    resolves the COARSE-assignment form to ``"fold"`` or ``"arrow"``
-    on the measured nK crossover (:func:`_resolve_assign`; ``n_rows``
-    is the catalog stat — without it auto stays on the fold, no extra
-    action; the encode/ADC DECIMAL folds are identical either way so
-    resolution never changes results). ``"fold"`` has zero
-    data-side exchange throughout (plan-pinned): coarse cells via
-    :func:`_fold_topk_cells` (+ a broadcast cell→``cv`` join-back —
-    the residual split needs the winning centroid vector), and
-    encode/ADC computed per row against the codebook pivoted into ONE
-    broadcast array row, every distance the exact DECIMAL fold
-    (:func:`_l2sq_decimal`) that bit-matches the join form's SUM — the
-    encode/ADC stages therefore cannot drift at all. ``"window"`` (the
-    pre-r15 default, kept for A/B and plan audits) keeps three
-    data-proportional exchange groups: the n × K coarse-assignment
-    rank window, and the encode/ADC explode→codebook-join→groupBy
-    pipelines (n × dims × ks fan-out rows, n × m × ks aggregated rows
-    through a per-(vec_id, s) argmin window). The coarse assignment
-    carries the same rounding caveat as :func:`ivf_topk`'s ``assign``
-    (order-equal under different FP rounding, equality pinned on the
-    tested corpus; the demo oracle MIRRORS the fold arithmetic rather
-    than assuming equivalence). ``"arrow"`` (auto's large-nK
-    resolution) runs the FUSED single-pass pipeline
-    (:func:`_ivf_pq_arrow_fused`, round 18): one ``mapInArrow`` stage
-    computes the coarse assignment, the encode AND the ADC tables per
-    row against driver-built tensors — exact scale-9 integer mirrors
-    of the DECIMAL folds (per-element quantization through
-    :func:`_quantize_sq9`), so the whole output stays bit-equal to
-    ``"fold"`` while the n × g × ks distance arithmetic runs as numpy
-    tensor ops per Arrow batch and the stage form's two extra
-    Python-boundary stages, plan-time codebook job and pivot
-    exchanges disappear.
+    ``assign``: ``"auto"`` (default) resolves to ``"fold"`` or
+    ``"arrow"`` on the PQ knee (:func:`_resolve_assign` with
+    :data:`_AUTO_ARROW_MIN_NMK_PQ`; ``n_rows`` is the catalog stat —
+    without it auto stays on the fold, no extra action). Both forms
+    compute every distance as the same exact DECIMAL sum, so resolution
+    never changes results. ``"fold"`` has zero data-side exchange
+    throughout (plan-pinned): coarse cells via :func:`_fold_topk_cells`
+    (+ a broadcast cell→``cv`` join-back — the residual split needs the
+    winning centroid vector), and encode/ADC computed per row against
+    the codebook pivoted into ONE broadcast array row, every distance
+    the exact DECIMAL fold (:func:`_l2sq_decimal`). The demo oracle
+    MIRRORS the fold's coarse-assignment arithmetic (see
+    :func:`ivf_topk`'s ``assign``). ``"arrow"`` runs the FUSED
+    single-pass pipeline (:func:`_ivf_pq_arrow_fused`): one
+    ``mapInArrow`` stage computes the coarse assignment, the encode AND
+    the ADC tables per row against driver-built tensors — exact scale-9
+    integer mirrors of the DECIMAL folds (per-element quantization
+    through :func:`_quantize_sq9`), so the whole output stays bit-equal
+    to ``"fold"`` while the n × g × ks distance arithmetic runs as numpy
+    tensor ops per Arrow batch.
     """
-    if assign not in ("window", "fold", "arrow", "auto"):
-        raise ValueError(
-            f"assign must be 'window', 'fold', 'arrow' or 'auto', got {assign!r}"
-        )
+    if assign not in ("fold", "arrow", "auto"):
+        raise ValueError(f"assign must be 'fold', 'arrow' or 'auto', got {assign!r}")
     # PQ resolves auto on its OWN knee (n_rows × m × ks encode units,
     # :data:`_AUTO_ARROW_MIN_NMK_PQ`): the work the arrow twin
     # vectorizes here is the encode/ADC DECIMAL folds, which dwarf the
@@ -2058,31 +1982,9 @@ def ivf_pq_topk(
         _vd(vec_col).alias("v"),
         _vn(vec_col).alias("vn"),
     )
-    if assign == "fold":
-        ranked = _fold_topk_cells(
-            _ensure_min_parallelism(base), cents, n_probe
-        ).join(
-            F.broadcast(cents.select("cell", "cv")), "cell"
-        ).select("vec_id", "v", "cell", "cv", "crank")
-    else:
-        # try_divide: a zero-norm vector (or centroid) yields NULL sims —
-        # NULLS LAST under the desc rank, so it assigns to the tie-break
-        # cell instead of throwing under ANSI mode (ADVICE r11)
-        cell_sim = F.try_divide(
-            dot(F.col("v"), F.col("cv")), F.col("vn") * F.col("cn")
-        )
-        ranked = (
-            base.join(F.broadcast(cents))
-            .select("vec_id", "v", "cell", "cv", cell_sim.alias("csim"))
-            .withColumn(
-                "crank",
-                F.row_number().over(
-                    Window.partitionBy("vec_id").orderBy(
-                        F.col("csim").desc(), F.col("cell")
-                    )
-                ),
-            )
-        )
+    ranked = _fold_topk_cells(ensure_min_parallelism(base), cents, n_probe).join(
+        F.broadcast(cents.select("cell", "cv")), "cell"
+    ).select("vec_id", "v", "cell", "cv", "crank")
     if checkpoint:
         ranked = ranked.persist(StorageLevel.DISK_ONLY)
 
@@ -2097,200 +1999,134 @@ def ivf_pq_topk(
     )
     codes = seed_ids.select("sid2", (F.row_number().over(wseed) - 1).alias("code"))
 
-    # residual dims: pos is 0-based, subspace s = pos // (dims/m) derived
-    # per row so ragged dims fail loudly rather than silently misbucket
-    def residual_dims(rel: DataFrame, idc: str, cellc: str) -> DataFrame:
-        sub_d = F.floor(F.size("v") / F.lit(m))
-        return rel.select(
-            F.col(idc),
-            F.col(cellc),
-            F.posexplode(F.zip_with("v", "cv", lambda a, b: a - b)).alias("pos", "rx"),
-            sub_d.alias("sub_d"),
-        ).select(
-            idc, cellc, "pos", "rx", F.floor(F.col("pos") / F.col("sub_d")).cast("int").alias("s")
+    # Encode + ADC with zero data-side exchange: the codebook pivots ONCE
+    # into a single broadcast row of per-subspace (code, subvector)
+    # arrays (ks × m structs — tiny), and each data row computes its
+    # codes / ADC entries in place over its residual slices, every
+    # distance the exact DECIMAL fold (_l2sq_decimal). Argmin per
+    # subspace = default array_sort on struct(d, code) (lexicographic: d
+    # ASC then code ASC) + element_at 1: each distance evaluates ONCE (a
+    # strict-< fold would write the distance expression twice per
+    # element — the no-CSE trap).
+    r_expr = F.zip_with("v", "cv", lambda a, b: a - b)
+    sd_expr = F.floor(F.size("v") / F.lit(m))
+    assigned = ranked.where(F.col("crank") == 1).select(
+        "vec_id", "cell", r_expr.alias("r"), sd_expr.alias("sd")
+    )
+    # group s of a row's residual = slice [s*sd, min((s+1)*sd, dims))
+    # — slice() truncates at the array end, so ragged dims get a
+    # shorter trailing group (group of position pos = floor(pos / sd))
+    groups = F.transform(
+        F.sequence(
+            F.lit(0),
+            F.floor((F.size("r") - F.lit(1)) / F.col("sd")).cast("int"),
+        ),
+        lambda s: F.struct(
+            s.cast("int").alias("s"),
+            F.slice(
+                F.col("r"), s.cast("bigint") * F.col("sd") + F.lit(1), F.col("sd")
+            ).alias("cxs"),
+        ),
+    )
+    cb_row = (
+        assigned.join(
+            F.broadcast(codes), F.col("vec_id") == F.col("sid2")
         )
-
-    if assign == "fold":
-        # Fold-mode encode + ADC (round 13; the sub-knee default since
-        # r15 — the arrow mode returned above via the round-18 fused
-        # pipeline). The join form below
-        # explodes n × dims residual rows, fans them × ks through the
-        # (s, pos) codebook join, aggregates back, and ranks the
-        # argmin through a per-(vec_id, s) window — THREE
-        # data-proportional exchanges (the groupBys and the window).
-        # Here the codebook pivots ONCE into a single broadcast row of
-        # per-subspace (code, subvector) arrays (ks × m structs —
-        # tiny), and each data row computes its codes / ADC entries in
-        # place over its residual slices: the same n × dims × ks
-        # squared-diff arithmetic with ZERO data-side exchange, and
-        # every distance the exact DECIMAL fold (_l2sq_decimal) that
-        # bit-matches the join form's SUM, so ranks cannot drift.
-        # Argmin per subspace = default array_sort on struct(d, code)
-        # (lexicographic: d ASC then code ASC — exactly the rn window's
-        # order) + element_at 1: each distance evaluates ONCE (a
-        # strict-< fold would write the distance expression twice per
-        # element — the r12 no-CSE trap).
-        r_expr = F.zip_with("v", "cv", lambda a, b: a - b)
-        sd_expr = F.floor(F.size("v") / F.lit(m))
-        assigned_f = ranked.where(F.col("crank") == 1).select(
-            "vec_id", "cell", r_expr.alias("r"), sd_expr.alias("sd")
-        )
-        # group s of a row's residual = slice [s*sd, min((s+1)*sd, dims))
-        # — slice() truncates at the array end, matching the join
-        # form's floor(pos / sub_d) trailing group
-        groups = F.transform(
-            F.sequence(
-                F.lit(0),
-                F.floor((F.size("r") - F.lit(1)) / F.col("sd")).cast("int"),
-            ),
-            lambda s: F.struct(
-                s.cast("int").alias("s"),
-                F.slice(
-                    F.col("r"), s.cast("bigint") * F.col("sd") + F.lit(1), F.col("sd")
-                ).alias("cxs"),
-            ),
-        )
-        cb_row = (
-            assigned_f.join(
-                F.broadcast(codes), F.col("vec_id") == F.col("sid2")
-            )
-            .select("code", F.explode(groups).alias("g"))
-            .select("code", F.col("g.s").alias("s"), F.col("g.cxs").alias("cxs"))
-            .groupBy("s")
-            .agg(
-                F.sort_array(F.collect_list(F.struct("code", "cxs"))).alias(
-                    "codes_a"
-                )
-            )
-            .agg(F.sort_array(F.collect_list(F.struct("s", "codes_a"))).alias("cb"))
-        )
-        probes_f = ranked.where(F.col("crank") <= n_probe).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cell").alias("qcell"),
-            r_expr.alias("r"),
-            sd_expr.alias("sd"),
-        )
-        # (s, residual-slice, codes) staged once per group so the inner
-        # per-code transforms read the slice as a cheap field access
-        staged_groups = F.transform(
-            F.col("cb"),
-            lambda g: F.struct(
-                g["s"].alias("s"),
-                F.slice(
-                    F.col("r"),
-                    g["s"].cast("bigint") * F.col("sd") + F.lit(1),
-                    F.col("sd"),
-                ).alias("rs"),
-                g["codes_a"].alias("codes_a"),
-            ),
-        )
-        enc_arr = F.transform(
-            staged_groups,
-            lambda h: F.struct(
-                h["s"].alias("s"),
-                F.element_at(
-                    F.array_sort(
-                        F.transform(
-                            h["codes_a"],
-                            lambda c: F.struct(
-                                _l2sq_decimal(h["rs"], c["cxs"]).alias("d"),
-                                c["code"].alias("code"),
-                            ),
-                        )
-                    ),
-                    1,
-                )["code"].alias("code"),
-            ),
-        )
-        enc = (
-            assigned_f.crossJoin(F.broadcast(cb_row))
-            .select("vec_id", "cell", F.explode(enc_arr).alias("e"))
-            .select(
-                "vec_id",
-                "cell",
-                F.col("e.s").alias("s"),
-                F.col("e.code").alias("code"),
+        .select("code", F.explode(groups).alias("g"))
+        .select("code", F.col("g.s").alias("s"), F.col("g.cxs").alias("cxs"))
+        .groupBy("s")
+        .agg(
+            F.sort_array(F.collect_list(F.struct("code", "cxs"))).alias(
+                "codes_a"
             )
         )
-        adc_arr = F.transform(
-            staged_groups,
-            lambda h: F.struct(
-                h["s"].alias("s"),
-                F.transform(
-                    h["codes_a"],
-                    lambda c: F.struct(
-                        c["code"].alias("code"),
-                        _l2sq_decimal(h["rs"], c["cxs"]).alias("td"),
-                    ),
-                ).alias("tds"),
-            ),
-        )
-        adc = (
-            probes_f.crossJoin(F.broadcast(cb_row))
-            .select("query_id", "qcell", F.explode(adc_arr).alias("a"))
-            .select(
-                "query_id",
-                "qcell",
-                F.col("a.s").alias("s"),
-                F.explode(F.col("a.tds")).alias("t"),
-            )
-            .select(
-                "query_id",
-                "qcell",
-                "s",
-                F.col("t.code").alias("code"),
-                F.col("t.td").alias("td"),
-            )
-        )
-    else:
-        assigned = ranked.where(F.col("crank") == 1)
-        rdim = residual_dims(assigned, "vec_id", "cell")
-        if checkpoint:
-            rdim = rdim.persist(StorageLevel.DISK_ONLY)
-
-        codedim = rdim.join(
-            F.broadcast(codes), rdim.vec_id == codes.sid2
-        ).select("s", "code", "pos", F.col("rx").alias("cx"))
-
-        sqdiff = ((F.col("rx") - F.col("cx")) * (F.col("rx") - F.col("cx"))).cast(
-            "decimal(18,9)"
-        )
-        enc = (
-            rdim.join(F.broadcast(codedim), ["s", "pos"])
-            .groupBy("vec_id", "cell", "s", "code")
-            .agg(F.sum(sqdiff).alias("d2"))
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("vec_id", "s").orderBy(
-                        F.col("d2").asc(), F.col("code")
+        .agg(F.sort_array(F.collect_list(F.struct("s", "codes_a"))).alias("cb"))
+    )
+    probes = ranked.where(F.col("crank") <= n_probe).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("cell").alias("qcell"),
+        r_expr.alias("r"),
+        sd_expr.alias("sd"),
+    )
+    # (s, residual-slice, codes) staged once per group so the inner
+    # per-code transforms read the slice as a cheap field access
+    staged_groups = F.transform(
+        F.col("cb"),
+        lambda g: F.struct(
+            g["s"].alias("s"),
+            F.slice(
+                F.col("r"),
+                g["s"].cast("bigint") * F.col("sd") + F.lit(1),
+                F.col("sd"),
+            ).alias("rs"),
+            g["codes_a"].alias("codes_a"),
+        ),
+    )
+    enc_arr = F.transform(
+        staged_groups,
+        lambda h: F.struct(
+            h["s"].alias("s"),
+            F.element_at(
+                F.array_sort(
+                    F.transform(
+                        h["codes_a"],
+                        lambda c: F.struct(
+                            _l2sq_decimal(h["rs"], c["cxs"]).alias("d"),
+                            c["code"].alias("code"),
+                        ),
                     )
                 ),
-            )
-            .where(F.col("rn") == 1)
-            .select("vec_id", "cell", "s", "code")
+                1,
+            )["code"].alias("code"),
+        ),
+    )
+    enc = (
+        assigned.crossJoin(F.broadcast(cb_row))
+        .select("vec_id", "cell", F.explode(enc_arr).alias("e"))
+        .select(
+            "vec_id",
+            "cell",
+            F.col("e.s").alias("s"),
+            F.col("e.code").alias("code"),
         )
-
-        # ADC tables: query residual vs every probed cell's centroid
-        probes = ranked.where(F.col("crank") <= n_probe).select(
-            F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell"), "v", "cv"
+    )
+    adc_arr = F.transform(
+        staged_groups,
+        lambda h: F.struct(
+            h["s"].alias("s"),
+            F.transform(
+                h["codes_a"],
+                lambda c: F.struct(
+                    c["code"].alias("code"),
+                    _l2sq_decimal(h["rs"], c["cxs"]).alias("td"),
+                ),
+            ).alias("tds"),
+        ),
+    )
+    adc = (
+        probes.crossJoin(F.broadcast(cb_row))
+        .select("query_id", "qcell", F.explode(adc_arr).alias("a"))
+        .select(
+            "query_id",
+            "qcell",
+            F.col("a.s").alias("s"),
+            F.explode(F.col("a.tds")).alias("t"),
         )
-        qrdim = residual_dims(
-            probes.withColumnRenamed("query_id", "vec_id"), "vec_id", "qcell"
-        ).withColumnRenamed("vec_id", "query_id")
-        adc = (
-            qrdim.join(F.broadcast(codedim), ["s", "pos"])
-            .groupBy("query_id", "qcell", "s", "code")
-            .agg(F.sum(sqdiff).alias("td"))
+        .select(
+            "query_id",
+            "qcell",
+            "s",
+            F.col("t.code").alias("code"),
+            F.col("t.td").alias("td"),
         )
-
+    )
     return _pq_rank(enc, adc, k)
 
 
 def _pq_rank(enc: DataFrame, adc: DataFrame, k: int) -> DataFrame:
-    """Shared ivf_pq_topk tail over any (enc, adc) pair — the encode
-    forms (join / fold / arrow) all emit the same schemas and EXACT
-    distances, so the candidate scoring and rank are one code path.
+    """ivf_pq_topk's candidate scoring and rank over the fold form's
+    exploded (enc, adc) relations: ``enc`` (vec_id, cell, s, code) and
+    ``adc`` (query_id, qcell, s, code, td) with EXACT decimal ``td``.
 
     Round-18 restructure (guide §2.3/§2.4 — shuffle fewer bytes, remove
     exchanges): the original tail joined the EXPLODED per-subspace rows
@@ -2298,8 +2134,8 @@ def _pq_rank(enc: DataFrame, adc: DataFrame, k: int) -> DataFrame:
     into a pairs-keyed hash aggregate and a full per-query rank window
     over every candidate. At sf0.1 that was 12M joined rows → 3M-key
     agg → 3M-row window, the single biggest chunk of the query. The
-    tail now pivots both sides back to one row per entity (the encode
-    forms explode per ``s`` anyway, so the pivot just undoes that),
+    tail now pivots both sides back to one row per entity (the fold
+    encode explodes per ``s`` anyway, so the pivot just undoes that),
     packs each cell's neighbors into one array row, and scores every
     (query, cellmate) pair MAP-SIDE inside an array transform: the ADC
     value of a neighbor is ``m`` O(1) ``element_at`` lookups into the
@@ -2338,18 +2174,13 @@ def _pq_rank(enc: DataFrame, adc: DataFrame, k: int) -> DataFrame:
     )
     # one row per (query, probed cell): the ADC table pivoted into a
     # dense s-major array-of-arrays — tds[s+1][code+1] = td, O(1) lookups
-    # (codes are row_number()-dense 0..ks'-1 per subspace by construction,
-    # for all three encode forms). spread_for_compute: the per-(query,
-    # cell) scoring downstream of THIS exchange costs O(cell_size × m)
+    # (codes are row_number()-dense 0..ks'-1 per subspace by
+    # construction). spread_for_compute: the per-(query, cell) scoring downstream of THIS exchange costs O(cell_size × m)
     # interpreted lookups per ~1 KB row — compute AQE's byte-based
     # coalescing cannot see (guide §2.5; measured: 3-of-32-core stage,
     # 2.4 s wall for 6 s task CPU at sf0.1). The explicit-count hash
     # repartition is reused by the groupBy, so the exchange count is
     # unchanged — only the coalesce is vetoed.
-    from transit_efficiency_analysis_spark.operators.parallel import (
-        spread_for_compute,
-    )
-
     adc_p = spread_for_compute(adc, "query_id", "qcell").groupBy(
         "query_id", "qcell"
     ).agg(
@@ -2574,7 +2405,7 @@ def semantic_dedup(
         )
     cents = ivf_centroids(df, id_col, vec_col, n_centroids, lloyd_rounds,
                           assign=assign)
-    base = _ensure_min_parallelism(
+    base = ensure_min_parallelism(
         df.select(
             F.col(id_col).alias("vec_id"),
             _vd(vec_col).alias("v"),
@@ -2834,7 +2665,7 @@ def semantic_dedup_hier(
         .where(F.col("frank") == 1)
         .select("cell", "cv", "cn", "ccell")
     )
-    base = _ensure_min_parallelism(
+    base = ensure_min_parallelism(
         df.select(
             F.col(id_col).alias("vec_id"),
             _vd(vec_col).alias("v"),

@@ -161,7 +161,7 @@ def _delays_base(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
 
 
 def delays_fused(
-    orders: DataFrame, lineitem: DataFrame, sort: bool = True, form: str = "join"
+    orders: DataFrame, lineitem: DataFrame, sort: bool = True
 ) -> DataFrame:
     """``compute_delays(trip_updates_view(...), gtfs_data_view(...))`` with
     the self-join structure made explicit (round-18 optimization).
@@ -192,93 +192,52 @@ def delays_fused(
       is the identity (canonical decimal strings), so ≡
       ``a.l_partkey = b.l_partkey``.
 
-    ``form`` picks the physical shape (both bit-identical):
-
-    - ``"join"``: base self-join (SMJ on the raw keys). Two branches over
-      the same base; per-branch column pruning keeps each exchange
-      narrow (the a-side ships 6 raw columns, the b-side 10 — vs the two
-      view-level exchanges shipping every derived string).
-    - ``"group"``: ONE exchange — ``groupBy`` the 4 raw keys,
-      ``collect_list(struct(base columns))``, then explode the group
-      twice to generate exactly the within-group ordered-pair multiset
-      the self-join produces. Equality grouping matches join-equality
-      semantics because rows with a NULL in any key are filtered first
-      (a NULL key never satisfies the join condition; groupBy would
-      otherwise group NULLs together). Group sizes are bounded by the
-      composite key's near-PK cardinality (the testdata carries a
-      handful of deliberate duplicate keys), so the per-group list is
-      O(1) — at 100 TB this halves the heavy-side shuffle vs the
-      self-join at the cost of a per-key memory bound that the
-      self-join does not need.
+    Physical shape: a base self-join (hash join on the raw keys). Both
+    branches read the same base; per-branch column pruning keeps each
+    exchange narrow (the a-side ships 6 raw columns, the b-side 10, vs
+    the two view-level exchanges shipping every derived string).
     """
     from transit_efficiency_analysis_spark.operators.delay import delays_projection
 
     base = _delays_base(orders, lineitem)
-    if form == "join":
-        # SHUFFLE_HASH on the b side (round 18, guide §3): both sides of
-        # the self-join read the SAME reused exchange (AQE dedups the
-        # identical shuffle subplans), so an SMJ pays TWO sorts of one
-        # 16 MB-at-sf0.1 shuffle only to re-pair rows a hash build does in
-        # one pass. Per-partition build memory is bounded by the AQE
-        # partition target (the composite key is near-unique, no skewed
-        # build lists), which holds at any scale. Strategy-only: inner
-        # equi-join output identical (full-column hash parity pinned in
-        # tests); measured interleaved at sf0.1: q_agg_dashboard
-        # 1.39 -> 1.24 s, q_rebuild_full within noise.
-        a, b = base.alias("a"), base.alias("b").hint("shuffle_hash")
-        # The date conjunct is expressed as a RESIDUAL predicate
-        # (datediff == 0) rather than an equality (round 18, guide
-        # §2.4): Catalyst extracts every top-level equality into the
-        # join KEYS, and a key that only exists post-join
-        # (o_orderdate arrives via the broadcast enrich) forces an
-        # ENSURE_REQUIREMENTS re-exchange of both sides on the 4-column
-        # composite. With the three lineitem columns as the only equi
-        # keys, the pre-join repartition in _delays_base already
-        # satisfies both sides and the self-join runs on that single
-        # reused exchange. Semantics are IDENTICAL row-pair-wise for
-        # every input (duplicate keys and NULLs included):
-        # datediff(to_date(x), to_date(y)) = 0  ⟺  to_date(x) =
-        # to_date(y) — both sides reject NULLs (NULL datediff compares
-        # NULL, NULL equality is not TRUE), and datediff of two DATEs
-        # is zero exactly when they are the same day. The residual is
-        # checked per matched pair exactly as the equality was.
-        cond = (
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_linenumber") == F.col("b.l_linenumber"))
-            & (F.col("a.l_partkey") == F.col("b.l_partkey"))
-            & (
-                F.datediff(
-                    F.to_date("a.o_orderdate"), F.to_date("b.o_orderdate")
-                )
-                == 0
+    # SHUFFLE_HASH on the b side: both sides of the self-join read the SAME reused exchange (AQE dedups the
+    # identical shuffle subplans), so an SMJ pays TWO sorts of one
+    # 16 MB-at-sf0.1 shuffle only to re-pair rows a hash build does in
+    # one pass. Per-partition build memory is bounded by the AQE
+    # partition target (the composite key is near-unique, no skewed
+    # build lists), which holds at any scale. Strategy-only: inner
+    # equi-join output identical (full-column hash parity pinned in
+    # tests); measured interleaved at sf0.1: q_agg_dashboard
+    # 1.39 -> 1.24 s, q_rebuild_full within noise.
+    a, b = base.alias("a"), base.alias("b").hint("shuffle_hash")
+    # The date conjunct is expressed as a RESIDUAL predicate
+    # (datediff == 0) rather than an equality: Catalyst extracts every top-level equality into the
+    # join KEYS, and a key that only exists post-join
+    # (o_orderdate arrives via the broadcast enrich) forces an
+    # ENSURE_REQUIREMENTS re-exchange of both sides on the 4-column
+    # composite. With the three lineitem columns as the only equi
+    # keys, the pre-join repartition in _delays_base already
+    # satisfies both sides and the self-join runs on that single
+    # reused exchange. Semantics are IDENTICAL row-pair-wise for
+    # every input (duplicate keys and NULLs included):
+    # datediff(to_date(x), to_date(y)) = 0  ⟺  to_date(x) =
+    # to_date(y) — both sides reject NULLs (NULL datediff compares
+    # NULL, NULL equality is not TRUE), and datediff of two DATEs
+    # is zero exactly when they are the same day. The residual is
+    # checked per matched pair exactly as the equality was.
+    cond = (
+        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+        & (F.col("a.l_linenumber") == F.col("b.l_linenumber"))
+        & (F.col("a.l_partkey") == F.col("b.l_partkey"))
+        & (
+            F.datediff(
+                F.to_date("a.o_orderdate"), F.to_date("b.o_orderdate")
             )
+            == 0
         )
-        joined = a.join(b, cond, "inner")
-        tu, gd = tu_exprs("a."), gd_exprs("b.")
-    elif form == "group":
-        keys = [
-            F.col("l_orderkey"),
-            F.to_date("o_orderdate").alias("__sd"),
-            F.col("l_linenumber"),
-            F.col("l_partkey"),
-        ]
-        rows = F.struct(*_BASE_LINEITEM_COLS, *_BASE_ORDERS_COLS)
-        grouped = (
-            base.where(
-                F.col("l_orderkey").isNotNull()
-                & F.to_date("o_orderdate").isNotNull()
-                & F.col("l_linenumber").isNotNull()
-                & F.col("l_partkey").isNotNull()
-            )
-            .groupBy(*keys)
-            .agg(F.collect_list(rows).alias("__g"))
-        )
-        joined = grouped.select(
-            F.explode("__g").alias("a"), F.col("__g").alias("__g2")
-        ).select("a", F.explode("__g2").alias("b"))
-        tu, gd = tu_exprs("a."), gd_exprs("b.")
-    else:
-        raise ValueError(f"form must be 'join' or 'group', got {form!r}")
+    )
+    joined = a.join(b, cond, "inner")
+    tu, gd = tu_exprs("a."), gd_exprs("b.")
     return delays_projection(
         joined, lambda c: tu[c], lambda c: gd[c], sort=sort, memo_key="fused_ab"
     )

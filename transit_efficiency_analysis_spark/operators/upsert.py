@@ -196,19 +196,6 @@ def merge_batch(
     return replay_conflict_update(unioned, keys, order_by, tracked, ts_col)
 
 
-def delta_available() -> bool:
-    """True when the delta-spark package (and its JVM jars) can drive
-    ``DeltaTable.merge``. Absent in this repo's container — the rewrite
-    backend below is the tested path; on a Delta deployment the same
-    ``merge_into`` call dispatches to real ``MERGE INTO``."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
 def _target_exists(spark, target: str) -> bool:
     """True iff the table path exists — local ``os.path`` probe for
     file-scheme targets, Hadoop ``FileSystem.exists`` for object-store URIs
@@ -244,47 +231,19 @@ def merge_into(
     order_by: list[str],
     tracked: list[str] | None = None,
     ts_col: str | None = None,
-    backend: str = "auto",
 ) -> DataFrame:
     """Persisted upsert: apply ``incoming`` onto the TABLE at ``target``
     and return a DataFrame over the committed state — the storage-backed
-    face of :func:`merge_batch` (SURVEY §1.3's "or Delta ``MERGE`` where
-    upsert semantics are needed").
+    face of :func:`merge_batch`, which IS the specification.
 
-    Backends, same semantics either way (parity is the test contract —
-    ``merge_batch`` IS the specification):
-
-    - ``"rewrite"`` — read current state, :func:`merge_batch`, commit
-      with the atomic versioned-dir overwrite (``sinks.overwrite_table``,
-      readers never see a partial table). O(table) per batch, which is
-      the honest cost without a transactional table format; at 100 TB
-      partition the table (e.g. by ``start_date``) and rewrite only the
-      partitions the batch touches.
-    - ``"delta"`` — ``DeltaTable.merge``: the transactional
-      ``whenMatchedUpdateAll / whenNotMatchedInsertAll`` path, touching
-      only files holding matched keys (+ the txn log). Last-writer-wins
-      mode only: the batch is first collapsed per key with
-      :func:`upsert_keep_newest`, then matched rows update only when the
-      source is LEXICOGRAPHICALLY NEWER on ``order_by`` (ties keep the
-      stored row, matching window-dedup's row_number tie-break only when
-      ``order_by`` is a total order — same determinism requirement as
-      ``merge_batch``). The conditional ``tracked`` replay keeps its
-      audit-column semantics through the rewrite backend.
-    - ``"auto"`` — delta when importable, else rewrite.
+    Reads the current state, runs :func:`merge_batch`, and commits with
+    the atomic versioned-dir overwrite (``sinks.overwrite_table``:
+    readers never see a partial table). O(table) per batch, the honest
+    cost without a transactional table format; for a large table use
+    :func:`merge_into_partitioned`, which rewrites only the buckets a
+    batch touches.
     """
     spark = incoming.sparkSession
-    if backend == "auto":
-        backend = "delta" if delta_available() else "rewrite"
-    if backend == "delta":
-        if tracked is not None:
-            raise NotImplementedError(
-                "tracked-change replay with audit columns routes through "
-                "backend='rewrite'; the Delta path implements "
-                "last-writer-wins MERGE"
-            )
-        return _merge_into_delta(spark, target, incoming, keys, order_by)
-    if backend != "rewrite":
-        raise ValueError(f"unknown backend {backend!r}")
 
     from transit_efficiency_analysis_spark.sinks import overwrite_table
 
@@ -305,8 +264,8 @@ def merge_match_condition(keys: list[str]) -> str:
     """Null-safe key-equality MERGE match condition (``t`` = stored table,
     ``s`` = collapsed source batch). ``<=>`` so NULL key components match
     NULL — the same key semantics ``merge_batch``'s groupBy gives them.
-    Pure string builder so the generated SQL is unit-testable without a
-    Delta runtime (tests/test_upsert.py). ``keys`` must be non-empty
+    Pure string builder, executed by :func:`merge_sql_plan` and
+    unit-tested as SQL (tests/test_upsert.py). ``keys`` must be non-empty
     (matching ``merge_batch``'s implicit contract) — an empty list would
     yield an empty string and malformed MERGE SQL downstream. Raises
     ``ValueError`` (not ``assert``, which ``python -O`` strips — ADVICE
@@ -322,9 +281,9 @@ def merge_newer_condition(order_by: list[str]) -> str:
     strictly greater on this one. Ties (all columns equal) are FALSE, so
     matched rows keep the stored value — the same tie-break direction as
     ``merge_batch``'s row_number dedup when ``order_by`` is a total
-    order. Pure string builder, unit-tested without Delta. ``order_by``
-    must be non-empty — an empty list would yield an empty string and
-    malformed MERGE SQL downstream. Raises ``ValueError`` (not
+    order. Pure string builder, executed by :func:`merge_sql_plan`.
+    ``order_by`` must be non-empty — an empty list would yield an empty
+    string and malformed MERGE SQL downstream. Raises ``ValueError`` (not
     ``assert``, which ``python -O`` strips — ADVICE r9).
 
     NULL order-key components are "oldest" (round 12, ADVICE r11): each
@@ -354,17 +313,16 @@ def merge_into_sql(
     keys: list[str],
     order_by: list[str],
 ) -> DataFrame:
-    """Pure-Parquet transactional MERGE runtime: EXECUTES the same
-    condition strings the Delta path feeds ``DeltaTable.merge``
-    (:func:`merge_match_condition` / :func:`merge_newer_condition`),
-    compiled into one full-outer-join plan over (stored state, collapsed
-    batch) and committed with the atomic versioned-dir swap
-    (``sinks.overwrite_table`` — readers never observe a partial table).
+    """Pure-Parquet last-writer-wins MERGE: the MERGE INTO condition
+    strings (:func:`merge_match_condition` /
+    :func:`merge_newer_condition`) compiled into one full-outer-join plan
+    over (stored state, collapsed batch) and committed with the atomic
+    versioned-dir swap (``sinks.overwrite_table`` — readers never observe
+    a partial table).
 
-    Semantics are exactly ``_merge_into_delta``'s last-writer-wins MERGE:
-    the batch collapses per key first, a matched stored row updates only
-    when the source is strictly newer on ``order_by`` (ties keep the
-    stored row), unmatched sources insert. The MERGE row algebra::
+    Semantics: the batch collapses per key first, a matched stored row
+    updates only when the source is strictly newer on ``order_by`` (ties
+    keep the stored row), unmatched sources insert. The MERGE row algebra::
 
         FROM t FULL OUTER JOIN s ON <match-condition>
         take s's row  WHEN s present AND (t absent OR <newer-condition>)
@@ -375,11 +333,8 @@ def merge_into_sql(
     ``<=>`` match keys may legitimately be NULL. One shuffle (the
     full-outer join on the match keys); O(table) rewrite per batch is
     the honest cost without a transactional format — at 100 TB partition
-    the table and rewrite only touched partitions, or use the Delta
-    backend. This runtime keeps ``_merge_into_delta``'s DeltaTable call
-    the only code in this tree the sandbox cannot execute, while the
-    generated MERGE conditions themselves run end-to-end (VERDICT r10
-    gap #3).
+    the table and rewrite only touched partitions
+    (:func:`merge_into_partitioned`).
     """
     spark = incoming.sparkSession
     collapsed = upsert_keep_newest(incoming, keys, order_by)
@@ -420,28 +375,6 @@ def merge_sql_plan(
             if c != "__p"
         ]
     )
-
-
-def _merge_into_delta(
-    spark, target: str, incoming: DataFrame, keys: list[str], order_by: list[str]
-) -> DataFrame:  # pragma: no cover - exercised only on Delta deployments
-    from delta.tables import DeltaTable
-
-    collapsed = upsert_keep_newest(incoming, keys, order_by)
-    if not DeltaTable.isDeltaTable(spark, target):
-        collapsed.write.format("delta").save(target)
-        return spark.read.format("delta").load(target)
-    dt = DeltaTable.forPath(spark, target)
-    match = merge_match_condition(keys)
-    newer = merge_newer_condition(order_by)
-    (
-        dt.alias("t")
-        .merge(collapsed.alias("s"), match)
-        .whenMatchedUpdateAll(condition=newer)
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return spark.read.format("delta").load(target)
 
 
 # ------------------------------------------------------------------
@@ -571,7 +504,7 @@ def _require_local(target: str, fn: str) -> str:
     local = _local_path(target)
     if local is None:
         raise ValueError(
-            f"{fn} needs a local/posix path; use backend='delta' or "
+            f"{fn} needs a local/posix path; use merge_into or "
             "merge_into_sql for object stores"
         )
     return local
