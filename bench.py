@@ -286,26 +286,26 @@ def _external_cpu_cores(
 def _stage_times_ms(spark, prefix: str) -> dict[str, int]:
     """Executor stage time (sum of task run time, ms) per job group with
     the given prefix, read from the in-process AppStatusStore (works
-    with spark.ui.enabled=false — the store always tracks). Stages are
-    deduplicated per group (a SKIPPED re-listing of a shared stage
-    reports 0 and the COMPLETE attempt is counted once). Read-only and
-    post-battery: never inside any timed region."""
+    with spark.ui.enabled=false — the store always tracks). A job's
+    ``stageIds`` also list the stages it skipped because an earlier job
+    already ran them, so each stage is counted once, for the group of
+    the lowest job id that lists it (the job that ran it). Read-only
+    and post-battery: never inside any timed region."""
     try:
         store = spark.sparkContext._jsc.sc().statusStore()
         jobs = store.jobsList(None)
+        jobs = sorted(
+            (jobs.apply(i) for i in range(jobs.size())), key=lambda j: j.jobId()
+        )
+        owned: set[int] = set()
         group_stages: dict[str, set[int]] = {}
-        for i in range(jobs.size()):
-            j = jobs.apply(i)
-            g = j.jobGroup()
-            if not g.isDefined():
-                continue
-            g = g.get()
-            if not g.startswith(prefix):
-                continue
+        for j in jobs:
             sids = j.stageIds()
-            group_stages.setdefault(g, set()).update(
-                sids.apply(k) for k in range(sids.size())
-            )
+            fresh = {sids.apply(k) for k in range(sids.size())} - owned
+            owned |= fresh
+            g = j.jobGroup()
+            if g.isDefined() and g.get().startswith(prefix):
+                group_stages.setdefault(g.get(), set()).update(fresh)
         cache: dict[int, int] = {}
         out: dict[str, int] = {}
         for g, sids in group_stages.items():

@@ -169,3 +169,92 @@ def test_load_contaminated_battery_is_still_retried(monkeypatch):
     assert calls == ["", "retry-"]
     assert first["reasons"] == ["load"] and first["loadavg_1m"] == 6.0
     assert env_after["loadavg_1m"] == 1.0
+
+
+class _Seq:
+    """A Scala ``Seq`` as py4j hands it over: ``size()`` and ``apply(i)``."""
+
+    def __init__(self, items):
+        self._items = list(items)
+
+    def size(self):
+        return len(self._items)
+
+    def apply(self, i):
+        return self._items[i]
+
+
+class _Opt:
+    def __init__(self, value):
+        self._value = value
+
+    def isDefined(self):
+        return self._value is not None
+
+    def get(self):
+        return self._value
+
+
+class _Job:
+    def __init__(self, job_id, group, stage_ids):
+        self._id, self._group, self._sids = job_id, group, stage_ids
+
+    def jobId(self):
+        return self._id
+
+    def jobGroup(self):
+        return _Opt(self._group)
+
+    def stageIds(self):
+        return _Seq(self._sids)
+
+
+class _Stage:
+    def __init__(self, ms):
+        self._ms = ms
+
+    def executorRunTime(self):
+        return self._ms
+
+
+def _spark_with_status_store(jobs, stage_ms):
+    class _Store:
+        def jobsList(self, _statuses):
+            return _Seq(jobs)
+
+        def lastStageAttempt(self, sid):
+            return _Stage(stage_ms[sid])
+
+    class _Sc:
+        def statusStore(self):
+            return _Store()
+
+    class _Jsc:
+        def sc(self):
+            return _Sc()
+
+    class _SparkContext:
+        _jsc = _Jsc()
+
+    class _Spark:
+        sparkContext = _SparkContext()
+
+    return _Spark()
+
+
+def test_stage_times_count_a_shared_stage_once():
+    """Stage 1 runs in group A's job and is listed again, skipped, by
+    group B's later job: its run time belongs to A only. Jobs are read
+    out of id order, and a group outside the prefix still owns the
+    stages its jobs ran."""
+    bench = _bench()
+    jobs = [
+        _Job(5, "bench:B", [1, 3]),
+        _Job(2, "bench:A", [1, 2]),
+        _Job(1, "other", [0]),
+        _Job(7, "bench:C", [0, 4]),
+        _Job(8, None, [5]),
+    ]
+    stage_ms = {0: 1000, 1: 100, 2: 20, 3: 3, 4: 4, 5: 5}
+    out = bench._stage_times_ms(_spark_with_status_store(jobs, stage_ms), "bench:")
+    assert out == {"bench:A": 120, "bench:B": 3, "bench:C": 4}

@@ -54,24 +54,18 @@ def test_text_ops_no_python(spark, sf_dir):
         assert_no_python_row_udf(df)
 
 
-def test_every_demo_plan_is_row_udf_free(spark, sf_dir):
+def test_every_demo_plan_is_row_udf_free(demo_sweep):
     """Sweep EVERY registered demo: no row-at-a-time Python (BatchEvalPython)
     may appear in any physical plan — Arrow paths (mapInPandas /
     ArrowEvalPython / FlatMapGroupsInPandas) are the only Python allowed.
-    Plan-only: nothing executes, so the sweep stays fast."""
-    skip = {
-        # these write real side outputs (CSV fixtures / Derby / parquet) at
-        # plan-construction time; their plans are covered by their own demos
-        "q_ingest_gtfs_static", "q_jdbc_roundtrip", "q_sink_roundtrip",
-        # iterative: run actions during construction (covered by own tests)
-        "q_dedup_clusters", "q_dedup_clusters_twophase",
-    }
+    Plan-only: nothing executes, so the sweep stays fast. The plans are
+    built once per session by the ``demo_sweep`` fixture (conftest.py),
+    which also holds the skip set."""
     checked = 0
-    for name, d in sorted(load_registry().items()):
-        if name in skip:
+    for name, (_, row_udf) in demo_sweep.items():
+        if row_udf == "skipped":
             continue
-        df = d.fn(spark, sf_dir)
-        assert_no_python_row_udf(df)
+        assert row_udf is None, f"{name}: {row_udf}"
         checked += 1
     assert checked >= 90  # the sweep must actually cover the registry
 

@@ -237,13 +237,6 @@ def q_upsert_merge_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: process-lifetime CAS backend per sf_dir for q_upsert_merge_retry —
-#: the in-memory manifest store must be the SAME instance across
-#: re-invocations for the demo to be a fixed point (a fresh instance
-#: would not see the prior invocation's committed manifest).
-_RETRY_BACKENDS: dict[str, object] = {}
-
-
 @demo(
     "q_upsert_merge_retry",
     sql="""
@@ -257,108 +250,75 @@ _RETRY_BACKENDS: dict[str, object] = {}
     """,
 )
 def q_upsert_merge_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Optimistic-concurrency MERGE end-to-end (round 18, VERDICT r17
-    ask #2): two writers race on the manifest-protocol table through
-    the true-CAS commit backend, the loser's conditional put is
-    REJECTED atomically (``CommitConflictError``), and
+    """Optimistic-concurrency MERGE end-to-end: two writers race on the
+    manifest-protocol table, the loser's commit is refused by the
+    touched-bucket detector (``ConcurrentWriteError``), and
     ``merge_with_retry`` recomputes against the winner's advanced state
-    and converges — the Delta/Iceberg commit-retry loop the reference
-    delegates to Postgres row locks (``realtime_extractor.py:205-230``'s
+    and converges — the commit-retry loop standing in for the
+    reference's Postgres row locks (``realtime_extractor.py:205-230``'s
     ``ON CONFLICT DO UPDATE`` serializes writers inside the database;
-    this runtime serializes them at the manifest swap).
+    this runtime detects them at the manifest swap).
 
     Choreography (deterministic — single-threaded, the race is staged
-    at the exact commit point): events split three ways by event_id.
-    Batch 0 creates the table; writer A merges batch 1 via
-    ``merge_with_retry``, and the CAS backend hands the race to writer
-    B exactly once — B's REAL merge of batch 2 commits inside A's
-    conditional-put window (after A's detector re-read, before A's
-    swap), so A's first attempt fails the conditional put with a
-    CommitConflictError, and the retry recomputes A's MERGE on top of
-    B's committed rows. Because (ts, event_id) totally orders
-    observations, strictly-newer-wins MERGE converges to
-    keep-newest-per-key over ALL events regardless of commit order —
-    the oracle (identical to q_upsert_merge_parquet's), which a lost
-    update (B's rows dropped by A committing from its stale snapshot),
-    a phantom retry (A's batch applied twice), or a broken conditional
-    put (stale expected accepted) would each diverge from.
-    Re-invocations re-arm the race and re-merge onto committed state
-    through the SAME backend instance — a fixed point, so the demo is
-    idempotent within a process."""
+    at the commit point): events split three ways by event_id. Batch 0
+    creates the table; writer A merges batch 1 via ``merge_with_retry``
+    with a ``_before_commit`` hook that, on A's first attempt only, runs
+    writer B's REAL merge of batch 2. B commits after A has published
+    its version dirs and before A re-reads the manifest, so buckets A
+    rewrote have advanced, A's first attempt raises, and the retry
+    recomputes A's MERGE on top of B's committed rows. Because (ts,
+    event_id) totally orders observations, strictly-newer-wins MERGE
+    converges to keep-newest-per-key over ALL events regardless of
+    commit order — the oracle (identical to q_upsert_merge_parquet's),
+    which a lost update (B's rows dropped by A committing from its
+    stale read) or a phantom retry (A's batch applied twice) would each
+    diverge from. Re-invocations re-run the race and re-merge onto the
+    committed state — a fixed point, so the demo is idempotent within a
+    process."""
     import tempfile
 
     from transit_efficiency_analysis_spark.demo._tmpcache import _RESULT_CACHE
-    from transit_efficiency_analysis_spark.operators import upsert as U
-    from transit_efficiency_analysis_spark.operators.commit_backend import (
-        InMemoryCASManifestBackend,
+    from transit_efficiency_analysis_spark.operators.upsert import (
+        merge_into_partitioned,
+        merge_with_retry,
+        sweep_orphans,
     )
-
-    class _LoseRaceOnceCAS(InMemoryCASManifestBackend):
-        """Shipped CAS backend that hands the race to a rival writer
-        exactly once per arming: the first guarded swap after arming
-        gets the rival's REAL merge committed ahead of it (through
-        this same backend — the rival slot is cleared first, so the
-        rival's own guarded swap passes through un-raced), making the
-        original swap's retained snapshot stale and the conditional
-        put fail."""
-
-        def __init__(self) -> None:
-            super().__init__()
-            self._rival = None
-
-        def arm(self, rival) -> None:
-            self._rival = rival
-
-        def swap_manifest(self, root, manifest, expected=None, token=None):
-            if expected is not None and self._rival is not None:
-                rival, self._rival = self._rival, None
-                rival()
-            super().swap_manifest(root, manifest, expected=expected, token=token)
 
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "ts", "value"
     )
-    # keyed per sf_dir, like q_upsert_merge_parquet: the table AND its
-    # in-memory manifest must pair up across invocations
+    # keyed per sf_dir, like q_upsert_merge_parquet
     key = f"upsert_merge_retry_{sf_dir.strip('/').replace('/', '_')}"
     d = _RESULT_CACHE.get(key)
     if d is None:
         d = tempfile.mkdtemp(prefix="demo_merge_retry_")
         _RESULT_CACHE[key] = d
-    be = _RETRY_BACKENDS.get(key)
-    if be is None:
-        be = _LoseRaceOnceCAS()
-        _RETRY_BACKENDS[key] = be
     target = f"{d}/state"
     keys = ["user_id", "event_type"]
     order_by = ["ts", "event_id"]
     batch = [e.where(F.col("event_id") % 3 == i) for i in range(3)]
 
-    prev = U._COMMIT_BACKEND
-    U._COMMIT_BACKEND = be
-    try:
-        U.merge_into_partitioned(
-            target, batch[0], keys, order_by, num_buckets=16,
-        )
-        gen_before = be.generation(target)
-        be.arm(lambda: U.merge_into_partitioned(
-            target, batch[2], keys, order_by, num_buckets=16,
-        ))
-        out = U.merge_with_retry(
-            target, batch[1], keys, order_by, num_buckets=16,
-        )
-        # the race genuinely ran: rival commit + loser's retried commit
-        # both advanced the generation; the loser's REJECTED put did not
-        assert be.generation(target) == gen_before + 2, (
-            "staged commit race did not execute as choreographed"
-        )
-        # the loser's rejected attempt left unreferenced version dirs;
-        # reclaim them (writers are quiesced — single-threaded demo) so
-        # re-invocations don't accumulate orphan sets. `out` reads only
-        # manifest-named dirs, which the sweep never touches.
-        U.sweep_orphans(target)
-    finally:
-        U._COMMIT_BACKEND = prev
-    # `out` reads the final manifest's version dirs by explicit path
-    # (resolved eagerly above), so collection needs no backend install
+    merge_into_partitioned(target, batch[0], keys, order_by, num_buckets=16)
+    attempts = []
+
+    def rival_commits_first():
+        attempts.append(1)
+        if len(attempts) == 1:
+            merge_into_partitioned(
+                target, batch[2], keys, order_by, num_buckets=16,
+            )
+
+    out = merge_with_retry(
+        target, batch[1], keys, order_by, num_buckets=16,
+        _before_commit=rival_commits_first,
+    )
+    # the race genuinely ran: A's first attempt lost, the second committed
+    assert len(attempts) == 2, (
+        "staged commit race did not execute as choreographed"
+    )
+    # the lost attempt left unreferenced version dirs; reclaim them
+    # (writers are quiesced — single-threaded demo) so re-invocations
+    # don't accumulate orphan sets. `out` reads only manifest-named
+    # dirs, which the sweep never touches.
+    sweep_orphans(target)
     return out

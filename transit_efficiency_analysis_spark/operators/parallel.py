@@ -21,18 +21,29 @@ from pyspark.sql import DataFrame
 
 
 def _has_exchange(df: DataFrame) -> bool:
-    """True iff a node of ``df``'s pre-adaptive physical plan is an
-    ``Exchange``. Each node is tested with ``Class.isInstance``, so a
-    column name or literal that merely contains the word cannot match."""
+    """True iff a node of ``df``'s physical plan is an ``Exchange``.
+
+    The plan walked is the executed one, after the planner has inserted
+    the exchanges of joins and aggregates; under AQE it is an
+    ``AdaptiveSparkPlanExec`` leaf whose ``initialPlan`` holds them
+    before any stage has run. Building it submits no job. Each node is
+    tested with ``Class.isInstance``, so a column name or literal that
+    merely contains the word cannot match."""
     jvm = df.sparkSession._jvm
     exchange = jvm.java.lang.Class.forName(
         "org.apache.spark.sql.execution.exchange.Exchange"
     )
-    stack = [df._jdf.queryExecution().sparkPlan()]
+    adaptive = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec"
+    )
+    stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
         if exchange.isInstance(node):
             return True
+        if adaptive.isInstance(node):
+            stack.append(node.initialPlan())
+            continue
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
     return False
@@ -51,7 +62,7 @@ def _scan_partitions(df: DataFrame) -> int | None:
     Exchange gets its parallelism from that shuffle (shuffle.partitions
     / AQE), so the scan-parallelism floor has nothing to fix. Returns
     None for such plans (callers treat None as "already parallel");
-    ``sparkPlan`` here is the pre-adaptive physical plan, computed
+    ``_has_exchange`` decides on the planned exchanges, computed
     driver-side with no job submission.
     """
     if _has_exchange(df):

@@ -21,18 +21,25 @@ handles skewed keys (a hot trip_id) via skew-join splitting.
 
 from __future__ import annotations
 
+import json
+import os
+import re
+import shutil
+import uuid
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 class ConcurrentWriteError(RuntimeError):
     """A concurrent writer won the commit race: the manifest advanced
-    (touched-bucket detector) between this operation's read snapshot
-    and its commit. The table is untouched; the loser's staged version
-    dirs remain as sweepable orphans. A RuntimeError subclass, so
+    between this operation's read and its commit, in a bucket a merge
+    rewrote or anywhere for a compaction. It is the only commit
+    conflict the manifest protocol raises. The table is untouched; a
+    losing merge's published version dirs remain as sweepable orphans,
+    and a losing compaction publishes none. A RuntimeError subclass, so
     callers catching RuntimeError keep working; :func:`merge_with_retry`
-    and :func:`filter_with_retry` catch it for Delta-style
-    recompute-and-retry."""
+    and :func:`filter_with_retry` catch it to recompute and retry."""
 
 
 def _ordering(cols: list[str], descending: bool) -> list[Column]:
@@ -201,8 +208,6 @@ def _target_exists(spark, target: str) -> bool:
     file-scheme targets, Hadoop ``FileSystem.exists`` for object-store URIs
     (the same FS abstraction the read would use, so the probe and the read
     agree on path resolution)."""
-    import os
-
     from transit_efficiency_analysis_spark.sinks import _local_path
 
     local = _local_path(target)
@@ -391,11 +396,10 @@ def merge_sql_plan(
 #
 # Readers list nothing: they resolve the manifest and read the named
 # version dirs. A merge or compaction writes its output to a staging
-# dir, publishes each rewritten bucket as a NEW version dir (a rename;
-# on an object store, a prefix written once and never mutated) and then
-# commits every rewritten bucket in one manifest swap (locally
-# os.replace; on S3/GCS a conditional put). A reader sees batch N in
-# every bucket or batch N-1 in every bucket.
+# dir, publishes each rewritten bucket as a NEW version dir (os.rename
+# on the same filesystem) and then commits every rewritten bucket in one
+# manifest swap (temp file, fsync, os.replace, fsync of the directory).
+# A reader sees batch N in every bucket or batch N-1 in every bucket.
 #
 # Concurrent writers are detected, not locked out. Merge and compaction
 # re-read the manifest immediately before their swap and base the
@@ -404,12 +408,13 @@ def merge_sql_plan(
 # vanished meanwhile they raise ConcurrentWriteError; the loser's
 # version dirs stay as unreferenced orphans (invisible to readers,
 # reclaimed by sweep_orphans) and committed data is never destroyed.
-# The remaining lost-update window is the re-read -> swap gap; a
-# CAS-capable commit backend (operators/commit_backend.py) closes it
-# with a conditional put.
+# The remaining lost-update window is the re-read -> swap gap, a few
+# microseconds: POSIX has no conditional replace to close it.
 
 _BUCKET_COL = "p_bucket"
 _META_NAME = ".merge_meta.json"
+_MANIFEST_NAME = ".manifest.json"
+_VROOT = ".v"
 
 
 def _bucket_expr(keys: list[str], num_buckets: int) -> Column:
@@ -423,46 +428,25 @@ def _bucket_expr(keys: list[str], num_buckets: int) -> Column:
     )
 
 
-def _write_meta_once(
-    local: str,
-    num_buckets: int,
-    keys: list[str],
-    order_by: list[str],
-    schema_json: dict,
-) -> None:
-    """Atomically write a fresh table's ``.merge_meta.json`` (tmp +
-    ``os.replace``). The stored-row schema (no p_bucket) lets the
-    empty-table paths return a typed empty relation. Meta is written
-    FIRST: a crash before the first manifest swap leaves meta-only,
-    which reads as an empty table, and the next merge recreates it.
-
-    Durability mirrors ``PosixManifestBackend.swap_manifest``: the file
-    contents are fsynced BEFORE the rename (ext4/xfs may otherwise
-    persist the rename with empty contents after power loss, and a torn
-    meta makes every later merge/filter/read fail on ``json.load``) and
-    the parent directory AFTER it; a failed write removes its temp
-    file."""
-    import json
-    import os
-    import uuid
-
-    meta = {
-        "num_buckets": num_buckets,
-        "keys": keys,
-        "order_by": order_by,
-        "schema": schema_json,
-        "commit": "manifest",
-    }
-    tmp_meta = os.path.join(local, f".merge_meta_{uuid.uuid4().hex[:12]}.tmp")
+def _write_json_durably(local: str, name: str, obj) -> None:
+    """Atomically replace ``<local>/<name>`` with ``obj`` as JSON: write
+    a temp file, fsync it, ``os.replace`` it over ``name``, then fsync
+    the directory. The contents are fsynced BEFORE the rename (ext4/xfs
+    may otherwise persist the rename with empty contents after power
+    loss, and a torn file makes every later merge/filter/read fail on
+    ``json.load``) and the directory AFTER it (the rename itself). A
+    failed write removes its temp file."""
+    stem = os.path.splitext(name)[0]
+    tmp = os.path.join(local, f"{stem}_{uuid.uuid4().hex[:12]}.tmp")
     try:
-        with open(tmp_meta, "w") as f:
-            json.dump(meta, f)
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
             f.flush()
             os.fsync(f.fileno())
-        os.replace(tmp_meta, os.path.join(local, _META_NAME))
+        os.replace(tmp, os.path.join(local, name))
     except BaseException:
         try:
-            os.unlink(tmp_meta)
+            os.unlink(tmp)
         except OSError:
             pass
         raise
@@ -476,14 +460,33 @@ def _write_meta_once(
         pass
 
 
+def _write_meta_once(
+    local: str,
+    num_buckets: int,
+    keys: list[str],
+    order_by: list[str],
+    schema_json: dict,
+) -> None:
+    """Durably write a fresh table's ``.merge_meta.json``. The
+    stored-row schema (no p_bucket) lets the empty-table paths return a
+    typed empty relation. Meta is written FIRST: a crash before the
+    first manifest swap leaves meta-only, which reads as an empty
+    table, and the next merge recreates it."""
+    meta = {
+        "num_buckets": num_buckets,
+        "keys": keys,
+        "order_by": order_by,
+        "schema": schema_json,
+        "commit": "manifest",
+    }
+    _write_json_durably(local, _META_NAME, meta)
+
+
 def _read_meta(local: str, target: str) -> dict | None:
     """The table's meta, or None when no merge has created one. A meta
     without ``"commit": "manifest"`` belongs to a table written by the
     retired symlink commit protocol (``p_bucket=N`` links into ``.v/``);
     it is rejected rather than read as empty or overwritten."""
-    import json
-    import os
-
     try:
         with open(os.path.join(local, _META_NAME)) as f:
             meta = json.load(f)
@@ -510,56 +513,58 @@ def _require_local(target: str, fn: str) -> str:
     return local
 
 
-#: Test/deployment seam: set to a ManifestCommitBackend instance to
-#: route every manifest storage primitive through it; None means the
-#: POSIX default.
-_COMMIT_BACKEND = None
+def _read_manifest(local: str) -> dict[int, int]:
+    """The committed ``bucket -> version`` map; {} when no commit has
+    reached the table yet."""
+    path = os.path.join(local, _MANIFEST_NAME)
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return {int(k): int(v) for k, v in json.load(f).items()}
 
 
-def _backend():
-    if _COMMIT_BACKEND is not None:
-        return _COMMIT_BACKEND
-    from transit_efficiency_analysis_spark.operators.commit_backend import (
-        POSIX_BACKEND,
+def _write_manifest(local: str, manifest: dict[int, int]) -> None:
+    """THE commit: every bucket of ``manifest`` becomes visible at once."""
+    _write_json_durably(
+        local, _MANIFEST_NAME, {str(b): v for b, v in sorted(manifest.items())}
     )
 
-    return POSIX_BACKEND
+
+def _version_path(local: str, bucket: int, version: int) -> str:
+    return os.path.join(local, _VROOT, f"b{bucket}_v{version}")
 
 
-def _read_manifest(local: str) -> dict[int, int]:
-    return _backend().read_manifest(local)
+def _list_versions(local: str, bucket: int) -> list[tuple[int, str]]:
+    """Every published ``(version, path)`` of ``bucket``, committed or
+    orphaned, ascending."""
+    vroot = os.path.join(local, _VROOT)
+    if not os.path.isdir(vroot):
+        return []
+    pat = re.compile(rf"^b{bucket}_v(\d+)$")
+    return sorted(
+        (int(m.group(1)), os.path.join(vroot, name))
+        for name in os.listdir(vroot)
+        if (m := pat.match(name))
+    )
 
 
-def _read_snapshot(local: str) -> tuple[object | None, dict[int, int]]:
-    """``(token, manifest)`` — the commit path's read form: the token
-    (ETag/generation, backend-dependent, None on POSIX) pins the exact
-    read the commit is based on, for :func:`_write_manifest`'s
-    identity-compare conditional put (value-compare CAS is ABA-prone;
-    token-compare is what S3 ``If-Match`` does)."""
-    return _backend().read_snapshot(local)
-
-
-def _write_manifest(
-    local: str,
-    manifest: dict[int, int],
-    expected: dict[int, int] | None = None,
-    token: object | None = None,
-) -> None:
-    """Atomic whole-table commit point. ``expected``/``token`` (the
-    state this commit was computed from, re-read immediately before the
-    call, and that read's change identifier) are no-ops on the POSIX
-    backend but let a CAS-capable object-store backend turn the
-    protocol's detector into true compare-and-swap serialization
-    (commit_backend.ManifestCommitBackend.swap_manifest)."""
-    _backend().swap_manifest(local, manifest, expected=expected, token=token)
+def _publish(local: str, staged: str, bucket: int, committed: int) -> int:
+    """Rename a staged bucket dir to a new write-once version dir and
+    return its version: one above both ``committed`` and every version
+    dir of the bucket still on disk, orphans included, so a crashed
+    writer's id is never reused."""
+    listed = _list_versions(local, bucket)
+    version = max(listed[-1][0] if listed else 0, committed) + 1
+    os.makedirs(os.path.join(local, _VROOT), exist_ok=True)
+    os.rename(staged, _version_path(local, bucket, version))
+    return version
 
 
 def _manifest_dirs(
     local: str, manifest: dict[int, int], buckets=None
 ) -> list[str]:
-    be = _backend()
     return [
-        be.version_path(local, b, v)
+        _version_path(local, b, v)
         for b, v in sorted(manifest.items())
         if buckets is None or b in buckets
     ]
@@ -574,7 +579,7 @@ def _empty_table(spark, meta: dict) -> DataFrame:
 def read_partitioned(spark, target: str) -> DataFrame:
     """Read a :func:`merge_into_partitioned` table: the committed
     version dirs resolved through the manifest — zero directory
-    listing, the object-store read path. A table with no committed
+    listing. A table with no committed
     rows (an empty first batch, or a compaction that dropped every
     bucket) returns a typed empty relation from the meta's stored
     schema."""
@@ -601,18 +606,19 @@ def sweep_orphans(target: str) -> list[str]:
     returned list names only dirs that are actually gone."""
     local = _require_local(target, "sweep_orphans")
     _read_meta(local, target)
-    be = _backend()
-    if not be.manifest_exists(local):
+    if not os.path.exists(os.path.join(local, _MANIFEST_NAME)):
         raise ValueError(
             f"table at {target} is not manifest-protocol: it has no "
             "committed manifest to sweep against"
         )
     manifest = _read_manifest(local)
     live = {f"b{b}_v{v}" for b, v in manifest.items()}
+    vroot = os.path.join(local, _VROOT)
     deleted = []
-    for name, path in be.list_all_versions(local):
+    for name in sorted(os.listdir(vroot)) if os.path.isdir(vroot) else []:
         if name not in live:
-            be.delete_version_path(path, strict=True)
+            path = os.path.join(vroot, name)
+            shutil.rmtree(path)
             deleted.append(path)
     return deleted
 
@@ -680,10 +686,6 @@ def merge_into_partitioned(
     before the manifest re-read — the widest point of the (detected)
     concurrent-writer window.
     """
-    import os
-    import shutil
-    import uuid
-
     from pyspark import StorageLevel
 
     if num_buckets < 1:
@@ -751,7 +753,6 @@ def merge_into_partitioned(
                 collapsed.schema.jsonValue(),
             )
 
-        be = _backend()
         ours: dict[int, int] = {}
         try:
             for b in touched:
@@ -762,13 +763,7 @@ def merge_into_partitioned(
                     raise RuntimeError(
                         f"merge produced no output for touched bucket {b}"
                     )
-                listed = be.list_versions(local, b)
-                version = (
-                    max(listed[-1][0] if listed else 0, manifest.get(b, 0))
-                    + 1
-                )
-                be.publish_version(local, part, b, version)
-                ours[b] = version
+                ours[b] = _publish(local, part, b, manifest.get(b, 0))
             # Re-read the manifest immediately before the swap: untouched
             # buckets keep the CURRENT entries (a concurrent commit to
             # disjoint buckets survives) and touched buckets take this
@@ -779,7 +774,7 @@ def merge_into_partitioned(
             # compaction filtered, so fail fast instead.
             if _before_commit is not None:
                 _before_commit()
-            snap_token, current = _read_snapshot(local)
+            current = _read_manifest(local)
             conflicts = [
                 b for b in touched if current.get(b, 0) != manifest.get(b, 0)
             ]
@@ -793,23 +788,19 @@ def merge_into_partitioned(
                 )
             new_manifest = dict(current)
             new_manifest.update(ours)
-            # THE commit; `expected` + `token` let a CAS backend
-            # serialize on the exact `current` read
-            _write_manifest(
-                local, new_manifest, expected=current, token=snap_token
-            )
+            _write_manifest(local, new_manifest)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
         # Post-commit cleanup, bounded by OUR read snapshot: only
         # versions <= what this merge read (and therefore superseded)
-        # are deleted — a concurrent writer's newer dir is never
-        # touched. Orphans from a crash between publish and swap are
-        # left for sweep_orphans: deleting them here would need proof
-        # that no racing writer is about to commit them.
+        # are deleted, best effort — a concurrent writer's newer dir is
+        # never touched. Orphans from a crash between publish and swap
+        # are left for sweep_orphans: deleting them here would need
+        # proof that no racing writer is about to commit them.
         for b in touched:
-            for v, stale in be.list_versions(local, b):
+            for v, stale in _list_versions(local, b):
                 if v <= manifest.get(b, 0):
-                    be.delete_version_path(stale, strict=False)
+                    shutil.rmtree(stale, ignore_errors=True)
     finally:
         collapsed.unpersist()
 
@@ -832,17 +823,16 @@ def merge_with_retry(
     **kwargs,
 ) -> DataFrame:
     """Optimistic concurrency over :func:`merge_into_partitioned`: when
-    a concurrent writer wins the commit race — the protocol's
-    touched-bucket detector (:class:`ConcurrentWriteError`) or a CAS
-    backend's conditional put
-    (:class:`~..commit_backend.CommitConflictError`) — rerun the merge
-    from a FRESH manifest snapshot. Correctness never leans on the
-    failed attempt: its staged version dirs are unreferenced orphans
-    (storage only, invisible to readers, reclaimed by
-    :func:`sweep_orphans`), and the retry RECOMPUTES the MERGE against
-    the advanced table state, so the loser's rows are applied on top of
-    the winner's instead of over a stale snapshot — the Delta/Iceberg
-    commit-retry loop, expressed over this runtime.
+    a concurrent writer advances a bucket this merge rewrote before its
+    commit (the touched-bucket detector raises
+    :class:`ConcurrentWriteError`), rerun the merge from a FRESH
+    manifest read. Correctness never leans on the failed attempt: its
+    staged version dirs are unreferenced orphans (storage only,
+    invisible to readers, reclaimed by :func:`sweep_orphans`), and the
+    retry RECOMPUTES the MERGE against the advanced table state, so the
+    loser's rows are applied on top of the winner's instead of over a
+    stale read — the Delta/Iceberg commit-retry loop, expressed over
+    this runtime.
 
     Bounded: after ``retries`` conflicts the last error propagates — a
     table hot enough to lose every retry needs writer coordination (or
@@ -850,18 +840,15 @@ def merge_with_retry(
     propagate immediately on the first attempt.
 
     ``incoming`` is re-executed per attempt (it is a plan, not data);
-    side-effecting sources should be staged to parquet first."""
-    from transit_efficiency_analysis_spark.operators.commit_backend import (
-        CommitConflictError,
-    )
-
+    side-effecting sources should be staged to parquet first.
+    ``kwargs`` reach every attempt, ``_before_commit`` included."""
     attempt = 0
     while True:
         try:
             return merge_into_partitioned(
                 target, incoming, keys=keys, order_by=order_by, **kwargs
             )
-        except (ConcurrentWriteError, CommitConflictError):
+        except ConcurrentWriteError:
             attempt += 1
             if attempt > retries:
                 raise
@@ -875,26 +862,20 @@ def filter_with_retry(
     **kwargs,
 ) -> DataFrame:
     """:func:`merge_with_retry`'s compaction twin: when a concurrent
-    merge wins the race against a :func:`filter_partitioned` compaction
-    — the protocol detector (``ConcurrentWriteError``) or a CAS
-    backend's conditional put (``CommitConflictError``) — rerun the
-    compaction from a fresh snapshot. Safe by construction: a
+    merge commits during a :func:`filter_partitioned` compaction (the
+    manifest changed, so it raises :class:`ConcurrentWriteError`),
+    rerun the compaction from a fresh read. Safe by construction: a
     compaction is just a filter, so re-applying ``condition`` to the
     ADVANCED table state (the winner's rows included) is exactly the
-    intended result; the failed attempt's staged version dirs are
-    sweepable orphans, same as a lost merge. Bounded like the merge
-    form: after ``retries`` conflicts the last error propagates —
-    compaction racing merges persistently belongs in a maintenance
-    window, not a longer loop."""
-    from transit_efficiency_analysis_spark.operators.commit_backend import (
-        CommitConflictError,
-    )
-
+    intended result; the failed attempt's staged dirs are removed and
+    commit nothing. Bounded like the merge form: after ``retries``
+    conflicts the last error propagates — compaction racing merges
+    persistently belongs in a maintenance window, not a longer loop."""
     attempt = 0
     while True:
         try:
             return filter_partitioned(spark, target, condition, **kwargs)
-        except (ConcurrentWriteError, CommitConflictError):
+        except ConcurrentWriteError:
             attempt += 1
             if attempt > retries:
                 raise
@@ -933,10 +914,6 @@ def filter_partitioned(
     never a concurrently committed one. ``_before_commit`` is a test
     seam invoked between the staging write and the manifest re-read.
     """
-    import os
-    import shutil
-    import uuid
-
     local = _require_local(target, "filter_partitioned")
     meta = _read_meta(local, target)
     if meta is None:
@@ -964,12 +941,10 @@ def filter_partitioned(
         .mode("overwrite")
         .parquet(staging)
     )
-    be = _backend()
     try:
         if _before_commit is not None:
             _before_commit()
-        snap_token, current = _read_snapshot(local)
-        if current != manifest:
+        if _read_manifest(local) != manifest:
             raise ConcurrentWriteError(
                 "filter_partitioned: concurrent merge detected — the "
                 "manifest advanced during compaction; the table is "
@@ -979,23 +954,16 @@ def filter_partitioned(
         for b in sorted(manifest):
             part = os.path.join(staging, f"{_BUCKET_COL}={b}")
             if os.path.isdir(part):
-                listed = be.list_versions(local, b)
-                version = (
-                    max(listed[-1][0] if listed else 0, manifest[b]) + 1
-                )
-                be.publish_version(local, part, b, version)
-                new_manifest[b] = version
+                new_manifest[b] = _publish(local, part, b, manifest[b])
             # else: every row filtered away — the bucket has no entry
             # in the new manifest; its old versions go in cleanup
-        _write_manifest(
-            local, new_manifest, expected=current, token=snap_token
-        )
+        _write_manifest(local, new_manifest)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     for b in manifest:
-        for v, stale in be.list_versions(local, b):
+        for v, stale in _list_versions(local, b):
             if v <= manifest[b] and v != new_manifest.get(b):
-                be.delete_version_path(stale, strict=False)
+                shutil.rmtree(stale, ignore_errors=True)
     if not new_manifest:
         return _empty_table(spark, meta)
     return spark.read.parquet(*_manifest_dirs(local, new_manifest))
