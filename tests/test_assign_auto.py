@@ -1,14 +1,15 @@
-"""``assign="auto"`` resolution (round 15): the operator default picks
-fold vs arrow on the MEASURED nK crossover instead of asking every
-caller to know the regime.
+"""The engine picks the IVF/SemDeDup assignment form, fold vs arrow, on
+the MEASURED nK crossover from the caller's row count; no caller picks
+a form.
 
 Contract under test (operators/similarity.py ``_resolve_assign`` /
 ``_AUTO_ARROW_MIN_NK``):
 
-- explicit modes pass through untouched (auto never overrides a choice);
-- without ``n_rows`` (no catalog stat) auto NEVER counts the corpus and
-  stays on the fold — the plan-shape-safe form whose arithmetic the
-  demo oracles mirror;
+- no public operator takes a form selector: ``n_rows`` is the only
+  input that moves the pick;
+- without ``n_rows`` (no catalog stat) the corpus is NEVER counted and
+  the fold runs — the plan-shape-safe form whose arithmetic the demo
+  oracles mirror;
 - with a stat, arrow only at ``n_rows × n_centroids >=`` the threshold,
   which sits at the lowest PROVEN arrow-win point (16M dots, the
   r15 battery's 16× / K=500 cell), never inside the measured mixed
@@ -16,8 +17,8 @@ Contract under test (operators/similarity.py ``_resolve_assign`` /
   "Round-15" auto-threshold grid);
 - resolution can never change RESULTS: both branches are bit-equal on
   finite inputs (the arrow twin's IEEE-sequence contract, pinned in
-  tests/test_round15_fixes.py) — auto changes only the physical form
-  of the assignment stage, which the plan assertions here observe.
+  tests/test_round15_fixes.py) — the pick changes only the physical
+  form of the assignment stage, which the plan assertions here observe.
 """
 
 from __future__ import annotations
@@ -35,30 +36,39 @@ from transit_efficiency_analysis_spark.operators.similarity import (
 
 
 def test_resolve_assign_rules():
-    # explicit modes pass through
-    for mode in ("fold", "arrow"):
-        assert _resolve_assign(mode, 10**12, 500) == mode
-        assert _resolve_assign(mode, None, 8) == mode
     # no stat → fold, regardless of K
-    assert _resolve_assign("auto", None, 10**6) == "fold"
+    assert _resolve_assign(None, 10**6) == "fold"
     # below / at / above the measured threshold
     k = 500
     below = (_AUTO_ARROW_MIN_NK - 1) // k
-    assert _resolve_assign("auto", below, k) == "fold"
+    assert _resolve_assign(below, k) == "fold"
     at = -(-_AUTO_ARROW_MIN_NK // k)  # ceil
-    assert _resolve_assign("auto", at, k) == "arrow"
-    assert _resolve_assign("auto", 10**9, 30_000) == "arrow"
+    assert _resolve_assign(at, k) == "arrow"
+    assert _resolve_assign(10**9, 30_000) == "arrow"
+
+
+def test_no_public_operator_takes_a_form_selector():
+    """The ten caller-set form selectors are gone: no public function of
+    the similarity and dedup operators takes ``assign``,
+    ``bucket_assign`` or ``reuse`` — the engine picks from ``n_rows``."""
+    import inspect
+
+    from transit_efficiency_analysis_spark.operators import dedup, similarity
+
+    for mod in (similarity, dedup):
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("_") or fn.__module__ != mod.__name__:
+                continue
+            params = set(inspect.signature(fn).parameters)
+            assert not params & {"assign", "bucket_assign", "reuse"}, name
 
 
 def test_ivf_centroids_auto_default(spark, sf_dir):
-    """ivf_centroids carries the same auto surface (its per-Lloyd-round
-    assignment is the same n × K shape); stat-less default must plan
-    the fold, a big stat the arrow twin."""
-    import inspect
-
+    """ivf_centroids picks its per-Lloyd-round form the same way (the
+    assignment is the same n × K shape): no stat plans the fold, a big
+    stat the arrow twin."""
     from transit_efficiency_analysis_spark.sources.registry import load_table
 
-    assert inspect.signature(ivf_centroids).parameters["assign"].default == "auto"
     e = load_table(spark, sf_dir, "embeddings")
     fold_df = ivf_centroids(e, "vec_id", "embedding", 4, lloyd_rounds=1)
     assert "MapInArrow" not in _plan(fold_df)
@@ -89,8 +99,8 @@ def _plan(df) -> str:
 
 
 def test_auto_without_stat_plans_the_fold(spark, sf_dir):
-    """Demo parameterization (no n_rows): the auto default must produce
-    the fold plan — zero Python stages in the assignment."""
+    """Demo parameterization (no n_rows): the pick must produce the fold
+    plan — zero Python stages in the assignment."""
     from transit_efficiency_analysis_spark.sources.registry import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -102,7 +112,7 @@ def test_auto_without_stat_plans_the_fold(spark, sf_dir):
                        lloyd_rounds=1, threshold=0.3),
     ):
         assert "MapInArrow" not in _plan(df), (
-            "auto without a catalog stat must stay on the interpreted fold"
+            "without a catalog stat the interpreted fold must run"
         )
 
 
@@ -120,12 +130,9 @@ def test_auto_with_large_stat_plans_arrow_and_matches_fold(spark, sf_dir):
         e, "vec_id", "embedding", n_centroids=4, n_probe=2, k=2, n_rows=big
     )
     assert "MapInArrow" in _plan(auto_arrow), (
-        "auto past the threshold must pick the Arrow twin"
+        "a stat past the threshold must pick the Arrow twin"
     )
-    fold = ivf_topk(
-        e, "vec_id", "embedding", n_centroids=4, n_probe=2, k=2,
-        assign="fold",
-    )
+    fold = ivf_topk(e, "vec_id", "embedding", n_centroids=4, n_probe=2, k=2)
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
     assert sorted(auto_arrow.collect(), key=key) == sorted(
         fold.collect(), key=key
@@ -156,8 +163,8 @@ def test_auto_semantic_with_large_stat_plans_arrow(spark, sf_dir):
 
 def test_sizing_count_feeds_auto(spark, sf_dir):
     """target_cell_size with no n_rows takes one count() for sizing —
-    that count must double as auto's stat (tiny corpus → small nK →
-    fold), not leave auto blind."""
+    that count must double as the knee's stat (tiny corpus → small nK →
+    fold), not leave the pick blind."""
     from transit_efficiency_analysis_spark.sources.registry import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -170,8 +177,8 @@ def test_sizing_count_feeds_auto(spark, sf_dir):
 
 def test_registered_ivf_demos_plan_the_fold(spark, sf_dir):
     """The DRIVER-checked demos must keep planning the interpreted fold
-    (their oracles mirror its arithmetic; auto resolves to it because
-    the demos pass no stat). A future change that threads a catalog
+    (their oracles mirror its arithmetic; the knee picks it because
+    their footer stat stays below it). A future change that threads a catalog
     stat into a demo would silently flip its executed plan to the
     arrow twin — still bit-equal, but the executed-plan claims in the
     demo docstrings and SCALE.md would go stale; this pin makes that
@@ -201,51 +208,40 @@ def test_auto_routes_nonfinite_corpus_into_the_validating_twin(spark):
     """The one behavior difference bit-equality does not cover
     (``_resolve_assign`` docstring): the arrow twin VALIDATES — a
     non-finite vector component raises — where the fold emits NULL
-    scores. Auto past the threshold must route into that loud failure
-    (validate, don't guess), and forcing ``assign="fold"`` on the same
+    scores. A stat past the threshold must route into that loud failure
+    (validate, don't guess), the error must name the escape that
+    remains (call without n_rows), and the stat-less call on the same
     corpus must keep working."""
     rows = [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [float("nan"), 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # fold: NULL-score semantics, completes
-    assert ivf_topk(
-        df, n_centroids=2, n_probe=1, k=1, assign="fold"
-    ).count() >= 0
-    # auto + big stat → arrow → the validation raise (surfaces from the
-    # Python worker wrapped in Spark's exception types)
-    with pytest.raises(Exception, match="non-finite vector components"):
+    # no stat → fold: NULL-score semantics, completes
+    assert ivf_topk(df, n_centroids=2, n_probe=1, k=1).count() >= 0
+    # big stat → arrow → the validation raise (surfaces from the Python
+    # worker wrapped in Spark's exception types)
+    with pytest.raises(
+        Exception, match="non-finite vector components(.|\n)*call without n_rows"
+    ):
         ivf_topk(
             df, n_centroids=2, n_probe=1, k=1, n_rows=10**9
         ).count()
 
 
 def test_ivf_pq_arrow_plan_keeps_the_fold_encode(spark, sf_dir):
-    """Regression pin (r15 session 2): ivf_pq_topk's arrow mode must
-    share the FOLD encode/ADC — the original ``assign == "fold"``
-    branch check predated the arrow mode and silently routed arrow
-    into the join-form encode (per-(vec_id, s) argmin window + the
-    n × dims × ks codebook-join fan-out). Outputs were bit-equal
-    either way (both encodes are, by the decimal contract), so only a
-    PLAN pin can catch this class: no per-vec_id window anywhere, and
-    the coarse stage's MapInArrow present."""
+    """Regression pin: ivf_pq_topk's arrow form must never route into a
+    join-form encode (per-(vec_id, s) argmin window + the n × dims × ks
+    codebook-join fan-out). Outputs would be bit-equal either way (both
+    encodes are, by the decimal contract), so only a PLAN pin can catch
+    this class: no per-vec_id window anywhere, and the MapInArrow
+    present."""
     from transit_efficiency_analysis_spark.sources.registry import load_table
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    plan = _plan(ivf_pq_topk(e, assign="arrow", checkpoint=False))
+    plan = _plan(ivf_pq_topk(e, checkpoint=False, n_rows=10**9))
     assert "MapInArrow" in plan
     assert "windowspecdefinition(vec_id" not in plan, (
-        "arrow mode regressed to the join-form encode/ADC"
+        "the arrow form regressed to a join-form encode/ADC"
     )
     assert "windowspecdefinition(query_id" in plan  # the candidate top-k
-
-
-def test_invalid_assign_rejected():
-    import pyspark.sql  # noqa: F401  (spark session not needed — validation is eager)
-
-    for bad in ("blas", "window"):
-        with pytest.raises(ValueError, match="auto"):
-            ivf_topk(None, n_centroids=4, assign=bad)
-        with pytest.raises(ValueError, match="auto"):
-            ivf_pq_topk(None, assign=bad)
 
 
 def test_parquet_rows_matches_count(spark, sf_dir, tmp_path):

@@ -47,21 +47,20 @@ def test_posix_backend_layout_is_legacy_compatible(tmp_path):
     root = str(tmp_path)
     assert U._version_path(root, 3, 7) == os.path.join(root, ".v", "b3_v7")
     assert U._read_manifest(root) == {}
-    assert U._list_versions(root, 3) == []
+    assert U._list_versions(root) == {}
 
     staged = tmp_path / "staged_part"
     staged.mkdir()
     (staged / "part-0.parquet").write_bytes(b"x")
-    assert U._publish(root, str(staged), 3, 6) == 7
+    assert U._publish(root, str(staged), 3, 6, []) == 7
     published = U._version_path(root, 3, 7)
     assert (tmp_path / ".v" / "b3_v7" / "part-0.parquet").read_bytes() == b"x"
     assert not staged.exists()
-    assert U._list_versions(root, 3) == [(7, published)]
-    assert U._list_versions(root, 4) == []
-    # the next version is above every published one, orphans included
+    assert U._list_versions(root) == {3: [(7, published)]}
+    # the next version is above every listed one, orphans included
     staged.mkdir()
-    assert U._publish(root, str(staged), 3, 0) == 8
-    assert [v for v, _ in U._list_versions(root, 3)] == [7, 8]
+    assert U._publish(root, str(staged), 3, 0, U._list_versions(root)[3]) == 8
+    assert [v for v, _ in U._list_versions(root)[3]] == [7, 8]
 
     U._write_manifest(root, {10: 2, 3: 7})
     with open(os.path.join(root, ".manifest.json")) as f:
@@ -193,14 +192,14 @@ def test_meta_json_shape_is_mode_tagged_and_legacy_compatible(spark, tmp_path):
     assert meta["commit"] == "manifest"
 
 
-def test_merge_retry_demo_converges_and_is_fixed_point(spark):
+def test_merge_retry_demo_converges_and_is_fixed_point(spark, sf_dir):
     """The demo's final table state equals keep-newest-per-key over ALL
     events (the oracle), and a re-invocation — which re-runs the staged
     race on the same cached table — returns the identical state
     (idempotent within a process, like q_upsert_merge_parquet)."""
     from transit_efficiency_analysis_spark.demo import load_registry
 
-    sf = "/root/testdata/sf0.001"
+    sf = sf_dir
     fn = load_registry()["q_upsert_merge_retry"].fn
     out1 = {(r.user_id, r.event_type): (r.event_id, r.ts, r.value)
             for r in fn(spark, sf).collect()}
@@ -219,7 +218,7 @@ def test_merge_retry_demo_converges_and_is_fixed_point(spark):
     assert out2 == out1
 
 
-def test_merge_retry_demo_race_executes_and_restores_backend(spark):
+def test_merge_retry_demo_race_executes_and_restores_backend(spark, sf_dir):
     """Each invocation runs the race and the retry, read off the
     table's ``.manifest.json``: a bucket all three batches touch
     advances by exactly 4 versions (batch 0's re-merge, writer A's lost
@@ -233,7 +232,7 @@ def test_merge_retry_demo_race_executes_and_restores_backend(spark):
     from transit_efficiency_analysis_spark.demo import load_registry
     from transit_efficiency_analysis_spark.demo._tmpcache import _RESULT_CACHE
 
-    sf = "/root/testdata/sf0.001"
+    sf = sf_dir
     fn = load_registry()["q_upsert_merge_retry"].fn
     fn(spark, sf).count()
     key = f"upsert_merge_retry_{sf.strip('/').replace('/', '_')}"

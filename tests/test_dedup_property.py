@@ -357,7 +357,7 @@ def test_incremental_simhash_equals_full_restricted_to_cross_pairs(spark, sf_dir
     assert got == want
 
 
-def test_minhash_recall_sweep_reports_loss_against_r1(spark):
+def test_minhash_recall_sweep_reports_loss_against_r1(spark, sf_dir):
     """minhash_recall_sweep (round 18, VERDICT r17 #5): one row per r;
     the r=1 arm is its own baseline (zero loss, full overlap), every
     arm's counts partition its pair set against r=1, and any pair a
@@ -369,7 +369,7 @@ def test_minhash_recall_sweep_reports_loss_against_r1(spark):
     )
     from transit_efficiency_analysis_spark.sources.registry import load_table
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     rows = {

@@ -28,7 +28,7 @@ def test_dedup_operators_on_empty_corpus(spark):
 
     d = _empty_docs(spark)
     assert exact_dedup_groups(d, "doc_id", F.md5("text")).count() == 0
-    assert minhash_lsh_pairs(d, "doc_id", "text", reuse=False).count() == 0
+    assert minhash_lsh_pairs(d, "doc_id", "text").count() == 0
     assert simhash_pairs(d, "doc_id", "text", checkpoint=False).count() == 0
 
 

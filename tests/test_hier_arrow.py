@@ -1,7 +1,7 @@
-"""semantic_dedup_hier's assign='auto'/'arrow' support (round 16): the
-two-level escape path gets the same vectorized assignment twins as the
-flat form — coarse via _arrow_assign, fine via the per-group
-_arrow_fine_assign — behind the same resolver, dark by default.
+"""semantic_dedup_hier's arrow form: the two-level escape path gets the
+same vectorized assignment twins as the flat form — coarse via
+_arrow_assign, fine via the per-group _arrow_fine_assign — picked by
+the same resolver from ``n_rows``, never without it.
 
 Pins: end-to-end fold/arrow equality (real corpus at two SFs), the
 resolver's two-level dot envelope, the dark default (registered demo
@@ -27,10 +27,15 @@ def _embeddings(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
 
+#: ``n_rows`` that forces each form: none keeps the fold, a row count
+#: far past every knee picks the arrow twins
+_N_ROWS = {"fold": None, "arrow": 10**9}
+
+
 def _run(spark, sf_dir, mode):
     out = semantic_dedup_hier(
         _embeddings(spark, sf_dir), "vec_id", "embedding",
-        n_centroids=16, coarse_cells=4, threshold=0.3, assign=mode,
+        n_centroids=16, coarse_cells=4, threshold=0.3, n_rows=_N_ROWS[mode],
     ).collect()
     return sorted((r.vec_id, r.cell, r.kept, r.dup_of) for r in out)
 
@@ -47,7 +52,7 @@ def test_hier_arrow_equals_fold_sf01(spark):
 
 
 def test_hier_auto_resolves_on_two_level_envelope(spark, sf_dir):
-    """auto's crossover input is the per-row dot count C + K/C (not K)
+    """The knee's input is the per-row dot count C + K/C (not K)
     against the HIER-specific threshold (1.4M envelope dots — the
     lowest measured arrow-win point for the two-level shape, far below
     the flat form's 16M because the hier fold's per-row interpretation
@@ -62,17 +67,17 @@ def test_hier_auto_resolves_on_two_level_envelope(spark, sf_dir):
 
     env = 4 + 16 // 4
     assert _resolve_assign(
-        "auto", 175_000, env, min_nk=_AUTO_ARROW_MIN_NK_HIER
+        175_000, env, min_nk=_AUTO_ARROW_MIN_NK_HIER
     ) == "arrow"
     assert _resolve_assign(
-        "auto", 170_000, env, min_nk=_AUTO_ARROW_MIN_NK_HIER
+        170_000, env, min_nk=_AUTO_ARROW_MIN_NK_HIER
     ) == "fold"
     # default min_nk unchanged — flat callers keep the 16M knee
     assert _AUTO_ARROW_MIN_NK == 16_000_000
-    assert _resolve_assign("auto", 2_000_000, env) == "arrow"
-    assert _resolve_assign("auto", 1_900_000, env) == "fold"
-    # and stat-less auto stays on the fold: the registered demo must
-    # keep planning zero Python nodes (dark default)
+    assert _resolve_assign(2_000_000, env) == "arrow"
+    assert _resolve_assign(1_900_000, env) == "fold"
+    # and without a stat the fold runs: the registered demo must keep
+    # planning zero Python nodes
     from transit_efficiency_analysis_spark.demo import load_registry
 
     plan = (
@@ -83,11 +88,6 @@ def test_hier_auto_resolves_on_two_level_envelope(spark, sf_dir):
         .toString()
     )
     assert "MapInArrow" not in plan and "Python" not in plan
-
-
-def test_hier_invalid_assign_rejected(spark, sf_dir):
-    with pytest.raises(ValueError, match="assign must be"):
-        semantic_dedup_hier(_embeddings(spark, sf_dir), assign="bogus")
 
 
 def test_fine_twin_edges_match_fold_mirror(spark):
@@ -179,7 +179,7 @@ def test_hier_random_corpus_parity(spark):
     for mode in ("fold", "arrow"):
         res = semantic_dedup_hier(
             df, "vec_id", "embedding", n_centroids=12, coarse_cells=3,
-            threshold=0.8, assign=mode,
+            threshold=0.8, n_rows=_N_ROWS[mode],
         ).collect()
         out[mode] = sorted((r.vec_id, r.cell, r.kept, r.dup_of) for r in res)
     assert out["arrow"] == out["fold"]

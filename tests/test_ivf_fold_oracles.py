@@ -1,8 +1,8 @@
 """Round-15 flip gate, kept as a PERMANENT parity pin.
 
-Round 15 flipped ``ivf_topk`` / ``ivf_pq_topk`` to ``assign="fold"`` by
-default and swapped the live oracles of the three IVF demos to the fold
-mirrors (raw dot against the pre-normalized centroid, zero-norm
+The fold is the executed ``ivf_topk`` / ``ivf_pq_topk`` assignment
+whenever no row count past the knee is given, and the live oracles of the
+three IVF demos are its mirrors (raw dot against the pre-normalized centroid, zero-norm
 centroids guarded to NULL and filtered before the rank, all-NULL
 fallback to the smallest cells), plus the zero-norm guards in the
 q_dedup_semantic / q_dedup_semantic_hier oracles (ADVICE r13 #1). These
@@ -80,13 +80,12 @@ def test_live_oracles_carry_zero_norm_guards():
 
 
 def test_ivf_operator_defaults_are_auto_resolving_to_fold():
-    """The operator default is ``"auto"`` (round-15 auto-resolution),
-    and at demo parameterizations — no catalog stat offered — auto
-    MUST resolve to the fold, whose arithmetic is what the live demo
-    oracles mirror. tests/test_assign_auto.py pins the resolution rule
-    itself; this pin guards the oracle contract end: a default that
-    stopped resolving to the fold here would detach the executed demos
-    from their mirrored SQL."""
+    """The engine picks the assignment form from ``n_rows`` alone (no
+    caller-set selector), and without a catalog stat it MUST pick the
+    fold, whose arithmetic is what the live demo oracles mirror.
+    tests/test_assign_auto.py pins the knee itself; this pin guards the
+    oracle contract end: a pick that stopped landing on the fold here
+    would detach the executed demos from their mirrored SQL."""
     import inspect
 
     from transit_efficiency_analysis_spark.operators.similarity import (
@@ -97,6 +96,7 @@ def test_ivf_operator_defaults_are_auto_resolving_to_fold():
     )
 
     for fn in (ivf_topk, ivf_pq_topk, semantic_dedup):
-        assert inspect.signature(fn).parameters["assign"].default == "auto"
-    # the demos pass no n_rows → auto is the fold (the mirrored form)
-    assert _resolve_assign("auto", None, 8) == "fold"
+        params = inspect.signature(fn).parameters
+        assert "assign" not in params and params["n_rows"].default is None
+    # no n_rows → the fold (the mirrored form)
+    assert _resolve_assign(None, 8) == "fold"

@@ -1,15 +1,14 @@
-"""The dark int64-matmul LSH bucket twin (round 16, continuing the r15
-vectorization rule: sign-LSH's per-plane interpreted long folds are the
-last corpus-vs-broadcast NUMERIC stage without an Arrow escape).
+"""The int64-matmul LSH bucket twin (sign-LSH's per-plane interpreted
+long folds as one exact matmul per Arrow batch).
 
 The twin consumes the SAME JVM-side exact quantization
 (``quantize_vec``) and replaces only the fold arithmetic with one
 int64 matmul — integer addition is associative, so no evaluation order
 can flip a sign (the property the DECIMAL quantization protects).
-Round 17 flipped the default to ``bucket_assign="auto"``: stat-less
-callers (and every registered demo at gate/bench corpus sizes) keep
-the verbatim expression plan; a corpus stat past the measured 288k
-row-plane knee resolves to the twin (``_resolve_bucket_assign``)."""
+The engine picks the form from ``n_rows``: stat-less callers (and every
+registered demo at gate/bench corpus sizes) keep the expression plan;
+a corpus stat past the measured 288k row-plane knee picks the twin
+(``_resolve_bucket_assign``)."""
 
 from __future__ import annotations
 
@@ -22,6 +21,11 @@ from transit_efficiency_analysis_spark.operators.similarity import (
     lsh_topk,
     quantize_vec,
 )
+
+
+#: ``n_rows`` that forces each form: none keeps the expression folds, a
+#: row count far past the knee picks the int64-matmul twin
+_N_ROWS = {"expr": None, "arrow": 10**9}
 
 
 def _embeddings(spark, sf_dir):
@@ -100,16 +104,15 @@ def test_lsh_topk_arrow_equals_expr(spark, sf_dir):
     d = _embeddings(spark, sf_dir)
     got = {}
     for mode in ("expr", "arrow"):
-        rows = lsh_topk(d, planes=8, k=3, bucket_assign=mode).collect()
+        rows = lsh_topk(d, planes=8, k=3, n_rows=_N_ROWS[mode]).collect()
         got[mode] = sorted(map(tuple, rows))
     assert got["arrow"] == got["expr"]
 
 
 def test_statless_auto_keeps_expression_plan(spark, sf_dir):
-    """The round-17 default is ``bucket_assign="auto"``: with no corpus
-    stat offered it must NEVER count and must keep the verbatim
-    JVM-expression plan (zero Python nodes) — the same stat-less
-    contract as the IVF ``assign="auto"``."""
+    """With no corpus stat offered the engine must NEVER count and must
+    keep the JVM-expression plan (zero Python nodes) — the same
+    stat-less contract as the IVF assignment pick."""
     d = _embeddings(spark, sf_dir)
     plan = (
         lsh_topk(d, planes=8, k=3)
@@ -118,8 +121,6 @@ def test_statless_auto_keeps_expression_plan(spark, sf_dir):
         .toString()
     )
     assert "MapInArrow" not in plan and "Python" not in plan
-    with pytest.raises(ValueError, match="bucket_assign must be"):
-        lsh_topk(d, planes=8, k=3, bucket_assign="bogus")
 
 
 def test_resolve_bucket_assign_knee():
@@ -128,18 +129,13 @@ def test_resolve_bucket_assign_knee():
         _resolve_bucket_assign,
     )
 
-    # explicit modes pass through untouched, stat or not
-    assert _resolve_bucket_assign("expr", 10**9, 8) == "expr"
-    assert _resolve_bucket_assign("arrow", None, 8) == "arrow"
-    # stat-less auto never counts: expression form
-    assert _resolve_bucket_assign("auto", None, 8) == "expr"
+    # stat-less: never counts, expression form
+    assert _resolve_bucket_assign(None, 8) == "expr"
     # below the measured knee: expression form (the 1x tie point)
-    assert _resolve_bucket_assign("auto", 2_000, 5) == "expr"
+    assert _resolve_bucket_assign(2_000, 5) == "expr"
     # at/above the knee: the matmul twin (the 16x proven-win point)
-    assert _resolve_bucket_assign("auto", 32_000, 9) == "arrow"
-    assert (
-        _resolve_bucket_assign("auto", _AUTO_ARROW_MIN_NP_LSH, 1) == "arrow"
-    )
+    assert _resolve_bucket_assign(32_000, 9) == "arrow"
+    assert _resolve_bucket_assign(_AUTO_ARROW_MIN_NP_LSH, 1) == "arrow"
 
 
 def test_auto_resolves_arrow_past_knee_and_stays_bit_equal(spark, sf_dir):
@@ -150,7 +146,7 @@ def test_auto_resolves_arrow_past_knee_and_stays_bit_equal(spark, sf_dir):
     auto = lsh_topk(d, planes=8, k=3, n_rows=10**9)
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan
-    expr = lsh_topk(d, planes=8, k=3, bucket_assign="expr")
+    expr = lsh_topk(d, planes=8, k=3)
     assert sorted(map(tuple, auto.collect())) == sorted(
         map(tuple, expr.collect())
     )
@@ -165,8 +161,8 @@ def test_bucket_assignments_arrow_equals_expr(spark, sf_dir):
     )
 
     d = _embeddings(spark, sf_dir)
-    expr = lsh_bucket_assignments(d, planes=8, bucket_assign="expr")
-    arrow = lsh_bucket_assignments(d, planes=8, bucket_assign="arrow")
+    expr = lsh_bucket_assignments(d, planes=8)
+    arrow = lsh_bucket_assignments(d, planes=8, n_rows=_N_ROWS["arrow"])
     assert [f.name for f in arrow.schema.fields] == ["vec_id", "bucket"]
     # nullability intentionally differs (mapInArrow outputs are nullable
     # by convention); names and types must match exactly
@@ -212,7 +208,9 @@ def test_multiprobe_arrow_equals_expr(spark, sf_dir):
     d = _embeddings(spark, sf_dir)
     got = {}
     for mode in ("expr", "arrow"):
-        rows = multiprobe_lsh_topk(d, planes=8, k=3, bucket_assign=mode).collect()
+        rows = multiprobe_lsh_topk(
+            d, planes=8, k=3, n_rows=_N_ROWS[mode]
+        ).collect()
         got[mode] = sorted(map(tuple, rows))
     assert got["arrow"] == got["expr"]
     assert got["expr"], "multiprobe returned no rows"
@@ -231,8 +229,6 @@ def test_multiprobe_statless_auto_keeps_expression_plan(spark, sf_dir):
         .toString()
     )
     assert "MapInArrow" not in plan and "Python" not in plan
-    with pytest.raises(ValueError, match="bucket_assign must be"):
-        multiprobe_lsh_topk(d, planes=8, k=3, bucket_assign="bogus")
 
 
 def test_multiprobe_auto_resolves_arrow_past_knee(spark, sf_dir):
@@ -244,7 +240,7 @@ def test_multiprobe_auto_resolves_arrow_past_knee(spark, sf_dir):
     auto = multiprobe_lsh_topk(d, planes=8, k=3, n_rows=10**9)
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan
-    expr = multiprobe_lsh_topk(d, planes=8, k=3, bucket_assign="expr")
+    expr = multiprobe_lsh_topk(d, planes=8, k=3)
     assert sorted(map(tuple, auto.collect())) == sorted(
         map(tuple, expr.collect())
     )
@@ -311,15 +307,14 @@ def test_derived_mode_sizing_count_feeds_the_knee(spark):
 
 def test_auto_never_routes_planes_over_62_into_the_twin(spark):
     """planes=63 works on the expression form (max bucket 2^63-1 fits a
-    signed long) but the twin fail-fasts at its overflow guard; auto
-    with a past-knee stat must therefore keep the expression form —
-    the default flip may never turn a working call into an error
-    (review r17)."""
+    signed long) but the twin fail-fasts at its overflow guard; a
+    past-knee stat must therefore keep the expression form — the knee
+    may never turn a working call into an error."""
     from transit_efficiency_analysis_spark.operators.similarity import (
         _resolve_bucket_assign,
     )
 
-    assert _resolve_bucket_assign("auto", 10**9, 63) == "expr"
+    assert _resolve_bucket_assign(10**9, 63) == "expr"
     d = spark.createDataFrame(
         [(1, [1.0] * 4), (2, [0.5] * 4)], "vec_id long, embedding array<double>"
     )
@@ -330,13 +325,12 @@ def test_auto_never_routes_planes_over_62_into_the_twin(spark):
 
 
 def test_auto_resolved_guard_errors_are_self_diagnosing(spark):
-    """ADVICE r17: when bucket_assign='auto' picks the Arrow path (corpus
-    past the knee) and the corpus carries dirty vectors, the rejection
-    must say auto chose the path and name the expr escape hatch — below
-    the knee the same call silently zero-buckets, so the failure would
-    otherwise surface with no visible cause as the corpus grows. An
-    EXPLICIT bucket_assign='arrow' keeps the plain message (the caller
-    asked for the twin; no resolution to explain)."""
+    """When the knee picks the Arrow path (corpus past it) and the
+    corpus carries dirty vectors, the rejection must say why the form
+    was picked and name the escape that remains (call without n_rows,
+    passing planes) — below the knee the same call silently
+    zero-buckets, so the failure would otherwise surface with no
+    visible cause as the corpus grows."""
     import pytest as _pytest
 
     from transit_efficiency_analysis_spark.operators.similarity import (
@@ -347,14 +341,12 @@ def test_auto_resolved_guard_errors_are_self_diagnosing(spark):
         [(1, [1.0, None, 0.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
-    with _pytest.raises(Exception, match="auto.*selected this Arrow path"):
-        # n_rows far past the knee forces auto -> arrow with no count()
+    with _pytest.raises(
+        Exception,
+        match="NULL vector components(.|\n)*crossed the row-plane knee"
+        "(.|\n)*call without n_rows",
+    ):
+        # n_rows far past the knee picks arrow with no count()
         lsh_bucket_assignments(
-            nulls, planes=4, dims=4, n_rows=10_000_000, bucket_assign="auto"
+            nulls, planes=4, dims=4, n_rows=10_000_000
         ).collect()
-    with _pytest.raises(Exception) as exc:
-        lsh_bucket_assignments(
-            nulls, planes=4, dims=4, bucket_assign="arrow"
-        ).collect()
-    assert "selected this Arrow path" not in str(exc.value)
-    assert "NULL vector components" in str(exc.value)

@@ -117,3 +117,86 @@ def test_legacy_symlink_table_is_rejected(spark, tmp_path):
             call()
     assert _snapshot(str(target)) == before
     assert not (target / ".manifest.json").exists()
+
+
+def test_wide_commit_lists_version_root_once(spark, tmp_path, monkeypatch):
+    """A commit lists ``.v/`` ONCE — for its publishes and its cleanup
+    together — however many buckets it touches: a merge and a
+    compaction over 32+ touched buckets each make exactly one listing
+    (a per-bucket listing makes two per bucket, and a 4096-bucket pass
+    spends seconds of driver time on them)."""
+    from transit_efficiency_analysis_spark.operators import upsert as U
+
+    target = str(tmp_path / "tbl")
+
+    def merge(raw):
+        return merge_into_partitioned(
+            target, spark.createDataFrame(raw, SCHEMA),
+            keys=["key"], order_by=["ts", "seq"], num_buckets=64,
+        )
+
+    merge(_mk_rows([(k, k, 1) for k in range(400)]))
+    touched = len(U._read_manifest(target))
+    assert touched >= 32
+
+    real_listdir = os.listdir
+    listings = []
+
+    def counting_listdir(path="."):
+        if os.path.basename(os.path.normpath(str(path))) == ".v":
+            listings.append(path)
+        return real_listdir(path)
+
+    monkeypatch.setattr(os, "listdir", counting_listdir)
+    # every key rewritten: all buckets publish a new version and clean
+    # up the superseded one
+    merge(_mk_rows([(k, 1000 + k, 2) for k in range(400)]))
+    assert len(listings) == 1
+    assert set(U._read_manifest(target).values()) == {2}
+    assert sorted(
+        name for name in real_listdir(os.path.join(target, ".v"))
+    ) == sorted(f"b{b}_v2" for b in U._read_manifest(target))
+
+    listings.clear()
+    filter_partitioned(spark, target, F.col("key") >= F.lit(0))
+    assert len(listings) == 1
+    assert len(U._read_manifest(target)) == touched
+
+
+def test_version_name_collision_fails_commit_keeps_published_dir(
+    spark, tmp_path, monkeypatch
+):
+    """A concurrent writer that publishes the version name this merge
+    computed (after this merge listed ``.v/``) wins: the rename onto its
+    non-empty dir fails, the merge raises ConcurrentWriteError, the
+    rival's dir keeps its bytes and the manifest is untouched."""
+    from transit_efficiency_analysis_spark.operators import upsert as U
+
+    target = str(tmp_path / "tbl")
+    _merge(spark, target, _mk_rows([(1, 1, 1)]))
+    manifest = U._read_manifest(target)
+    (bucket, version), = manifest.items()
+    rival = os.path.join(target, ".v", f"b{bucket}_v{version + 1}")
+    os.makedirs(rival)
+    with open(os.path.join(rival, "part-rival"), "w") as f:
+        f.write("rival")
+
+    real_list = U._list_versions
+
+    def listed_before_rival(local):
+        # the listing this commit took predates the rival's publish
+        return {
+            b: [(v, p) for v, p in vs if p != rival]
+            for b, vs in real_list(local).items()
+        }
+
+    monkeypatch.setattr(U, "_list_versions", listed_before_rival)
+    with pytest.raises(U.ConcurrentWriteError, match="concurrent writer"):
+        _merge(spark, target, _mk_rows([(1, 50, 2)]))
+    with open(os.path.join(rival, "part-rival")) as f:
+        assert f.read() == "rival"
+    assert os.listdir(rival) == ["part-rival"]
+    assert U._read_manifest(target) == manifest
+    assert _rows(read_partitioned(spark, target)) == [
+        (1, BASE + timedelta(minutes=1), 1.0)
+    ]

@@ -6,8 +6,8 @@ Three layers of evidence, innermost-out:
    on adversarial inputs — the ONLY approximable step in the twin
    (everything downstream is exact integer arithmetic), so this is
    the whole parity surface.
-2. ivf_pq_topk(assign="arrow") vs (assign="fold") full-collect
-   equality at sf0.001 (every query's exact decimal rank and the
+2. ivf_pq_topk's arrow form (forced with a row count past the PQ knee)
+   vs its fold form (no row count) full-collect equality at sf0.001 (every query's exact decimal rank and the
    emitted approx_l2sq doubles).
 3. The same at sf0.01 (more rows → more boundary exposure than the
    sf0.001 smoke the r15 pin uses).
@@ -23,6 +23,10 @@ from transit_efficiency_analysis_spark.operators.similarity import (
     _quantize_sq9,
     ivf_pq_topk,
 )
+
+#: ``n_rows`` that forces each form: none keeps the fold, a row count far
+#: past the PQ knee picks the fused arrow pipeline
+_N_ROWS = {"fold": None, "arrow": 10**9}
 
 
 def _spark_quantized(spark, values):
@@ -71,7 +75,7 @@ def _pq_stage_relations(spark, sf_dir, mode):
     internals — collected and canonicalized for comparison."""
     out = ivf_pq_topk(
         _embeddings(spark, sf_dir), n_centroids=4, m=4, ks=8, n_probe=2,
-        k=3, assign=mode, checkpoint=False,
+        k=3, n_rows=_N_ROWS[mode], checkpoint=False,
     )
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
     return sorted(map(tuple, out.collect()), key=lambda t: (t[0], t[3]))
@@ -97,7 +101,7 @@ def test_pq_arrow_encode_equals_fold_sf01(spark):
     for mode in ("fold", "arrow"):
         out = ivf_pq_topk(
             _embeddings(spark, "/root/testdata/sf0.01"),
-            n_centroids=8, m=4, ks=16, n_probe=2, k=3, assign=mode,
+            n_centroids=8, m=4, ks=16, n_probe=2, k=3, n_rows=_N_ROWS[mode],
         ).collect()
         got = sorted(map(tuple, out))
         if f is None:
@@ -113,7 +117,8 @@ def test_pq_arrow_rejects_dims_smaller_than_m(spark):
     )
     with pytest.raises(Exception, match="dims|sub_d|DIVIDE"):
         ivf_pq_topk(
-            df, n_centroids=2, m=4, ks=2, n_probe=1, k=1, assign="arrow"
+            df, n_centroids=2, m=4, ks=2, n_probe=1, k=1,
+            n_rows=_N_ROWS["arrow"],
         ).count()
 
 
@@ -204,11 +209,11 @@ def test_sq9_hazard_no_cliff_at_large_magnitudes():
 
 
 def test_pq_arrow_string_ids_equal_fold(spark, sf_dir):
-    """ADVICE r15 #2: the arrow encode/ADC stage pinned LongType for the
-    pass-through id column, so a string id_col (fine in fold mode — its
-    joins are type-agnostic) crashed auto/arrow mode on an Arrow schema
-    mismatch. The id field's type is now derived from the input
-    relation's schema; string-keyed PQ must be bit-equal across modes."""
+    """The arrow encode/ADC stage derives the pass-through id column's
+    type from the input relation's schema (a pinned LongType would crash
+    a string id_col, which the fold's type-agnostic joins accept on an
+    Arrow schema mismatch); string-keyed PQ must be bit-equal across
+    forms."""
     base = _embeddings(spark, sf_dir).select(
         F.concat(F.lit("doc-"), F.col("vec_id").cast("string")).alias("vec_id"),
         "embedding",
@@ -216,8 +221,8 @@ def test_pq_arrow_string_ids_equal_fold(spark, sf_dir):
     got = {}
     for mode in ("fold", "arrow"):
         out = ivf_pq_topk(
-            base, n_centroids=4, m=4, ks=8, n_probe=2, k=3, assign=mode,
-            checkpoint=False,
+            base, n_centroids=4, m=4, ks=8, n_probe=2, k=3,
+            n_rows=_N_ROWS[mode], checkpoint=False,
         ).collect()
         got[mode] = sorted(map(tuple, out))
     assert got["arrow"] == got["fold"]

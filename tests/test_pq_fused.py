@@ -2,7 +2,8 @@
 
 The broad arrow-vs-fold equality suite (tests/test_pq_arrow_encode.py,
 tests/test_round15_fixes.py) already exercises the fused path through
-the public ``assign="arrow"`` entry on clean corpora at two SFs, with
+the public entry (forced with a row count past the PQ knee) on clean
+corpora at two SFs, with
 string ids and with dims < m. This file pins the corners the fusion
 specifically restructured: the driver-built codebook on ragged group
 widths (dims % m != 0 — the trailing short subspace), ks larger than
@@ -18,6 +19,10 @@ import pytest
 
 from transit_efficiency_analysis_spark.operators.similarity import ivf_pq_topk
 
+#: ``n_rows`` that forces each form: none keeps the fold, a row count far
+#: past the PQ knee picks the fused arrow pipeline
+_N_ROWS = {"fold": None, "arrow": 10**9}
+
 
 def _corpus(spark, rows):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -27,7 +32,12 @@ def _both(df, **kw):
     out = {}
     for mode in ("fold", "arrow"):
         out[mode] = sorted(
-            map(tuple, ivf_pq_topk(df, assign=mode, checkpoint=False, **kw).collect())
+            map(
+                tuple,
+                ivf_pq_topk(
+                    df, n_rows=_N_ROWS[mode], checkpoint=False, **kw
+                ).collect(),
+            )
         )
     return out
 
@@ -94,7 +104,8 @@ def test_fused_null_component_raises(spark):
     )
     with pytest.raises(Exception, match="NULL vector"):
         ivf_pq_topk(
-            df, n_centroids=2, m=2, ks=2, n_probe=1, k=1, assign="arrow"
+            df, n_centroids=2, m=2, ks=2, n_probe=1, k=1,
+            n_rows=_N_ROWS["arrow"],
         ).count()
 
 
@@ -106,7 +117,7 @@ def test_fused_plan_single_python_stage(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     plan = (
-        ivf_pq_topk(e, assign="arrow", checkpoint=False)
+        ivf_pq_topk(e, n_rows=_N_ROWS["arrow"], checkpoint=False)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

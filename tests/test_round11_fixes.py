@@ -130,7 +130,7 @@ def test_semantic_dedup_hier_rejects_degenerate_cells(spark):
         semantic_dedup_hier(df, n_centroids=0)
 
 
-def test_bench_scale_token_budget_family_runs():
+def test_bench_scale_token_budget_family_runs(sf_dir):
     """ADVICE r10 medium: tools/bench_scale.py's _token_budget crashed
     (running_total now requires bucket_by; the harness passed none), so
     the documented SCALE.md token-budget benchmark was unrunnable. Pin
@@ -146,7 +146,7 @@ def test_bench_scale_token_budget_family_runs():
         [
             sys.executable,
             os.path.join(repo, "tools", "bench_scale.py"),
-            "/root/testdata/sf0.001",
+            sf_dir,
             "2",
             "token_budget",
         ],
@@ -160,7 +160,7 @@ def test_bench_scale_token_budget_family_runs():
     assert tb["rows1"] > 0 and tb["rowsN"] > tb["rows1"]
 
 
-def test_merge_parquet_demo_isolated_per_sf(spark):
+def test_merge_parquet_demo_isolated_per_sf(spark, sf_dir):
     """The merge demo's committed state must be keyed per sf_dir: one
     process running it at two scale factors (driver smoke at sf0.001 +
     correctness gate at sf0.01) must never merge one corpus's batches
@@ -168,7 +168,7 @@ def test_merge_parquet_demo_isolated_per_sf(spark):
     from transit_efficiency_analysis_spark.demo import load_registry
 
     fn = load_registry()["q_upsert_merge_parquet"].fn
-    a = fn(spark, "/root/testdata/sf0.001").count()
+    a = fn(spark, sf_dir).count()
     b = fn(spark, "/root/testdata/sf0.01").count()
-    assert fn(spark, "/root/testdata/sf0.001").count() == a
+    assert fn(spark, sf_dir).count() == a
     assert a != b

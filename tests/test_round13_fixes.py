@@ -301,7 +301,7 @@ def test_filter_partitioned_fails_fast_on_concurrent_merge(spark, tmp_path):
 
 def test_incremental_minhash_persists_released_per_batch(spark):
     """VERDICT r12 ask #5: the maintenance-loop mode (consume=...) owns
-    the reuse=True exploded-shingle persists — after each simulated
+    the per-doc persists — after each simulated
     micro-batch the session's persistent-RDD count is back to its
     baseline (a sustained foreachBatch ingest no longer accumulates one
     DISK_ONLY pair per batch)."""
@@ -561,7 +561,7 @@ def test_ivf_pq_topk_fold_plan_no_vecid_windows(spark, sf_dir):
     from transit_efficiency_analysis_spark.sources.registry import load_table
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    plan = physical_plan(ivf_pq_topk(e, assign="fold", checkpoint=False))
+    plan = physical_plan(ivf_pq_topk(e, checkpoint=False))
     assert "windowspecdefinition(vec_id" not in plan
     assert "windowspecdefinition(query_id" in plan  # the candidate top-k
 

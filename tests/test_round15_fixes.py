@@ -80,11 +80,13 @@ def _keys_in_distinct_buckets(spark, n: int) -> list[int]:
     return out
 
 
-def test_bucketed_demo_survives_stale_warehouse_location(tmp_path):
+def test_bucketed_demo_survives_stale_warehouse_location(tmp_path, sf_dir):
     """Exact driver failure mode: fresh metastore + pre-existing table dir
     under the session's (non-default-for-this-package) warehouse."""
     wh = str(tmp_path / "wh")
-    stale = os.path.join(wh, "teas_bucketed_sf0_001.db", "li")
+    # the demo's per-scale database name (demo/joins.py q_join_bucketed)
+    db = f"teas_bucketed_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
+    stale = os.path.join(wh, f"{db}.db", "li")
     os.makedirs(stale)
     with open(os.path.join(stale, "part-stale"), "w") as f:
         f.write("stale")
@@ -105,12 +107,16 @@ def test_bucketed_demo_survives_stale_warehouse_location(tmp_path):
         )
         from transit_efficiency_analysis_spark.demo.joins import q_join_bucketed
 
-        n = q_join_bucketed(spark, "/root/testdata/sf0.001").count()
+        n = q_join_bucketed(spark, {sf_dir!r}).count()
         assert n > 0, n
         print("OK", n)
         spark.stop()
         """
-    ).format(repo=os.path.dirname(os.path.dirname(os.path.abspath(__file__))), wh=wh)
+    ).format(
+        repo=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        wh=wh,
+        sf_dir=sf_dir,
+    )
 
     proc = subprocess.run(
         [sys.executable, "-c", script],
@@ -266,14 +272,17 @@ def test_sweep_orphans_raises_on_failed_delete(spark, tmp_path, monkeypatch):
     assert not os.path.exists(orphan)
 
 
-# ----------------------- assign="arrow" (dark, round 15) ----------------
+# ------------------- the arrow assignment form (forced via n_rows) ---------
+
+#: a row count far past every knee: the engine picks the arrow form
+_ARROW_ROWS = 10**9
 
 
 def test_ivf_topk_arrow_equals_fold(spark, sf_dir):
-    """assign='arrow' (the Arrow/BLAS twin, dark) must reproduce
-    assign='fold' exactly on the test corpora — same neighbors, same
-    ranks, same cosines — at lloyd_rounds 0 and 1 (the r13
-    fold-vs-window discipline: bit-parity pinned, never assumed)."""
+    """The arrow form (the Arrow/numpy twin, picked by a row count past
+    the knee) must reproduce the fold (no row count) exactly on the test
+    corpora — same neighbors, same ranks, same cosines — at lloyd_rounds
+    0 and 1 (bit-parity pinned, never assumed)."""
     from transit_efficiency_analysis_spark.operators.similarity import (
         ivf_topk,
     )
@@ -283,11 +292,10 @@ def test_ivf_topk_arrow_equals_fold(spark, sf_dir):
     for lr in (0, 1):
         f = sorted(map(tuple, ivf_topk(
             e, n_centroids=8, n_probe=2, k=3, lloyd_rounds=lr,
-            assign="fold",
         ).collect()))
         a = sorted(map(tuple, ivf_topk(
             e, n_centroids=8, n_probe=2, k=3, lloyd_rounds=lr,
-            assign="arrow",
+            n_rows=_ARROW_ROWS,
         ).collect()))
         assert a == f
 
@@ -366,7 +374,7 @@ def test_ivf_topk_arrow_plan_is_map_only(spark, sf_dir):
 
 
 def test_semantic_dedup_arrow_equals_fold(spark, sf_dir):
-    """semantic_dedup(assign='arrow') must reproduce the fold exactly —
+    """semantic_dedup's arrow form must reproduce the fold exactly —
     same kept/dropped sets, same dup_of witnesses, same cells — at
     lloyd_rounds 0 and 1 (the arrow path swaps BOTH the final and the
     per-Lloyd-round assignment)."""
@@ -382,7 +390,7 @@ def test_semantic_dedup_arrow_equals_fold(spark, sf_dir):
         ).collect()))
         a = sorted(map(tuple, semantic_dedup(
             e, n_centroids=8, lloyd_rounds=lr, threshold=0.3,
-            assign="arrow",
+            n_rows=_ARROW_ROWS,
         ).collect()))
         assert a == f
 
@@ -411,26 +419,24 @@ def test_ivf_topk_arrow_bit_identity_random_corpus(spark):
     for lr in (0, 1):
         f = sorted(map(tuple, ivf_topk(
             df, n_centroids=6, n_probe=3, k=4, lloyd_rounds=lr,
-            assign="fold",
         ).collect()))
         a = sorted(map(tuple, ivf_topk(
             df, n_centroids=6, n_probe=3, k=4, lloyd_rounds=lr,
-            assign="arrow",
+            n_rows=_ARROW_ROWS,
         ).collect()))
         assert a == f, f"lloyd_rounds={lr}: arrow diverged from fold"
 
 
 def test_ivf_pq_topk_arrow_equals_fold(spark, sf_dir):
-    """ivf_pq_topk(assign='arrow') — the coarse stage swapped for the
-    bit-exact vectorized twin, encode/ADC DECIMAL folds unchanged —
-    must reproduce assign='fold' exactly (ids, ranks, and the exact
-    approx_l2sq decimals)."""
+    """ivf_pq_topk's arrow form — the fused bit-exact vectorized
+    pipeline — must reproduce the fold exactly (ids, ranks, and the
+    exact approx_l2sq decimals)."""
     from transit_efficiency_analysis_spark.operators.similarity import (
         ivf_pq_topk,
     )
     from transit_efficiency_analysis_spark.sources.registry import load_table
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    f = sorted(map(tuple, ivf_pq_topk(e, assign="fold").collect()))
-    a = sorted(map(tuple, ivf_pq_topk(e, assign="arrow").collect()))
+    f = sorted(map(tuple, ivf_pq_topk(e).collect()))
+    a = sorted(map(tuple, ivf_pq_topk(e, n_rows=_ARROW_ROWS).collect()))
     assert a == f

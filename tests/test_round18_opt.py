@@ -50,8 +50,8 @@ def test_memoized_trees_are_stable_across_invocations(spark, sf_dir):
     assert a == b and len(a) > 0
 
     e = load_table(spark, sf_dir, "embeddings")
-    x = _rows(lsh_topk(e, planes=4, dims=64, k=2, bucket_assign="expr"))
-    y = _rows(lsh_topk(e, planes=4, dims=64, k=2, bucket_assign="expr"))
+    x = _rows(lsh_topk(e, planes=4, dims=64, k=2))
+    y = _rows(lsh_topk(e, planes=4, dims=64, k=2))
     assert x == y and len(x) > 0
 
 

@@ -59,21 +59,6 @@ def nd_docs(spark):
     return spark.createDataFrame(rows)
 
 
-def test_minhash_incremental_reuse_matches_noreuse(spark, nd_docs):
-    corpus = nd_docs.where(F.col("doc_id") < "d2")
-    batch = nd_docs.where(F.col("doc_id") >= "d2")
-    kw = dict(k=3, bands=4, threshold=0.3)
-    a = sorted(
-        map(tuple, minhash_lsh_pairs_incremental(
-            corpus, batch, "doc_id", "body", reuse=True, **kw).collect())
-    )
-    b = sorted(
-        map(tuple, minhash_lsh_pairs_incremental(
-            corpus, batch, "doc_id", "body", reuse=False, **kw).collect())
-    )
-    assert a == b and len(a) > 0
-
-
 def test_minhash_incremental_cap_is_subset(spark, nd_docs):
     corpus = nd_docs.where(F.col("doc_id") < "d2")
     batch = nd_docs.where(F.col("doc_id") >= "d2")

@@ -62,7 +62,7 @@ def test_recursive_chain_leaves_no_cached_rdd_blocks(spark, sf_dir):
     key = "spark.sql.cteRecursionLevelLimit"
     before = spark.conf.get(key)
     # other suites may legitimately hold persisted relations on the shared
-    # session (e.g. the incremental dedup reuse=True contract), so pin
+    # session (e.g. the incremental dedup per-doc persists), so pin
     # "the demo adds NO blocks", not "storage is globally empty"
     jsc = spark.sparkContext._jsc.sc()
     blocks_before = {s.id() for s in jsc.getRDDStorageInfo()}

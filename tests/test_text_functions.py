@@ -118,11 +118,11 @@ def test_dot_is_left_fold(spark):
     assert got == acc  # exactly, not approx
 
 
-def test_lsh_bucket_impls_agree(spark):
+def test_lsh_bucket_impls_agree(spark, sf_dir):
     from transit_efficiency_analysis_spark.functions.vectors import hyperplane_sign_bucket
     from transit_efficiency_analysis_spark.operators.similarity import lsh_bucket_assignments
 
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(50)
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
     col_impl = {
         r["vec_id"]: r["b"]
         for r in e.select(

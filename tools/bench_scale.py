@@ -34,6 +34,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+#: A row count past every assignment knee: passed as ``n_rows`` it makes
+#: the engine pick the arrow forms, which is how the A/B arms force them.
+_ARROW_ROWS = 10**12
+
+
 def _union_copies(df: DataFrame, id_col: str, n: int, perturb) -> DataFrame:
     out = None
     for i in range(n):
@@ -198,26 +203,27 @@ def main() -> int:
               file=sys.stderr)
 
     if want("semantic_arrow"):
-        # The dark BLAS twin on the SAME derived-K workload as
-        # semantic_dedup_scaled: the flat form's measured ~5.6 16x ratio
-        # is O(n x K) assignment COMPUTE (K ~ n/64) — the arrow
-        # assignment replaces the interpreted fold dots with one numpy
-        # matmul per batch in the final AND the Lloyd-round assignment.
+        # The arrow twin on the SAME derived-K workload as
+        # semantic_dedup_scaled, forced with a past-knee n_rows: the flat
+        # form's measured ~5.6 16x ratio is O(n x K) assignment COMPUTE
+        # (K ~ n/64) — the arrow assignment replaces the interpreted fold
+        # dots with one numpy loop per batch in the final AND the
+        # Lloyd-round assignment.
         from transit_efficiency_analysis_spark.operators.similarity import (
             semantic_dedup,
         )
 
         n1, nn = embs_1.count(), embs_n.count()
 
-        def _sem_a(d: DataFrame, n: int, mode: str) -> DataFrame:
+        def _sem_a(d: DataFrame, n: int) -> DataFrame:
             return semantic_dedup(
                 d, "vec_id", "embedding",
                 n_centroids=max(8, n // 64), lloyd_rounds=1, threshold=0.3,
-                assign=mode,
+                n_rows=_ARROW_ROWS,
             ).where(~F.col("kept"))
 
-        t0 = time.time(); r1 = _sem_a(embs_1, n1, "arrow").count(); t1 = time.time() - t0
-        t0 = time.time(); rn = _sem_a(embs_n, nn, "arrow").count(); tn = time.time() - t0
+        t0 = time.time(); r1 = _sem_a(embs_1, n1).count(); t1 = time.time() - t0
+        t0 = time.time(); rn = _sem_a(embs_n, nn).count(); tn = time.time() - t0
         results["semantic_dedup_scaled_arrow"] = {
             "t1": round(t1, 2), "tN": round(tn, 2),
             "ratio": round(tn / t1, 2), "rows1": r1, "rowsN": rn,
@@ -227,12 +233,12 @@ def main() -> int:
               file=sys.stderr)
 
     if want("semantic_auto"):
-        # assign="auto" (round 15, session 2) on the SAME derived-K
-        # workload, passing the catalog stat the way a deployment with
-        # statistics would: at 1x (2000 x 31 cells = 62k dots) auto must
-        # resolve to the fold, at 16x (32000 x 500 = 16M dots — exactly
-        # the proven-win threshold) to the arrow twin — ONE series
-        # showing the resolver picking each scale's measured optimum.
+        # The engine's own pick on the SAME derived-K workload, passing
+        # the catalog stat the way a deployment with statistics would: at
+        # 1x (2000 x 31 cells = 62k dots) the knee must pick the fold, at
+        # 16x (32000 x 500 = 16M dots — exactly the proven-win threshold)
+        # the arrow twin — ONE series showing the resolver picking each
+        # scale's measured optimum.
         # Identical results either way (bit-equal branches); compare
         # walls against semantic_dedup_scaled (fold) and
         # semantic_dedup_scaled_arrow (arrow) at each point.
@@ -250,8 +256,8 @@ def main() -> int:
                 n_rows=n,
             ).where(~F.col("kept"))
 
-        m1 = _resolve_assign("auto", n1, max(8, n1 // 64))
-        mn = _resolve_assign("auto", nn, max(8, nn // 64))
+        m1 = _resolve_assign(n1, max(8, n1 // 64))
+        mn = _resolve_assign(nn, max(8, nn // 64))
         t0 = time.time(); r1 = _sem_auto(embs_1, n1).count(); t1 = time.time() - t0
         t0 = time.time(); rn = _sem_auto(embs_n, nn).count(); tn = time.time() - t0
         results["semantic_dedup_auto"] = {
@@ -296,9 +302,9 @@ def main() -> int:
               file=sys.stderr)
 
     if want("semantic_hier_arrow"):
-        # Round-16 A/B for the hier twins: same derived workload as
-        # semantic_hier_scaled, explicit assign="arrow" (coarse
-        # _arrow_assign + per-group _arrow_fine_assign). The two-level
+        # A/B for the hier twins: same derived workload as
+        # semantic_hier_scaled, arrow forced with a past-knee n_rows
+        # (coarse _arrow_assign + per-group _arrow_fine_assign). The two-level
         # dot envelope is only C + K/C per row, so the interpreted-
         # compute share the twin removes is much smaller than the flat
         # form's — expect a modest edge at best (compare against
@@ -317,7 +323,7 @@ def main() -> int:
                 d, "vec_id", "embedding",
                 n_centroids=k,
                 coarse_cells=max(2, int(_math.isqrt(k))),
-                threshold=0.3, assign="arrow",
+                threshold=0.3, n_rows=_ARROW_ROWS,
             ).where(~F.col("kept"))
 
         t0 = time.time(); r1 = _semha(embs_1, n1).count(); t1 = time.time() - t0
@@ -332,7 +338,7 @@ def main() -> int:
 
     if want("semantic_hier_auto"):
         # the hier resolver end-to-end: footer-free corpus stat (the
-        # battery knows n exactly) -> auto picks fold at 1x (22k
+        # battery knows n exactly) -> the knee picks fold at 1x (22k
         # envelope dots) and arrow at 16x (1.4M — the measured hier
         # knee, _AUTO_ARROW_MIN_NK_HIER). Identical outputs either way.
         import math as _math
@@ -358,7 +364,7 @@ def main() -> int:
             k = max(8, n // 64)
             c = max(2, int(_math.isqrt(k)))
             return _resolve_assign(
-                "auto", n, c + max(1, k // c), min_nk=_AUTO_ARROW_MIN_NK_HIER
+                n, c + max(1, k // c), min_nk=_AUTO_ARROW_MIN_NK_HIER
             )
 
         t0 = time.time(); r1 = _semh_auto(embs_1, n1).count(); t1 = time.time() - t0
@@ -373,7 +379,7 @@ def main() -> int:
               f"ratio {tn/t1:.1f}", file=sys.stderr)
 
     if want("lsh_bucket_ab"):
-        # Round-16 A/B for the int64-matmul LSH bucket twin: BUCKET
+        # A/B for the int64-matmul LSH bucket twin: BUCKET
         # ASSIGNMENT ONLY (the per-plane interpreted long folds vs one
         # exact matmul per batch), derived plane count, checksum-
         # compared arms (sum(bucket) identical = bit-equal ids).
@@ -400,9 +406,9 @@ def main() -> int:
                 "vec_id", "bucket"
             )
 
-        # round 17: the SHIPPED path — bucket_assign="auto" resolving on
-        # the row×plane knee, through the bucket-only twin
-        # (emit_vectors=False: no vectors cross the Arrow boundary)
+        # the SHIPPED path — the engine picking on the row×plane knee
+        # from n_rows, through the bucket-only twin (emit_vectors=False:
+        # no vectors cross the Arrow boundary)
         from transit_efficiency_analysis_spark.operators.similarity import (
             lsh_bucket_assignments,
         )
@@ -851,8 +857,10 @@ def main() -> int:
             return 1
 
     if want("ivf_assign"):
-        # ivf_topk / ivf_pq_topk assignment A/B: auto vs the forced
-        # arrow and fold forms, at Nx rows and K=500 coarse cells. Each
+        # ivf_topk / ivf_pq_topk assignment A/B: the engine's pick from
+        # the footer stat ("auto") vs the arrow and fold forms, forced
+        # through n_rows (a past-knee count / none), at Nx rows and
+        # K=500 coarse cells. Each
         # (op, mode) cell runs in its OWN SUBPROCESS, so an arm that
         # OOMs the bench heap (a hard JVM death that takes the py4j
         # gateway with it, unrecoverable in-process) is recorded as a
@@ -869,7 +877,7 @@ from transit_efficiency_analysis_spark.session import get_spark
 from transit_efficiency_analysis_spark.sources.registry import (
     load_table, parquet_rows)
 from transit_efficiency_analysis_spark.operators.similarity import (
-    _resolve_assign, ivf_topk, ivf_pq_topk)
+    _AUTO_ARROW_MIN_NMK_PQ, _resolve_assign, ivf_topk, ivf_pq_topk)
 op_name, mode, sfd, n = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
 spark = get_spark("bench_ivf_cell")
 e = load_table(spark, sfd, "embeddings").select("vec_id", "embedding")
@@ -880,21 +888,24 @@ for i in range(n):
         "embedding", F.transform("embedding", lambda x: x + F.lit(0.003 * i)))
     out = c if out is None else out.unionByName(c)
 op = ivf_topk if op_name == "ivf_topk" else ivf_pq_topk
-# the auto arm threads the FREE catalog stat end-to-end the way the
-# canonical parquet path does (round 16, VERDICT r15 #2): footer row
-# count x copies, no corpus scan; record what auto resolved to so the
-# battery row shows the resolver picking each scale's winner
-kw = {}
-resolved = mode
-if mode == "auto":
-    kw["n_rows"] = parquet_rows(sfd, "embeddings") * n
-    resolved = _resolve_assign("auto", kw["n_rows"], 500)
+# n_rows is the only input that moves the form: the auto arm threads
+# the FREE catalog stat end-to-end the way the canonical parquet path
+# does (footer row count x copies, no corpus scan) and records what the
+# knee picked, so the battery row shows the resolver picking each
+# scale's winner; the arrow arm passes a count past every knee, the
+# fold arm none
+n_rows = {"auto": parquet_rows(sfd, "embeddings") * n,
+          "arrow": 10**12, "fold": None}[mode]
 spark.range(1).count()
 t0 = time.time()
-r = op(out, n_centroids=500, n_probe=2, k=3, assign=mode, **kw).count()
+r = op(out, n_centroids=500, n_probe=2, k=3, n_rows=n_rows).count()
 row = {"t": round(time.time() - t0, 2), "rows": r}
 if mode == "auto":
-    row["resolved"] = resolved
+    # ivf_pq_topk picks on its own knee (default m=4, ks=16)
+    row["resolved"] = (
+        _resolve_assign(n_rows, 500) if op is ivf_topk
+        else _resolve_assign(n_rows, 4 * 16, min_nk=_AUTO_ARROW_MIN_NMK_PQ)
+    )
 print("CELL " + json.dumps(row))
 """
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -505,9 +505,9 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    # footer row count = the free catalog stat for assign="auto"; at
-    # gate scale nK is far below the 16M-dot knee so the resolved plan
-    # stays the fold (pinned in tests/test_assign_auto.py)
+    # footer row count = the free catalog stat that picks the
+    # assignment form; at gate scale nK is far below the 16M-dot knee
+    # so the plan stays the fold (pinned in tests/test_assign_auto.py)
     return semantic_dedup(
         e, "vec_id", "embedding", n_centroids=8, lloyd_rounds=1, threshold=0.3,
         n_rows=parquet_rows(sf_dir, "embeddings"),

@@ -300,9 +300,9 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign-LSH (cell-bounded candidates, map-only quantization). The
     oracle mirrors the fold arithmetic (see _IVF_ASSIGN_SQL's comment)."""
     e = load_table(spark, sf_dir, "embeddings")
-    # the free catalog stat (parquet footer row count) feeds the
-    # assign="auto" crossover resolution — at gate scale nK stays far
-    # below the 16M-dot knee, so the resolved plan is the fold
+    # the free catalog stat (parquet footer row count) picks the
+    # assignment form — at gate scale nK stays far below the 16M-dot
+    # knee, so the plan is the fold
     # (pinned: tests/test_assign_auto.py test_registered_ivf_demos_plan_the_fold)
     return ivf_topk(
         e, "vec_id", "embedding", n_centroids=8, n_probe=2, k=3,

@@ -87,8 +87,8 @@ def _minhash_expr_trees(
     """The constant expression groups of the MinHash signature stage
     (Kirsch-Mitzenmacher h1/h2 parse, the bands×r min aggregates, the
     band-key projection), built once per process per (bands, r) — pure
-    py4j-construction memo (``functions.exprcache``), the arithmetic is
-    byte-identical to the former inline form."""
+    py4j-construction memo (``functions.exprcache``); the arithmetic is
+    the same as building the trees inline."""
     hx = F.md5(F.col("s"))
     hash_cols = (
         F.conv(F.substring(hx, 1, 8), 16, 10).cast("long").alias("h1"),
@@ -136,7 +136,6 @@ def minhash_lsh_pairs(
     k: int = 3,
     bands: int = 6,
     threshold: float = 0.5,
-    reuse: bool = True,
     max_bucket_size: int | None = None,
     rows_per_band: int = 1,
 ) -> DataFrame:
@@ -153,7 +152,7 @@ def minhash_lsh_pairs(
     r to slash low-similarity candidate mass BEFORE the verify join
     instead of paying |candidates| Jaccard computations — the signature
     agg stays one pass (b×r min columns), the shuffle stays one row per
-    (doc, band). Measured (round 17, docs/SCALE.md "MinHash s-curve"):
+    (doc, band). Measured (docs/SCALE.md "MinHash s-curve"):
     r=2 runs 2.5×/3.1× faster end-to-end at 16×/64× corpus scale with
     the verified pair sets essentially identical on a near-dup corpus
     (pair similarity far above the threshold keeps 1-(1-s^r)^b ≈ 1).
@@ -170,28 +169,25 @@ def minhash_lsh_pairs(
     ``collect_list`` makes this pass an ObjectHashAggregate, which is
     NOT whole-stage-codegen'd, and it buffers each document's distinct
     shingle set as one in-memory array row — a per-row bound of
-    O(distinct shingles per doc) the former exploded count-join did not
+    O(distinct shingles per doc) an exploded count-join would not
     have. Documents are LLM-corpus-sized here; for a corpus of
     pathologically long documents, bound shingle counts upstream or
-    fall back to the pre-r18 exploded count-join — ADVICE r18.)
+    verify with an exploded count-join instead.)
     The verify stage joins the bounded
     candidate-pair list back to that per-doc relation on each side and
     computes |A∩B| natively as ``size(array_intersect(sa, sb))`` —
-    identical to the former exploded count-join by construction (the
+    identical to an exploded shingle count-join by construction (the
     shingle rows are distinct per doc, so the equi-join match count IS
-    the distinct intersection size; round 18, guide §2.3/§2.4: the
-    rewrite deletes the size-agg pass, the two exploded verify scans and
-    the |candidates| × k̄-row probe stage — measured 2.33 → 1.16 s at
-    sf0.1/local[32] with the identical 256-pair result).
+    the distinct intersection size), without that form's size-agg pass,
+    two exploded verify scans and |candidates| × k̄-row probe stage —
+    measured 2.33 → 1.16 s at sf0.1/local[32] with the identical
+    256-pair result.
     Jaccard = ∩ / (|A| + |B| - ∩) over distinct shingle sets —
     identical to intersect/union over the sets.
 
-    ``reuse=True`` persists that per-doc relation (DISK_ONLY) so the
-    shingle explode→distinct→aggregate chain runs once instead of three
-    times (signature stack, both verify sides). Set ``reuse=False``
-    when executor storage is tighter than recompute cost (the per-doc
-    arrays are ~the corpus text) — results are identical either way.
-    Persist is LAZY (plan construction stays side-effect free — no jobs
+    The per-doc relation is persisted (DISK_ONLY) so the shingle
+    explode→distinct→aggregate chain runs once instead of three times
+    (signature stack, both verify sides). Persist is LAZY (plan construction stays side-effect free — no jobs
     fire until an action) and disk-backed (no executor memory pressure
     at 100 TB); Spark's cache manager matches the canonicalized plan,
     so repeated invocations — and the other demos/sweep arms that call
@@ -212,8 +208,7 @@ def minhash_lsh_pairs(
     exp = shingles_exploded(df, id_col, text_col, k)
     hash_cols, band_aggs, key_cols = _minhash_expr_trees(bands, rows_per_band)
     # ONE aggregation pass over the exploded shingles computes every
-    # per-document quantity the pipeline needs (round 18, guide §2.3/
-    # §2.4): all band×row minima (a band×shingle cross join would
+    # per-document quantity the pipeline needs: all band×row minima (a band×shingle cross join would
     # multiply the shuffle rows by `bands`), the distinct-shingle array
     # for the verify stage, and the shingle count for the Jaccard
     # denominator. Hash families by Kirsch-Mitzenmacher double hashing:
@@ -221,7 +216,7 @@ def minhash_lsh_pairs(
     # j = (h1 + j·h2) mod 2^32 — long arithmetic and long mins instead of
     # per-family string md5s and 32-char string mins (the same
     # parse-once/derive-many rewrite that took the simhash vote agg down
-    # 4×, docs/SCALE.md round-4). r=1 keys the band by the minimum
+    # 4×, docs/SCALE.md). r=1 keys the band by the minimum
     # itself; r>1 hashes the concatenation of the r family minima.
     # collect_list (not collect_set): the exploded relation is already
     # distinct per (doc_id, s); element order is irrelevant downstream
@@ -236,12 +231,11 @@ def minhash_lsh_pairs(
             F.count(F.lit(1)).alias("__n"),
         )
     )
-    if reuse:
-        # DISK_ONLY persist, not localCheckpoint(eager=True): lazy (no
-        # plan-build-time jobs in anyone's timed region), disk-backed, and
-        # re-invocations hit the cache-manager's canonicalized-plan match
-        # instead of materializing a fresh checkpoint every call.
-        per_doc = per_doc.persist(StorageLevel.DISK_ONLY)
+    # DISK_ONLY persist, not localCheckpoint(eager=True): lazy (no
+    # plan-build-time jobs in anyone's timed region), disk-backed, and
+    # re-invocations hit the cache-manager's canonicalized-plan match
+    # instead of materializing a fresh checkpoint every call.
+    per_doc = per_doc.persist(StorageLevel.DISK_ONLY)
     band_keys = per_doc.select("doc_id", *key_cols)
     stack_expr = "stack({n}, {args}) as (band, mh)".format(
         n=bands, args=", ".join(f"{b}, key_{b}" for b in range(bands))
@@ -251,12 +245,12 @@ def minhash_lsh_pairs(
         from transit_efficiency_analysis_spark.operators.buckets import cap_buckets
 
         sig = cap_buckets(sig, ["band", "mh"], "doc_id", max_bucket_size)
-    # Candidate generation in ONE exchange (round 18): group the
-    # signature rows by bucket and explode the within-bucket ordered
-    # pairs, instead of the bucket-keyed self-join + distinct — the
-    # self-join shuffled (and computed) the signature relation TWICE
-    # (per-side column pruning defeats exchange reuse) and paid an SMJ
-    # sort; this ships each signature row once. Pair-for-pair identical:
+    # Candidate generation in ONE exchange: group the signature rows by
+    # bucket and explode the within-bucket ordered pairs, instead of a
+    # bucket-keyed self-join + distinct — the self-join would shuffle
+    # (and compute) the signature relation TWICE (per-side column
+    # pruning defeats exchange reuse) and pay an SMJ sort; this ships
+    # each signature row once. Pair-for-pair identical:
     # equality grouping matches join equality because NULL bucket keys
     # are filtered first (a NULL key never satisfies the join
     # condition), and ``doc_a < doc_b`` filters the exploded pairs
@@ -276,12 +270,12 @@ def minhash_lsh_pairs(
         .distinct()
     )
     # Verify by joining the BOUNDED candidate list back to the per-doc
-    # relation on each side and intersecting the shingle arrays natively
-    # (round 18, guide §2.3/§2.4). Exactness: the exploded relation is
-    # distinct per (doc_id, s), so the former equi-join match count
-    # equals size(array_intersect(sa, sb)) — array_intersect returns
-    # the distinct common elements — and __n equals the former per-doc
-    # size agg. vs the exploded form this deletes one full corpus agg
+    # relation on each side and intersecting the shingle arrays
+    # natively. Exactness: the exploded relation is distinct per
+    # (doc_id, s), so an exploded equi-join's match count equals
+    # size(array_intersect(sa, sb)) — array_intersect returns the
+    # distinct common elements — and __n equals a per-doc size agg.
+    # vs the exploded form this deletes one full corpus agg
     # pass (sizes), two exploded verify scans and the |candidates| × k̄
     # probe rows; the join sides here are |pairs| rows against the
     # per-doc relation, which arrives hash-partitioned by doc_id from
@@ -310,9 +304,8 @@ def minhash_lsh_pairs(
             "n_a",
             "n_b",
         )
-        # preserve the pre-r18 inner count-join contract (ADVICE r18):
-        # the exploded formulation dropped zero-intersection candidates
-        # entirely, so a threshold <= 0 must not surface them here either.
+        # the inner count-join contract: a zero-intersection candidate
+        # is never a pair, so a threshold <= 0 must not surface one.
         # A no-op for every positive threshold (jaccard 0 < threshold).
         .where(F.col("n_inter") > 0)
         .select("doc_a", "doc_b", jac.alias("jaccard_sim"))
@@ -331,18 +324,17 @@ def minhash_recall_sweep(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Measure what raising ``rows_per_band`` would do to THIS corpus
-    before flipping it (round 18, resolving VERDICT r17 ask #5 on the
-    side of measurement over an auto default).
+    before flipping it — measurement instead of an auto default.
 
     Why no ``rows_per_band="auto"``: unlike the sign-LSH physical twin
-    (bit-equal buckets, so resolution can never change results), r is a
+    (bit-equal buckets, so the form pick can never change results), r is a
     SEMANTIC knob — the per-band collision probability drops from s to
     s^r, moving the precision threshold (1/b)^(1/r), so a corpus whose
     near-dups sit AT the Jaccard threshold genuinely loses pairs at
-    higher r (docs/SCALE.md round-17: 1-in-16k disagreement on a
+    higher r (docs/SCALE.md: 1-in-16k disagreement on a
     far-above-threshold corpus; arbitrarily worse on a boundary one).
     A size-keyed auto would silently change verified output as the
-    corpus grows — exactly the failure mode the LSH auto's
+    corpus grows — exactly the failure mode the LSH knee's
     never-turn-working-into-error guard exists to avoid, but here it
     is silent recall loss, undetectable plan-side. The shipped story
     is therefore: r=1 stays the default (maximal recall, the
@@ -410,7 +402,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame
     block extraction and ``bit_count``/XOR hamming work identically on
     Spark longs and DuckDB BIGINTs (verified two's-complement parity).
 
-    64 bits (vs the former 32) keeps random collisions negligible at
+    64 bits (vs 32) keeps random collisions negligible at
     billion-doc scale: the 32-bit birthday bound (~2^16 docs) produced
     false candidate mass at 100 TB; 64-bit pushes it to ~2^32 docs.
 
@@ -428,8 +420,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame
     substring + string-compare per bit of the naive form (64 string ops
     per token → 4). The ±1 vote sum is recovered at fold time as
     ``2·Σhit − n`` from one shared ``count(*)``, so the per-token
-    expression is the bare bit extraction. (Round-3 profiling ask:
-    VERDICT r3 "What's wrong #2".)
+    expression is the bare bit extraction.
     """
     tokens = df.select(
         F.col(id_col).alias("doc_id"), F.explode(words(text_col)).alias("t")
@@ -446,7 +437,7 @@ def _simhash_expr_trees() -> tuple[tuple[Column, ...], tuple[Column, ...], Colum
     """The three constant expression groups of ``simhash_fingerprints``
     (chunk parse, 64+1 aggregates, bit fold), built once per process —
     the tree is ~70 aggregate/CASE columns and its py4j construction
-    cost (~2-3 s per invocation, measured round 18) dominated the
+    cost (~2-3 s per invocation, measured) dominated the
     demo's bench time. Pure construction memo; see
     ``functions.exprcache``."""
     chunk_cols = tuple(
@@ -536,7 +527,7 @@ def simhash_pairs(
     Scale shape: the choose-2 join keys are **32-bit** (two 16-bit blocks
     concatenated), so bucket cardinality grows to ~2^30 — at billions of
     docs mean bucket size stays O(n / 2^30) instead of the O(n / 2^16)
-    a single 16-bit prefix block allows (the round-2 sizing cliff). Each
+    a single 16-bit prefix block allows (the 16-bit sizing cliff). Each
     subset is one bucketed self-join over 16-byte signature rows;
     candidates stay bounded by bucket sizes, never |corpus|².
 
@@ -567,10 +558,10 @@ def simhash_pairs(
     ).select(
         "doc_id", "simhash", F.col("e.combo").alias("combo"), F.col("e.bkey").alias("bkey")
     )
-    # candidate generation in ONE exchange (round 18, same restructure as
-    # minhash_lsh_pairs): group by (combo, bkey) bucket, explode the
-    # within-bucket ordered pairs — the keyed self-join shuffled (and
-    # computed) the fingerprint relation twice and paid an SMJ sort.
+    # candidate generation in ONE exchange (the minhash_lsh_pairs
+    # recipe): group by (combo, bkey) bucket, explode the within-bucket
+    # ordered pairs — a keyed self-join would shuffle (and compute) the
+    # fingerprint relation twice and pay an SMJ sort.
     # bkey is never NULL (pure arithmetic over a non-null fingerprint),
     # so equality grouping matches the join's equality semantics; the
     # doc_id < filter and the hamming arithmetic are verbatim.
@@ -628,15 +619,14 @@ def cross_corpus_overlap(
     ce = shingles_exploded(corpus, id_col, text_col, k)
     if max_shingle_df is not None:
         # document frequency per shingle over the corpus side in the
-        # SAME pass (round 19, guide §2.4): a count window partitioned
-        # by shingle attaches df to every (doc, shingle) row — one
-        # shuffle of the exploded relation — where the former
-        # groupBy-then-anti-join DERIVED the exploded relation twice
-        # (once to build the stop set, once as the anti-join probe).
-        # shingles_exploded is already distinct per (doc, shingle) so
-        # the count IS the document frequency, and it never emits NULL
-        # shingles, so keep-df<=cap drops exactly the rows the
-        # anti-join dropped.
+        # SAME pass: a count window partitioned by shingle attaches df
+        # to every (doc, shingle) row — one shuffle of the exploded
+        # relation — where a groupBy-then-anti-join would DERIVE the
+        # exploded relation twice (once to build the stop set, once as
+        # the anti-join probe). shingles_exploded is already distinct
+        # per (doc, shingle) so the count IS the document frequency,
+        # and it never emits NULL shingles, so keep-df<=cap drops
+        # exactly the rows such an anti-join would drop.
         ce = (
             ce.withColumn(
                 "__df", F.count(F.lit(1)).over(Window.partitionBy("s"))
@@ -709,15 +699,15 @@ def dedup_clusters(
                 new_label.alias("label"),
                 (new_label < F.col("label")).alias("changed"),
             )
-            # LAZY (round 19): the convergence probe below is the action
-            # that materializes this round's checkpoint, so each round
-            # costs ONE job instead of two — same treatment as
-            # dedup_clusters_twophase; later rounds (and the returned
-            # frame) read the stored blocks either way. The probe is a
-            # FULL count, not the former limit(1): a short-circuiting
+            # LAZY: the convergence probe below is the action that
+            # materializes this iteration's checkpoint, so each
+            # iteration costs ONE job instead of two — same treatment
+            # as dedup_clusters_twophase; later iterations (and the
+            # returned frame) read the stored blocks either way. The
+            # probe is a FULL count, not limit(1): a short-circuiting
             # probe would materialize only the partitions it touched and
             # the checkpoint would immediately backfill the rest in a
-            # second job, re-creating the two-job round.
+            # second job.
             .localCheckpoint(eager=False)
         )
         if labels.where(F.col("changed")).count() == 0:
@@ -745,11 +735,11 @@ def ngram_jaccard_pairs(
     shingle-equality join (pairs sharing zero shingles have Jaccard 0 and
     are below any positive threshold, so the inner join loses nothing).
 
-    Round 19 measured — and REJECTED — the one-exchange group form here
-    (groupBy(blk, s) → collect_list(doc_id) → ordered-pair explode, the
-    round-18 minhash candidate recipe): pair-for-pair identical (pinned
-    in tests/test_round19_opt.py), but 13% SLOWER at sf0.1 on an idle
-    box (interleaved A/B medians 3.04 s join vs 3.44 s group) — unlike
+    The one-exchange group form (groupBy(blk, s) → collect_list(doc_id)
+    → ordered-pair explode, the minhash candidate recipe) is
+    pair-for-pair identical (pinned in tests/test_round19_opt.py) but
+    measured 13% SLOWER at sf0.1 on an idle box (interleaved A/B
+    medians 3.04 s join vs 3.44 s group), so it is not used — unlike
     the minhash bucket stage, the grouping key here is the raw
     (block, shingle) pair, so the ObjectHashAggregate buffers a doc-id
     array per distinct shingle and that costs more than the SMJ
@@ -816,15 +806,15 @@ def dedup_clusters_twophase(
     (property-tested equal on random graphs and deep chains).
     """
     # canonical (hi, lo): every emitted edge already points high -> low.
-    # Checkpoints are LAZY (round 19): the per-round count probe is the
-    # action that materializes them, so each round costs ONE job instead
-    # of the former three (two eager checkpoints + a fresh count), and
-    # the two star phases compose into a single materialization — the
+    # Checkpoints are LAZY: the per-round count probe is the action
+    # that materializes them, so each round costs ONE job instead of
+    # three (two eager checkpoints + a fresh count), and the two star
+    # phases compose into a single materialization — the
     # intra-round replan over a checkpointed scan is trivial next to the
     # per-job orchestration it replaces (loop measured 3.2 -> ~1 s at
     # sf0.1/local[32], identical fixpoint). Counts are carried in Python
     # between rounds (labels of a checkpointed relation cannot change
-    # under us), which also deletes the prev.count() re-read.
+    # under us), so there is no prev.count() re-read.
     canon = (
         pairs.select(
             F.greatest(F.col("doc_a"), F.col("doc_b")).alias("hi"),
@@ -888,7 +878,6 @@ def minhash_lsh_pairs_incremental(
     k: int = 3,
     bands: int = 6,
     threshold: float = 0.5,
-    reuse: bool = True,
     max_bucket_size: int | None = None,
     consume=None,
 ):
@@ -909,20 +898,16 @@ def minhash_lsh_pairs_incremental(
     semi-join before the verification join, so exact-Jaccard work is
     candidate-bounded too.
 
-    ``reuse`` and ``max_bucket_size`` carry the same semantics as in
-    :func:`minhash_lsh_pairs`: each side's PER-DOC relation (band
+    As in :func:`minhash_lsh_pairs`, each side's PER-DOC relation (band
     minima + distinct-shingle array + count, produced by one
-    aggregation pass — round 19, mirroring the round-18
-    ``minhash_lsh_pairs`` rewrite) is consumed twice (signature stack,
-    verification join), so ``reuse=True`` persists both DISK_ONLY;
-    ``max_bucket_size`` caps each (band, mh) bucket on BOTH signature
+    aggregation pass) is consumed twice (signature stack, verification
+    join), so both are persisted DISK_ONLY; ``max_bucket_size`` caps each (band, mh) bucket on BOTH signature
     sides before the candidate join — the boilerplate-storm guard (a
     corpus-wide shared shingle otherwise fans the batch×corpus join out
     by |corpus bucket| per batch row).
 
-    Persist lifecycle (round 13, VERDICT r12 ask #5): pass ``consume``
-    — a callable taking the pairs DataFrame — and the function OWNS the
-    ``reuse=True`` persists: it runs ``consume(pairs)`` while the
+    Persist lifecycle: pass ``consume`` — a callable taking the pairs
+    DataFrame — and the function OWNS the persists: it runs ``consume(pairs)`` while the
     exploded-shingle relations are alive, unpersists them in a
     ``finally``, and returns whatever ``consume`` returned. This is the
     per-batch maintenance-loop mode (e.g. a ``foreachBatch`` body that
@@ -936,8 +921,7 @@ def minhash_lsh_pairs_incremental(
     or unpersist) when done.
     """
     def km_parts(df: DataFrame):
-        # ONE aggregation pass per side (round 19 — the round-18
-        # minhash_lsh_pairs recipe applied to the incremental form):
+        # ONE aggregation pass per side (the minhash_lsh_pairs recipe):
         # band minima, the distinct-shingle array and the shingle count
         # come out of the same groupBy, so the exploded relation is
         # consumed once instead of three times and the persisted state
@@ -961,8 +945,7 @@ def minhash_lsh_pairs_incremental(
             F.collect_list("s").alias("__sh"),
             F.count(F.lit(1)).alias("__n"),
         )
-        if reuse:
-            per_doc = per_doc.persist(StorageLevel.DISK_ONLY)
+        per_doc = per_doc.persist(StorageLevel.DISK_ONLY)
         stack_expr = "stack({n}, {args}) as (band, mh)".format(
             n=bands, args=", ".join(f"{b}, key_{b}" for b in range(bands))
         )
@@ -993,9 +976,9 @@ def minhash_lsh_pairs_incremental(
     # candidate-bounded verification: the bounded candidate list joins
     # back to each side's per-doc relation and intersects the shingle
     # arrays natively — exact because the exploded relation is distinct
-    # per (doc_id, s), so the former equi-join match count IS
-    # size(array_intersect(...)); the former corpus-side semi-join prune
-    # is subsumed (the join on cand is already candidate-bounded).
+    # per (doc_id, s), so an exploded equi-join's match count IS
+    # size(array_intersect(...)); no corpus-side semi-join prune is
+    # needed (the join on cand is already candidate-bounded).
     ab = doc_b.select(
         F.col("doc_id").alias("batch_doc"),
         F.col("__sh").alias("__sb"),
@@ -1019,8 +1002,8 @@ def minhash_lsh_pairs_incremental(
             "n_b",
             "n_c",
         )
-        # the former inner count-join dropped zero-intersection
-        # candidates; keep that contract for threshold <= 0
+        # the inner count-join contract: a zero-intersection candidate
+        # is never a pair, even for threshold <= 0
         .where(F.col("n_inter") > 0)
         .select("batch_doc", "corpus_doc", jac.alias("jaccard_sim"))
         .where(F.col("jaccard_sim") >= threshold)
@@ -1030,9 +1013,8 @@ def minhash_lsh_pairs_incremental(
     try:
         return consume(pairs)
     finally:
-        if reuse:
-            doc_c.unpersist()
-            doc_b.unpersist()
+        doc_c.unpersist()
+        doc_b.unpersist()
 
 
 def simhash_pairs_incremental(

@@ -12,7 +12,10 @@
   are exact and reproducible across engines and partitionings — with zero
   shuffle in the assignment itself.
 
-No Python UDFs, no driver-side vector collection.
+Every stage runs as JVM column algebra by default. The caller's row
+count (``n_rows``, typically a free parquet-footer or catalog stat)
+lets the engine pick a bit-equal Arrow/numpy twin for the assignment
+stages once a measured knee is crossed; no caller picks a form.
 """
 
 from __future__ import annotations
@@ -59,7 +62,7 @@ def _q_quantized(name: str) -> Column:
 def _q_projection_exprs(planes: int, dims: int) -> tuple[Column, ...]:
     """Memoized per-plane projection folds over the ``__q`` column — the
     planes × dims sign literals cost ~1 s of py4j construction per
-    invocation at planes=8/dims=64 (measured round 18)."""
+    invocation at planes=8/dims=64 (measured)."""
     return tuple(lsh_projection_exprs(F.col("__q"), planes, dims))
 
 
@@ -108,8 +111,8 @@ def brute_force_topk(
     excluded. The query side is broadcast (queries ≪ corpus).
     """
     # single-small-file corpus inputs otherwise run the whole broadcast
-    # join + per-pair cosine on one core (round 18; no-op at scale —
-    # see operators.parallel)
+    # join + per-pair cosine on one core (no-op at scale — see
+    # operators.parallel)
     corpus = ensure_min_parallelism(corpus)
     # norms are projected on each side BEFORE the join → one norm fold per
     # row instead of one per pair (cosine(a,b) = dot/(|a||b|) exactly)
@@ -200,8 +203,7 @@ def derive_planes(n_rows: int, target_bucket_size: int) -> int:
 
     With ``p`` planes there are 2^p buckets, so mean occupancy is n/2^p;
     solving for the target gives p = ceil(log2(n / target)). A fixed
-    plane count is the scale cliff the round-2 review flagged: at constant
-    planes the bucket self-join does (n/2^p)² pairs per bucket — growing
+    plane count is a scale cliff: at constant planes the bucket self-join does (n/2^p)² pairs per bucket — growing
     quadratically with the corpus — while deriving p from n keeps per-
     bucket work constant and total candidate volume ~linear in n.
     Clamped to [1, 30] (2^30 buckets ≫ any real corpus / target ratio).
@@ -216,29 +218,22 @@ def _lsh_sizing(
     planes: int | None,
     target_bucket_size: int | None,
     n_rows: int | None,
-    bucket_assign: str,
-) -> tuple[int, int | None, str]:
+) -> tuple[int, str]:
     """Shared preamble of the three sign-LSH entry points
-    (``lsh_bucket_assignments`` / ``lsh_topk`` / ``multiprobe_lsh_topk``;
-    factored in round 17 when the triplicated copies had to change in
-    lockstep): derive the plane count — paying at most ONE sizing
-    count(), which then doubles as the auto knee's stat — validate
-    ``bucket_assign``, and resolve ``"auto"`` on the row×plane knee.
-    Returns ``(planes, n_rows, resolved_mode)``."""
+    (``lsh_bucket_assignments`` / ``lsh_topk`` / ``multiprobe_lsh_topk``):
+    derive the plane count — paying at most ONE sizing count(), which
+    then doubles as the knee's row statistic — and pick the projection
+    form on the row×plane knee (:func:`_resolve_bucket_assign`).
+    Returns ``(planes, form)``."""
     if target_bucket_size is not None:
         if n_rows is None:
-            # the sizing count doubles as the auto knee's stat — once
+            # the sizing count doubles as the knee's statistic — once
             # paid, never re-derived
             n_rows = df.count()
         planes = derive_planes(n_rows, target_bucket_size)
     if planes is None:
         raise ValueError("pass planes or target_bucket_size")
-    if bucket_assign not in ("expr", "arrow", "auto"):
-        raise ValueError(
-            "bucket_assign must be 'expr', 'arrow' or 'auto', got "
-            f"{bucket_assign!r}"
-        )
-    return planes, n_rows, _resolve_bucket_assign(bucket_assign, n_rows, planes)
+    return planes, _resolve_bucket_assign(n_rows, planes)
 
 
 def lsh_bucket_assignments(
@@ -249,18 +244,17 @@ def lsh_bucket_assignments(
     dims: int = 64,
     target_bucket_size: int | None = None,
     n_rows: int | None = None,
-    bucket_assign: str = "auto",
 ) -> DataFrame:
     """(vec_id, bucket) sign-LSH assignments — one map-only projection
     (``lsh_bucket_expr``); same math as
     ``functions.vectors.hyperplane_sign_bucket``.
 
-    ``bucket_assign`` picks the physical form of the projection stage:
-    ``"expr"`` the JVM expression folds, ``"arrow"`` the bit-equal
-    int64-matmul twin (:func:`_arrow_lsh_base`, bucket-only mode — no
-    vectors cross the Arrow boundary), ``"auto"`` (default) resolves on
-    the measured row×plane knee when ``n_rows`` is offered and stays on
-    the expression form otherwise (:func:`_resolve_bucket_assign`).
+    The row count picks the physical form of the projection stage: the
+    JVM expression folds, or — once ``n_rows`` (or the sizing count)
+    puts the corpus past the measured row×plane knee — the bit-equal
+    int64-matmul twin (:func:`_arrow_lsh_base`, bucket-only mode: no
+    vectors cross the Arrow boundary). See
+    :func:`_resolve_bucket_assign`.
 
     Pass ``target_bucket_size`` (with ``planes=None``) to size the bucket
     space from the corpus: ``planes = derive_planes(df.count(), target)``.
@@ -270,18 +264,14 @@ def lsh_bucket_assignments(
     being a constant 2^8. When a table catalog already knows the row
     count, pass it as ``n_rows`` and no action runs (the
     cached-statistics path)."""
-    was_auto = bucket_assign == "auto"
-    planes, n_rows, bucket_assign = _lsh_sizing(
-        df, planes, target_bucket_size, n_rows, bucket_assign
-    )
-    # same single-small-file parallelism guard as lsh_topk (round 18):
-    # assignment is map-only, so the scan's partitioning IS its
-    # parallelism; the guard only fires in the small-input regime
+    planes, form = _lsh_sizing(df, planes, target_bucket_size, n_rows)
+    # same single-small-file parallelism guard as lsh_topk: assignment
+    # is map-only, so the scan's partitioning IS its parallelism; the
+    # guard only fires in the small-input regime
     df = ensure_min_parallelism(df)
-    if bucket_assign == "arrow":
+    if form == "arrow":
         return _arrow_lsh_base(
-            df, id_col, vec_col, planes, dims, emit_vectors=False,
-            auto_resolved=was_auto,
+            df, id_col, vec_col, planes, dims, emit_vectors=False
         )
     return df.select(
         F.col(id_col).alias("vec_id"),
@@ -300,11 +290,11 @@ def _arrow_lsh_base(
     dims: int,
     with_flip: bool = False,
     emit_vectors: bool = True,
-    auto_resolved: bool = False,
 ) -> DataFrame:
     """(vec_id, v, vn, bucket): the Arrow twin of ``lsh_topk``'s base
-    projection (round 16, dark behind ``bucket_assign="arrow"``). The
-    DECIMAL quantization stays JVM-side (``quantize_vec`` — exact,
+    projection, picked past the row×plane knee
+    (:func:`_resolve_bucket_assign`). The DECIMAL quantization stays
+    JVM-side (``quantize_vec`` — exact,
     codegen'd, one pass); the twin replaces only the ``planes``
     interpreted long folds per row with ONE exact int64 matmul per
     Arrow batch against the ±1 sign matrix (``plane_sign`` — the same
@@ -378,17 +368,16 @@ def _arrow_lsh_base(
     out_schema = StructType(out_fields)
     n_passthrough = 3 if emit_vectors else 1
 
-    # ADVICE r17: when "auto" picked this path, a dirty-vector rejection
-    # must say so — the caller never asked for arrow, and the same call
-    # worked (zero-bucketing the dirty rows) below the knee, so the
-    # failure would otherwise look like a regression with no visible
-    # cause as the corpus grows past it.
-    auto_hint = (
-        " [bucket_assign='auto' selected this Arrow path because the"
-        " corpus crossed the row-plane knee; pass bucket_assign='expr'"
-        " to restore the zero-bucket expression behavior]"
-        if auto_resolved
-        else ""
+    # the same call worked below the knee (the expression form
+    # zero-buckets dirty rows), so a rejection says why this form was
+    # picked and how to keep the other one — otherwise it would look
+    # like a regression with no visible cause as the corpus grows
+    hint = (
+        " [the int64-matmul form was picked because the row count crossed"
+        " the row-plane knee; call without n_rows or target_bucket_size,"
+        " passing planes explicitly (derive_planes gives the derived"
+        " count), to keep the zero-bucket expression form, or clean the"
+        " corpus first]"
     )
 
     def run(batches):
@@ -400,13 +389,11 @@ def _arrow_lsh_base(
                 continue
             q = batch.column(n_passthrough)
             # flatten() is slice-aware; .values is the UNSLICED child
-            # (counts NULLs outside a sliced batch, ADVICE r16 #1)
+            # (it would count NULLs outside a sliced batch)
             if q.null_count or q.flatten().null_count:
                 raise ValueError(
                     "arrow lsh: NULL vector components are not supported"
-                    " — the expression form buckets them at 0;"
-                    " use bucket_assign='expr' or clean the corpus"
-                    + auto_hint
+                    " — the expression form buckets them at 0" + hint
                 )
             offs = q.offsets.to_numpy()
             widths = np.diff(offs)
@@ -414,7 +401,7 @@ def _arrow_lsh_base(
                 raise ValueError(
                     f"arrow lsh: vector dims {int(widths.min())}.."
                     f"{int(widths.max())} != declared dims {dims} (the "
-                    "expression form zero-buckets these)" + auto_hint
+                    "expression form zero-buckets these)" + hint
                 )
             qm = q.flatten().to_numpy().reshape(n, dims)
             if qm.size and int(np.abs(qm).max()) > limit:
@@ -460,7 +447,6 @@ def lsh_topk(
     max_bucket_size: int | None = None,
     target_bucket_size: int | None = None,
     n_rows: int | None = None,
-    bucket_assign: str = "auto",
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranking *within* each LSH bucket.
 
@@ -482,32 +468,25 @@ def lsh_topk(
     candidates per bucket. None disables the cap (exact within-bucket
     semantics — the oracle-checked mode). ``n_rows`` is the
     cached-statistics path: when the catalog knows the corpus size,
-    sizing runs with no count() action — and the same stat feeds
-    ``bucket_assign="auto"``'s row×plane knee
-    (:func:`_resolve_bucket_assign`; stat-less auto keeps the
-    expression form)."""
-    was_auto = bucket_assign == "auto"
-    planes, n_rows, bucket_assign = _lsh_sizing(
-        df, planes, target_bucket_size, n_rows, bucket_assign
-    )
+    sizing runs with no count() action — and the same statistic picks
+    the projection form on the row×plane knee
+    (:func:`_resolve_bucket_assign`; without one the expression form
+    runs)."""
+    planes, form = _lsh_sizing(df, planes, target_bucket_size, n_rows)
     # single-small-file inputs otherwise drag the whole pipeline onto
     # one core: the bucket join broadcasts at that scale, so the scan's
     # inherited partitioning IS the parallelism of the quantize/fold
-    # projection AND the per-pair cosine ranking (round 18 — measured
-    # 2.7 s → sub-second at sf0.1/local[32]; the guard is a no-op on
-    # any input with splits ≥ cores, see its docstring)
+    # projection AND the per-pair cosine ranking (measured 2.7 s →
+    # sub-second at sf0.1/local[32]; the guard is a no-op on any input
+    # with splits ≥ cores, see its docstring)
     df = ensure_min_parallelism(df)
-    # the base projection's PHYSICAL form (round 17 flip of the round-16
-    # dark twin): "arrow" computes bucket ids with _arrow_lsh_base's
-    # exact int64 matmul instead of `planes` interpreted long folds;
-    # "auto" (the default) resolves on the measured row×plane knee when
-    # a catalog stat is offered and keeps the expression form otherwise.
-    # Everything downstream (cap, candidate join, exact cosine rank) is
-    # identical, and bucket ids are bit-equal by integer associativity.
-    if bucket_assign == "arrow":
-        base = _arrow_lsh_base(
-            df, id_col, vec_col, planes, dims, auto_resolved=was_auto
-        )
+    # the base projection's PHYSICAL form: past the row×plane knee
+    # _arrow_lsh_base computes bucket ids with one exact int64 matmul
+    # instead of `planes` interpreted long folds. Everything downstream
+    # (cap, candidate join, exact cosine rank) is identical, and bucket
+    # ids are bit-equal by integer associativity.
+    if form == "arrow":
+        base = _arrow_lsh_base(df, id_col, vec_col, planes, dims)
     else:
         base = df.select(
             F.col(id_col).alias("vec_id"),
@@ -562,7 +541,6 @@ def multiprobe_lsh_topk(
     k: int = 3,
     target_bucket_size: int | None = None,
     n_rows: int | None = None,
-    bucket_assign: str = "auto",
 ) -> DataFrame:
     """Multi-probe sign-LSH top-k (Lv et al.): each query probes its own
     bucket AND the bucket reached by flipping the plane it is closest to
@@ -582,32 +560,26 @@ def multiprobe_lsh_topk(
     from the corpus size exactly as in ``lsh_topk`` — the scale mode that
     avoids the measured fixed-plane cliff (docs/SCALE.md §64x stretch);
     ``n_rows`` is the cached-statistics path that skips the sizing
-    count() when a catalog already knows the corpus size — and feeds
-    ``bucket_assign="auto"``'s row×plane knee
+    count() when a catalog already knows the corpus size — and picks
+    the projection form on the row×plane knee
     (:func:`_resolve_bucket_assign`).
 
     Returns (query_id, neighbor_id, cosine_sim, rank).
     """
-    was_auto = bucket_assign == "auto"
-    planes, n_rows, bucket_assign = _lsh_sizing(
-        df, planes, target_bucket_size, n_rows, bucket_assign
-    )
-    # same single-small-file parallelism guard as lsh_topk (round 18)
+    planes, form = _lsh_sizing(df, planes, target_bucket_size, n_rows)
+    # same single-small-file parallelism guard as lsh_topk
     df = ensure_min_parallelism(df)
     # 2^flip is exact in double for flip < 2^53's range (planes <= 30)
     probe = F.col("bucket").bitwiseXOR(F.pow(F.lit(2.0), F.col("flip")).cast("long"))
-    # bucket_assign="arrow" (round 16; auto-resolvable since round 17):
-    # bucket AND flip plane from the int64-matmul twin — margins are
-    # exact integers and numpy's first-occurrence argmin is the fold's
-    # (|a|, p) lexicographic min, so probe choice is bit-equal. A
-    # stat-less auto keeps the expression plan. The per-plane fold
-    # expressions are built ONLY on the expr branch — planes × dims
-    # literal sign constants are dead work on the arrow path
-    # (review r17).
-    if bucket_assign == "arrow":
+    # past the knee, bucket AND flip plane come from the int64-matmul
+    # twin — margins are exact integers and numpy's first-occurrence
+    # argmin is the fold's (|a|, p) lexicographic min, so probe choice
+    # is bit-equal. The per-plane fold expressions are built ONLY on
+    # the expression branch — planes × dims literal sign constants are
+    # dead work on the arrow path.
+    if form == "arrow":
         base = _arrow_lsh_base(
-            df, id_col, vec_col, planes, dims, with_flip=True,
-            auto_resolved=was_auto,
+            df, id_col, vec_col, planes, dims, with_flip=True
         )
     else:
         bucket, margin = _q_bucket_and_flip(planes, dims)
@@ -664,13 +636,11 @@ def _const_key(df: DataFrame, id_col: str, alias: str):
     corpora, and fractional ids (double/decimal) make ``pmod(id, 1)``
     NON-constant (pmod(2.5, 1) = 0.5), which would split the
     single-partition seed window and collide the row_number-derived
-    cell/code ids (ADVICE r16 #2) — goes through
+    cell/code ids — goes through
     ``pmod(length(cast(id as string)), 1)`` (always 0 for any type
-    with a string form). The old unconditional ``pmod(id, 1)``
-    ANSI-cast string ids to BIGINT and crashed BOTH assign modes at
-    the seeding stage (found extending ADVICE r15 #2's string-id fix:
-    the arrow schema pin was the second of two string-id breaks on
-    this path)."""
+    with a string form). An unconditional ``pmod(id, 1)`` would
+    ANSI-cast string ids to BIGINT and crash both assignment forms at
+    the seeding stage."""
     from pyspark.sql.types import IntegralType
 
     if isinstance(df.schema[id_col].dataType, IntegralType):
@@ -684,7 +654,6 @@ def ivf_centroids(
     vec_col: str = "embedding",
     n_centroids: int = 8,
     lloyd_rounds: int = 0,
-    assign: str = "auto",
     n_rows: int | None = None,
 ) -> DataFrame:
     """Coarse centroids for IVF. Returns (cell, cv, cn).
@@ -707,20 +676,17 @@ def ivf_centroids(
     recall-vs-cost knob (demo pins one round; more rounds converge
     further but the seeds already place cells on real data points).
 
-    ``assign`` picks the per-round nearest-cell plan: ``"auto"``
-    (default) resolves to ``"fold"`` or ``"arrow"`` on the measured nK
-    crossover (:func:`_resolve_assign` — the per-round assignment is
-    the same n × K corpus-vs-broadcast shape as the final one; without
-    ``n_rows`` auto stays on the fold, no extra action). ``"fold"`` is
-    the executed/oracle-mirrored form; ``"arrow"`` the bit-equal
-    vectorized twin (see :func:`_arrow_topk_cells`). Callers that
-    already resolved (ivf_topk, semantic_dedup) pass an explicit mode.
+    ``n_rows`` (the caller's catalog row count) picks the per-round
+    nearest-cell form on the measured nK crossover
+    (:func:`_resolve_assign` — the per-round assignment is the same
+    n × K corpus-vs-broadcast shape as the final one): the
+    oracle-mirrored fold below it or without it, the bit-equal
+    vectorized twin (see :func:`_arrow_topk_cells`) past it.
+    :func:`ivf_topk` and :func:`semantic_dedup` pass their own
+    ``n_rows`` through, so their Lloyd rounds and final assignment run
+    the same form.
     """
-    if assign not in ("fold", "arrow", "auto"):
-        raise ValueError(
-            f"assign must be 'fold', 'arrow' or 'auto', got {assign!r}"
-        )
-    assign = _resolve_assign(assign, n_rows, n_centroids)
+    form = _resolve_assign(n_rows, n_centroids)
     seeds = (
         df.select(F.col(id_col).alias("sid"), _vd(vec_col).alias("cv"))
         .orderBy(F.md5(F.col("sid").cast("string")), F.col("sid"))
@@ -745,18 +711,18 @@ def ivf_centroids(
     )
     if lloyd_rounds:
         # the per-round O(n x K) assignment compute deserves the same
-        # small-input parallelism guard as the final assignment (review
-        # r15: the sf0.1 single-split regression hit the Lloyd rounds
-        # too; no-op on split-rich inputs)
+        # small-input parallelism guard as the final assignment (a
+        # single-split input would run every round on one core; no-op
+        # on split-rich inputs)
         base = ensure_min_parallelism(base)
     for _ in range(lloyd_rounds):
-        cents = _lloyd_round(base, cents, assign=assign)
-        if assign == "arrow":
+        cents = _lloyd_round(base, cents, assign=form)
+        if form == "arrow":
             # truncate lineage with a driver-side K-row materialization
             # (the same bounded payload the arrow assign collects
             # anyway): otherwise each later round's plan-time collect
             # re-executes the ENTIRE prior-round chain — O(R^2) corpus
-            # passes at R rounds (review r15)
+            # passes at R rounds
             cents = base.sparkSession.createDataFrame(
                 cents.collect(), cents.schema
             )
@@ -769,9 +735,8 @@ def _argmax_cell(
     """Nearest-cell id as a per-row aggregate fold over a broadcast
     array of (cell, pre-normalized centroid) structs — the map-only
     assignment shared by :func:`semantic_dedup`,
-    :func:`semantic_dedup_hier` and :func:`_lloyd_round` (round 13: the
-    flat/Lloyd forms adopted the hier fold, killing the last n × K
-    data-proportional assignment exchanges — VERDICT r12 ask #1).
+    :func:`semantic_dedup_hier` and :func:`_lloyd_round` — no n × K
+    data-proportional assignment exchange anywhere.
 
     ``arr`` must be sorted by the leading cell id, and the fold replaces
     only on STRICTLY greater score, so ties keep the smallest cell id —
@@ -781,17 +746,16 @@ def _argmax_cell(
     equals argmax over cosine because 1/|v| is a constant positive
     per-row scale, and it keeps the division/norm-multiply out of the
     fold's interpreted inner loop (higher-order functions skip
-    whole-stage codegen — measured ~2.2x on the hier assignment stage,
-    r12). The all-NULL-candidates fallback (every centroid zero-norm →
-    NULL dots, which strict > skips) is the INIT value — the group's
+    whole-stage codegen — measured ~2.2x on the hier assignment
+    stage). The all-NULL-candidates fallback (every centroid zero-norm
+    → NULL dots, which strict > skips) is the INIT value — the group's
     smallest cell id — not a post-fold ``when``: referencing the folded
     column twice re-evaluates the whole aggregate (no common-
     subexpression elimination for interpreted lambdas; measured 2x at
-    64x when first tried that way, r12). A zero-norm VECTOR scores 0.0
-    against every centroid, ties to the smallest scanned cell, and
-    flows through (never dropped — ADVICE r11). ``v_col`` names the
-    caller-side vector column the fold scores against (default
-    ``"v"`` — the hidden contract made explicit, round-13 review)."""
+    64x). A zero-norm VECTOR scores 0.0 against every centroid, ties
+    to the smallest scanned cell, and flows through (never dropped).
+    ``v_col`` names the caller-side vector column the fold scores
+    against (default ``"v"``)."""
     init = F.struct(
         F.lit(float("-inf")).alias("s"),
         F.element_at(arr, 1)[cell_f].cast("long").alias("c"),
@@ -826,7 +790,7 @@ def _cents_array(cents: DataFrame) -> DataFrame:
     BOTH fold forms' correctness rests on (the sort drives the
     smallest-cell tie-break; ``try_divide`` drives the zero-norm
     NULL-skip), factored out so :func:`_fold_assign` and
-    :func:`_fold_topk_cells` cannot drift apart (round-13 review)."""
+    :func:`_fold_topk_cells` cannot drift apart."""
     cvu, ca = _cents_array_cols()
     return cents.select("cell", cvu).agg(ca)
 
@@ -838,10 +802,9 @@ def _fold_assign(base: DataFrame, cents: DataFrame) -> DataFrame:
     (pre-normalized once on the tiny centroid relation; ``try_divide``
     so a zero-norm centroid yields NULL components instead of throwing
     under ANSI mode) and :func:`_argmax_cell` computes the argmax in
-    place. Zero exchanges touch the data side — the broadcast replaces
-    the n × K row fan-out + per-vec_id rank window that was the one
-    data-proportional assignment exchange left in the tree (VERDICT r12
-    ask #1; plan-pinned in tests/test_round13_fixes.py)."""
+    place. Zero exchanges touch the data side — no n × K row fan-out,
+    no per-vec_id rank window (plan-pinned in
+    tests/test_round13_fixes.py)."""
     arr = _cents_array(cents)
     return base.crossJoin(F.broadcast(arr)).select(
         "vec_id",
@@ -854,21 +817,20 @@ def _fold_assign(base: DataFrame, cents: DataFrame) -> DataFrame:
 def _l2sq_decimal(a: Column, b: Column) -> Column:
     """Exact squared L2 distance between two equal-length double arrays
     as a DECIMAL(28,9) fold: each per-dimension squared diff casts to
-    DECIMAL(18,9) first (the same narrowing ivf_pq_topk's join-form
-    ``sqdiff`` applies), then accumulates exactly — bit-equal to the
-    join form's ``SUM(sqdiff)`` under any evaluation order, which is
-    the property that lets the fold-mode PQ encode/ADC replace a
-    groupBy without disturbing a single rank. The re-cast per step
-    keeps the accumulator type fixed (decimal addition widens), the
-    ``hyperplane_sign_bucket`` precedent.
+    DECIMAL(18,9) first, then accumulates exactly — bit-equal to a
+    ``SUM(sqdiff)`` groupBy over the same narrowed diffs under any
+    evaluation order, which is the property that lets the fold-form PQ
+    encode/ADC run per row without disturbing a single rank. The
+    re-cast per step keeps the accumulator type fixed (decimal addition
+    widens), the ``hyperplane_sign_bucket`` precedent.
 
-    Ragged inputs FAIL LOUDLY (ADVICE r13): ``zip_with`` NULL-pads the
-    shorter array, which would propagate NULL through the fold — the
-    join form's ``(s, pos)`` equi-join instead sums over the
-    intersection, so a per-row-ragged corpus would silently diverge
-    between the two modes. Matching the stated ragged-dims philosophy
-    (validate, don't guess), unequal slice lengths raise at execution;
-    NULL arrays stay NULL-in-NULL-out (what the fold already did)."""
+    Ragged inputs FAIL LOUDLY: ``zip_with`` NULL-pads the shorter
+    array, which would propagate NULL through the fold where an
+    ``(s, pos)`` equi-join sums over the intersection, so a
+    per-row-ragged corpus would silently diverge from that reading.
+    Matching the stated ragged-dims philosophy (validate, don't guess),
+    unequal slice lengths raise at execution; NULL arrays stay
+    NULL-in-NULL-out."""
     fold = F.aggregate(
         F.zip_with(a, b, lambda x, y: ((x - y) * (x - y)).cast("decimal(18,9)")),
         F.lit(0).cast("decimal(28,9)"),
@@ -900,7 +862,7 @@ def _fold_topk_exprs(n_probe: int) -> tuple[Column, Column]:
     """Memoized constant trees of :func:`_fold_topk_cells` — the scored
     top-``n_probe`` slice and the all-NULL fallback. Pure functions of
     ``n_probe`` over the fixed ``ca``/``v`` column names; construction
-    measured ~0.6 s of py4j per invocation at sf0.1 (round 18)."""
+    measured ~0.6 s of py4j per invocation at sf0.1."""
 
     def cmp(left: Column, right: Column) -> Column:
         return (
@@ -941,8 +903,8 @@ def _fold_topk_exprs(n_probe: int) -> tuple[Column, Column]:
 def _fold_topk_cells(base: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
     """(vec_id, v, vn, cell, crank): each vector's top-``n_probe``
     nearest cells, MAP-ONLY — the relation :func:`ivf_topk`'s
-    ``ranked.where(crank <= n_probe)`` consumers read (``assign="fold"``,
-    the default below the auto knee).
+    ``ranked.where(crank <= n_probe)`` consumers read (the fold form,
+    picked below the nK knee and whenever no ``n_rows`` is given).
 
     Per row: one ``transform`` over the K pre-normalized centroid
     structs (the same raw-dot scoring as :func:`_argmax_cell` — the
@@ -963,11 +925,11 @@ def _fold_topk_cells(base: DataFrame, cents: DataFrame, n_probe: int) -> DataFra
     # __top is referenced twice below, but it is ALIASED in its own
     # projection first: CollapseProject declines to inline a non-cheap
     # producer expression with multiple consumers, so the score/sort
-    # pipeline runs ONCE per row. (The r12 double-eval trap was the
-    # same expression WRITTEN OUT twice inside one projection — that
-    # form gets no common-subexpression elimination for interpreted
+    # pipeline runs ONCE per row. (The double-eval trap is the same
+    # expression WRITTEN OUT twice inside one projection — that form
+    # gets no common-subexpression elimination for interpreted
     # lambdas. The distinction is pinned by the same-session A/B in
-    # docs/SCALE.md "Round-13".)
+    # docs/SCALE.md.)
     padded = F.when(F.size("__top") == 0, fallback).otherwise(F.col("__top"))
     return staged.select(
         "vec_id", "v", "vn", F.posexplode(padded).alias("pos", "tc")
@@ -986,13 +948,11 @@ def _arrow_topk_cells(base: DataFrame, cents: DataFrame, n_probe: int) -> DataFr
     (centroids broadcast, zero data-side exchange), but the n × K
     raw-dot scoring runs as a vectorized numpy loop per Arrow batch
     inside ``mapInPandas`` instead of K interpreted higher-order-
-    function evaluations per row. Shipped dark in round 15 behind
-    ``assign="arrow"`` (the r13 fold-dark-ship discipline); since the
-    round-15 auto-resolution the DEFAULT reaches it through
-    :func:`_resolve_assign` when the caller's catalog stat puts the
-    assignment past the measured nK crossover — safe under the
-    EXISTING fold-mirrored oracles precisely because of the
-    bit-identity contract below. At 16x/K=500 the fold's wall is
+    function evaluations per row. :func:`_resolve_assign` picks it
+    when the caller's ``n_rows`` puts the assignment past the measured
+    nK crossover — safe under the fold-mirrored oracles precisely
+    because of the bit-identity contract below. At 16x/K=500 the
+    fold's wall is
     ~entirely interpreted expression overhead — (32k × 500) 64-dim
     dots are ~1 GFLOP, a moment of vectorized arithmetic — so this is
     the compute escape for the large-K regime the SemDeDup
@@ -1010,8 +970,8 @@ def _arrow_topk_cells(base: DataFrame, cents: DataFrame, n_probe: int) -> DataFr
     whose pairwise summation could differ in the last ulp and flip a
     near-tie (measured cost of the sequential form vs matmul: small
     against the 10x+ win over the interpreted fold; the exactness is
-    what makes a future default flip safe under the EXISTING
-    fold-mirrored oracles).
+    what lets the knee pick this form under the fold-mirrored
+    oracles).
 
     Semantics mirrored from the fold: centroids pre-normalized once
     (cv/cn), a zero-norm centroid is never scored (excluded up front —
@@ -1098,12 +1058,14 @@ def _arrow_topk_cells(base: DataFrame, cents: DataFrame, n_probe: int) -> DataFr
 
 
 #: Appended to every arrow-twin input-validation error so an operator
-#: hitting one in production sees the immediate workaround (ADVICE r15
-#: #3): the fold form accepts the same dirty inputs by NULL-propagating
-#: them — the documented pre-flip semantics.
+#: hitting one in production sees the immediate workaround: the fold
+#: form accepts the same dirty inputs by NULL-propagating them, and the
+#: engine picks the twin only from a row count past the knee.
 _FOLD_ESCAPE = (
-    " — pass assign='fold' to force the NULL-propagating expression "
-    "form, or clean the corpus first"
+    " — the arrow form was picked because the row count crossed its "
+    "knee; call without n_rows or target_cell_size, passing "
+    "n_centroids explicitly, to get the NULL-propagating fold form, or "
+    "clean the corpus first"
 )
 
 
@@ -1125,10 +1087,10 @@ def _list_matrix(col):
     if col.flatten().null_count:
         # an element-level NULL would silently convert to NaN in the
         # flat-buffer view (the fold NULL-propagates instead) — raise,
-        # don't let the two modes diverge silently (review r15).
+        # don't let the two forms diverge silently.
         # flatten(), not .values: .values is the UNSLICED child array,
         # so on a sliced batch it counts NULLs outside this batch's
-        # window and rejects clean in-window rows (ADVICE r16 #1)
+        # window and rejects clean in-window rows
         raise ValueError(
             "arrow assignment: NULL vector COMPONENTS are not supported"
             + _FOLD_ESCAPE
@@ -1147,7 +1109,7 @@ def _list_matrix(col):
         # Spark orders NaN GREATER than any value (its deliberate
         # deviation from IEEE), numpy's argsort puts NaN last — a
         # non-finite component would rank cells differently between
-        # the modes. Out of contract, loudly (review r15).
+        # the forms. Out of contract, loudly.
         raise ValueError(
             "arrow assignment: non-finite vector components are not "
             "supported (the fold ranks NaN scores via Spark's "
@@ -1189,14 +1151,13 @@ def _sq9_hazard(y):
     The tolerance is ``max(1e-6, y·1e-15)`` — ≈3× the true float64
     error bound (repr-vs-binary ≤ 0.5 ulp plus the ×1e9 multiply's
     ≤ 0.5 ulp ⇒ |y_float − y_exact| ≤ ~2.3e-16·y, and the ``+ 0.5``
-    rounding adds ≤ ~1.1e-16·y more ⇒ ~3.4e-16·y total; ADVICE r16 #3
-    corrected the earlier "4×" claim), yet it only saturates
-    the 0.5 maximum possible boundary distance at y ≈ 5e14. The
-    previous ``y·1e-12`` slope crossed 0.5 at y = 5e11, silently
-    routing EVERY element with squared diff ≥ ~500 through the Python
-    Decimal loop — a correct-but-cliff regime covering six decades of
-    in-domain magnitudes (ADVICE r15 #1). Above 2^51 float64 integer
-    resolution is gone regardless, so everything routes to Decimal."""
+    rounding adds ≤ ~1.1e-16·y more ⇒ ~3.4e-16·y total), yet it only
+    saturates the 0.5 maximum possible boundary distance at y ≈ 5e14.
+    A ``y·1e-12`` slope would cross 0.5 at y = 5e11, silently routing
+    EVERY element with squared diff ≥ ~500 through the Python Decimal
+    loop — a correct-but-cliff regime covering six decades of
+    in-domain magnitudes. Above 2^51 float64 integer resolution is
+    gone regardless, so everything routes to Decimal."""
     import numpy as np
 
     dist = np.abs(y - (np.floor(y) + 0.5))
@@ -1265,24 +1226,21 @@ def _ivf_pq_arrow_fused(
     k: int,
     checkpoint: bool,
 ) -> DataFrame:
-    """ivf_pq_topk's executed ``assign="arrow"`` pipeline (round 18):
-    ONE ``mapInArrow`` pass computes the coarse assignment, the PQ
-    encode AND the ADC tables per row against driver-built
-    centroid/codebook tensors — where the round-15 stage form ran
-    THREE Python-boundary stages (coarse assign, encode, ADC) plus a
-    plan-time codebook job whose chain re-executed the whole
-    assignment. Guide §4: each Python stage's per-task worker
-    round-trip was the dominant wall at bench scale (~1 s of
-    worker-blocked task time per stage for ~0.1 s of compute); fusing
-    also deletes the separate n × ks encode arithmetic — the crank-1
-    row's ADC table IS the encode input, so argmin over it is free.
+    """ivf_pq_topk's arrow form, picked past the PQ knee: ONE
+    ``mapInArrow`` pass computes the coarse assignment, the PQ encode
+    AND the ADC tables per row against driver-built centroid/codebook
+    tensors — not three Python-boundary stages (coarse assign, encode,
+    ADC) plus a plan-time codebook job whose chain re-executes the
+    whole assignment. Each Python stage's per-task worker round-trip
+    is the dominant wall at bench scale (~1 s of worker-blocked task
+    time per stage for ~0.1 s of compute); fusing also deletes the
+    separate n × ks encode arithmetic — the crank-1 row's ADC table IS
+    the encode input, so argmin over it is free.
 
     Plan-time cost is ONE bounded Spark job: the md5-draw pool of
     ``max(n_centroids, ks)`` rows — the coarse seeds and the PQ code
     seeds are prefixes of the SAME md5 total order, so one TakeOrdered
-    serves both (the stage form ran two corpus draws, and its executed
-    plan re-ran the seeds chain a third time for the centroid
-    join-back). Cell/code numbering and the centroid norms come back
+    serves both. Cell/code numbering and the centroid norms come back
     Spark-computed (the row_number window and ``norm`` fold run inside
     the collected plan), so the driver adds NO arithmetic of its own
     beyond what the Python workers already ran per batch: the seed
@@ -1290,10 +1248,10 @@ def _ivf_pq_arrow_fused(
     sequence), residuals are single float64 subtractions (zip_with's
     per-element ``a − b``), slices truncate at the array end
     (``F.slice`` semantics), and every squared diff quantizes through
-    :func:`_quantize_sq9` — the outputs are bit-equal to
-    ``assign="fold"``, pinned by the arrow-vs-fold equality suite
-    (tests/test_pq_arrow_encode.py, tests/test_round15_fixes.py,
-    tests/test_round18_opt.py).
+    :func:`_quantize_sq9` — the outputs are bit-equal to the fold
+    form's, pinned by the arrow-vs-fold equality suite
+    (tests/test_pq_arrow_encode.py, tests/test_pq_fused.py,
+    tests/test_round15_fixes.py, tests/test_round18_opt.py).
 
     Output shape: ``n_probe`` rows per input row — (vec_id, cell,
     crank, codes, td9s), where ``codes`` is the s-ascending positional
@@ -1352,7 +1310,7 @@ def _ivf_pq_arrow_fused(
     # centroids excluded from scoring, the n_probe smallest cell ids as
     # the all-unscorable fallback, raw centroids kept per DENSE cell id
     # (row_number numbering) as the residual base — zero-norm cells
-    # included, exactly like the stage form's cell→cv join-back
+    # included, exactly like the fold form's cell→cv join-back
     cells, mats = [], []
     for r in crows:
         if r.cn != 0:
@@ -1547,39 +1505,40 @@ def _ivf_pq_arrow_fused(
 
 
 def _arrow_assign(base: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, v, vn, cell): the Arrow/BLAS twin of :func:`_fold_assign`
-    — :func:`_arrow_topk_cells` at ``n_probe=1`` (dark, round 15). The
-    argmax semantics line up exactly with :func:`_argmax_cell`: ties to
-    the smallest cell (stable argsort over cell-ascending columns =
-    the fold's strict-> over a cell-sorted array), a zero-norm VECTOR
-    scores 0.0 everywhere and ties to the smallest scorable cell, a
-    zero-norm CENTROID is never the argmax (excluded vs NULL-skipped),
-    and the all-zero-norm fallback is the smallest cell id (the fold's
-    INIT). Same last-ulp BLAS-summation caveat as the topk twin."""
+    """(vec_id, v, vn, cell): the Arrow/numpy twin of :func:`_fold_assign`
+    — :func:`_arrow_topk_cells` at ``n_probe=1``. The argmax semantics
+    line up exactly with :func:`_argmax_cell`: ties to the smallest
+    cell (stable argsort over cell-ascending columns = the fold's
+    strict-> over a cell-sorted array), a zero-norm VECTOR scores 0.0
+    everywhere and ties to the smallest scorable cell, a zero-norm
+    CENTROID is never the argmax (excluded vs NULL-skipped), and the
+    all-zero-norm fallback is the smallest cell id (the fold's INIT).
+    Bit-equal on finite inputs by the topk twin's IEEE-sequence
+    contract."""
     return _arrow_topk_cells(base, cents, 1).select("vec_id", "v", "vn", "cell")
 
 
-#: ``assign="auto"`` picks the Arrow twin only when the assignment will
-#: evaluate at least this many (row × centroid) dots. Measured crossover
-#: (docs/SCALE.md "Round-15", the auto-threshold grid): at 32k × 500 =
-#: 16M dots the arrow twin wins unambiguously (1.4× on ivf_topk
-#: end-to-end, ~7× on the derived-K SemDeDup assignment); the mixed
-#: zone reaches surprisingly far — at 32k × 256 = 8M dots the fold is
-#: still 1.4× FASTER end-to-end (per-batch round-trip + reshape
-#: overhead amortizes slowly), and at ≤ 2M dots the Python-worker
-#: round-trip dominates outright (sf0.1 demo scale: fold 0.9×-2.9×
-#: faster). The threshold therefore sits exactly at the lowest PROVEN
-#: arrow-win point, never inside the mixed zone — a 100 TB corpus with
-#: catalog stats (10⁹⁺ rows × 10³⁺ cells ≈ 10¹²⁺ dots) crosses it at
-#: any realistic K, which is the regime auto exists for.
+#: The flat assignment picks the Arrow twin only when it will evaluate
+#: at least this many (row × centroid) dots. Measured crossover
+#: (docs/SCALE.md, the auto-threshold grid): at 32k × 500 = 16M dots
+#: the arrow twin wins unambiguously (1.4× on ivf_topk end-to-end, ~7×
+#: on the derived-K SemDeDup assignment); the mixed zone reaches
+#: surprisingly far — at 32k × 256 = 8M dots the fold is still 1.4×
+#: FASTER end-to-end (per-batch round-trip + reshape overhead
+#: amortizes slowly), and at ≤ 2M dots the Python-worker round-trip
+#: dominates outright (sf0.1 demo scale: fold 0.9×-2.9× faster). The
+#: threshold therefore sits exactly at the lowest PROVEN arrow-win
+#: point, never inside the mixed zone — a 100 TB corpus with catalog
+#: stats (10⁹⁺ rows × 10³⁺ cells ≈ 10¹²⁺ dots) crosses it at any
+#: realistic K, which is the regime the twin exists for.
 _AUTO_ARROW_MIN_NK = 16_000_000
 
 #: The TWO-LEVEL (hier) form's crossover, in ENVELOPE dots (n_rows ×
-#: (C + K/C)). Measured separately (round 16, docs/SCALE.md) because
-#: the hier fold's per-row cost is not just dots: the fine stage runs
-#: an interpreted fold over ~K/C structs AFTER a broadcast join, so
-#: the vectorized twin wins at a much lower dot count than the flat
-#: form — 16× (32k rows × 44-dot envelope = 1.4M): arrow 6.5 s vs fold
+#: (C + K/C)). Measured separately (docs/SCALE.md) because the hier
+#: fold's per-row cost is not just dots: the fine stage runs an
+#: interpreted fold over ~K/C structs AFTER a broadcast join, so the
+#: vectorized twin wins at a much lower dot count than the flat form —
+#: 16× (32k rows × 44-dot envelope = 1.4M): arrow 6.5 s vs fold
 #: 10.2 s; 64× (128k × 89 = 11.4M): arrow 19.0 s vs fold 43.7 s, both
 #: with identical outputs; at 1× (22k dots) the two tie. The threshold
 #: sits at the lowest PROVEN win point (1.4M), same philosophy as the
@@ -1590,67 +1549,63 @@ _AUTO_ARROW_MIN_NK_HIER = 1_400_000
 #: to the per-row encode/ADC fold count the arrow twin vectorizes;
 #: dims is a runtime quantity, so the driver-side knee uses the
 #: codebook dimensions it actually knows). Measured separately
-#: (round 18, this box, identical outputs pinned by collect-compare)
-#: because PQ's vectorizable work is NOT the coarse assignment the
-#: flat _AUTO_ARROW_MIN_NK models — it is the encode (n × dims × ks
-#: squared diffs) plus the per-candidate ADC scoring, both interpreted
-#: DECIMAL folds on the fold path, and that work dwarfs the n × K
-#: coarse dots at any m·ks ≥ 16: at n=500/m=4/ks=16 (32k units, dims
-#: 64) arrow wins 12.7→4.6 s (sf0.001's many-split layout) and
-#: 3.08→2.65 s (sf0.01); at n=2000 (128k units) 3.64→3.28 s; fold
-#: still wins at n=200/ks=8 (6.4k units, 2.59 vs 3.09 s) and
-#: n=50 (1.6k units). The knee sits between the highest proven
-#: fold-win (6.4k) and the lowest proven arrow-win (32k).
+#: (32-core box, identical outputs pinned by collect-compare) because
+#: PQ's vectorizable work is NOT the coarse assignment the flat
+#: _AUTO_ARROW_MIN_NK models — it is the encode (n × dims × ks squared
+#: diffs) plus the per-candidate ADC scoring, both interpreted DECIMAL
+#: folds on the fold path, and that work dwarfs the n × K coarse dots
+#: at any m·ks ≥ 16: at n=500/m=4/ks=16 (32k units, dims 64) arrow
+#: wins 12.7→4.6 s (sf0.001's many-split layout) and 3.08→2.65 s
+#: (sf0.01); at n=2000 (128k units) 3.64→3.28 s; fold still wins at
+#: n=200/ks=8 (6.4k units, 2.59 vs 3.09 s) and n=50 (1.6k units). The
+#: knee sits between the highest proven fold-win (6.4k) and the lowest
+#: proven arrow-win (32k).
 _AUTO_ARROW_MIN_NMK_PQ = 20_000
 
 #: Sign-LSH bucket assignment's crossover, in (row × plane) projection
-#: units — the knee for ``bucket_assign="auto"`` on ``lsh_topk`` /
-#: ``multiprobe_lsh_topk`` / ``lsh_bucket_assignments``. Measured
-#: round 16 (docs/SCALE.md, the ``lsh_bucket_ab`` battery, identical
-#: ``sum(bucket)`` checksums across arms): at 1× (2k rows × 5 planes =
-#: 10k projections) the expression form and the int64-matmul twin TIE
-#: (scan-dominated); at 16× (32k × 9 = 288k) the twin wins 2.3×
-#: (2.74 s → 1.2 s); at 64× (128k × 11 = 1.4M) 2.1× (4.4 s → 2.1 s).
-#: The threshold sits at the lowest PROVEN win point (288k), same
-#: philosophy as the flat/hier nK constants — never inside the mixed
-#: zone. The bench corpus (sf0.1: 2,000 rows × 8 planes = 16k) sits
-#: 18× under it (gate scale 4k: 72×), so every registered demo keeps
-#: the verbatim expression plan — note an ~18× corpus growth WOULD
-#: cross the knee, which is the intent: a 100 TB corpus with catalog
-#: stats (10⁹⁺ rows × ~20 planes) crosses it immediately.
+#: units — the knee of ``lsh_topk`` / ``multiprobe_lsh_topk`` /
+#: ``lsh_bucket_assignments``. Measured with docs/SCALE.md's
+#: ``lsh_bucket_ab`` battery (identical ``sum(bucket)`` checksums
+#: across arms): at 1× (2k rows × 5 planes = 10k projections) the
+#: expression form and the int64-matmul twin TIE (scan-dominated); at
+#: 16× (32k × 9 = 288k) the twin wins 2.3× (2.74 s → 1.2 s); at 64×
+#: (128k × 11 = 1.4M) 2.1× (4.4 s → 2.1 s). The threshold sits at the
+#: lowest PROVEN win point (288k), same philosophy as the flat/hier nK
+#: constants — never inside the mixed zone. The bench corpus (sf0.1:
+#: 2,000 rows × 8 planes = 16k) sits 18× under it (gate scale 4k:
+#: 72×), so every registered demo keeps the expression plan — an ~18×
+#: corpus growth WOULD cross the knee, which is the intent: a 100 TB
+#: corpus with catalog stats (10⁹⁺ rows × ~20 planes) crosses it
+#: immediately.
 _AUTO_ARROW_MIN_NP_LSH = 288_000
 
 
 def _resolve_bucket_assign(
-    bucket_assign: str,
     n_rows: int | None,
     planes: int,
     min_np: int = _AUTO_ARROW_MIN_NP_LSH,
 ) -> str:
-    """Resolve ``bucket_assign="auto"`` to ``"expr"`` or ``"arrow"`` on
+    """The sign-LSH projection form, ``"expr"`` or ``"arrow"``, picked on
     the measured (row × plane) crossover (:data:`_AUTO_ARROW_MIN_NP_LSH`).
-    Explicit modes pass through untouched. Without ``n_rows`` (no
-    catalog stat offered) auto NEVER counts the corpus — it stays on
-    the expression form, which is plan-shape-safe at any scale (both
-    forms are map-only; the expression form only loses interpreted
-    fold time in the large-corpus regime, never exchange structure).
-    Bucket ids are bit-equal by integer associativity
-    (:func:`_arrow_lsh_base`), so resolution can never change results.
+    Without ``n_rows`` (no catalog stat offered) the corpus is NEVER
+    counted — the expression form runs, which is plan-shape-safe at any
+    scale (both forms are map-only; the expression form only loses
+    interpreted fold time in the large-corpus regime, never exchange
+    structure). Bucket ids are bit-equal by integer associativity
+    (:func:`_arrow_lsh_base`), so the pick can never change results.
 
     The same validate-don't-guess asymmetry as :func:`_resolve_assign`
     applies: the arrow twin REJECTS NULL-component / ragged /
     overflow-magnitude vectors where the expression form zero-buckets
-    them — a corpus that may carry such vectors should force
-    ``bucket_assign="expr"`` (or clean first) rather than rely on auto
-    past the knee.
+    them — a corpus that may carry such vectors should be cleaned
+    first, or called without a row count (explicit ``planes``) so the
+    expression form runs.
 
-    ``planes > 62`` always resolves to the expression form: the twin
+    ``planes > 62`` always picks the expression form: the twin
     fail-fasts there (its long-bucket overflow guard,
     :func:`_arrow_lsh_base`) while the expression form handles such
-    plane counts — auto must never turn a working call into an error
-    (review r17; only an explicit ``"arrow"`` reaches the guard)."""
-    if bucket_assign != "auto":
-        return bucket_assign
+    plane counts — the knee must never turn a working call into an
+    error."""
     if planes > 62:
         return "expr"
     if n_rows is not None and n_rows * planes >= min_np:
@@ -1659,39 +1614,35 @@ def _resolve_bucket_assign(
 
 
 def _resolve_assign(
-    assign: str,
     n_rows: int | None,
     n_centroids: int,
     min_nk: int = _AUTO_ARROW_MIN_NK,
 ) -> str:
-    """Resolve ``assign="auto"`` to ``"fold"`` or ``"arrow"`` on the
-    measured nK crossover (see :data:`_AUTO_ARROW_MIN_NK`). Explicit
-    modes pass through untouched. Without ``n_rows`` (no catalog stat
-    offered) auto NEVER counts the corpus — it stays on the fold, which
-    is plan-shape-safe at any scale (both forms are map-only; the fold
-    only loses interpreted-compute time in the large-nK regime, it
-    never regresses the exchange structure). Both branches are
-    bit-equal on finite inputs (the arrow twin's IEEE-sequence
-    contract, :func:`_arrow_topk_cells`), so resolution can never
-    change results — only the physical form of the assignment stage.
+    """The centroid-assignment form, ``"fold"`` or ``"arrow"``, picked on
+    the measured nK crossover (see :data:`_AUTO_ARROW_MIN_NK`). Without
+    ``n_rows`` (no catalog stat offered) the corpus is NEVER counted —
+    the fold runs, which is plan-shape-safe at any scale (both forms
+    are map-only; the fold only loses interpreted-compute time in the
+    large-nK regime, it never regresses the exchange structure). Both
+    forms are bit-equal on finite inputs (the arrow twin's
+    IEEE-sequence contract, :func:`_arrow_topk_cells`), so the pick can
+    never change results — only the physical form of the assignment
+    stage.
 
     One behavior difference survives the bit-equality contract: the
     arrow twin VALIDATES its inputs (NULL-component / ragged /
     non-finite vectors raise — Spark's NaN-greatest ordering has no
     cheap numpy mirror), where the fold emits NULL scores. A corpus
-    that may carry such vectors should force ``assign="fold"`` (or
-    clean first) rather than rely on auto — past the threshold auto
-    will route it into the validating twin, which fails loudly instead
-    of ranking NaNs differently between modes (validate, don't
-    guess).
+    that may carry such vectors should be cleaned first, or called
+    without a row count (explicit ``n_centroids``) so the fold runs —
+    past the threshold the validating twin fails loudly instead of
+    ranking NaNs differently between forms (validate, don't guess).
 
     Getting a stat is usually free: parquet footers carry exact row
     counts (``sources.registry.parquet_rows`` reads them driver-side
     in microseconds, no scan), and lakehouse catalogs serve the same
-    number — pass it through rather than letting auto default blind.
+    number — pass it through rather than leaving the pick blind.
     """
-    if assign != "auto":
-        return assign
     if n_rows is not None and n_rows * n_centroids >= min_nk:
         return "arrow"
     return "fold"
@@ -1700,12 +1651,11 @@ def _resolve_assign(
 def _lloyd_round(
     base: DataFrame, cents: DataFrame, assign: str = "fold"
 ) -> DataFrame:
-    """One Lloyd iteration: nearest-cell assignment (broadcast-array
-    fold, :func:`_fold_assign` — map-only since round 13; the previous
-    broadcast-join + per-vec_id rank window exchanged n × K rows per
-    round; ``assign="arrow"`` swaps in the dark BLAS twin) →
-    per-(cell, dim) DECIMAL mean → reassembled centroid arrays. Cells
-    with no members keep their previous centroid."""
+    """One Lloyd iteration: nearest-cell assignment (the map-only
+    broadcast-array fold :func:`_fold_assign`, or its Arrow twin
+    :func:`_arrow_assign` when ``assign="arrow"``) → per-(cell, dim)
+    DECIMAL mean → reassembled centroid arrays. Cells with no members
+    keep their previous centroid."""
     assigned = (
         _arrow_assign(base, cents)
         if assign == "arrow"
@@ -1744,32 +1694,28 @@ def ivf_topk(
     target_cell_size: int | None = None,
     lloyd_rounds: int = 0,
     n_rows: int | None = None,
-    assign: str = "auto",
 ) -> DataFrame:
     """IVF-flat approximate top-k: coarse-quantize the corpus into
     ``n_centroids`` cells (nearest centroid by cosine), then answer each
     query exactly within its ``n_probe`` nearest cells.
 
-    ``assign`` picks the cell-assignment plan: ``"auto"`` (default)
-    resolves to ``"fold"`` or ``"arrow"`` on the measured nK crossover —
-    arrow only when ``n_rows × n_centroids`` (the assignment's dot count;
-    ``n_rows`` from the caller's catalog stat or the ``target_cell_size``
-    sizing count, never an extra action) reaches
-    :data:`_AUTO_ARROW_MIN_NK`, else the fold. Both branches are
-    bit-equal on finite inputs, so auto can never change results.
-    ``"fold"`` computes the top-``n_probe`` cells per row with
+    The row count picks the cell-assignment form on the measured nK
+    crossover: the arrow twin only when ``n_rows × n_centroids`` (the
+    assignment's dot count; ``n_rows`` from the caller's catalog stat
+    or the ``target_cell_size`` sizing count, never an extra action)
+    reaches :data:`_AUTO_ARROW_MIN_NK`, else the fold. Both forms are
+    bit-equal on finite inputs, so the pick can never change results.
+    The fold computes the top-``n_probe`` cells per row with
     :func:`_fold_topk_cells` — MAP-ONLY, zero per-vec_id rank windows, no
     n × K data-proportional assignment exchange. The demo oracles MIRROR
     the fold arithmetic (raw ``dot(v, cv/cn)``, not cosine
     ``dot/(vn*cn)``), so a ~1-ulp near-tie ranks cells the same way in
     both engines; a zero-norm centroid is never probed (see the helper's
-    docstring). ``"arrow"`` is the fold's Arrow/BLAS twin for the
-    large-K compute regime — one vectorized numpy loop per batch instead
-    of K interpreted folds per row; same map-only shape, fold-identical
-    scores on finite inputs (the IEEE-sequence contract in
-    :func:`_arrow_topk_cells`), which is what lets the ``auto`` default
-    resolve to it past the measured crossover WITHOUT new oracle
-    mirrors.
+    docstring). The arrow twin serves the large-K compute regime — one
+    vectorized numpy loop per batch instead of K interpreted folds per
+    row; same map-only shape, fold-identical scores on finite inputs
+    (the IEEE-sequence contract in :func:`_arrow_topk_cells`), which is
+    what lets the knee pick it WITHOUT new oracle mirrors.
 
     The other classic ANN shape next to sign-LSH (``lsh_topk``): centroids
     broadcast to every partition (map-only assignment), the only shuffle
@@ -1791,17 +1737,15 @@ def ivf_topk(
         import math
 
         if n_rows is None:
-            # one plan-time action; the count doubles as auto's stat
+            # one plan-time action; the count doubles as the knee's stat
             n_rows = df.count()
         n_centroids = max(1, math.ceil(n_rows / max(target_cell_size, 1)))
     if n_centroids is None:
         raise ValueError("pass n_centroids or target_cell_size")
-    if assign not in ("fold", "arrow", "auto"):
-        raise ValueError(f"assign must be 'fold', 'arrow' or 'auto', got {assign!r}")
-    assign = _resolve_assign(assign, n_rows, n_centroids)
-    # the Lloyd-round assignment follows the same choice
+    form = _resolve_assign(n_rows, n_centroids)
+    # the Lloyd rounds resolve the same knee from the same n_rows
     cents = ivf_centroids(
-        df, id_col, vec_col, n_centroids, lloyd_rounds=lloyd_rounds, assign=assign
+        df, id_col, vec_col, n_centroids, lloyd_rounds=lloyd_rounds, n_rows=n_rows
     )
     base = ensure_min_parallelism(
         df.select(
@@ -1810,7 +1754,7 @@ def ivf_topk(
             _vn(vec_col).alias("vn"),
         )
     )
-    topk_cells = _arrow_topk_cells if assign == "arrow" else _fold_topk_cells
+    topk_cells = _arrow_topk_cells if form == "arrow" else _fold_topk_cells
     ranked = topk_cells(base, cents, n_probe)
     if checkpoint:
         # consumed twice (data cells + probe cells): persist (DISK_ONLY,
@@ -1830,13 +1774,13 @@ def ivf_topk(
         F.col("vn").alias("qn"),
         "cell",
     )
-    # the exact rescoring stays the JVM expression in EVERY mode: an
-    # Arrow twin of this stage was built and measured SLOWER (round 15
-    # — the stage's input is the join fan-out of vector PAIRS, and
-    # shipping ~|pairs| x 2 x dims doubles through the Python worker
-    # costs more than the interpreted dots; the assignment twin wins
-    # precisely because its input is the n vectors against a broadcast
-    # centroid set, no fan-out)
+    # the exact rescoring stays the JVM expression in EVERY form: an
+    # Arrow twin of this stage measured SLOWER — the stage's input is
+    # the join fan-out of vector PAIRS, and shipping ~|pairs| x 2 x
+    # dims doubles through the Python worker costs more than the
+    # interpreted dots; the assignment twin wins precisely because its
+    # input is the n vectors against a broadcast centroid set, no
+    # fan-out
     sim = _ivf_rescore_sim()
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
@@ -1871,9 +1815,9 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-duplicate pairs within a blocking key."""
     # the blocked self-join broadcasts the block table at small scale,
     # so the per-pair dot-product fold otherwise runs inside the
-    # one-task scan stage of a single-row-group input (round 18, guide
-    # §2.5; no-op whenever splits ≥ cores). Measured at sf0.1/local[32]
-    # on q_dedup_embedding: 3.0 → 0.6 s, identical pair set.
+    # one-task scan stage of a single-row-group input (no-op whenever
+    # splits ≥ cores). Measured at sf0.1/local[32] on
+    # q_dedup_embedding: 3.0 → 0.6 s, identical pair set.
     base = ensure_min_parallelism(
         df.select(
             F.col(id_col).alias("vec_id"),
@@ -1905,7 +1849,6 @@ def ivf_pq_topk(
     n_probe: int = 2,
     k: int = 3,
     checkpoint: bool = True,
-    assign: str = "auto",
     n_rows: int | None = None,
 ) -> DataFrame:
     """IVF-PQ approximate top-k: coarse IVF cells + product-quantized
@@ -1937,42 +1880,35 @@ def ivf_pq_topk(
 
     Returns (query_id, neighbor_id, approx_l2sq, rank).
 
-    ``assign``: ``"auto"`` (default) resolves to ``"fold"`` or
-    ``"arrow"`` on the PQ knee (:func:`_resolve_assign` with
-    :data:`_AUTO_ARROW_MIN_NMK_PQ`; ``n_rows`` is the catalog stat —
-    without it auto stays on the fold, no extra action). Both forms
-    compute every distance as the same exact DECIMAL sum, so resolution
-    never changes results. ``"fold"`` has zero data-side exchange
-    throughout (plan-pinned): coarse cells via :func:`_fold_topk_cells`
-    (+ a broadcast cell→``cv`` join-back — the residual split needs the
+    ``n_rows`` (the catalog stat) picks the form on the PQ knee
+    (:func:`_resolve_assign` with :data:`_AUTO_ARROW_MIN_NMK_PQ`;
+    without it the fold runs, no extra action). Both forms compute
+    every distance as the same exact DECIMAL sum, so the pick never
+    changes results. The fold has zero data-side exchange throughout
+    (plan-pinned): coarse cells via :func:`_fold_topk_cells` (+ a
+    broadcast cell→``cv`` join-back — the residual split needs the
     winning centroid vector), and encode/ADC computed per row against
     the codebook pivoted into ONE broadcast array row, every distance
     the exact DECIMAL fold (:func:`_l2sq_decimal`). The demo oracle
     MIRRORS the fold's coarse-assignment arithmetic (see
-    :func:`ivf_topk`'s ``assign``). ``"arrow"`` runs the FUSED
-    single-pass pipeline (:func:`_ivf_pq_arrow_fused`): one
-    ``mapInArrow`` stage computes the coarse assignment, the encode AND
-    the ADC tables per row against driver-built tensors — exact scale-9
-    integer mirrors of the DECIMAL folds (per-element quantization
-    through :func:`_quantize_sq9`), so the whole output stays bit-equal
-    to ``"fold"`` while the n × g × ks distance arithmetic runs as numpy
+    :func:`ivf_topk`). Past the knee the FUSED single-pass pipeline
+    runs (:func:`_ivf_pq_arrow_fused`): one ``mapInArrow`` stage
+    computes the coarse assignment, the encode AND the ADC tables per
+    row against driver-built tensors — exact scale-9 integer mirrors of
+    the DECIMAL folds (per-element quantization through
+    :func:`_quantize_sq9`), so the whole output stays bit-equal to the
+    fold's while the n × g × ks distance arithmetic runs as numpy
     tensor ops per Arrow batch.
     """
-    if assign not in ("fold", "arrow", "auto"):
-        raise ValueError(f"assign must be 'fold', 'arrow' or 'auto', got {assign!r}")
-    # PQ resolves auto on its OWN knee (n_rows × m × ks encode units,
+    # PQ picks on its OWN knee (n_rows × m × ks encode units,
     # :data:`_AUTO_ARROW_MIN_NMK_PQ`): the work the arrow twin
     # vectorizes here is the encode/ADC DECIMAL folds, which dwarf the
     # n × K coarse dots the flat knee models — at demo scale the flat
-    # knee left a measured 1.1-2.8× win dark (round 18). Resolution is
-    # still bit-neutral: both arms are exact-DECIMAL/scale-9 mirrors.
-    assign = _resolve_assign(
-        assign, n_rows, m * ks, min_nk=_AUTO_ARROW_MIN_NMK_PQ
-    )
-    if assign == "arrow":
-        # round 18: the fused single-pass pipeline — one mapInArrow
-        # stage for assign+encode+ADC, one bounded plan-time draw,
-        # bit-equal outputs (see _ivf_pq_arrow_fused)
+    # knee would leave a measured 1.1-2.8× win unused. The pick is
+    # still bit-neutral: both forms are exact-DECIMAL/scale-9 mirrors.
+    if _resolve_assign(n_rows, m * ks, min_nk=_AUTO_ARROW_MIN_NMK_PQ) == "arrow":
+        # one mapInArrow stage for assign+encode+ADC, one bounded
+        # plan-time draw, bit-equal outputs (see _ivf_pq_arrow_fused)
         return _ivf_pq_arrow_fused(
             df, id_col, vec_col, n_centroids, m, ks, n_probe, k, checkpoint
         )
@@ -2128,16 +2064,16 @@ def _pq_rank(enc: DataFrame, adc: DataFrame, k: int) -> DataFrame:
     exploded (enc, adc) relations: ``enc`` (vec_id, cell, s, code) and
     ``adc`` (query_id, qcell, s, code, td) with EXACT decimal ``td``.
 
-    Round-18 restructure (guide §2.3/§2.4 — shuffle fewer bytes, remove
-    exchanges): the original tail joined the EXPLODED per-subspace rows
-    on ``(qcell, s, code)`` — an ``m×`` fan-out (pairs × m joined rows)
-    into a pairs-keyed hash aggregate and a full per-query rank window
-    over every candidate. At sf0.1 that was 12M joined rows → 3M-key
-    agg → 3M-row window, the single biggest chunk of the query. The
-    tail now pivots both sides back to one row per entity (the fold
-    encode explodes per ``s`` anyway, so the pivot just undoes that),
-    packs each cell's neighbors into one array row, and scores every
-    (query, cellmate) pair MAP-SIDE inside an array transform: the ADC
+    Shape (shuffle fewer bytes, remove exchanges): joining the EXPLODED
+    per-subspace rows on ``(qcell, s, code)`` would be an ``m×`` fan-out
+    (pairs × m joined rows) into a pairs-keyed hash aggregate and a full
+    per-query rank window over every candidate — at sf0.1, 12M joined
+    rows → 3M-key agg → 3M-row window, the single biggest chunk of the
+    query. Instead the tail pivots both sides back to one row per
+    entity (the fold encode explodes per ``s`` anyway, so the pivot
+    just undoes that), packs each cell's neighbors into one array row,
+    and scores every (query, cellmate) pair MAP-SIDE inside an array
+    transform: the ADC
     value of a neighbor is ``m`` O(1) ``element_at`` lookups into the
     query's dense (s, code)-indexed table. Each (query, probed-cell)
     row then keeps only its per-cell top-k in-array, so the final
@@ -2147,23 +2083,23 @@ def _pq_rank(enc: DataFrame, adc: DataFrame, k: int) -> DataFrame:
     per-cell cut, same (d, neighbor_id) order both levels).
 
     Exactness: per-pair ``d_exact`` sums the SAME per-subspace DECIMAL
-    ``td`` values the old groupBy summed — decimal addition is exact
+    ``td`` values a ``SUM(td)`` groupBy would — decimal addition is exact
     and order-independent, and the per-step ``decimal(28,9)`` re-cast
     is the ``_l2sq_decimal`` accumulator pattern (values bounded by
     the documented scale-validity envelope, so the narrower
-    accumulator never saturates). NULL semantics reproduced
-    bit-for-bit: the old ``SUM(td)`` skipped NULL tds and returned
-    NULL only when ALL m were NULL — the fold below filters NULL
-    lookups first and NULLs out the empty case; NULL ``d_exact``
-    sorts first both in ``array_sort`` (struct ordering: ascending
-    fields, NULLS FIRST) and in the window's ``asc`` (NULLS FIRST),
-    matching the old plan. Parity with the old tail is pinned by
-    tests/test_round18_opt.py on clean AND NULL-scored corpora.
+    accumulator never saturates). ``SUM(td)``'s NULL semantics are
+    reproduced bit-for-bit: it skips NULL tds and returns NULL only
+    when ALL m are NULL — the fold below filters NULL lookups first
+    and NULLs out the empty case; NULL ``d_exact`` sorts first both in
+    ``array_sort`` (struct ordering: ascending fields, NULLS FIRST) and
+    in the window's ``asc`` (NULLS FIRST). Parity with the exploded
+    join tail is pinned by tests/test_round18_opt.py on clean AND
+    NULL-scored corpora.
 
     Scale shape: no broadcast of the encoded corpus — the pack/join
-    key on ``cell`` exactly like the old join; per-cell array rows are
-    bounded by ``target_cell_size`` (the IVF sizing story), the same
-    bound that already caps the old form's per-cell join fan-out."""
+    key on ``cell``; per-cell array rows are bounded by
+    ``target_cell_size`` (the IVF sizing story), the same bound that
+    caps a per-cell join fan-out."""
     # one row per neighbor: its m (s, code) entries, s-ascending
     enc_p = enc.groupBy("vec_id", "cell").agg(
         F.array_sort(F.collect_list(F.struct("s", "code"))).alias("codes")
@@ -2175,9 +2111,10 @@ def _pq_rank(enc: DataFrame, adc: DataFrame, k: int) -> DataFrame:
     # one row per (query, probed cell): the ADC table pivoted into a
     # dense s-major array-of-arrays — tds[s+1][code+1] = td, O(1) lookups
     # (codes are row_number()-dense 0..ks'-1 per subspace by
-    # construction). spread_for_compute: the per-(query, cell) scoring downstream of THIS exchange costs O(cell_size × m)
+    # construction). spread_for_compute: the per-(query, cell) scoring
+    # downstream of THIS exchange costs O(cell_size × m)
     # interpreted lookups per ~1 KB row — compute AQE's byte-based
-    # coalescing cannot see (guide §2.5; measured: 3-of-32-core stage,
+    # coalescing cannot see (measured: 3-of-32-core stage,
     # 2.4 s wall for 6 s task CPU at sf0.1). The explicit-count hash
     # repartition is reused by the groupBy, so the exchange count is
     # unchanged — only the coalesce is vetoed.
@@ -2327,7 +2264,6 @@ def semantic_dedup(
     lloyd_rounds: int = 1,
     threshold: float = 0.95,
     n_rows: int | None = None,
-    assign: str = "auto",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): cluster-blocked
@@ -2336,10 +2272,8 @@ def semantic_dedup(
     1. k-means cells via :func:`ivf_centroids` (hash-seeded + Lloyd
        rounds — deterministic, oracle-expressible);
     2. every vector assigned to its nearest cell by the broadcast-array
-       fold (:func:`_fold_assign` — genuinely map-only since round 13;
-       the previous broadcast fan-out + per-vec_id rank window was an
-       n × K data-proportional exchange, the measured 5.58 16x-ratio
-       driver in docs/SCALE.md);
+       fold (:func:`_fold_assign` — map-only: no n × K data-proportional
+       exchange, no per-vec_id rank window);
     3. within each cell, a vector is a DUPLICATE if any lower-id vector
        in the same cell has cosine >= ``threshold`` — the paper's
        keep-one-per-ε-ball rule made deterministic by the id total
@@ -2350,7 +2284,7 @@ def semantic_dedup(
     ``dup_of`` is a dedup WITNESS — the smallest lower-id cellmate
     within ``threshold`` — not necessarily itself kept: for a chain
     a~b, b~c with a≁c, c's witness is b while b is dropped with
-    witness a (ADVICE r9). Consumers that need a surviving canonical
+    witness a. Consumers that need a surviving canonical
     representative should group by ``cell`` and pick the cell's kept
     rows, or follow the witness chain (bounded by cell size); the
     keep/drop decision itself never needs the chain — kept is exact.
@@ -2362,12 +2296,11 @@ def semantic_dedup(
     min-aggregation; no iteration, no connected components (the ε-ball
     keeper relation needs no transitive closure by construction).
 
-    COMPUTE envelope (round 14, VERDICT r13 stretch #7): the fold
-    assignment is exchange-free but still evaluates n × K dots — with K
-    derived ∝ n (e.g. ``n / target_cell_size``) that is quadratic-in-n
-    compute BY CONSTRUCTION, which is why the measured 16× wall ratio
-    stays ~5.6 however the assignment is planned (docs/SCALE.md
-    "Round-13 scale points"). Past K ≈ 2·√n the two-level
+    COMPUTE envelope: the fold assignment is exchange-free but still
+    evaluates n × K dots — with K derived ∝ n (e.g.
+    ``n / target_cell_size``) that is quadratic-in-n compute BY
+    CONSTRUCTION, which is why the measured 16× wall ratio stays ~5.6
+    however the assignment is planned (docs/SCALE.md). Past K ≈ 2·√n the two-level
     :func:`semantic_dedup_hier` (O(n·2√K) scoring, same keep-first rule)
     is the intended escape — at 10⁹ vectors and target cells of 64 the
     flat form scores ~1.6 × 10⁷ centroids per vector while the hier
@@ -2376,23 +2309,18 @@ def semantic_dedup(
     ``n_centroids`` crosses that line; sizing guidance lives in
     docs/SCALE.md's SemDeDup section.
 
-    ``assign``: ``"auto"`` (default since the round-15 auto-resolution)
-    resolves to ``"fold"`` or ``"arrow"`` on the measured nK crossover
-    (:func:`_resolve_assign` — arrow only when ``n_rows × n_centroids``
-    reaches :data:`_AUTO_ARROW_MIN_NK`; without ``n_rows`` auto stays
-    on the fold, no extra action). The derived-K quadratic regime this
-    function's COMPUTE envelope flags is exactly where auto flips:
-    at 16× / K=500 the arrow assignment measured ~7× faster than the
-    interpreted fold (docs/SCALE.md "Round-15"). ``"fold"`` and
-    ``"arrow"`` force a form; both are bit-equal on finite inputs (the
-    arrow twin's IEEE-sequence contract) in the final AND the
-    per-Lloyd-round assignment, so resolution never changes results.
+    ``n_rows`` also picks the assignment form on the measured nK
+    crossover (:func:`_resolve_assign` — the arrow twin only when
+    ``n_rows × n_centroids`` reaches :data:`_AUTO_ARROW_MIN_NK`;
+    without ``n_rows`` the fold runs, no extra action). The derived-K
+    quadratic regime this function's COMPUTE envelope flags is exactly
+    where the knee flips: at 16× / K=500 the arrow assignment measured
+    ~7× faster than the interpreted fold (docs/SCALE.md). Both forms
+    are bit-equal on finite inputs (the arrow twin's IEEE-sequence
+    contract) in the final AND the per-Lloyd-round assignment, so the
+    pick never changes results.
     """
-    if assign not in ("fold", "arrow", "auto"):
-        raise ValueError(
-            f"assign must be 'fold', 'arrow' or 'auto', got {assign!r}"
-        )
-    assign = _resolve_assign(assign, n_rows, n_centroids)
+    form = _resolve_assign(n_rows, n_centroids)
     if n_rows is not None and n_centroids > 2 * (n_rows ** 0.5):
         import logging
 
@@ -2404,7 +2332,7 @@ def semantic_dedup(
             n_centroids, 2 * (n_rows ** 0.5), n_rows,
         )
     cents = ivf_centroids(df, id_col, vec_col, n_centroids, lloyd_rounds,
-                          assign=assign)
+                          n_rows=n_rows)
     base = ensure_min_parallelism(
         df.select(
             F.col(id_col).alias("vec_id"),
@@ -2414,7 +2342,7 @@ def semantic_dedup(
     )
     assigned = (
         _arrow_assign(base, cents)
-        if assign == "arrow"
+        if form == "arrow"
         else _fold_assign(base, cents)
     )
     return _keep_first_in_cells(assigned, threshold)
@@ -2579,7 +2507,6 @@ def semantic_dedup_hier(
     coarse_cells: int = 4,
     threshold: float = 0.95,
     n_rows: int | None = None,
-    assign: str = "auto",
 ) -> DataFrame:
     """SemDeDup with TWO-LEVEL (coarse→fine) centroid quantization —
     the assignment-cost escape for :func:`semantic_dedup` (which warns
@@ -2605,26 +2532,20 @@ def semantic_dedup_hier(
     Returns (vec_id, cell, kept, dup_of) exactly like
     :func:`semantic_dedup`; ``cell`` is the fine cell id.
 
-    ``assign``/``n_rows`` (round 16): same contract as
-    :func:`semantic_dedup` — ``"auto"`` (default) resolves via
-    :func:`_resolve_assign` on the measured nK crossover, where the
+    ``n_rows`` picks the assignment form as in :func:`semantic_dedup`
+    (:func:`_resolve_assign` on the measured nK crossover), where the
     per-row dot count here is ``coarse_cells + n_centroids /
-    coarse_cells`` (the two-level scoring envelope), not K; without a
-    stat auto stays on the fold (the verbatim pre-round-16 plan).
-    ``"arrow"`` runs both assignment stages as the bit-equal vectorized
-    twins (:func:`_arrow_assign` for the coarse stage — the C-centroid
-    fold IS :func:`_fold_assign` with renamed fields — and
+    coarse_cells`` (the two-level scoring envelope), not K, against the
+    hier knee :data:`_AUTO_ARROW_MIN_NK_HIER`; without a stat the fold
+    runs. Past the knee both assignment stages run as the bit-equal
+    vectorized twins (:func:`_arrow_assign` for the coarse stage — the
+    C-centroid fold IS :func:`_fold_assign` with renamed fields — and
     :func:`_arrow_fine_assign` for the per-group fine stage); the
     keep-first tail is shared. Arrow validates its inputs (NULL/ragged/
-    non-finite raise) where the fold NULL-propagates — force
-    ``assign="fold"`` for dirty corpora.
+    non-finite raise) where the fold NULL-propagates — clean a dirty
+    corpus first, or call without ``n_rows``.
     """
-    if assign not in ("fold", "arrow", "auto"):
-        raise ValueError(
-            f"assign must be 'fold', 'arrow' or 'auto', got {assign!r}"
-        )
-    assign = _resolve_assign(
-        assign,
+    form = _resolve_assign(
         n_rows,
         coarse_cells + max(1, n_centroids // max(coarse_cells, 1)),
         min_nk=_AUTO_ARROW_MIN_NK_HIER,
@@ -2672,20 +2593,19 @@ def semantic_dedup_hier(
             _vn(vec_col).alias("vn"),
         )
     )
-    # Assignment is MAP-ONLY (round 11, VERDICT r10 #8): instead of
-    # fanning each vector out to n × C rows through a broadcast join and
-    # collapsing with a per-vec_id rank window (an exchange of C vector
-    # copies), the centroid set rides along as ONE broadcast array-of-
-    # structs row and a per-row aggregate fold (the shared
-    # :func:`_argmax_cell` — since round 13 the flat/Lloyd assignments
-    # use the same helper) computes the argmax in place — the
-    # lsh_bucket_expr pattern. Tie-break, pre-normalization rationale
+    # Assignment is MAP-ONLY: instead of fanning each vector out to
+    # n × C rows through a broadcast join and collapsing with a
+    # per-vec_id rank window (an exchange of C vector copies), the
+    # centroid set rides along as ONE broadcast array-of-structs row and
+    # a per-row aggregate fold (the shared :func:`_argmax_cell`, also
+    # used by the flat/Lloyd assignments) computes the argmax in place
+    # — the lsh_bucket_expr pattern. Tie-break, pre-normalization rationale
     # and the zero-norm vector/centroid semantics are documented on the
     # helper; the DuckDB oracle mirrors them exactly.
     #
     # vector → coarse group: fold over the C pre-normalized coarse
     # centroids
-    if assign == "arrow":
+    if form == "arrow":
         v2c = _arrow_assign(
             base,
             ccents.select(
@@ -2711,7 +2631,7 @@ def semantic_dedup_hier(
     # fine centroids grouped into C broadcast arrays (~K/C structs
     # each); the join key is the coarse id, the fold scores only that
     # group's centroids
-    if assign == "arrow":
+    if form == "arrow":
         assigned = _arrow_fine_assign(v2c, f2c)
     else:
         fc_arr = (

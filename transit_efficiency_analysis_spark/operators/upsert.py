@@ -21,6 +21,7 @@ handles skewed keys (a hot trip_id) via skew-join splitting.
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import re
@@ -415,6 +416,7 @@ _BUCKET_COL = "p_bucket"
 _META_NAME = ".merge_meta.json"
 _MANIFEST_NAME = ".manifest.json"
 _VROOT = ".v"
+_VERSION_DIR = re.compile(r"^b(\d+)_v(\d+)$")
 
 
 def _bucket_expr(keys: list[str], num_buckets: int) -> Column:
@@ -534,29 +536,51 @@ def _version_path(local: str, bucket: int, version: int) -> str:
     return os.path.join(local, _VROOT, f"b{bucket}_v{version}")
 
 
-def _list_versions(local: str, bucket: int) -> list[tuple[int, str]]:
-    """Every published ``(version, path)`` of ``bucket``, committed or
-    orphaned, ascending."""
+def _list_versions(local: str) -> dict[int, list[tuple[int, str]]]:
+    """Every published version dir, committed or orphaned, as
+    ``bucket -> [(version, path), ...]`` ascending — ONE listing of
+    ``.v/`` serves a whole commit's publishes and cleanup, however many
+    buckets it touches."""
     vroot = os.path.join(local, _VROOT)
-    if not os.path.isdir(vroot):
-        return []
-    pat = re.compile(rf"^b{bucket}_v(\d+)$")
-    return sorted(
-        (int(m.group(1)), os.path.join(vroot, name))
-        for name in os.listdir(vroot)
-        if (m := pat.match(name))
-    )
+    versions: dict[int, list[tuple[int, str]]] = {}
+    if os.path.isdir(vroot):
+        for name in os.listdir(vroot):
+            if m := _VERSION_DIR.match(name):
+                versions.setdefault(int(m.group(1)), []).append(
+                    (int(m.group(2)), os.path.join(vroot, name))
+                )
+    for listed in versions.values():
+        listed.sort()
+    return versions
 
 
-def _publish(local: str, staged: str, bucket: int, committed: int) -> int:
+def _publish(
+    local: str,
+    staged: str,
+    bucket: int,
+    committed: int,
+    listed: list[tuple[int, str]],
+) -> int:
     """Rename a staged bucket dir to a new write-once version dir and
     return its version: one above both ``committed`` and every version
-    dir of the bucket still on disk, orphans included, so a crashed
-    writer's id is never reused."""
-    listed = _list_versions(local, bucket)
+    dir of the bucket in ``listed`` (the commit's :func:`_list_versions`
+    entry), orphans included, so a crashed writer's id is never reused.
+    A concurrent writer that published the same version after the
+    listing wins: the rename onto its non-empty dir fails, so a
+    published dir is never replaced, and this commit raises
+    :class:`ConcurrentWriteError`."""
     version = max(listed[-1][0] if listed else 0, committed) + 1
     os.makedirs(os.path.join(local, _VROOT), exist_ok=True)
-    os.rename(staged, _version_path(local, bucket, version))
+    try:
+        os.rename(staged, _version_path(local, bucket, version))
+    except OSError as exc:
+        if exc.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+            raise
+        raise ConcurrentWriteError(
+            f"version dir b{bucket}_v{version} was published by a "
+            "concurrent writer during this commit; the manifest is "
+            "untouched — rerun (or use merge_with_retry/filter_with_retry)"
+        ) from exc
     return version
 
 
@@ -754,6 +778,7 @@ def merge_into_partitioned(
             )
 
         ours: dict[int, int] = {}
+        versions = _list_versions(local)
         try:
             for b in touched:
                 part = os.path.join(staging, f"{_BUCKET_COL}={b}")
@@ -763,7 +788,9 @@ def merge_into_partitioned(
                     raise RuntimeError(
                         f"merge produced no output for touched bucket {b}"
                     )
-                ours[b] = _publish(local, part, b, manifest.get(b, 0))
+                ours[b] = _publish(
+                    local, part, b, manifest.get(b, 0), versions.get(b, [])
+                )
             # Re-read the manifest immediately before the swap: untouched
             # buckets keep the CURRENT entries (a concurrent commit to
             # disjoint buckets survives) and touched buckets take this
@@ -794,11 +821,14 @@ def merge_into_partitioned(
         # Post-commit cleanup, bounded by OUR read snapshot: only
         # versions <= what this merge read (and therefore superseded)
         # are deleted, best effort — a concurrent writer's newer dir is
-        # never touched. Orphans from a crash between publish and swap
-        # are left for sweep_orphans: deleting them here would need
-        # proof that no racing writer is about to commit them.
+        # never touched. The publish listing serves here too: a version
+        # <= our snapshot published after it can only be a racing
+        # writer's lost attempt, an orphan. Orphans (and those from a
+        # crash between publish and swap) are left for sweep_orphans:
+        # deleting them here would need proof that no racing writer is
+        # about to commit them.
         for b in touched:
-            for v, stale in _list_versions(local, b):
+            for v, stale in versions.get(b, []):
                 if v <= manifest.get(b, 0):
                     shutil.rmtree(stale, ignore_errors=True)
     finally:
@@ -951,17 +981,20 @@ def filter_partitioned(
                 "untouched, rerun the compaction"
             )
         new_manifest: dict[int, int] = {}
+        versions = _list_versions(local)
         for b in sorted(manifest):
             part = os.path.join(staging, f"{_BUCKET_COL}={b}")
             if os.path.isdir(part):
-                new_manifest[b] = _publish(local, part, b, manifest[b])
+                new_manifest[b] = _publish(
+                    local, part, b, manifest[b], versions.get(b, [])
+                )
             # else: every row filtered away — the bucket has no entry
             # in the new manifest; its old versions go in cleanup
         _write_manifest(local, new_manifest)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     for b in manifest:
-        for v, stale in _list_versions(local, b):
+        for v, stale in versions.get(b, []):
             if v <= manifest[b] and v != new_manifest.get(b):
                 shutil.rmtree(stale, ignore_errors=True)
     if not new_manifest:

@@ -91,9 +91,9 @@ def parquet_rows(sf_dir: str, name: str) -> int:
     metadata — no Spark job, no scan, microseconds on the driver.
 
     This is the zero-cost ``n_rows`` source for the cached-statistics
-    paths (``lsh_topk(n_rows=...)`` sizing, the IVF/SemDeDup
-    ``assign="auto"`` crossover resolution, the SemDeDup K-knee
-    warning): parquet writers record num_rows per file footer, so the
+    paths (``lsh_topk(n_rows=...)`` sizing, the IVF/SemDeDup/LSH
+    physical-form pick on the measured row-count knees, the SemDeDup
+    K-knee warning): parquet writers record num_rows per file footer, so the
     stat is exact, not an estimate — the same number ``COUNT(*)``
     returns, read the way a lakehouse catalog would serve it. Directory
     datasets (a table written as ``<name>.parquet/part-*.parquet``) sum
