@@ -8,6 +8,7 @@ from __future__ import annotations
 from datetime import datetime
 
 import pytest
+from pyspark.sql import functions as F
 
 from transit_efficiency_analysis_spark import schemas
 from transit_efficiency_analysis_spark.pipeline import (
@@ -196,3 +197,129 @@ def _feed_on(spark, poll_ts, date_str, updates):
     return spark.createDataFrame(
         [(poll_ts, [("T1", date_str, updates)])], schemas.REALTIME_FEED_RAW
     )
+
+
+# -- the poll's touched-date set and its job count ----------------------------
+
+
+def _local_feed(spark, poll_ts, entities):
+    """One poll as the decoder hands it over: nested feed rows in a local
+    relation built from an Arrow table, where a NULL ``start_date`` can
+    occur."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from transit_efficiency_analysis_spark.sources.gtfs_realtime import _nullable
+
+    ents = [
+        {
+            "trip_id": trip_id,
+            "start_date": start_date,
+            "stop_time_update": [
+                {"stop_sequence": seq, "stop_id": stop, "arrival_unix": arr,
+                 "departure_unix": dep}
+                for seq, stop, arr, dep in updates
+            ],
+        }
+        for trip_id, start_date, updates in entities
+    ]
+    table = pa.Table.from_pydict(
+        {"poll_ts": [poll_ts], "entity": [ents]},
+        schema=to_arrow_schema(_nullable(schemas.REALTIME_FEED_RAW)),
+    )
+    return spark.createDataFrame(table)
+
+
+def _table_rows(df):
+    return sorted(map(str, df.select(sorted(df.columns)).collect()))
+
+
+@pytest.mark.slow
+def test_poll_dates_cover_empty_updates_and_null_dates(spark, tmp_path):
+    """The touched-date set comes from the nested feed, so it holds the
+    date of an entity with no stop-time update and the NULL date. The
+    committed table equals a merge of the batch into the whole table: a
+    batch date missing from the set would lose that date's stored rows."""
+    from transit_efficiency_analysis_spark import sinks
+    from transit_efficiency_analysis_spark.operators.upsert import merge_batch
+    from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
+        apply_epoch0_default,
+        decode_feed,
+        enrich_weather,
+    )
+
+    store = Store(str(tmp_path / "store"))
+    ingest_realtime(
+        spark,
+        _local_feed(spark, datetime(2023, 6, 15, 14, 0), [
+            ("T0", "20230614", [(1, "100", ARR1 - 86400, None)]),
+            ("T1", "20230615", [(1, "100", ARR1 + 60, None), (2, "200", ARR2, None)]),
+            ("T3", "20230616", [(1, "100", ARR1 + 86400, None)]),
+            ("TN", None, [(1, "100", ARR1, None)]),
+        ]),
+        store,
+        now=datetime(2023, 6, 15, 14, 0, 5),
+    )
+    assert len(sinks.table_dates(store.trip_updates)) == 4
+
+    now = datetime(2023, 6, 15, 14, 5, 5)
+    feed = _local_feed(spark, datetime(2023, 6, 15, 14, 5), [
+        ("T1", "20230615", [(1, "100", ARR1 + 120, None)]),
+        ("T3", "20230616", []),  # no update: a date with no row
+        ("TN2", None, [(1, "200", ARR2, None)]),
+    ])
+    batch = enrich_weather(apply_epoch0_default(decode_feed(feed)), None, None, None)
+    batch = batch.withColumn("audit_ts", F.lit(now.isoformat(sep=" ")).cast("timestamp"))
+    want = _table_rows(merge_batch(
+        spark.read.parquet(store.trip_updates), batch, keys=list(schemas.PRIMARY_KEY),
+        order_by=["poll_ts"], tracked=["arrival_time", "departure_time"], ts_col="audit_ts",
+    ))
+
+    got = ingest_realtime(spark, feed, store, now=now)
+    assert _table_rows(got) == want
+    assert _table_rows(spark.read.parquet(store.trip_updates)) == want
+    assert len(want) == 6
+
+
+@pytest.mark.slow
+def test_poll_and_incremental_rebuild_run_no_schema_or_date_job(spark, tmp_path, count_jobs):
+    """On a two-date store, a poll of a decoded (local) feed and an
+    incremental rebuild run only their merge/join and write jobs: no
+    footer-inference job for a read and no job to find the batch's
+    dates. The counts are pinned; each extra read or date pass adds
+    at least one."""
+    from datetime import date
+
+    from transit_efficiency_analysis_spark.pipeline import consolidate_incremental
+    from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
+        decode_protobuf_payloads,
+    )
+    from transit_efficiency_analysis_spark.sources.gtfs_rt_wire import encode_feed_message
+
+    csv_dir = tmp_path / "gtfs"
+    csv_dir.mkdir()
+    csvs = dict(CSVS)
+    csvs["calendar_dates"] = "service_id,date\nS1,20230615\nS1,20230616\n"
+    for name, content in csvs.items():
+        (csv_dir / f"{name}.txt").write_text(content)
+    store = Store(str(tmp_path / "store"))
+    ingest_schedule(spark, str(csv_dir), store)
+
+    def poll(ts, arr):
+        payload = encode_feed_message(ts, [
+            ("T1", "20230615", [(1, "100", arr, None)]),
+            ("T1", "20230616", [(1, "100", arr + 86400, None)]),
+        ])
+        raw = spark.createDataFrame([(bytearray(payload),)], "payload binary")
+        return decode_protobuf_payloads(raw)  # its own collect, before the poll
+
+    ingest_realtime(spark, poll(ARR1 - 1800, ARR1 + 60), store)
+    consolidate(spark, store)
+    feed = poll(ARR1 - 1500, ARR1 + 120)
+    tu, poll_jobs = count_jobs(lambda: ingest_realtime(spark, feed, store))
+    assert tu.count() == 2
+    diffs, rebuild_jobs = count_jobs(
+        lambda: consolidate_incremental(spark, store, [date(2023, 6, 15)])
+    )
+    assert diffs.count() == 2
+    assert (poll_jobs, rebuild_jobs) == (2, 2)

@@ -1,14 +1,17 @@
 """``sinks.overwrite_table``: the atomic versioned-dir commit, with and
 without partition carry-over, and the date-scoped realtime poll built on
-it (``pipeline.merge_touched_dates``)."""
+it (``pipeline.merge_touched_dates``); ``sinks.read_table``, the
+footer-schema read of a committed table."""
 
 from __future__ import annotations
 
 import os
 from datetime import date, datetime
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from transit_efficiency_analysis_spark import schemas, sinks
 from transit_efficiency_analysis_spark.operators.upsert import merge_batch
@@ -139,6 +142,87 @@ def test_failure_before_flip_keeps_old_table_and_next_call_cleans_up(
     assert _rows(got, ["start_date", "k", "v"]) == [(str(D1), "1", "a"), (str(D2), "2", "y")]
 
 
+# -- read_table: the footer-schema read ---------------------------------------
+
+
+def _wide(spark, rows):
+    """Rows of several types, non-nullable ones included."""
+    return spark.createDataFrame(
+        rows,
+        T.StructType([
+            T.StructField("k", T.LongType(), False),
+            T.StructField("start_date", T.DateType(), True),
+            T.StructField("ts", T.TimestampType(), True),
+            T.StructField("amount", T.DecimalType(28, 6), True),
+            T.StructField("tags", T.ArrayType(T.StringType()), True),
+        ]),
+    )
+
+
+WIDE_ROWS = [
+    (1, D1, datetime(2023, 6, 14, 8), Decimal("1.500000"), ["a"]),
+    (2, D2, None, None, None),
+]
+
+
+@pytest.mark.parametrize(
+    "layout", ["partitioned", "unpartitioned", "empty_partitioned"]
+)
+def test_read_table_schema_equals_an_inferred_read(spark, tmp_path, count_jobs, layout):
+    """Same columns, order, types and nullability as an inferred read, for
+    a partitioned table (partition column last), a legacy unpartitioned
+    table (``start_date`` in place) and the schema-only file of an empty
+    partitioned table; and no Spark job to read it."""
+    table = str(tmp_path / "t")
+    if layout == "unpartitioned":
+        _wide(spark, WIDE_ROWS).write.parquet(table)
+    else:
+        df = _wide(spark, WIDE_ROWS if layout == "partitioned" else [])
+        sinks.overwrite_table(df, table, partition_by="start_date")
+
+    got, jobs = count_jobs(lambda: sinks.read_table(spark, table))
+    assert jobs == 0
+    assert got.schema == spark.read.parquet(table).schema
+    assert _rows(got) == _rows(spark.read.parquet(table))
+
+
+def test_read_table_reads_a_null_only_date_as_date(spark, tmp_path):
+    table = str(tmp_path / "t")
+    sinks.overwrite_table(_dated(spark, [(None, 1, "a")]), table, partition_by="start_date")
+    assert sinks.table_dates(table) == [None]
+    got = sinks.read_table(spark, table)
+    assert got.schema["start_date"].dataType == T.DateType()
+    assert _rows(got, ["start_date", "k", "v"]) == [("None", "1", "a")]
+
+
+def test_read_table_falls_back_to_inference_without_spark_footer(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = tmp_path / "t"
+    table.mkdir()
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", None]}), str(table / "part-0.parquet"))
+    assert b"org.apache.spark.sql.parquet.row.metadata" not in (
+        pq.read_schema(str(table / "part-0.parquet")).metadata or {}
+    )
+    got = sinks.read_table(spark, str(table))
+    assert got.schema == spark.read.parquet(str(table)).schema
+    assert _rows(got) == [("1", "a"), ("2", "None")]
+
+
+def test_table_dates_lists_the_partition_dirs(spark, tmp_path):
+    table = str(tmp_path / "t")
+    assert sinks.table_dates(table) == []  # missing
+    sinks.overwrite_table(
+        _dated(spark, [(D2, 1, "a"), (D1, 2, "b"), (None, 3, "c")]), table,
+        partition_by="start_date",
+    )
+    assert sorted(sinks.table_dates(table), key=str) == [D1, D2, None]
+    flat = str(tmp_path / "flat")
+    sinks.overwrite_table(_dated(spark, [(D1, 1, "a")]), flat)
+    assert sinks.table_dates(flat) == []  # unpartitioned
+
+
 # -- the realtime poll on the partitioned commit ------------------------------
 
 
@@ -221,6 +305,7 @@ def _merge(spark, rows, path):
     return merge_touched_dates(
         _dated(spark, rows).withColumn("ts", F.col("k").cast("timestamp")), path,
         keys=["start_date", "k"], order_by=["ts"], tracked=["v"], ts_col="ts",
+        dates=lambda: list({d for d, _, _ in rows}),
     )
 
 

@@ -136,10 +136,12 @@ def replay_conflict_update(
       ``updated_col`` (NULL for a fresh never-updated insert).
 
     Missing audit columns are added as NULL timestamps.
+
+    The plan is one projection per window level (annotate, rank, stamp),
+    not a chain of ``withColumn`` calls that each re-analyze the plan.
     """
-    for c in (created_col, updated_col):
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast("timestamp"))
+    df = _with_audit(df, (created_col, updated_col))
+    cols = df.columns
     w = Window.partitionBy(*keys).orderBy(*_ordering(order_by, descending=False))
     has_prev = F.lag(F.lit(1), 1).over(w).isNotNull()
     any_diff: Column = F.lit(False)
@@ -148,25 +150,35 @@ def replay_conflict_update(
     first_created = F.first(F.coalesce(F.col(created_col), F.col(ts_col))).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    annotated = (
-        df.withColumn("__has_prev", has_prev)
-        .withColumn("__is_cp", ~has_prev | any_diff)
-        .withColumn("__first_created", first_created)
+    annotated = df.select(
+        *cols,
+        has_prev.alias("__has_prev"),
+        (~has_prev | any_diff).alias("__is_cp"),
+        first_created.alias("__first_created"),
     )
     w_desc = Window.partitionBy(*keys).orderBy(*_ordering(order_by, descending=True))
     survivor = (
         annotated.where(F.col("__is_cp"))
-        .withColumn("__rn", F.row_number().over(w_desc))
+        .select("*", F.row_number().over(w_desc).alias("__rn"))
         .where(F.col("__rn") == 1)
     )
-    return (
-        survivor.withColumn(created_col, F.col("__first_created"))
-        .withColumn(
-            updated_col,
-            F.when(F.col("__has_prev"), F.col(ts_col)).otherwise(F.col(updated_col)),
-        )
-        .drop("__has_prev", "__is_cp", "__first_created", "__rn")
+    stamped = {
+        created_col: F.col("__first_created"),
+        updated_col: F.when(F.col("__has_prev"), F.col(ts_col)).otherwise(
+            F.col(updated_col)
+        ),
+    }
+    return survivor.select(
+        *[stamped[c].alias(c) if c in stamped else F.col(c) for c in cols]
     )
+
+
+def _with_audit(df: DataFrame, audit: tuple[str, ...]) -> DataFrame:
+    """``df`` with each missing ``audit`` column added as a NULL timestamp."""
+    missing = [c for c in audit if c not in df.columns]
+    if not missing:
+        return df
+    return df.withColumns({c: F.lit(None).cast("timestamp") for c in missing})
 
 
 def merge_batch(
@@ -195,12 +207,8 @@ def merge_batch(
         return upsert_keep_newest(existing.unionByName(incoming), keys, order_by)
     if ts_col is None:
         raise ValueError("ts_col is required when tracked is given")
-    def _with_audit(df: DataFrame) -> DataFrame:
-        for c in ("created_at", "updated_at"):
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast("timestamp"))
-        return df
-    unioned = _with_audit(existing).unionByName(_with_audit(incoming))
+    audit = ("created_at", "updated_at")
+    unioned = _with_audit(existing, audit).unionByName(_with_audit(incoming, audit))
     return replay_conflict_update(unioned, keys, order_by, tracked, ts_col)
 
 

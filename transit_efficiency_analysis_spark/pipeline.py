@@ -18,20 +18,20 @@ streaming runtime's checkpoint + trigger (``streaming/``).
 from __future__ import annotations
 
 import os
-from datetime import date
-from urllib.parse import unquote
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transit_efficiency_analysis_spark import schemas
 from transit_efficiency_analysis_spark.operators.delay import compute_delays
-from transit_efficiency_analysis_spark.sinks import overwrite_table
+from transit_efficiency_analysis_spark.sinks import overwrite_table, read_table, table_dates
 from transit_efficiency_analysis_spark.operators.upsert import merge_batch, upsert_ignore
 from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
     apply_epoch0_default,
     decode_feed,
     enrich_weather,
+    feed_dates,
 )
 from transit_efficiency_analysis_spark.sources.gtfs_static import (
     build_gtfs_data,
@@ -43,28 +43,6 @@ def _date_in(col, dates: list):
     """``col IN dates``, with a NULL in ``dates`` matching NULL."""
     cond = col.isin([d for d in dates if d is not None])
     return cond | col.isNull() if None in dates else cond
-
-
-def _stored_dates(path: str) -> int:
-    """Number of ``start_date=`` dirs of the table at ``path`` (a local
-    directory listing, no Spark job; 0 for a missing or unpartitioned
-    table)."""
-    if not os.path.isdir(path):
-        return 0
-    return sum(n.startswith("start_date=") for n in os.listdir(path))
-
-
-def _file_dates(files: list[str]) -> list[date]:
-    """The distinct ``start_date=`` path segments of ``files`` as dates
-    (the NULL partition is left out)."""
-    values = {
-        unquote(seg[len("start_date="):])
-        for f in files
-        for seg in f.split("/")
-        if seg.startswith("start_date=")
-    }
-    values.discard("__HIVE_DEFAULT_PARTITION__")
-    return sorted(date.fromisoformat(v) for v in values)
 
 
 class Store:
@@ -116,8 +94,10 @@ def ingest_realtime(
     trip_updates is stored partitioned by ``start_date``, and a poll reads,
     merges and rewrites only the service dates its batch holds
     (:func:`merge_touched_dates`), so its cost follows the batch, not the
-    table. The commit is one atomic flip: readers see the table before
-    the poll or after it, never a mix."""
+    table. The touched dates are read from the nested feed itself
+    (``feed_dates``), which for a decoded poll runs no Spark job. The
+    commit is one atomic flip: readers see the table before the poll or
+    after it, never a mix."""
     batch = apply_epoch0_default(decode_feed(feed))
     batch = enrich_weather(batch, *(weather or (None, None, None)))
     audit = (
@@ -133,6 +113,7 @@ def ingest_realtime(
         order_by=["poll_ts"],
         tracked=["arrival_time", "departure_time"],
         ts_col="audit_ts",
+        dates=lambda: feed_dates(feed),
     )
 
 
@@ -143,41 +124,45 @@ def merge_touched_dates(
     order_by: list[str],
     tracked: list[str],
     ts_col: str,
+    dates: Callable[[], list],
 ) -> DataFrame:
     """``merge_batch`` of ``batch`` into the state table at ``path``,
-    reading and rewriting only the ``start_date`` partitions the batch
-    holds; returns the committed table. Shared by ``ingest_realtime`` and
-    the streaming leg (``streaming/realtime_stream.py``).
+    reading and rewriting only the ``start_date`` partitions that
+    ``dates()`` returns; returns the committed table. Shared by
+    ``ingest_realtime`` and the streaming leg
+    (``streaming/realtime_stream.py``), which both pass the dates of the
+    nested feed the batch was decoded from (``feed_dates``).
 
     ``keys`` must include ``start_date``: then keys never cross dates, and
-    merging the touched dates' slice equals merging the whole table. When
-    the table holds two or more dates, one pass over the persisted batch
-    collects its dates, the stored slice is read through a partition-pruned
-    ``start_date IN dates``, and the merge reuses the persisted batch.
-    ``overwrite_table(partition_by=...)`` writes the merged dates and
-    hard-links every other live date into the new version, so the commit
-    is still one atomic symlink flip: readers see the old table or the new
-    one."""
+    merging the touched dates' slice equals merging the whole table.
+    ``dates()`` must hold every date of ``batch`` (a superset is fine: an
+    extra date is read and rewritten unchanged). A batch date missing from
+    it would be written without its stored rows, which the commit then
+    drops. It is called only when the table exists: the first commit
+    writes the whole batch and needs no date set.
+
+    The stored slice is read through a partition-pruned
+    ``start_date IN dates`` with the footer schema (``sinks.read_table``,
+    no inference job). A table written unpartitioned has no date dirs, so
+    it is read in full, never through the filter, and rewritten
+    partitioned. ``overwrite_table(partition_by=...)`` writes the merged
+    dates and hard-links every other live date into the new version, so
+    the commit is one atomic symlink flip: readers see the old table or
+    the new one."""
     spark = batch.sparkSession
-    try:
-        if _stored_dates(path) < 2:
-            # A date filter could skip at most one stored date, which saves
-            # less than the job that collects the batch's dates costs. A
-            # table written unpartitioned has no date dirs, so it is read in
-            # full here, never through the filter, and rewritten partitioned.
-            existing = spark.read.parquet(path) if os.path.exists(path) else batch.limit(0)
-        else:
-            batch = batch.persist()
-            dates = [r[0] for r in batch.select("start_date").distinct().collect()]
-            if not dates:
-                return spark.read.parquet(path)  # nothing touched
-            existing = spark.read.parquet(path).where(_date_in(F.col("start_date"), dates))
-        merged = merge_batch(
-            existing, batch, keys=keys, order_by=order_by, tracked=tracked, ts_col=ts_col
-        )
-        return overwrite_table(merged, path, partition_by="start_date")
-    finally:
-        batch.unpersist()  # a no-op unless the date pass persisted it
+    if not os.path.exists(path):
+        existing = batch.limit(0)
+    else:
+        touched = dates()
+        if not touched:
+            return read_table(spark, path)  # nothing touched
+        existing = read_table(spark, path)
+        if table_dates(path):
+            existing = existing.where(_date_in(F.col("start_date"), touched))
+    merged = merge_batch(
+        existing, batch, keys=keys, order_by=order_by, tracked=tracked, ts_col=ts_col
+    )
+    return overwrite_table(merged, path, partition_by="start_date")
 
 
 def consolidate(spark: SparkSession, store: Store) -> DataFrame:
@@ -193,11 +178,10 @@ def consolidate(spark: SparkSession, store: Store) -> DataFrame:
     full."""
     # trip_updates carries real audit columns maintained by the merge:
     # created_at = first observation, updated_at = last real change.
-    # The dates come from gtfs_data's file listing (no Spark job).
-    gd = spark.read.parquet(store.gtfs_data)
-    tu = spark.read.parquet(store.trip_updates).where(
-        F.col("start_date").isin(_file_dates(gd.inputFiles()))
-    )
+    # The dates come from gtfs_data's start_date= dir names (no Spark job).
+    gd = read_table(spark, store.gtfs_data)
+    dates = [d for d in table_dates(store.gtfs_data) if d is not None]
+    tu = read_table(spark, store.trip_updates).where(F.col("start_date").isin(dates))
     diffs = compute_delays(tu, gd, sort=False)
     diffs.write.mode("overwrite").partitionBy("start_date").parquet(store.diffs)
     return spark.read.schema(diffs.schema).parquet(store.diffs)
@@ -219,10 +203,8 @@ def consolidate_incremental(
     per-key and keys never cross start_date, so partition-local recompute
     equals the full recompute (tests/test_pipeline.py).
     """
-    tu = spark.read.parquet(store.trip_updates).where(
-        F.col("start_date").isin(changed_dates)
-    )
-    gd = spark.read.parquet(store.gtfs_data).where(F.col("start_date").isin(changed_dates))
+    tu = read_table(spark, store.trip_updates).where(F.col("start_date").isin(changed_dates))
+    gd = read_table(spark, store.gtfs_data).where(F.col("start_date").isin(changed_dates))
     diffs = compute_delays(tu, gd, sort=False)
     # per-write option, NOT a session conf mutation: a later full consolidate()
     # must keep static overwrite semantics (replace the whole table)

@@ -2,9 +2,13 @@
 
 The reference declares schemas as hand-written Postgres DDL
 (``README.md:108-167``) and lets pandas infer CSV types; here every
-production read uses an explicit schema (no inference). Truth follows the
-reference *code*, not its stale DDL — e.g. ``temperature`` is included
-(``scripts/realtime_extractor.py:204-207``).
+production read uses an explicit schema (no inference): the source CSVs and
+feeds with the StructTypes below, and a table the engine wrote with the
+schema its writer recorded in the parquet footer (``sinks.read_table``), or
+with the written DataFrame's own schema right after the write. Only the
+demo inputs that ``sources/registry.py`` loads are read as their files
+declare. Truth follows the reference *code*, not its stale DDL — e.g.
+``temperature`` is included (``scripts/realtime_extractor.py:204-207``).
 
 Key semantic choices carried over:
 - ``trip_updates.stop_id`` is a STRING (realtime feed delivers text) while

@@ -28,18 +28,29 @@ guarantee, with a different mechanism per filesystem class:
   and commits with the Spark writer (FileOutputCommitter semantics; on a
   real deployment the table format's commit — Delta/Iceberg — replaces
   this whole module at the same call sites).
+
+Reads go through :func:`read_table`, which takes the table's schema from
+one data file's footer instead of letting Spark run a footer-merge job
+per read, and :func:`table_dates` lists a table's ``start_date``
+partitions from its directory names.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
-from urllib.parse import urlparse
+from datetime import date
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _VERSION_RE = re.compile(r"\._v(\d+)$")
+#: footer key under which Spark's parquet writer stores the row schema (JSON)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_DATE_DIR = "start_date="
 
 
 def _local_path(target: str) -> str | None:
@@ -74,6 +85,70 @@ def _carry_partitions(live: str, vdir: str, column: str) -> None:
             os.link(os.path.join(src, f), os.path.join(dst, f))
 
 
+def _date_dirs(local: str) -> list[str]:
+    """The ``start_date=`` dir names of the table dir ``local``."""
+    if not os.path.isdir(local):
+        return []
+    return sorted(n for n in os.listdir(local) if n.startswith(_DATE_DIR))
+
+
+def table_dates(path: str) -> list[date | None]:
+    """The ``start_date`` values the table at ``path`` holds, from its
+    ``start_date=`` dir names (a local listing, no Spark job); None is the
+    NULL partition. Empty for a missing, unpartitioned or object-store
+    table."""
+    local = _local_path(path)
+    if local is None:
+        return []
+    out = []
+    for name in _date_dirs(local):
+        value = unquote(name[len(_DATE_DIR):])
+        out.append(None if value == "__HIVE_DEFAULT_PARTITION__" else date.fromisoformat(value))
+    return out
+
+
+def _footer_schema(local: str) -> T.StructType | None:
+    """The Spark schema of the table dir ``local`` from one data file's
+    footer, with ``start_date DATE`` appended when the table is stored in
+    ``start_date=`` dirs; None when there is no data file or its footer
+    carries no Spark schema."""
+    import pyarrow.parquet as pq
+
+    dirs = _date_dirs(local)
+    candidates = [os.path.join(local, d) for d in dirs] if dirs else [local]
+    for d in candidates:
+        files = sorted(
+            f for f in os.listdir(d)
+            if not f.startswith(("_", ".")) and os.path.isfile(os.path.join(d, f))
+        )
+        if files:
+            break
+    else:
+        return None
+    raw = (pq.read_schema(os.path.join(d, files[0])).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    schema = T.StructType.fromJson(json.loads(raw))
+    if dirs:
+        schema = schema.add("start_date", T.DateType(), True)
+    return schema
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet table at ``path``, read with the schema its writer
+    stored in one data file's footer, so the read runs no schema-inference
+    job. The result equals ``spark.read.parquet(path)`` (same columns,
+    order and types, the partition column last), except that a table
+    holding only the NULL date still reads ``start_date`` as DATE. Falls
+    back to inference for object-store paths and for files without
+    Spark's footer key."""
+    local = _local_path(path)
+    schema = _footer_schema(local) if local is not None and os.path.isdir(local) else None
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 def overwrite_table(
     df: DataFrame, target: str, partition_by: str | None = None
 ) -> DataFrame:
@@ -102,7 +177,7 @@ def overwrite_table(
         # Delta/Iceberg for snapshot isolation at scale)
         staging = target + ".staging"
         df.write.mode("overwrite").parquet(staging)
-        spark.read.parquet(staging).write.mode("overwrite").parquet(target)
+        spark.read.schema(df.schema).parquet(staging).write.mode("overwrite").parquet(target)
         return spark.read.schema(df.schema).parquet(target)
 
     existing = _versions(local)

@@ -16,6 +16,9 @@ nested struct rows → ``explode`` → column expressions.
 - ``decode_feed`` explodes nested feed rows, from that decoder or any
   upstream one, into one row per stop-time update with pure column
   projections.
+- ``feed_dates`` reads the service dates a feed touches straight from its
+  nested entities, so a poll knows which ``start_date`` partitions it
+  rewrites before any row is exploded.
 
 Missing arrival/departure in an update is NULL (``realtime_extractor.py:
 107-108``); persisting with epoch-0 DEFAULT semantics is the writer's
@@ -60,13 +63,28 @@ def decode_feed(feed: DataFrame) -> DataFrame:
     )
 
 
+def feed_dates(feed: DataFrame) -> list:
+    """The distinct service dates of ``feed``'s entities (nested feed rows,
+    ``schemas.REALTIME_FEED_RAW``), parsed as ``decode_feed`` parses them;
+    None stands for a NULL date.
+
+    A superset of the dates of ``decode_feed(feed)``: an entity with no
+    stop-time update adds its date here but no row there. Over a local
+    relation (a decoded poll) the projection folds into the relation, so
+    the collect runs no Spark job."""
+    dates = F.array_distinct(
+        F.transform("entity", lambda e: yyyymmdd_to_date(e["start_date"]))
+    )
+    return list({d for row in feed.select(dates).collect() for d in row[0] or ()})
+
+
 def apply_epoch0_default(df: DataFrame) -> DataFrame:
     """NULL arrival/departure → epoch-0 sentinel (the column DEFAULT in the
     reference's DDL, ``README.md:131-132``)."""
     epoch0 = F.timestamp_seconds(F.lit(0))
-    return df.withColumn(
-        "arrival_time", F.coalesce("arrival_time", epoch0)
-    ).withColumn("departure_time", F.coalesce("departure_time", epoch0))
+    return df.withColumns(
+        {c: F.coalesce(c, epoch0) for c in ("arrival_time", "departure_time")}
+    )
 
 
 def enrich_weather(
@@ -80,15 +98,19 @@ def enrich_weather(
     id → coarse group bucket, Kelvin → Celsius. None → NULL columns (the
     rate-limited no-call case)."""
     if weather_id is None:
-        return (
-            df.withColumn("weather_group", F.lit(None).cast("string"))
-            .withColumn("weather_description", F.lit(None).cast("string"))
-            .withColumn("temperature", F.lit(None).cast("double"))
+        return df.withColumns(
+            {
+                "weather_group": F.lit(None).cast("string"),
+                "weather_description": F.lit(None).cast("string"),
+                "temperature": F.lit(None).cast("double"),
+            }
         )
-    return (
-        df.withColumn("weather_group", weather_group_for_id(F.lit(weather_id)))
-        .withColumn("weather_description", F.lit(weather_description))
-        .withColumn("temperature", kelvin_to_celsius(F.lit(float(temperature_kelvin))))
+    return df.withColumns(
+        {
+            "weather_group": weather_group_for_id(F.lit(weather_id)),
+            "weather_description": F.lit(weather_description),
+            "temperature": kelvin_to_celsius(F.lit(float(temperature_kelvin))),
+        }
     )
 
 

@@ -96,20 +96,3 @@ def build_gtfs_data(tables: dict[str, DataFrame], tz: str = "America/Toronto") -
         ).alias("geo_coordinates"),
     )
 
-
-def ingest_static(
-    spark: SparkSession, csv_dir: str, out_path: str, tz: str = "America/Toronto"
-) -> DataFrame:
-    """End-to-end static ingest: read → expand → dedup on the PK
-    (ON CONFLICT DO NOTHING semantics) → Parquet partitioned by start_date
-    (date predicates prune partitions at query time)."""
-    from transit_efficiency_analysis_spark.operators.upsert import upsert_ignore
-
-    gtfs_data = build_gtfs_data(read_gtfs_static(spark, csv_dir), tz)
-    deduped = upsert_ignore(
-        gtfs_data,
-        keys=list(schemas.PRIMARY_KEY),
-        order_by=["route_id", "arrival_time"],  # deterministic survivor
-    )
-    deduped.write.mode("overwrite").partitionBy("start_date").parquet(out_path)
-    return spark.read.parquet(out_path)

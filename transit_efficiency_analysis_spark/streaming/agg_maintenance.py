@@ -17,7 +17,8 @@ exceeds 10^22.
 
 The state table uses ``sinks.overwrite_table`` (atomic versioned-dir
 symlink flip), whose read-while-overwrite contract lets the merge plan
-scan the previous state version while writing the next.
+scan the previous state version while writing the next; it is read with
+``sinks.read_table`` (footer schema, no inference job per micro-batch).
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transit_efficiency_analysis_spark.sinks import overwrite_table
+from transit_efficiency_analysis_spark.sinks import overwrite_table, read_table
 
 _KEYS = ["user_id", "event_type"]
 
@@ -63,13 +64,11 @@ def run_agg_maintenance_stream(
     checkpoint owns progress; re-runs skip processed files)."""
     import os
 
-    schema = spark.read.parquet(source_dir).schema
+    schema = read_table(spark, source_dir).schema
     raw = spark.readStream.schema(schema).parquet(source_dir)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        state = (
-            spark.read.parquet(state_path) if os.path.exists(state_path) else None
-        )
+        state = read_table(spark, state_path) if os.path.exists(state_path) else None
         overwrite_table(merge_partials(state, batch_partials(batch_df)), state_path)
 
     (
@@ -86,7 +85,7 @@ def final_aggregate(spark: SparkSession, state_path: str) -> DataFrame:
     output shape (avg derived from merged sum/count)."""
     from transit_efficiency_analysis_spark.functions.parity import parity_double
 
-    s = spark.read.parquet(state_path)
+    s = read_table(spark, state_path)
     sum_value = parity_double(F.col("p_sum"), 6)
     return s.select(
         "user_id",

@@ -30,6 +30,7 @@ from transit_efficiency_analysis_spark.pipeline import merge_touched_dates
 from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
     apply_epoch0_default,
     decode_feed,
+    feed_dates,
 )
 
 #: upsert identity (PK) + recency order for realtime observations
@@ -64,6 +65,7 @@ def run_stream_available_now(
         merge_touched_dates(
             transform_feed(batch_df), state_path, REALTIME_KEYS, REALTIME_ORDER,
             tracked=REALTIME_TRACKED, ts_col="poll_ts",
+            dates=lambda: feed_dates(batch_df),
         )
 
     raw = (
