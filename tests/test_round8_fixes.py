@@ -16,19 +16,19 @@ from transit_efficiency_analysis_spark.operators.dedup import (
     simhash_pairs_incremental,
 )
 from transit_efficiency_analysis_spark.operators.upsert import (
-    _target_exists,
     merge_match_condition,
     merge_newer_condition,
 )
+from transit_efficiency_analysis_spark.sinks import table_exists
 
 
 # ---------------------------------------------------------------- advice 1
-def test_target_exists_true_and_false(spark, tmp_path):
-    assert _target_exists(spark, str(tmp_path)) is True
-    assert _target_exists(spark, str(tmp_path / "nope")) is False
+def test_target_exists_true_and_false(tmp_path):
+    assert table_exists(str(tmp_path)) is True
+    assert table_exists(str(tmp_path / "nope")) is False
 
 
-def test_target_exists_propagates_stat_errors(spark, tmp_path):
+def test_target_exists_propagates_stat_errors(tmp_path):
     # a path THROUGH a regular file stats with ENOTDIR, not ENOENT — an
     # unstatable-but-possibly-existing target must raise, never silently
     # read as "first batch" (which would let merge_into overwrite the
@@ -36,7 +36,7 @@ def test_target_exists_propagates_stat_errors(spark, tmp_path):
     f = tmp_path / "plainfile"
     f.write_text("x")
     with pytest.raises(NotADirectoryError):
-        _target_exists(spark, str(f / "child"))
+        table_exists(str(f / "child"))
 
 
 # ---------------------------------------------------------------- advice 3

@@ -1,7 +1,10 @@
-"""``sinks.overwrite_table``: the atomic versioned-dir commit, with and
-without partition carry-over, and the date-scoped realtime poll built on
-it (``pipeline.merge_touched_dates``); ``sinks.read_table``, the
-footer-schema read of a committed table."""
+"""``sinks``' atomic versioned-dir commit: ``overwrite_table``, with and
+without partition carry-over, and the whole-table ``replace_table``; every
+pipeline stage committing through them (crash injection inside the write
+job and before the flip), and the date-scoped realtime poll built on them
+(``pipeline.merge_touched_dates``); ``sinks.read_table``, the
+footer-schema read of a committed table, and the merges that read through
+it."""
 
 from __future__ import annotations
 
@@ -13,14 +16,28 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from transit_efficiency_analysis_spark import schemas, sinks
-from transit_efficiency_analysis_spark.operators.upsert import merge_batch
-from transit_efficiency_analysis_spark.pipeline import Store, ingest_realtime, merge_touched_dates
+from transit_efficiency_analysis_spark import pipeline, schemas, sinks
+from transit_efficiency_analysis_spark.operators.upsert import (
+    merge_batch,
+    merge_into,
+    merge_into_sql,
+)
+from transit_efficiency_analysis_spark.pipeline import (
+    Store,
+    consolidate,
+    consolidate_incremental,
+    ingest_realtime,
+    ingest_schedule,
+    merge_touched_dates,
+)
 from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
     apply_epoch0_default,
     decode_feed,
+    decode_protobuf_payloads,
     enrich_weather,
+    feed_dates,
 )
+from transit_efficiency_analysis_spark.sources.gtfs_rt_wire import encode_feed_message
 
 D1, D2, D3 = date(2023, 6, 14), date(2023, 6, 15), date(2023, 6, 16)
 ARR = int(datetime(2023, 6, 15, 14, 30).timestamp())
@@ -88,8 +105,17 @@ def test_committed_table_is_read_with_the_writers_schema(spark, tmp_path):
 
 
 def test_partition_by_rejects_object_store_targets(spark):
-    with pytest.raises(ValueError, match="local/posix path"):
-        sinks.overwrite_table(spark.range(1), "s3a://bucket/t", partition_by="id")
+    """The one local-path check rejects an object-store target in either
+    commit, partitioned or not, and in ``Store`` before any stage runs."""
+    df = spark.range(1)
+    for call in (
+        lambda: sinks.overwrite_table(df, "s3a://bucket/t", partition_by="id"),
+        lambda: sinks.overwrite_table(df, "s3a://bucket/t"),
+        lambda: sinks.replace_table(df, "s3a://bucket/t", partition_by="id"),
+        lambda: Store("s3a://b/s"),
+    ):
+        with pytest.raises(ValueError, match="is not a local/POSIX path"):
+            call()
 
 
 def test_untouched_partitions_keep_their_files(spark, tmp_path):
@@ -114,6 +140,21 @@ def test_untouched_partitions_keep_their_files(spark, tmp_path):
     )
 
 
+def test_replace_table_drops_the_partitions_df_lacks(spark, tmp_path):
+    table = str(tmp_path / "t")
+    sinks.overwrite_table(
+        _dated(spark, [(D1, 1, "a"), (D2, 2, "b")]), table, partition_by="start_date"
+    )
+    got = sinks.replace_table(_dated(spark, [(D2, 3, "c")]), table, partition_by="start_date")
+    assert set(_live(table)) == {f"start_date={D2}"}
+    assert _rows(got, ["start_date", "k", "v"]) == [(str(D2), "3", "c")]
+    assert _versions(table) == ["t._v2"]
+
+
+def _crash_at_flip(src, dst):
+    raise OSError("crash before the flip")
+
+
 def test_failure_before_flip_keeps_old_table_and_next_call_cleans_up(
     spark, tmp_path, monkeypatch
 ):
@@ -123,10 +164,7 @@ def test_failure_before_flip_keeps_old_table_and_next_call_cleans_up(
     )
     want = _rows(spark.read.parquet(table))
 
-    def crash(src, dst):
-        raise OSError("crash before the flip")
-
-    monkeypatch.setattr(sinks.os, "replace", crash)
+    monkeypatch.setattr(sinks.os, "replace", _crash_at_flip)
     with pytest.raises(OSError, match="crash before the flip"):
         sinks.overwrite_table(_dated(spark, [(D2, 2, "x")]), table, partition_by="start_date")
     monkeypatch.undo()
@@ -140,6 +178,125 @@ def test_failure_before_flip_keeps_old_table_and_next_call_cleans_up(
     )
     assert _versions(table) == ["t._v3"]  # the orphan went with the old version
     assert _rows(got, ["start_date", "k", "v"]) == [(str(D1), "1", "a"), (str(D2), "2", "y")]
+
+
+# -- every pipeline stage commits atomically ----------------------------------
+
+#: a one-trip schedule running on D1 and D2; ``v2`` moves its second stop
+SCHEDULE = {
+    "stop_times": "trip_id,arrival_time,departure_time,stop_id,stop_sequence\n"
+                  "T1,10:30:00,10:31:00,100,1\nT1,10:45:00,10:46:00,200,{second}\n",
+    "trips": "trip_id,service_id,route_id\nT1,S1,R1\n",
+    "calendar_dates": "service_id,date\nS1,20230614\nS1,20230615\n",
+    "stops": "stop_id,stop_name,stop_lat,stop_lon\n100,Downtown,46.49,-80.99\n"
+             "200,Uptown,46.52,-81.01\n",
+    "routes": "route_id,route_long_name\nR1,Main Line\n",
+}
+ARR_D1 = ARR - 86400
+CRASH = "crash inside the write job"
+
+
+def _schedule(root, second_stop: int) -> str:
+    d = root / f"gtfs_v{second_stop}"
+    d.mkdir(exist_ok=True)
+    for name, content in SCHEDULE.items():
+        (d / f"{name}.txt").write_text(content.replace("{second}", str(second_stop)))
+    return str(d)
+
+
+def _poll(spark, store, minute, delay_s):
+    """Both stops on D2, and the first on D1 from the first poll only."""
+    entities = [("T1", "20230615", [(1, "100", ARR + delay_s, None),
+                                    (2, "200", ARR + 900 + delay_s, None)])]
+    if minute == 0:
+        entities.append(("T1", "20230614", [(1, "100", ARR_D1 + 30, None)]))
+    poll_ts = datetime(2023, 6, 15, 14, minute)
+    ingest_realtime(spark, _feed(spark, poll_ts, entities), store,
+                    now=datetime(2023, 6, 15, 14, minute, 5))
+
+
+def _prepare(spark, root, stage: str):
+    """A committed store, plus the poll the stage under test then reads."""
+    store = Store(str(root / "store"))
+    ingest_schedule(spark, _schedule(root, 2), store)
+    _poll(spark, store, 0, 60)
+    consolidate(spark, store)
+    if stage != "ingest_schedule":
+        _poll(spark, store, 5, 240)
+    return store
+
+
+STAGES = {
+    # name: (the call, its table, the layer a crash is patched into)
+    "ingest_schedule": (
+        lambda spark, store, root: ingest_schedule(spark, _schedule(root, 3), store),
+        "gtfs_data", "upsert_ignore",
+    ),
+    "consolidate": (
+        lambda spark, store, root: consolidate(spark, store), "diffs", "compute_delays",
+    ),
+    "consolidate_incremental": (
+        lambda spark, store, root: consolidate_incremental(spark, store, [D2]),
+        "diffs", "compute_delays",
+    ),
+}
+
+
+def _crash_in_job(layer):
+    """``layer`` whose rows raise for the second stop in the write's own
+    tasks: the layer's output is the plan the stage writes, after its
+    last shuffle."""
+    def crashing(*args, **kwargs):
+        df = layer(*args, **kwargs)
+        boom = F.when(F.col("stop_sequence") >= 2, F.raise_error(F.lit(CRASH)))
+        return df.withColumn("trip_id", boom.otherwise(F.col("trip_id")))
+
+    return crashing
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    """Each stage's table after an uninterrupted run (computed once)."""
+    cache = {}
+
+    def rows(stage):
+        if stage not in cache:
+            root = tmp_path_factory.mktemp(f"ref_{stage}")
+            store = _prepare(spark, root, stage)
+            call, table, _ = STAGES[stage]
+            call(spark, store, root)
+            cache[stage] = _rows(spark.read.parquet(getattr(store, table)))
+        return cache[stage]
+
+    return rows
+
+
+@pytest.mark.parametrize("point", ["in_job", "before_flip"])
+@pytest.mark.parametrize("stage", list(STAGES))
+def test_stage_crash_keeps_the_old_table_and_a_rerun_converges(
+    spark, tmp_path, monkeypatch, uninterrupted, stage, point
+):
+    call, table, layer = STAGES[stage]
+    store = _prepare(spark, tmp_path, stage)
+    path = getattr(store, table)
+    before = _rows(spark.read.parquet(path))
+    want = uninterrupted(stage)
+    assert want != before  # the stage changes the table
+
+    if point == "in_job":
+        monkeypatch.setattr(pipeline, layer, _crash_in_job(getattr(pipeline, layer)))
+        match = CRASH
+    else:
+        monkeypatch.setattr(sinks.os, "replace", _crash_at_flip)
+        match = "crash before the flip"
+    with pytest.raises(Exception, match=match):
+        call(spark, store, tmp_path)
+    monkeypatch.undo()
+    assert _rows(spark.read.parquet(path)) == before
+
+    call(spark, store, tmp_path)
+    assert _rows(spark.read.parquet(path)) == want
+    assert len(_versions(path)) == 1
 
 
 # -- read_table: the footer-schema read ---------------------------------------
@@ -323,3 +480,51 @@ def test_empty_poll_leaves_the_table_alone_and_null_dates_merge(spark, tmp_path)
     assert _rows(got, ["start_date", "k", "v"]) == [
         (str(D1), "1", "a"), ("None", "2", "b"), ("None", "3", "c")
     ]
+
+
+def test_empty_start_date_commits_to_the_null_partition(spark, tmp_path):
+    """GTFS-RT's ``start_date`` is optional and the wire decoder reads an
+    absent one as "": the poll parses it as a NULL date instead of failing,
+    and ``feed_dates`` names the NULL partition it then rewrites."""
+    payload = encode_feed_message(ARR - 1800, [
+        ("T1", "20230615", [(1, "100", ARR + 60, None)]),
+        ("T9", "", [(1, "100", ARR + 120, None)]),
+    ])
+    feed = decode_protobuf_payloads(
+        spark.createDataFrame([(bytearray(payload),)], "payload binary")
+    )
+    assert sorted(feed_dates(feed), key=str) == [D2, None]
+    store = Store(str(tmp_path / "store"))
+    tu = ingest_realtime(spark, feed, store, now=datetime(2023, 6, 15, 14, 0, 5))
+    assert {(r.trip_id, r.start_date) for r in tu.collect()} == {("T1", D2), ("T9", None)}
+    assert sorted(sinks.table_dates(store.trip_updates), key=str) == [D2, None]
+    # a malformed date is still an error, not a NULL
+    bad = _feed(spark, datetime(2023, 6, 15, 14), [("T1", "2023-06-15", [(1, "100", ARR, None)])])
+    with pytest.raises(Exception, match="CANNOT_PARSE_TIMESTAMP"):
+        decode_feed(bad).collect()
+
+
+# -- merge_into / merge_into_sql read the state through read_table -------------
+
+
+@pytest.mark.parametrize(
+    "merge, want_jobs", [(merge_into, 2), (merge_into_sql, 4)],
+    ids=["merge_into", "merge_into_sql"],
+)
+def test_merge_reads_the_stored_state_without_an_inference_job(
+    spark, tmp_path, count_jobs, merge, want_jobs
+):
+    """A second batch runs only the merge's own jobs: reading the stored
+    state through ``read_table`` adds no footer-inference job (an inferred
+    ``spark.read.parquet`` adds one)."""
+    path = str(tmp_path / "state")
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "k int, v string, ts int")
+
+    merge(path, batch([(1, "a", 1), (2, "b", 1)]), keys=["k"], order_by=["ts"])
+    got, jobs = count_jobs(
+        lambda: merge(path, batch([(2, "c", 2), (3, "d", 2)]), keys=["k"], order_by=["ts"])
+    )
+    assert _rows(got, ["k", "v"]) == [("1", "a"), ("2", "c"), ("3", "d")]
+    assert jobs == want_jobs

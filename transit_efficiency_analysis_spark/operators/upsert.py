@@ -31,6 +31,9 @@ import uuid
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from transit_efficiency_analysis_spark.sinks import local_path, overwrite_table
+from transit_efficiency_analysis_spark.sinks import read_table, table_exists
+
 
 class ConcurrentWriteError(RuntimeError):
     """A concurrent writer won the commit race: the manifest advanced
@@ -212,32 +215,6 @@ def merge_batch(
     return replay_conflict_update(unioned, keys, order_by, tracked, ts_col)
 
 
-def _target_exists(spark, target: str) -> bool:
-    """True iff the table path exists — local ``os.path`` probe for
-    file-scheme targets, Hadoop ``FileSystem.exists`` for object-store URIs
-    (the same FS abstraction the read would use, so the probe and the read
-    agree on path resolution)."""
-    from transit_efficiency_analysis_spark.sinks import _local_path
-
-    local = _local_path(target)
-    if local is not None:
-        # os.path.exists swallows EVERY stat error (EACCES, EIO, ...) as
-        # False, which would classify an existing-but-unstatable target as
-        # "first batch" and let overwrite_table replace it with only the
-        # incoming rows. Only true absence may return False; any other
-        # stat failure re-raises, matching the Hadoop branch (fs.exists
-        # propagates non-ENOENT IOExceptions).
-        try:
-            os.stat(local)
-        except FileNotFoundError:
-            return False
-        return True
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(target)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def merge_into(
     target: str,
     incoming: DataFrame,
@@ -250,7 +227,8 @@ def merge_into(
     and return a DataFrame over the committed state — the storage-backed
     face of :func:`merge_batch`, which IS the specification.
 
-    Reads the current state, runs :func:`merge_batch`, and commits with
+    Reads the current state with its footer schema (``sinks.read_table``,
+    no inference job), runs :func:`merge_batch`, and commits with
     the atomic versioned-dir overwrite (``sinks.overwrite_table``:
     readers never see a partial table). O(table) per batch, the honest
     cost without a transactional table format; for a large table use
@@ -259,15 +237,13 @@ def merge_into(
     """
     spark = incoming.sparkSession
 
-    from transit_efficiency_analysis_spark.sinks import overwrite_table
-
     # "First batch" means TRUE ABSENCE of the target, probed explicitly —
     # never inferred from a read failure. A bare except here would turn any
     # transient read error (permissions, flaky FS, corrupt footer) into
     # "first batch" and the subsequent overwrite_table would silently
     # replace the committed table with just the incoming rows.
-    if _target_exists(spark, target):
-        existing = spark.read.parquet(target)  # read errors re-raise
+    if table_exists(target):
+        existing = read_table(spark, target)  # read errors re-raise
     else:
         existing = spark.createDataFrame([], incoming.schema)
     merged = merge_batch(existing, incoming, keys, order_by, tracked, ts_col)
@@ -353,12 +329,10 @@ def merge_into_sql(
     spark = incoming.sparkSession
     collapsed = upsert_keep_newest(incoming, keys, order_by)
 
-    from transit_efficiency_analysis_spark.sinks import overwrite_table
-
-    if not _target_exists(spark, target):
+    if not table_exists(target):
         return overwrite_table(collapsed, target)
 
-    existing = spark.read.parquet(target)
+    existing = read_table(spark, target)
     merged = merge_sql_plan(existing, collapsed, keys, order_by)
     return overwrite_table(merged, target)
 
@@ -511,18 +485,6 @@ def _read_meta(local: str, target: str) -> dict | None:
     return meta
 
 
-def _require_local(target: str, fn: str) -> str:
-    from transit_efficiency_analysis_spark.sinks import _local_path
-
-    local = _local_path(target)
-    if local is None:
-        raise ValueError(
-            f"{fn} needs a local/posix path; use merge_into or "
-            "merge_into_sql for object stores"
-        )
-    return local
-
-
 def _read_manifest(local: str) -> dict[int, int]:
     """The committed ``bucket -> version`` map; {} when no commit has
     reached the table yet."""
@@ -615,7 +577,7 @@ def read_partitioned(spark, target: str) -> DataFrame:
     rows (an empty first batch, or a compaction that dropped every
     bucket) returns a typed empty relation from the meta's stored
     schema."""
-    local = _require_local(target, "read_partitioned")
+    local = local_path(target)
     meta = _read_meta(local, target)
     if meta is None:
         raise FileNotFoundError(
@@ -636,7 +598,7 @@ def sweep_orphans(target: str) -> list[str]:
     maintenance window that owns compaction. A deletion failure
     (EACCES, EIO) raises rather than reporting the path as deleted — the
     returned list names only dirs that are actually gone."""
-    local = _require_local(target, "sweep_orphans")
+    local = local_path(target)
     _read_meta(local, target)
     if not os.path.exists(os.path.join(local, _MANIFEST_NAME)):
         raise ValueError(
@@ -729,7 +691,7 @@ def merge_into_partitioned(
             f"bucket column — rename it (the staging write partitions by "
             f"it and would silently shadow the data)"
         )
-    local = _require_local(target, "merge_into_partitioned")
+    local = local_path(target)
     spark = incoming.sparkSession
     meta = _read_meta(local, target)
     manifest = _read_manifest(local)
@@ -952,7 +914,7 @@ def filter_partitioned(
     never a concurrently committed one. ``_before_commit`` is a test
     seam invoked between the staging write and the manifest re-read.
     """
-    local = _require_local(target, "filter_partitioned")
+    local = local_path(target)
     meta = _read_meta(local, target)
     if meta is None:
         raise FileNotFoundError(

@@ -13,6 +13,9 @@ the streaming variant) against one storage layer:
 The 80 LoC of SSH/CSV transfer plumbing (``loader/get_realtime.py``) maps
 to nothing: there is one store. Locks, rate-limit files, and cron are the
 streaming runtime's checkpoint + trigger (``streaming/``).
+
+Every table commits through ``sinks``' atomic symlink flip: readers see
+it before a write or after it, and a failed write leaves the old table.
 """
 
 from __future__ import annotations
@@ -23,9 +26,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transit_efficiency_analysis_spark import schemas
+from transit_efficiency_analysis_spark import schemas, sinks
 from transit_efficiency_analysis_spark.operators.delay import compute_delays
-from transit_efficiency_analysis_spark.sinks import overwrite_table, read_table, table_dates
+from transit_efficiency_analysis_spark.sinks import local_path, overwrite_table, read_table
+from transit_efficiency_analysis_spark.sinks import replace_table, table_dates, table_exists
 from transit_efficiency_analysis_spark.operators.upsert import merge_batch, upsert_ignore
 from transit_efficiency_analysis_spark.sources.gtfs_realtime import (
     apply_epoch0_default,
@@ -46,9 +50,12 @@ def _date_in(col, dates: list):
 
 
 class Store:
-    """Parquet table locations (Delta/Iceberg at scale — same call sites)."""
+    """The three parquet table locations under one local/POSIX ``root``
+    (Delta/Iceberg at scale — same call sites). An object-store ``root``
+    raises ``ValueError`` here, before any stage writes."""
 
     def __init__(self, root: str):
+        local_path(root)
         self.gtfs_data = os.path.join(root, "gtfs_data")
         self.trip_updates = os.path.join(root, "trip_updates")
         self.diffs = os.path.join(root, "trip_updates_with_diffs")
@@ -58,13 +65,13 @@ def ingest_schedule(
     spark: SparkSession, csv_dir: str, store: Store, tz: str = "America/Toronto"
 ) -> DataFrame:
     """Static ingest: CSVs → star join → time parse → PK dedup → partitioned
-    parquet (replaces ``historical_extractor.py`` minus the HTTP fetch)."""
+    parquet, committed whole in one flip (replaces
+    ``historical_extractor.py`` minus the HTTP fetch)."""
     gtfs_data = build_gtfs_data(read_gtfs_static(spark, csv_dir), tz)
     deduped = upsert_ignore(
         gtfs_data, keys=list(schemas.PRIMARY_KEY), order_by=["route_id", "arrival_time"]
     )
-    deduped.write.mode("overwrite").partitionBy("start_date").parquet(store.gtfs_data)
-    return spark.read.schema(deduped.schema).parquet(store.gtfs_data)
+    return replace_table(deduped, store.gtfs_data, partition_by="start_date")
 
 
 def ingest_realtime(
@@ -150,7 +157,7 @@ def merge_touched_dates(
     the commit is one atomic symlink flip: readers see the old table or
     the new one."""
     spark = batch.sparkSession
-    if not os.path.exists(path):
+    if not table_exists(path):
         existing = batch.limit(0)
     else:
         touched = dates()
@@ -183,16 +190,17 @@ def consolidate(spark: SparkSession, store: Store) -> DataFrame:
     dates = [d for d in table_dates(store.gtfs_data) if d is not None]
     tu = read_table(spark, store.trip_updates).where(F.col("start_date").isin(dates))
     diffs = compute_delays(tu, gd, sort=False)
-    diffs.write.mode("overwrite").partitionBy("start_date").parquet(store.diffs)
-    return spark.read.schema(diffs.schema).parquet(store.diffs)
+    return replace_table(diffs, store.diffs, partition_by="start_date")
 
 
 def consolidate_incremental(
     spark: SparkSession, store: Store, changed_dates: list
 ) -> DataFrame:
     """Incremental view maintenance of the diffs table: recompute only the
-    ``start_date`` partitions in ``changed_dates`` and overwrite just those
-    partitions (dynamic partition overwrite).
+    ``start_date`` partitions in ``changed_dates`` and replace just those
+    partitions (``sinks.overwrite_table(partition_by=...)``: the other
+    dates are carried into the new version, and the table commits in one
+    flip).
 
     The reference rebuilds the whole table every cycle
     (``diff_times.py:38-111``); at 100 TB that is the difference between
@@ -206,10 +214,7 @@ def consolidate_incremental(
     tu = read_table(spark, store.trip_updates).where(F.col("start_date").isin(changed_dates))
     gd = read_table(spark, store.gtfs_data).where(F.col("start_date").isin(changed_dates))
     diffs = compute_delays(tu, gd, sort=False)
-    # per-write option, NOT a session conf mutation: a later full consolidate()
-    # must keep static overwrite semantics (replace the whole table)
-    diffs.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("start_date").parquet(store.diffs)
-    return spark.read.schema(diffs.schema).parquet(store.diffs)
+    # through the module: the name ``overwrite_table`` here is the poll's
+    # commit, which perfbench's tracer wraps as its per-poll sink span
+    return sinks.overwrite_table(diffs, store.diffs, partition_by="start_date")
 

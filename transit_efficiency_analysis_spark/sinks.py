@@ -1,38 +1,35 @@
-"""Atomic full-table overwrite (the reference's TRUNCATE + INSERT rebuild).
+"""Atomic table commits (the reference's TRUNCATE + INSERT rebuild).
 
 The reference rebuilds tables with ``DELETE FROM`` + ``INSERT ... SELECT``
 inside a Postgres transaction (``diff_times.py:38-111``) — readers never
-see a missing table. This module gives the parquet store the same
-guarantee, with a different mechanism per filesystem class:
+see a missing table. This module gives every table the pipeline writes
+the same guarantee, on local/POSIX paths only (:func:`local_path` rejects
+an object-store URI, whose renames are not atomic; at scale a table
+format's commit replaces this module at the same call sites):
 
-- **Local paths** (no URI scheme, or ``file://``): each rebuild writes a
-  fresh versioned directory ``<table>._v<N>`` and then atomically repoints
-  a symlink at the table path (``os.replace`` of a symlink is atomic on
-  POSIX). Readers resolve either the old or the new version, never a
-  partial table; a crash mid-write leaves the live symlink untouched and
-  at worst an orphan ``._v<N+1>`` directory that the next successful
-  rebuild removes. This also means an overwrite may READ the table it
-  replaces (the merge-rebuild shape): the plan scans the old version
-  while the writer fills the new directory — no staging double-write.
+- **One commit.** Each write fills a fresh versioned directory
+  ``<table>._v<N>`` and then atomically repoints a symlink at the table
+  path (``os.replace`` of a symlink is atomic on POSIX). Readers resolve
+  either the old or the new version, never a partial table; a crash
+  before the flip, inside the write job or after it, leaves the live
+  symlink untouched and at worst an orphan ``._v<N+1>`` directory that
+  the next successful commit removes. A write may therefore READ the
+  table it replaces (the merge-rebuild shape): the plan scans the old
+  version while the writer fills the new directory.
 
-- **Partition carry-over** (``partition_by``, local paths only): the new
-  version dir is written partitioned by that column, and before the flip
-  every ``<column>=<value>`` dir of the live version that the write did
-  not produce is hard-linked into it, file by file (``os.link``: no bytes
-  copied). A caller that writes only the partitions it touched therefore
-  commits a whole table in the same single flip, and untouched partitions
-  keep their files (same inodes, same bytes) across versions.
-
-- **Object-store URIs** (``s3://``, ``hdfs://``, ...): directories and
-  renames aren't atomic there, so the rebuild stages to a sibling path
-  and commits with the Spark writer (FileOutputCommitter semantics; on a
-  real deployment the table format's commit — Delta/Iceberg — replaces
-  this whole module at the same call sites).
+- **Two overwrite semantics.** :func:`overwrite_table` with
+  ``partition_by`` replaces only the partitions ``df`` holds (Spark's
+  dynamic overwrite): before the flip every partition dir of the live
+  version that the write did not produce is hard-linked into the new
+  version, file by file (``os.link``: no bytes copied), so untouched
+  partitions keep their files (same inodes, same bytes) across versions.
+  :func:`replace_table` replaces the whole table (Spark's static
+  overwrite), laid out by ``partition_by`` when that is given.
 
 Reads go through :func:`read_table`, which takes the table's schema from
 one data file's footer instead of letting Spark run a footer-merge job
-per read, and :func:`table_dates` lists a table's ``start_date``
-partitions from its directory names.
+per read; :func:`table_dates` lists a table's ``start_date`` partitions
+from its directory names, and :func:`table_exists` probes for a table.
 """
 
 from __future__ import annotations
@@ -53,12 +50,29 @@ _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 _DATE_DIR = "start_date="
 
 
-def _local_path(target: str) -> str | None:
-    """Filesystem path for local targets, None for object-store URIs."""
+def local_path(target: str) -> str:
+    """The filesystem path of a local table location (no URI scheme, or
+    ``file://``); raises ``ValueError`` for an object-store URI, where the
+    commits here would not be atomic."""
     parsed = urlparse(target)
-    if parsed.scheme in ("", "file"):
-        return parsed.path or target
-    return None
+    if parsed.scheme not in ("", "file"):
+        raise ValueError(
+            f"{target!r} is not a local/POSIX path: tables commit by an atomic "
+            "rename, which object stores lack (use a table format's commit there)"
+        )
+    return parsed.path or target
+
+
+def table_exists(path: str) -> bool:
+    """True iff the table at ``path`` exists. Only true absence returns
+    False: any other stat error (EACCES, ENOTDIR, EIO, ...) re-raises, so
+    an existing but unstatable table is never taken for a missing one and
+    replaced by a first commit holding only the incoming rows."""
+    try:
+        os.stat(local_path(path))
+    except FileNotFoundError:
+        return False
+    return True
 
 
 def _versions(path: str) -> list[tuple[int, str]]:
@@ -95,13 +109,9 @@ def _date_dirs(local: str) -> list[str]:
 def table_dates(path: str) -> list[date | None]:
     """The ``start_date`` values the table at ``path`` holds, from its
     ``start_date=`` dir names (a local listing, no Spark job); None is the
-    NULL partition. Empty for a missing, unpartitioned or object-store
-    table."""
-    local = _local_path(path)
-    if local is None:
-        return []
+    NULL partition. Empty for a missing or unpartitioned table."""
     out = []
-    for name in _date_dirs(local):
+    for name in _date_dirs(local_path(path)):
         value = unquote(name[len(_DATE_DIR):])
         out.append(None if value == "__HIVE_DEFAULT_PARTITION__" else date.fromisoformat(value))
     return out
@@ -140,10 +150,9 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     job. The result equals ``spark.read.parquet(path)`` (same columns,
     order and types, the partition column last), except that a table
     holding only the NULL date still reads ``start_date`` as DATE. Falls
-    back to inference for object-store paths and for files without
-    Spark's footer key."""
-    local = _local_path(path)
-    schema = _footer_schema(local) if local is not None and os.path.isdir(local) else None
+    back to inference for files without Spark's footer key."""
+    local = local_path(path)
+    schema = _footer_schema(local) if os.path.isdir(local) else None
     if schema is None:
         return spark.read.parquet(path)
     return spark.read.schema(schema).parquet(path)
@@ -156,30 +165,28 @@ def overwrite_table(
 
     Returns a fresh DataFrame over the committed table, read with
     ``df``'s schema (no footer-inference job; a partition column comes
-    last, as an inferred read puts it). ``df`` may read
-    from ``target`` itself (merge-rebuild); on local paths the old version
-    stays live until the new one is complete.
+    last, as an inferred read puts it). ``df`` may read from ``target``
+    itself (merge-rebuild): the old version stays live until the new one
+    is complete.
 
     With ``partition_by``, ``df`` replaces only the partitions it holds:
     the live table's other partitions are carried into the new version by
-    hard link (module docstring). Local paths only.
-    """
-    spark = df.sparkSession
-    local = _local_path(target)
-    if local is None and partition_by is not None:
-        raise ValueError(
-            "overwrite_table(partition_by=...) needs a local/posix path; "
-            "use a table format's partition overwrite for object stores"
-        )
-    if local is None:
-        # object store: stage, then writer-commit overwrite of the live
-        # prefix (cloud committers make the final job commit atomic; use
-        # Delta/Iceberg for snapshot isolation at scale)
-        staging = target + ".staging"
-        df.write.mode("overwrite").parquet(staging)
-        spark.read.schema(df.schema).parquet(staging).write.mode("overwrite").parquet(target)
-        return spark.read.schema(df.schema).parquet(target)
+    hard link (module docstring)."""
+    return _commit(df, target, partition_by, carry=True)
 
+
+def replace_table(df: DataFrame, target: str, partition_by: str | None = None) -> DataFrame:
+    """Replace the whole table at ``target`` with ``df`` (no partition is
+    carried), laid out in ``partition_by`` dirs when that is given.
+    Returns what :func:`overwrite_table` returns."""
+    return _commit(df, target, partition_by, carry=False)
+
+
+def _commit(df: DataFrame, target: str, partition_by: str | None, carry: bool) -> DataFrame:
+    """Write ``df`` into the next version dir, carry the live partitions
+    it lacks when ``carry``, then flip the table symlink to it and drop
+    every superseded version."""
+    local = local_path(target)
     existing = _versions(local)
     version = existing[-1][0] + 1 if existing else 1
     vdir = f"{local}._v{version}"
@@ -187,7 +194,7 @@ def overwrite_table(
         df.write.mode("overwrite").parquet(vdir)
     else:
         df.write.mode("overwrite").partitionBy(partition_by).parquet(vdir)
-        if os.path.isdir(local):
+        if carry and os.path.isdir(local):
             _carry_partitions(local, vdir, partition_by)
         if not any(n.startswith(f"{partition_by}=") for n in os.listdir(vdir)):
             # no rows and nothing carried: a partitioned write of no rows
@@ -198,7 +205,7 @@ def overwrite_table(
     if os.path.isdir(local) and not os.path.islink(local):
         # one-time migration of a plain directory table: move it aside so
         # the symlink can take its place (brief window on first migration
-        # only; every subsequent rebuild is a pure atomic symlink swap)
+        # only; every subsequent commit is a pure atomic symlink swap)
         legacy = f"{local}._v0"
         os.rename(local, legacy)
         existing = [(0, legacy)] + existing
@@ -211,4 +218,4 @@ def overwrite_table(
 
     for _, old in existing:  # superseded versions (open scans keep FDs)
         shutil.rmtree(old, ignore_errors=True)
-    return spark.read.schema(df.schema).parquet(local)
+    return df.sparkSession.read.schema(df.schema).parquet(local)

@@ -28,7 +28,7 @@ choice (``apply_epoch0_default``), reproducing the reference DDL
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -40,10 +40,17 @@ from transit_efficiency_analysis_spark.functions.weather import (
 )
 
 
+def _service_date(start_date: Column) -> Column:
+    """A feed entity's ``yyyyMMdd`` service date as DATE. ``start_date`` is
+    optional in GTFS-RT and the wire decoder reads an absent one as "",
+    which is NULL here; a malformed non-empty string still raises."""
+    return yyyymmdd_to_date(F.nullif(start_date, F.lit("")))
+
+
 def decode_feed(feed: DataFrame) -> DataFrame:
     """Nested feed rows (``schemas.REALTIME_FEED_RAW``) → one row per
     (trip, stop_time_update), timestamps from unix seconds, NULL when the
-    field is absent."""
+    field is absent (an absent or "" ``start_date`` included)."""
     entities = feed.select(
         "poll_ts", F.explode("entity").alias("e")
     ).select(
@@ -54,7 +61,7 @@ def decode_feed(feed: DataFrame) -> DataFrame:
     )
     return entities.select(
         F.col("trip_id"),
-        yyyymmdd_to_date("start_date_str").alias("start_date"),
+        _service_date(F.col("start_date_str")).alias("start_date"),
         F.col("u.stop_sequence").alias("stop_sequence"),
         F.col("u.stop_id").alias("stop_id"),
         F.timestamp_seconds("u.arrival_unix").alias("arrival_time"),
@@ -73,7 +80,7 @@ def feed_dates(feed: DataFrame) -> list:
     relation (a decoded poll) the projection folds into the relation, so
     the collect runs no Spark job."""
     dates = F.array_distinct(
-        F.transform("entity", lambda e: yyyymmdd_to_date(e["start_date"]))
+        F.transform("entity", lambda e: _service_date(e["start_date"]))
     )
     return list({d for row in feed.select(dates).collect() for d in row[0] or ()})
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transit_efficiency_analysis_spark.sinks import overwrite_table, read_table
+from transit_efficiency_analysis_spark.sinks import overwrite_table, read_table, table_exists
 
 _KEYS = ["user_id", "event_type"]
 
@@ -62,13 +62,11 @@ def run_agg_maintenance_stream(
     """Drain all staged event files (``Trigger.AvailableNow``), merging
     each micro-batch's partials into the state table exactly once (the
     checkpoint owns progress; re-runs skip processed files)."""
-    import os
-
     schema = read_table(spark, source_dir).schema
     raw = spark.readStream.schema(schema).parquet(source_dir)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        state = read_table(spark, state_path) if os.path.exists(state_path) else None
+        state = read_table(spark, state_path) if table_exists(state_path) else None
         overwrite_table(merge_partials(state, batch_partials(batch_df)), state_path)
 
     (
